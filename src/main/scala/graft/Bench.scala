@@ -410,23 +410,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.defaultCpus
     val outDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out")
-    // cpus feeds BOTH the master string and a typed int conf: '*'
-    // (local[*]) is legal for the former but would throw at session
-    // construction in the latter — and render the JSON invalid — so
-    // non-numeric values fall back to the machine's core count for the
-    // shuffle-partition knob (what local[*] means anyway)
-    val shufflePartitions = scala.util.Try(cpus.trim.toInt).toOption
-      .getOrElse(Runtime.getRuntime.availableProcessors).toString
     val loadStart = loadAvg() // BEFORE any Spark work: external load only
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // Warmup so the first timed query isn't charged for one-time session
     // spin-up (classloading, the codegen compiler, parquet vectorized
     // reader + footer paths, shuffle/AQE machinery): a synthetic agg plus
@@ -444,7 +431,7 @@ object Bench {
     // verdict there would be a false alarm, not a measurement
     // (round-9 advisor) — contaminated:null, like any other SF.
     val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val calibrated = sfName == "sf0.1" && cpus == "32"
+    val calibrated = sfName == "sf0.1" && cpus == 32
     val bands = if (calibrated) cleanBands else Map.empty[String, Double]
     // clean BY CONSTRUCTION (round-9 verdict item 1): at the calibrated
     // config, don't start measuring inside someone else's wind-down —
@@ -535,8 +522,7 @@ object Bench {
       s""""original_sec":${encMap(a.originalSec)},""" +
       s""""load_avg_per_query":${encMap(r.loads)},""" +
       s""""sf":${VerifyCommon.jsonStr(sfDir)},""" +
-      s""""cpus":${scala.util.Try(cpus.trim.toInt).toOption
-        .map(_.toString).getOrElse(VerifyCommon.jsonStr(cpus))},""" +
+      s""""cpus":$cpus,""" +
       s"""${adjudication(Int.MaxValue)}}"""
 
     // persist the COMPLETE record — the driver's log tail drops it

@@ -1,11 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** Dev tool: print the formatted physical plan of named queries at sf0.1.
+  *
+  * Usage: runMain graft.Explain <q1> [q2 ...]
+  */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val sf = "/root/testdata/sf0.1"
     for (name <- args) {
       println(s"========== $name")

@@ -18,10 +18,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   st_set_srid(wkb, srid)
   *
   * Two routes, same builders:
-  *  - `GraftExtensions` for `spark.sql.extensions` / `.withExtensions(...)`
-  *    at session build time (the proper extension-library route);
-  *  - `GraftFunctions.register(spark)` for an already-running session
-  *    (idempotent; used by `GraftSession.tune`).
+  *  - `GraftFunctions.register(spark)` on a running session, called once
+  *    per session by `GraftSession.tune`;
+  *  - `GraftExtensions` for an embedder that injects them at session
+  *    build time (`spark.sql.extensions` / `.withExtensions(...)`).
   */
 object GraftFunctions {
 
@@ -104,7 +104,8 @@ object GraftFunctions {
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
         es.head, es(1)) })
 
-  /** Register on a live session (idempotent). */
+  /** Register on a live session. Re-registering replaces each function
+    * (Spark logs a warning per name), so a session's owner calls this once. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, builder) =>

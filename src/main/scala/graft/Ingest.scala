@@ -40,15 +40,7 @@ object Ingest {
       } else None
     val source = spooled.map(_.toString).getOrElse(rawSource)
     val mode = if (args.length > 2) args(2) else "fail"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
+    val spark = GraftSession.local()
     try run(spark, source, sinkSpec, mode)
     finally {
       spooled.foreach(java.nio.file.Files.deleteIfExists)

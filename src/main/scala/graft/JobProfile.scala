@@ -1,13 +1,15 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
-/** Dev tool (guide §1): run named queries through the Bench noop-sink
-  * protocol with a listener attached, and print per-query job counts,
-  * per-job wall times, task counts and shuffle bytes. The point is to
-  * separate "the plan computes too much" from "the query is a chain of
-  * tiny sequential jobs paying fixed scheduling overhead" — the two need
+/** Dev tool (guide §1): run named queries twice each through the Bench
+  * noop-sink protocol with a listener attached, and print per-run wall
+  * time, job count and time in jobs, then per-job wall times, task counts
+  * and shuffle bytes for the second (warm) run. The point is to separate
+  * "the plan computes too much" from "the query is a chain of tiny
+  * sequential jobs paying fixed scheduling overhead" — the two need
   * opposite fixes. Not part of the driver contract.
+  *
+  * Usage: [SPARK_GRAFT_SF_DIR=<sfDir>] runMain graft.JobProfile <q1> [q2 ...]
   */
 object JobProfile {
   private final case class JobRec(id: Int, var start: Long = 0L,
@@ -15,32 +17,32 @@ object JobProfile {
     var shuffleRead: Long = 0L, var shuffleWrite: Long = 0L)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
+    // stage id -> the job that submitted it. Broadcast and subquery jobs
+    // run concurrently with their parent, so "every open job" would count
+    // one stage several times; a stage shared with a later job stays with
+    // the job that claimed it first.
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val r = JobRec(e.jobId); r.start = e.time
         r.stages = e.stageInfos.size
         jobs.put(e.jobId, r)
+        e.stageIds.foreach(stageJob.putIfAbsent(_, r))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         val r = jobs.get(e.jobId); if (r != null) r.end = e.time
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
-        jobs.values().forEach { r =>
-          // stage->job mapping is approximate: attribute to the open job
-          if (r.end == 0L) {
-            r.tasks += si.numTasks
-            r.shuffleRead += si.taskMetrics.shuffleReadMetrics.totalBytesRead
-            r.shuffleWrite += si.taskMetrics.shuffleWriteMetrics.bytesWritten
-          }
+        val r = stageJob.get(si.stageId)
+        if (r != null) {
+          r.tasks += si.numTasks
+          r.shuffleRead += si.taskMetrics.shuffleReadMetrics.totalBytesRead
+          r.shuffleWrite += si.taskMetrics.shuffleWriteMetrics.bytesWritten
         }
       }
     }
@@ -49,7 +51,7 @@ object JobProfile {
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
 
     for (name <- args; run <- 1 to 2) {
-      jobs.clear()
+      jobs.clear(); stageJob.clear()
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sf)
         .write.format("noop").mode("overwrite").save()

@@ -562,13 +562,7 @@ object Nightly {
         "<arrivingParquet> <bm25Root> <ivfRoot> <pqRoot> <statsRoot>")
       sys.exit(2)
     }
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val roots = Roots(args(0), args(2), args(3), args(4), args(5))
     val arriving = spark.read.parquet(args(1))
       .select(col("doc_id"), col("text"), col("embedding"))

@@ -40,7 +40,7 @@ object SparkEntry {
     operators.Relational.pricingSummary(spark, "/root/testdata/sf0.001")
 
   // defs are the driver's contract; the lazy vals behind them keep the
-  // 130-entry maps from being rebuilt inside Bench/TimeOne's timed loops
+  // catalog maps from being rebuilt inside Bench/JobProfile's timed loops
   private lazy val queriesMap: Map[String, (SparkSession, String) => DataFrame] =
     ops.map(o => o.name -> o.build).toMap
   private lazy val oracleSqlMap: Map[String, String] =

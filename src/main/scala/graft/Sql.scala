@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** SQL entry point: run ad-hoc SQL over the testdata tables with the
-  * engine's custom functions registered (both via `GraftExtensions` at
-  * session build and `GraftFunctions.register` at runtime).
+  * engine's custom functions registered (by [[GraftSession.local]]).
   *
   * Usage: runMain graft.Sql <sfDir> "<SQL>"
   */
@@ -12,16 +9,7 @@ object Sql {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: Sql <sfDir> \"<SQL>\"")
     val Array(sfDir, sql) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // build-time function injection
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
+    val spark = GraftSession.local()
     Tables.names.foreach { t =>
       // the per-table loaders, NOT the raw reader: `events` normalizes
       // ts to the engine's nanos-long contract, and ad-hoc SQL written

@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Files
 
+import graft.operators.VectorOps
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -17,18 +18,18 @@ import org.apache.spark.sql.types._
 object Stream {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
+    val spark = GraftSession.local()
+    val watchDir = Files.createTempDirectory("graft_stream")
+    try demo(spark, sfDir, watchDir.toString)
+    finally {
+      spark.stop()
+      VectorOps.deleteRecursively(watchDir)
+    }
+  }
 
+  private def demo(spark: SparkSession, sfDir: String,
+      watchDir: String): Unit = {
     // stage the source: split events into two "arriving" files
-    val watchDir = Files.createTempDirectory("graft_stream").toString
     val ev = Tables.events(spark, sfDir)
       .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       .select("ts", "user_id", "event_type", "value", "event_id")
@@ -56,6 +57,5 @@ object Stream {
     val batchWindows = StreamingOps.tumblingCounts(ev).count()
     println(s"[stream] batch-mode windows:    $batchWindows")
     println(s"[stream] stream==batch: ${afterSecond == batchWindows}")
-    spark.stop()
   }
 }

@@ -65,10 +65,14 @@ object Tables {
   }
 }
 
-/** Session tuning applied by every operator builder: adaptive execution on,
-  * so shuffle partition counts, skew joins and broadcast decisions re-plan at
-  * runtime — the knobs that matter when the same plan runs at 1000× the data.
-  * All settings are runtime SQL confs (safe to set on a live session).
+/** The session invariant: a session is tuned ONCE, by its owner, when it
+  * is built — [[GraftSession.local]] for every main and the test fixture,
+  * or an explicit [[GraftSession.tune]] by an embedder that builds its own
+  * session. Operator builders never touch session confs or the function
+  * registry, so a conf the caller sets survives building and running any
+  * query. The tuned confs turn adaptive execution on, so shuffle partition
+  * counts, skew joins and broadcast decisions re-plan at runtime — the
+  * knobs that matter when the same plan runs at 1000× the data.
   */
 object GraftSession {
   /** Spread a small-file scan across the session's cores ahead of a
@@ -85,13 +89,35 @@ object GraftSession {
       keys: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
 
+  /** Cores for [[local]]: `SPARK_GRAFT_CPUS`, or the machine's core count
+    * when it is unset or not a positive number. */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .flatMap(_.trim.toIntOption).filter(_ > 0)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session builder: master `local[cpus]` unless `SPARK_MASTER`
+    * names a deployment, `cpus` shuffle partitions, UTC, no UI, WARN logs,
+    * and [[tune]] exactly once. Static confs a caller needs (e.g. a
+    * warehouse dir) go in as `spark.*` system properties before the call. */
+  def local(cpus: Int = defaultCpus): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    tune(spark)
+  }
+
+  /** Set the engine's runtime SQL confs and register its functions on a
+    * live session. Called once per session by its owner (see above). */
   def tune(spark: SparkSession): SparkSession = {
     // The nanos-long contract in [[Tables.events]] rebuilds TIMESTAMP_NTZ
     // as nanos via an NTZ→instant cast that consults the SESSION timezone;
-    // entry points that build their own SparkSession (TimeOne, Explain, an
-    // external embedder) would otherwise inherit the machine TZ and shift
-    // every timestamp by the local offset. timeZone is runtime-settable,
-    // so pin it here where every operator path already passes through.
+    // an embedder's own session would otherwise inherit the machine TZ and
+    // shift every timestamp by the local offset. timeZone is
+    // runtime-settable, so [[local]]'s builder-time pin is repeated here.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -118,7 +144,7 @@ object GraftSession {
     // on the schema actually read, so event ops work under either reader.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // custom expressions as SQL functions (simhash64, cosine_similarity,
-    // st_point, ...) — idempotent
+    // st_point, ...)
     GraftFunctions.register(spark)
     spark
   }

@@ -4,24 +4,12 @@ import java.nio.file.{Files, Paths}
 
 /** Shared plumbing for the correctness-dump mains ([[Verify]] runs the
   * whole catalog for the driver gate; [[VerifyOne]] a named subset for
-  * dev iteration). ONE definition of the session config and the JSON
-  * escaping — the escape rule exists because a control char in
+  * dev iteration). ONE definition of the dump and the JSON escaping —
+  * the escape rule exists because a control char in
   * builder-authored SQL would make the driver's json.load fail and
   * silently zero the round's correctness, so a fix applied to one main
   * but not the other would be exactly the silent drift it guards against. */
 private[graft] object VerifyCommon {
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Run one declared query to `outDir/<name>` parquet; NON-FATAL
     * failures print (class + message + top frame — a bare NPE's message
     * is null) and continue so one broken query can't hide the rest of a
@@ -96,7 +84,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: Verify <sfDir> <outDir>")
     val Array(sfDir, outDir) = args
-    val spark = VerifyCommon.session()
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       VerifyCommon.dump(spark, sfDir, outDir, name, fn)

@@ -7,8 +7,8 @@ package graft
   * catalog sweep. Oracle and manifest entries MERGE into any existing
   * files (a reused full-Verify outDir keeps its other queries
   * oracle-checked instead of silently downgrading them to rows-only —
-  * round-9 review). All session/dump/escape plumbing is
-  * [[VerifyCommon]]'s — shared with Verify by construction.
+  * round-9 review). The session is [[GraftSession.local]] and all
+  * dump/escape plumbing is [[VerifyCommon]]'s, as in Verify.
   *
   * Usage: runMain graft.VerifyOne <sfDir> <outDir> <q1> [q2 ...]
   */
@@ -24,7 +24,7 @@ object VerifyOne {
     val names = args.drop(2).toSet
     val unknown = names.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = VerifyCommon.session()
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => names(kv._1)).foreach { case (name, fn) =>
       VerifyCommon.dump(spark, sfDir, outDir, name, fn)

@@ -56,7 +56,6 @@ object CurationOps extends OpCatalog {
     * shape so a regression (e.g. a non-rank predicate defeating the
     * rule) fails loudly. */
   def sourceCap(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     sourceCapOf(Tables.documents(spark, sfDir), cap = 150)
   }
 
@@ -139,7 +138,6 @@ object CurationOps extends OpCatalog {
     * doc-count side is sources-sized and broadcast by AQE. The top-3
     * window sees vocabulary-sized rows per source, never corpus-sized. */
   def boilerplateNgrams(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val grams = tok(spark, sfDir)
       .select(col("source"), col("doc_id"),
         graft.functions.NGramGenerator.ngrams(col("w"), 3)
@@ -199,7 +197,6 @@ object CurationOps extends OpCatalog {
     * `'0x·'::BIGINT`, integer thereafter. Scale: one scan, one agg;
     * the window runs over ≤ |splits|·|langs| rows. */
   def splitAssign(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     splitAssignOf(Tables.documents(spark, sfDir))
   }
 
@@ -247,7 +244,6 @@ object CurationOps extends OpCatalog {
     * The vocabulary total rides in as a broadcast 1-row frame (q63's N
     * pattern), not a global window. */
   def tokenFreqSpectrum(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val wc = tok(spark, sfDir)
       .select(explode(col("w")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
@@ -304,7 +300,6 @@ object CurationOps extends OpCatalog {
     * pattern). The k driver-side 1-row collects are the k-centroids
     * broadcast pattern, not a data collect. */
   def diversityCoreset(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     diversityCoresetOf(Tables.embeddings(spark, sfDir), k = 8)
   }
 
@@ -445,7 +440,6 @@ object CurationOps extends OpCatalog {
     * halves the cap window's input, and the split hash touches only
     * survivors. */
   def curationPipeline(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val d = Tables.documents(spark, sfDir)
       .withColumn("w", split(lower(col("text")), " "))
       .withColumn("n_tok", size(col("w")))
@@ -564,7 +558,6 @@ object CurationOps extends OpCatalog {
     * stored in a real snapshot manifest, computed here). The rollup is
     * a 4-row agg. */
   def snapshotDiff(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val v1 = Tables.documents(spark, sfDir)
       .select(col("doc_id"), md5(col("text")).as("h1"))
     val v2 = plantedV2(Tables.documents(spark, sfDir))
@@ -650,7 +643,6 @@ object CurationOps extends OpCatalog {
     }
 
   def bpeMerges(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     bpeRules(spark, sfDir).orderBy(col("merge_rank"))
   }
 
@@ -769,7 +761,6 @@ object CurationOps extends OpCatalog {
     * count is integer-exact; the two ratios are single `round(·,4)`s of
     * exact-integer quotients. */
   def bpeApply(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val rules = bpeRules(spark, sfDir).orderBy(col("merge_rank")).collect()
       .map(r => (r.getString(1), r.getString(2)))
     val wf = wordFreq(spark, sfDir)
@@ -820,7 +811,6 @@ object CurationOps extends OpCatalog {
     * ≤|sources| grid; the join and share windows run on the grid only.
     * Counts integer; shares/shifts one `round(·,4)` each. */
   def snapshotDrift(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     def toks(c: org.apache.spark.sql.Column) = size(split(c, " ")).cast("long")
     val base = Tables.documents(spark, sfDir)
     val v1 = base.groupBy(col("source"))
@@ -900,7 +890,6 @@ object CurationOps extends OpCatalog {
     * incremental world; `CurationOpsSpec` reconciles the work set
     * against q100's added/changed classes exactly. */
   def incrementalPipeline(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val base = Tables.documents(spark, sfDir)
     val v1 = base.select(col("doc_id"), md5(col("text")).as("h1"))
     val v2 = plantedV2(base).select(col("doc_id"), col("text"))
@@ -960,7 +949,6 @@ object CurationOps extends OpCatalog {
     * keep_rate one round(·,4). A doc carrying several markers counts in
     * each marker column and ONCE in n_restricted. */
   def licenseScreen(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val planted = GraftSession.spread(Tables.documents(spark, sfDir), col("doc_id"))
       .withColumn("ptext", concat(col("text"),
         when(pmod(col("doc_id"), lit(41L)) === 0, lit(" license: cc-by-nc"))
@@ -1040,7 +1028,6 @@ object CurationOps extends OpCatalog {
     * is ≤ distinct lengths — bounded, bucket at 100 TB); the CDF windows
     * and the top-1 run on that grid only. */
   def lengthDriftKs(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val base = Tables.documents(spark, sfDir)
     val len1 = base.select(length(col("text")).cast("long").as("len"))
     val len2 = plantedV2(base)
@@ -1128,7 +1115,6 @@ object CurationOps extends OpCatalog {
     * all. Cross-engine: md5 hex + integer nibble parse (q96), rank ties
     * broken by doc_id — bit-exact. */
   def epochShuffle(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     epochShuffleOf(Tables.documents(spark, sfDir), epoch = 1, shards = 16)
   }
 
@@ -1176,7 +1162,6 @@ object CurationOps extends OpCatalog {
     * aggs with the tiny stats frames broadcast back — the corpus is
     * scanned, never sorted globally. */
   def outlierMad(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     outlierMadOf(Tables.documents(spark, sfDir))
   }
 
@@ -1245,7 +1230,6 @@ object CurationOps extends OpCatalog {
     * cells, bounded by the grid itself. Integer counts; jaccard is one
     * round(·,4) of an exact-integer ratio. */
   def sourceOverlap(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     sourceOverlapOf(Tables.documents(spark, sfDir))
   }
 
@@ -1310,7 +1294,6 @@ object CurationOps extends OpCatalog {
     * corpus; the rank window runs over the k surviving rows only. At
     * 100 TB this samples in one pass over the scan. */
   def weightedSample(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     weightedSampleOf(Tables.documents(spark, sfDir), k = 100)
   }
 
@@ -1383,7 +1366,6 @@ object CurationOps extends OpCatalog {
     * are tagged and aggregated together here so the harness is a single
     * deterministic plan; deployed, sk1 IS the stored v1 artifact). */
   def sketchDistinct(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     sketchDistinctOf(Tables.documents(spark, sfDir))
   }
 
@@ -1503,7 +1485,6 @@ object CurationOps extends OpCatalog {
       throw new IllegalStateException(s"doc-vt artifact at $root lost v$v"))
 
   def versionedChanges(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val root = docVtArtifact(spark, sfDir)
     VersionedTable.changes(spark, root, docVtSnap(spark, root, 1L),
         docVtSnap(spark, root, 2L), vtChangesSchema, "doc_id")
@@ -1560,7 +1541,6 @@ object CurationOps extends OpCatalog {
     * derived table downstream of the corpus: one delta-bounded feed
     * read plus a grid-sized merge, never a recompute-the-world scan. */
   def cdcIncrementalStats(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val root = docVtArtifact(spark, sfDir)
     val s1 = docVtSnap(spark, root, 1L)
     val s2 = docVtSnap(spark, root, 2L)
@@ -1631,7 +1611,6 @@ object CurationOps extends OpCatalog {
     * the same range select straight off the raw table — the zone-map
     * layer must be answer-invariant. */
   def zonemapRangeRead(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val root = zoneVtArtifact(spark, sfDir)
     val snap = VersionedTable.currentSnapshot(spark, root).getOrElse(
       throw new IllegalStateException(s"zone-map artifact at $root unborn"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftSession, Op, OpCatalog, Tables}
+import graft.{Op, OpCatalog, Tables}
 import graft.functions.Rounding.roundVal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -38,7 +38,6 @@ object EventOps extends OpCatalog {
   /** JSON extraction (E15): pull `$.k` out of the props JSON string and
     * aggregate per event type. `get_json_object` is codegen'd — no UDF. */
   def jsonExtract(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.events(spark, sfDir)
       // try_cast: a non-integer k must yield NULL, not an ANSI cast crash
       .withColumn("k", expr("try_cast(get_json_object(props, '$.k') AS BIGINT)"))
@@ -98,7 +97,6 @@ object EventOps extends OpCatalog {
     * `window()` aligns to the epoch, so the oracle's integer bucket math
     * (`ms // 3600000 * 3600000`) lands on the identical grid. */
   def eventTumbling(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     eventsMs(spark, sfDir)
       .withColumn("tsc", timestamp_micros(expr("ts div 1000")))
       .groupBy(window(col("tsc"), "1 hour"))
@@ -128,7 +126,6 @@ object EventOps extends OpCatalog {
     * each event lands in two buckets. The oracle reproduces the expansion
     * with a 2-row unnest cross join. */
   def eventSliding(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     eventsMs(spark, sfDir)
       .withColumn("tsc", timestamp_micros(expr("ts div 1000")))
       .groupBy(window(col("tsc"), "1 hour", "30 minutes"))
@@ -173,7 +170,6 @@ object EventOps extends OpCatalog {
   /** Gap-based sessionization (E17) over [[withSessionIds]]'s rule;
     * DuckDB mirrors it verbatim. */
   def sessionize(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val sessions = withSessionIds(eventsMs(spark, sfDir))
       .groupBy(col("user_id"), col("sess"))
       .agg(count(lit(1)).as("sess_events"),
@@ -218,7 +214,6 @@ object EventOps extends OpCatalog {
     * rows-preceding frame), not a pairwise self-join: linear per user at
     * any scale. */
   def asofJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ms"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -248,7 +243,6 @@ object EventOps extends OpCatalog {
   /** Pivot (wide aggregation): event-type counts per user cohort. Pivot
     * values are declared explicitly — no extra distinct-collect job. */
   def pivotCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val types = Seq("click", "error", "purchase", "signup", "view")
     Tables.events(spark, sfDir)
       .withColumn("cohort", col("user_id") % 10)
@@ -314,7 +308,6 @@ object EventOps extends OpCatalog {
     * rounds with checkpointing stay the scale path (q60's scaladoc).
     * Min-hop per type folds the multiple reach paths deterministically. */
   def recursiveReach(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     recursiveReachOf(eventsMs(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("ms"), col("event_type")))
   }
@@ -383,7 +376,6 @@ object EventOps extends OpCatalog {
     * AQE broadcasts them as they fall under the threshold. Counts only
     * integer epoch-millis comparisons — cross-engine exact. */
   def funnelConversion(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val e = eventsMs(spark, sfDir)
       .select(col("user_id"), col("event_type"), col("ms"))
     val s = e.filter(col("event_type") === "signup")
@@ -433,7 +425,6 @@ object EventOps extends OpCatalog {
     * exchange is reused), then one agg on the tiny (cohort, offset) grid.
     * All integer epoch-millis division — cross-engine exact. */
   def retentionCohorts(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val week = 604800000L // 7 * 86400000 ms
     val e = eventsMs(spark, sfDir).select(col("user_id"), col("ms"))
     val first = e.groupBy(col("user_id")).agg(min(col("ms")).as("t0"))
@@ -469,7 +460,6 @@ object EventOps extends OpCatalog {
     * map-side partial agg to the grid, and a broadcast-sized window after
     * — the same single-heavy-exchange shape as q24's as-of join. */
   def eventTransitions(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val grid = transitions(eventsMs(spark, sfDir))
       .groupBy(col("event_type").as("from_type"), col("to_type"))
       .agg(count(lit(1)).as("cnt"))
@@ -540,7 +530,6 @@ object EventOps extends OpCatalog {
         count(lit(1)).as("n"))
 
   def anomalyHours(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val h = eventsMs(spark, sfDir)
       .select(col("event_type"), expr("ms div 3600000").as("hour"))
       .groupBy(col("event_type"), col("hour"))
@@ -588,7 +577,6 @@ object EventOps extends OpCatalog {
     * excluded by the `-1` upper bound (strictly prior), and reporting
     * the min VIEW TIME (not an event id) keeps ties harmless. */
   def firstTouch(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val week = 7L * 86400000L
     val lookback = Window.partitionBy(col("user_id")).orderBy(col("ms"))
       .rangeBetween(-week, -1L)
@@ -634,7 +622,6 @@ object EventOps extends OpCatalog {
     * exchange. The trigram agg map-combines to the type-cube grid and
     * the top-10 is a TakeOrderedAndProject, never a global sort. */
   def eventPaths(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     eventPathsOf(eventsMs(spark, sfDir))
   }
 
@@ -699,7 +686,6 @@ object EventOps extends OpCatalog {
     * high-cardinality edges at 100 TB, swap in `approx_percentile`
     * exactly as q67 does for q47 (same flag-based oracle recipe). */
   def transitionDwell(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     transitions(eventsMs(spark, sfDir))
       .groupBy(col("event_type").as("from_type"), col("to_type"))
       .agg(count(lit(1)).as("cnt"),
@@ -739,7 +725,6 @@ object EventOps extends OpCatalog {
     * a grid agg proving the extracted values flow into relational
     * compute, not just projection. */
   def variantExtract(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     variantExtractOf(Tables.events(spark, sfDir))
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftSession, Op, OpCatalog, Tables}
+import graft.{Op, OpCatalog, Tables}
 import graft.ingest.{Generator, ParquetIngest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,7 +17,6 @@ object IngestOps extends OpCatalog {
     * table read from parquet footers ONLY — `ParquetIngest.probe` opens no
     * data pages. Oracle-identical to `count(*)`. */
   def probeMeta(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     import spark.implicits._
     Tables.names.map { t =>
       val p = ParquetIngest.probe(spark, s"$sfDir/$t.parquet")
@@ -44,7 +43,6 @@ object IngestOps extends OpCatalog {
     * O5/O6 type dispatch): text → UTF-8 binary, byte length vs char
     * length, modality dispatch on a metadata column. */
   def binaryMeta(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.documents(spark, sfDir)
       .withColumn("media", encode(col("text"), "UTF-8"))
       .select(col("doc_id"),
@@ -73,7 +71,6 @@ object IngestOps extends OpCatalog {
     * in the uniform [0,1) domain (`generate_data.py:9,15-16`). Raw random
     * values + schema parity stay spec-asserted in `IngestSpec`. */
   def generateFixture(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     import graft.functions.{SpatialExpressions => Sp}
     val g = col("geometry")
     Generator.fixture(spark, n = 10L, seed = 42L)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftSession, Op, OpCatalog, Tables}
+import graft.{Op, OpCatalog, Tables}
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,7 +22,6 @@ object MultimodalOps extends OpCatalog {
     * pipeline. Brightness/checksum (byte-content features) are asserted in
     * `MultimodalSpec` instead. */
   def mediaFeatures(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val media = Multimodal.packMedia(Tables.documents(spark, sfDir))
     Multimodal.extractFeatures(media).toDF()
       .groupBy(col("kind"))
@@ -55,7 +54,6 @@ object MultimodalOps extends OpCatalog {
     * `floor((n_frames-1)/4)+1` samples of 256 bytes (the whole payload
     * when it is shorter than one frame). */
   def frameSample(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val media = Multimodal.packMedia(Tables.documents(spark, sfDir))
     Multimodal.sampleFrames(media)
       .groupBy(col("media_id"))

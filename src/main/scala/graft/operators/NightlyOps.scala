@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftSession, Nightly, Op, OpCatalog, Tables}
+import graft.{Nightly, Op, OpCatalog, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -74,7 +74,6 @@ object NightlyOps extends OpCatalog {
     * add/retract maintenance, compaction, vacuum, cursor skips on
     * re-runs) must land exactly the direct answer. */
   def nightlyStats(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val roots = nightlyArtifact(spark, sfDir)
     VersionedTable.readCurrent(spark, roots.stats, Nightly.statsSchema)
       .orderBy(col("bucket"))
@@ -106,7 +105,6 @@ object NightlyOps extends OpCatalog {
     * world, and the driver hash-checks the pinned route lands the
     * identical grid. */
   def nightPinStats(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val roots = nightlyArtifact(spark, sfDir)
     val nights = Nightly.listNightPins(spark, roots.corpus)
     require(nights.nonEmpty, "the two-night artifact always pins")
@@ -124,7 +122,6 @@ object NightlyOps extends OpCatalog {
     * .deltaFromChanges]]) served the exact lexical state a fresh build
     * would. */
   def nightlyBm25(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val roots = nightlyArtifact(spark, sfDir)
     Bm25Index.probeVersioned(spark, roots.bm25,
       Seq("window", "spark", "stream"))

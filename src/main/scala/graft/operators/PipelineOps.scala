@@ -55,7 +55,6 @@ object PipelineOps extends OpCatalog {
     * broadcast. The window re-uses the tf shuffle's doc_id clustering;
     * nothing here is quadratic in docs. */
   def salientTerms(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val tf = tok(spark, sfDir)
       .groupBy(col("doc_id"), col("word"))
       .agg(count(lit(1)).as("tf"))
@@ -118,7 +117,6 @@ object PipelineOps extends OpCatalog {
     * `TakeOrderedAndProject`. Nothing is query-term-count-quadratic or
     * corpus-quadratic. */
   def bm25Search(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     bm25SearchOf(GraftSession.spread(
       Tables.documents(spark, sfDir), col("doc_id")),
       Seq("window", "spark", "stream"))
@@ -137,7 +135,6 @@ object PipelineOps extends OpCatalog {
     * answers are hash-identical (`Bm25IndexSpec` also pins them equal
     * in-process). */
   def bm25IndexProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Bm25Index.probe(spark, ensureBm25Artifact(spark, sfDir, "q134").toString,
       Seq("window", "spark", "stream"))
   }
@@ -177,7 +174,6 @@ object PipelineOps extends OpCatalog {
     * map-side `WindowGroupLimit` per-query frontier. The artifact is
     * q134's (same family, same corpus — built once, served by both). */
   def batchBm25IndexProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Bm25Index.probeBatch(spark,
       ensureBm25Artifact(spark, sfDir, "q139").toString, bm25Battery)
   }
@@ -246,7 +242,6 @@ object PipelineOps extends OpCatalog {
     * sums of ≤2 exact small-integer reciprocals — identical bits in
     * both engines — rounded to 6dp with doc_id tiebreak. */
   def hybridRrf(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     import org.apache.spark.sql.expressions.Window
     val k0 = 60
     val lex = Bm25Index.probe(spark,
@@ -353,7 +348,6 @@ object PipelineOps extends OpCatalog {
     * itself is the honest hash-diff (q100's classification), not the
     * planting rule. */
   def bm25IncrementalProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val dir = VectorOps.artifactDir(
       s"graft_bm25incr_index_${Bm25Index.formatTag}",
       sfDir, sourceFile = "documents.parquet")
@@ -394,7 +388,6 @@ object PipelineOps extends OpCatalog {
     * scratch (the artifact dir is identity+format keyed like every
     * index family). */
   def bm25VersionedProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Bm25Index.probeVersioned(spark, bm25VtArtifact(spark, sfDir),
       Seq("window", "spark", "stream"))
   }
@@ -439,7 +432,6 @@ object PipelineOps extends OpCatalog {
     * tools, ad-hoc time travel) is thereby answer-invariant over the
     * exact serving artifact, not just over toy fixtures. */
   def bm25GraftVtProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Bm25Index.probeVersionedViaFormat(spark, bm25VtArtifact(spark, sfDir),
       Seq("window", "spark", "stream"))
   }
@@ -551,7 +543,6 @@ object PipelineOps extends OpCatalog {
     * predicate — no shuffle, no RNG state, no driver coordination — the
     * same rows are chosen on any cluster, any partitioning, any run. */
   def stratifiedSample(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val sampled = CurationOps.lcgPriority(1000L) < 200
     Tables.documents(spark, sfDir)
       .groupBy(col("lang"))
@@ -590,7 +581,6 @@ object PipelineOps extends OpCatalog {
     * one aggregate (plus the distinct-rewrite for the dedup column) — the
     * funnel shape stays a single pass no matter the corpus size. */
   def qualityFunnel(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val d = Tables.documents(spark, sfDir)
       .withColumn("w", split(lower(col("text")), " "))
       .withColumn("n_tok", size(col("w")))
@@ -629,7 +619,6 @@ object PipelineOps extends OpCatalog {
     * length-distribution profile every curation run starts from. Pure
     * integer bucketing (single partial-agg shuffle of ≤10 groups). */
   def lengthHistogram(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.documents(spark, sfDir)
       .groupBy(least(floor(col("n_chars") / 200), lit(9L)).as("bucket"))
       .agg(count(lit(1)).as("n_docs"),
@@ -662,7 +651,6 @@ object PipelineOps extends OpCatalog {
     * second shuffle of the raw token stream, which at 100 TB would be a
     * whole redundant corpus-sized exchange). Linear, no wide rows. */
   def repetitionQuality(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val d = GraftSession.spread(Tables.documents(spark, sfDir), col("doc_id"))
       .withColumn("w", split(lower(col("text")), " "))
       .filter(size(col("w")) >= 3)
@@ -736,7 +724,6 @@ object PipelineOps extends OpCatalog {
     * (an eval suite, not a corpus) — AQE broadcasts it when it fits.
     * Nothing quadratic: cost is linear in corpus grams + true overlaps. */
   def contamination(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val grams = TextOps.gramTokenized(
         GraftSession.spread(Tables.documents(spark, sfDir), col("doc_id")))
       .select(col("doc_id"), explode(TextOps.wordGramExpr(8)).as("gram"))
@@ -778,7 +765,6 @@ object PipelineOps extends OpCatalog {
     * so the single-partition global sort is over a tiny frame, not the
     * corpus; the total is an explicit broadcast. */
   def trainingMix(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val agg = Tables.documents(spark, sfDir)
       .select(col("lang"), col("source"),
         size(split(lower(col("text")), " ")).as("n_tok"))
@@ -825,7 +811,6 @@ object PipelineOps extends OpCatalog {
     * ordered prefix-sum would serialize the corpus through one partition).
     * One shuffle to lang shards, one agg. */
   def sequencePacking(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.documents(spark, sfDir)
@@ -872,7 +857,6 @@ object PipelineOps extends OpCatalog {
     * rates are unchanged as long as no two distinct in-corpus texts
     * collide, which the q30 exact-dedup path (full-text keys) can audit. */
   def dupRateBySource(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val cw = Window.partitionBy(xxhash64(col("text")))
     Tables.documents(spark, sfDir)
       .withColumn("cnt", count(lit(1)).over(cw))
@@ -921,7 +905,6 @@ object PipelineOps extends OpCatalog {
     * relative error, absorbed by the 4-dp rounding (policy: round(·,4) when
     * float error ≪ 5e-5). */
   def trigramLmScore(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     // ONE explode pass, immediately collapsed to per-(doc, trigram) counts:
     // the shuffle carries ~200 distinct trigrams per doc instead of every
     // character position, and the model/score branches both reuse it (the
@@ -1012,7 +995,6 @@ object PipelineOps extends OpCatalog {
     * span) coordinates, not duplicated text, until the encoder needs the
     * bytes. */
   def chunkPlan(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val chunk = 32
     val stride = 24
     GraftSession.spread(Tables.documents(spark, sfDir), col("doc_id"))
@@ -1065,7 +1047,6 @@ object PipelineOps extends OpCatalog {
     * corpus-sized/|sources| — at extreme skew, pre-aggregate to
     * (source, n_chars) counts first; documented, not needed here. */
   def qualityDeciles(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val w = Window.partitionBy(col("source"))
       .orderBy(col("n_chars").desc, col("doc_id").asc)
     Tables.documents(spark, sfDir)
@@ -1107,7 +1088,6 @@ object PipelineOps extends OpCatalog {
     * ~1e-15 ≪ the round(·,4) tolerance — the documented cross-engine
     * rounding rule. */
   def mixtureWeights(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val all = Window.partitionBy() // grid-sized frame only (see scaladoc)
     Tables.documents(spark, sfDir)
       .select(col("lang"), col("source"),
@@ -1197,7 +1177,6 @@ object PipelineOps extends OpCatalog {
       UniSpaceRe, " "), WsRunRe, " "))
 
   def normalizeText(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val planted = GraftSession.spread(
         Tables.documents(spark, sfDir), col("doc_id"))
       .withColumn("ptext", concat(col("text"),
@@ -1315,7 +1294,6 @@ object PipelineOps extends OpCatalog {
     nMatches(c, EmailRe) + nMatches(c, PhoneRe) + nMatches(c, IpRe)
 
   def piiScrub(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     // three regex passes per row: spread so they don't run on one core
     val planted = GraftSession.spread(Tables.documents(spark, sfDir), col("doc_id"))
       .withColumn("ptext", concat(col("text"),
@@ -1400,7 +1378,6 @@ object PipelineOps extends OpCatalog {
     * this is the cheapest possible plan: one scan, partial aggs map-side.
     */
   def qualityClassifier(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val scored = GraftSession.spread(Tables.documents(spark, sfDir), col("doc_id"))
       .select(col("doc_id"), col("lang"), col("source"),
         split(lower(col("text")), " ").as("w"))
@@ -1478,7 +1455,6 @@ object PipelineOps extends OpCatalog {
     * `GraftFunctionsSpec`/`PipelineOps` specs gate it (planted
     * repetitive vs natural text, determinism, interpreted == codegen). */
   def compressionQuality(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     compressionQualityOf(Tables.documents(spark, sfDir))
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftSession, Op, OpCatalog, Tables}
+import graft.{Op, OpCatalog, Tables}
 import graft.functions.Rounding.roundVal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -46,7 +46,6 @@ object Relational extends OpCatalog {
   /** TPC-H Q1-shaped pricing summary: filter → hash agg → sort (E2).
     * Flagship query (`SparkEntry.entry`). */
   def pricingSummary(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val li = Tables.lineitem(spark, sfDir)
     li.filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -83,7 +82,6 @@ object Relational extends OpCatalog {
   /** Selective filter + narrow projection (E1): predicate and the 4-column
     * read schema must both reach the parquet scan. */
   def filterProject(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.lineitem(spark, sfDir)
       .filter(col("l_quantity") > 45 &&
         col("l_shipdate") >= lit("2000-01-01").cast("timestamp") &&
@@ -104,7 +102,6 @@ object Relational extends OpCatalog {
     * shuffle join (customer scales with SF — AQE may still broadcast it at
     * small SF), nation is 25 rows → explicit broadcast. */
   def joinBroadcastDim(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val o = Tables.orders(spark, sfDir)
     val c = Tables.customer(spark, sfDir)
     val n = Tables.nation(spark, sfDir)
@@ -130,7 +127,6 @@ object Relational extends OpCatalog {
     * sides scale with SF → sort-merge/shuffled-hash territory; the date
     * filters push down to both scans before the shuffle. */
   def joinLarge(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val li = Tables.lineitem(spark, sfDir)
       .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp"))
     val o = Tables.orders(spark, sfDir)
@@ -158,7 +154,6 @@ object Relational extends OpCatalog {
     * date range (E3). nation/region broadcast; the customer⋈orders⋈lineitem
     * chain shuffles on its keys. */
   def multiJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val li = Tables.lineitem(spark, sfDir)
     val o = Tables.orders(spark, sfDir)
       .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -193,7 +188,6 @@ object Relational extends OpCatalog {
   /** Left-semi join (E4): customers having at least one 'F' order, counted
     * per nation. Semi joins shuffle only keys — no row multiplication. */
   def semiJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val c = Tables.customer(spark, sfDir)
     val o = Tables.orders(spark, sfDir).filter(col("o_orderstatus") === "F")
     c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
@@ -216,7 +210,6 @@ object Relational extends OpCatalog {
     * (Every customer has at least one order in this testdata, so the anti
     * join is against the filtered order set to keep the result non-empty.) */
   def antiJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val c = Tables.customer(spark, sfDir)
     val o = Tables.orders(spark, sfDir).filter(col("o_totalprice") > 300000)
     c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
@@ -238,7 +231,6 @@ object Relational extends OpCatalog {
   /** Ranking window (E5): top-3 orders per customer by total price. One
     * shuffle on the partition key, no join. */
   def windowRank(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     Tables.orders(spark, sfDir)
@@ -262,7 +254,6 @@ object Relational extends OpCatalog {
   /** Analytic frame window (E5): per-customer running revenue in order-date
     * order (ROWS UNBOUNDED PRECEDING..CURRENT ROW). */
   def windowRunning(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate"), col("o_orderkey"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -287,7 +278,6 @@ object Relational extends OpCatalog {
   /** Global sort + top-k (E6): Spark plans `TakeOrderedAndProject` — per-
     * partition top-k then a k-row merge on the driver, no full sort at scale. */
   def topK(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.orders(spark, sfDir)
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       .limit(10)
@@ -305,7 +295,6 @@ object Relational extends OpCatalog {
   /** Set operations (E7): UNION / INTERSECT / EXCEPT cardinalities of two
     * customer-key sets (BUILDING segment vs high account balance). */
   def setOps(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val c = Tables.customer(spark, sfDir)
     val a = c.filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
     val b = c.filter(col("c_acctbal") > 5000).select(col("c_custkey"))
@@ -333,7 +322,6 @@ object Relational extends OpCatalog {
   /** ROLLUP (E8): nation × segment subtotals over customer balances. NULL
     * grouping slots are coalesced to 'ALL' so ordering is NULL-free. */
   def rollupAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val c = Tables.customer(spark, sfDir)
     val n = Tables.nation(spark, sfDir)
     c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
@@ -369,7 +357,6 @@ object Relational extends OpCatalog {
   // ---------------------------------------------------------------- q13
   /** CUBE (E8): all grouping combinations of order status × priority. */
   def cubeAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.orders(spark, sfDir)
       .cube(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n_orders"),
@@ -402,7 +389,6 @@ object Relational extends OpCatalog {
     * per order status. (The approximate twin, HLL `approx_count_distinct`,
     * is exercised in ScalaTest — not oracle-comparable by design.) */
   def distinctAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.orders(spark, sfDir)
       .groupBy(col("o_orderstatus"))
       .agg(countDistinct(col("o_custkey")).as("n_custs"),
@@ -426,7 +412,6 @@ object Relational extends OpCatalog {
     * right call up to ~10M parts; beyond that drop the hint and let AQE
     * decide (documented tradeoff). */
   def brandRevenue(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val li = Tables.lineitem(spark, sfDir)
     val p = Tables.part(spark, sfDir)
     li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
@@ -451,7 +436,6 @@ object Relational extends OpCatalog {
   // ---------------------------------------------------------------- q16
   /** Supplier-side dim join + agg: balances per nation name. */
   def supplierBalance(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val s = Tables.supplier(spark, sfDir)
     val n = Tables.nation(spark, sfDir)
     s.join(broadcast(n), s("s_nationkey") === n("n_nationkey"))
@@ -478,7 +462,6 @@ object Relational extends OpCatalog {
     * [[graft.GraftSession.tune]]); the plan shows
     * `PushedAggregation: [COUNT(*)]` on every scan (`graft.Explain`). */
   def scanMeta(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.names.map { t =>
       Tables(spark, sfDir, t).agg(count(lit(1)).as("n_rows"))
         .select(lit(t).as("tbl"), col("n_rows"))
@@ -516,7 +499,6 @@ object Relational extends OpCatalog {
     * rule) so MoM ratios derive from identical 2dp doubles on both
     * engines. */
   def monthlyTrend(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val monthly = Tables.orders(spark, sfDir)
       .groupBy(date_format(date_trunc("month", col("o_orderdate")), "yyyy-MM")
         .as("month"))

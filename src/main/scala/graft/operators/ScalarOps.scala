@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftSession, Op, OpCatalog, Tables}
+import graft.{Op, OpCatalog, Tables}
 import graft.functions.Rounding.roundVal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,7 +26,6 @@ object ScalarOps extends OpCatalog {
   /** String + date + math function showcase over orders (bounded output:
     * orderkey < 200). Every function chosen to have an exact DuckDB twin. */
   def scalarFuncs(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.orders(spark, sfDir)
       .filter(col("o_orderkey") < 200)
       .select(
@@ -78,7 +77,6 @@ object ScalarOps extends OpCatalog {
   /** Conditional expressions: CASE/WHEN ladders, coalesce, nullif,
     * least/greatest — aggregated so the result is compact. */
   def conditionalFuncs(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.orders(spark, sfDir)
       .withColumn("price_band",
         when(col("o_totalprice") < 100000, "low")
@@ -114,7 +112,6 @@ object ScalarOps extends OpCatalog {
     * customer's average — exercised through the SQL entry so Catalyst's
     * subquery decorrelation (RewriteCorrelatedScalarSubquery) runs. */
   def correlatedSubquery(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     graft.TempViews.withView(Tables.orders(spark, sfDir), "graft_orders_cs") {
       v => spark.sql(
         s"""SELECT o_custkey, count(*) AS n_big, max(o_totalprice) AS max_price
@@ -141,7 +138,6 @@ object ScalarOps extends OpCatalog {
     * entry point over a temp view — DataFrame API has no direct grouping
     * sets; `spark.sql` is the idiomatic route. */
   def groupingSets(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     graft.TempViews.withView(Tables.orders(spark, sfDir), "graft_orders_gs") {
       v => spark.sql(
         s"""SELECT
@@ -184,7 +180,6 @@ object ScalarOps extends OpCatalog {
     * vs 3.4 s split at `local[32]`. Split, the HLL pass keeps 3 groups
     * (one buffer each) and the exact pass stays all-long-buffers. */
   def approxDistinct(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     // the split is DELIBERATE — see the scaladoc above (re-measured in
     // round 15: the fused form replayed at 17.5 s vs 1.7 s split)
     val li = Tables.lineitem(spark, sfDir)
@@ -225,7 +220,6 @@ object ScalarOps extends OpCatalog {
     * 2-decimal inputs keeps doubles well inside the 4dp rounding margin.
     * (`approx_percentile`'s sketch twin stays engine-specific → spec.) */
   def percentiles(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.orders(spark, sfDir)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),
@@ -271,7 +265,6 @@ object ScalarOps extends OpCatalog {
     * rows-only + spec (the GK rank-error law in ScalarOpsSpec is the real
     * correctness check; the flags are a cross-engine smoke signal). */
   def approxPercentiles(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.orders(spark, sfDir)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftSession, Op, OpCatalog, Tables}
+import graft.{Op, OpCatalog, Tables}
 import graft.functions.Rounding.roundVal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,7 +22,6 @@ object SkewOps extends OpCatalog {
     * determinism), so one hot user's rows spread over `salts` reducers.
     * Aggregation after the join collapses the salt again. */
   def saltedJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val salts = 8
     val ev = Tables.events(spark, sfDir)
       // coalesce: a NULL key must still land in SOME salt bucket, or the
@@ -54,7 +53,6 @@ object SkewOps extends OpCatalog {
     * bounded dim (for two LARGE interval sets the play is binning both
     * sides to an equi key first; documented, not needed here). */
   def rangeJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     import spark.implicits._
     val bands = Seq(
       ("tiny", 0.0, 5.0), ("small", 5.0, 20.0),
@@ -96,7 +94,6 @@ object SkewOps extends OpCatalog {
     * key-sized frame, which would single-partition-sort every distinct
     * key at 100 TB); top-10 is a TakeOrderedAndProject. */
   def keySkewProfile(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     keySkewProfileOf(Tables.events(spark, sfDir), "user_id")
   }
 

@@ -112,7 +112,6 @@ object TextOps extends OpCatalog {
     * dedup summary (stable at any SF). The survivor-picking variant with
     * a deterministic keeper (lowest doc_id) is q31. */
   def dedupExact(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.documents(spark, sfDir)
       .groupBy(col("text"))
       // (q31 is the keeper-REPORTING variant; this summary never reads a
@@ -136,7 +135,6 @@ object TextOps extends OpCatalog {
     * formulation of `dropDuplicates`, which (unlike dropDuplicates itself)
     * pins WHICH row survives. */
   def dedupKeyed(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val w = Window.partitionBy(col("lang"), col("source"))
       .orderBy(col("doc_id"))
     Tables.documents(spark, sfDir)
@@ -178,7 +176,6 @@ object TextOps extends OpCatalog {
     }
 
   private def neardupShingleUncached(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     // the memoized shingle base feeds five branches of this plan (freq agg,
     // ordering join, both verify sides) — and every sibling query
     exactNeardupFromShingled(shingled(spark, sfDir), 0.8)
@@ -275,7 +272,6 @@ object TextOps extends OpCatalog {
     * `TextOpsSpec` additionally asserts q33 ⊆ q32 (precision 1.0 by
     * construction) and measures recall. */
   def neardupMinhashLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     // signature frame is memoized: the banded candidate join reads it from
     // BOTH sides, and the per-shingle MinHash pass is the query's real
     // cost — pay it once per (session, path). Empty shingle sets are
@@ -378,7 +374,6 @@ object TextOps extends OpCatalog {
     * replayed exactly in DuckDB (`md5_number_lower`, HUGEINT bit
     * arithmetic, two's-complement fold). */
   def simhashPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     // fingerprints are 8 bytes/doc; memoized so the self-join's two
     // branches don't each recompute the shingle+simhash pass. Empty
     // shingle sets are dropped BEFORE banding: fp=0 for every such doc, so
@@ -448,7 +443,6 @@ object TextOps extends OpCatalog {
   /** Per-document token stats (E14 / north-star token counting): token
     * count, distinct tokens, type-token ratio, mean token length. */
   def tokenStats(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     toks(spark, sfDir)
       .select(col("doc_id"),
         size(col("w")).as("n_tokens"),
@@ -474,7 +468,6 @@ object TextOps extends OpCatalog {
     * is generate + partial agg + final agg + TakeOrdered — the classic
     * word-count shape, fully distributed. */
   def wordFreq(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     toks(spark, sfDir)
       .select(explode(col("w")).as("word"))
       .groupBy(col("word"))
@@ -506,7 +499,6 @@ object TextOps extends OpCatalog {
     * integer threshold compare (`cnt·32 ≥ n`) and one `round(·,4)` share
     * keep the output hash-exact cross-engine. */
   def heavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     import org.apache.spark.sql.functions.udaf
     val words = toks(spark, sfDir).select(explode(col("w")).as("word"))
     val mg = udaf(new graft.functions.MisraGriesAggregator(64))
@@ -562,7 +554,6 @@ object TextOps extends OpCatalog {
     * gram (vocabulary-sized, map-combined), one ≤#buckets agg, one
     * window over the tiny bucket frame. Never a prefix-by-prefix rescan. */
   def vocabGrowth(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val firstSeen = toks(spark, sfDir)
       .filter(size(col("w")) >= 2) // wordGramExpr caller contract
       .select(col("doc_id"), explode(wordGramExpr(2)).as("gram"))
@@ -603,7 +594,6 @@ object TextOps extends OpCatalog {
     * ratio, chars-per-token — the length/punct/stopword heuristics of
     * pretraining-data filters, aggregated per lang. */
   def qualityScore(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     toks(spark, sfDir)
       .withColumn("n_tok", size(col("w")))
       .withColumn("ttr",
@@ -640,7 +630,6 @@ object TextOps extends OpCatalog {
     * (SimHash gets the same treatment through q34_simhash_pairs, whose
     * md5-based fingerprint is likewise replayed in its oracle.) */
   def fingerprints(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     toks(spark, sfDir)
       .select(col("doc_id"),
         TextExpressions.rollingHash64(col("text")).as("content_fp"),
@@ -687,7 +676,6 @@ object TextOps extends OpCatalog {
     * argmax (max of (score, plang) pairs, ties to the greatest language
     * tag) replays in DuckDB as `list_sort(structs)[last]`. */
   def langId(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     // Public-knowledge marker words per language; the testdata's text is
     // synthetic English-ish soup, so this exercises the mechanism (scored
     // argmax over profiles), not real-world accuracy.
@@ -736,7 +724,6 @@ object TextOps extends OpCatalog {
     * embedding-similarity graph.
     * Oracle: a recursive CTE computing the same transitive closure. */
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     ccLabels(spark, sfDir).orderBy(col("doc_id"))
   }
 
@@ -769,7 +756,6 @@ object TextOps extends OpCatalog {
     * over canon_id, whose partitions are cluster-sized (bounded, small).
     * No new corpus-wide shuffle. */
   def clusterRepresentatives(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val labels = ccLabels(spark, sfDir)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("n_chars"))
@@ -837,7 +823,6 @@ object TextOps extends OpCatalog {
     * regex segmentation (word pieces + standalone punctuation), plus the
     * chars-per-token ratio LLM data pipelines budget with. */
   def tokenEstimate(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     Tables.documents(spark, sfDir)
       .withColumn("lt", lower(col("text")))
       .select(col("doc_id"),
@@ -868,7 +853,6 @@ object TextOps extends OpCatalog {
     * own `NGramGenerator` expression (a native `Generate` node, same
     * plan shape as `explode`). Top-20 bigrams with count + distinct docs. */
   def bigramFreq(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     toks(spark, sfDir)
       .select(col("doc_id"),
         graft.functions.NGramGenerator.ngrams(col("w"), 2).as(Seq("pos", "ngram")))
@@ -906,7 +890,6 @@ object TextOps extends OpCatalog {
     * key; the at-scale variant groups on `rolling_hash64(span)` (8-byte
     * keys, the q72 trick) and joins the winning spans' text back. */
   def repeatedSpans(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val n = 15
     toks(spark, sfDir) // the one tokenization definition
       .filter(size(col("w")) >= n)
@@ -966,7 +949,6 @@ object TextOps extends OpCatalog {
     * numeric audit (n_flagged/n_false_pos/fp_rate) stays available via
     * [[incrementalDedupBloomAudit]], which the spec gates. */
   def incrementalDedupBloom(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     incrementalDedupBloomAudit(spark, sfDir)
       .select(col("n_arriving"), col("n_true_dups"), col("n_false_neg"),
         (col("fp_rate") <= 0.05).as("fp_ok"))
@@ -1060,7 +1042,6 @@ object TextOps extends OpCatalog {
     * top-20 equality spec-pinned at two SFs. Top-20 is a
     * TakeOrderedAndProject on the ROUNDED key (q63 ordering policy). */
   def containmentPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     containmentPairsFrom(keptGramBase(spark, sfDir))
   }
 
@@ -1160,7 +1141,6 @@ object TextOps extends OpCatalog {
     * |candidates|·|G_a| rows, bounded by the blocking. Deterministic
     * (df, gkey) ranking keeps the whole pipeline oracle-replayable. */
   def containmentPairsRare(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     containmentPairsRareFrom(keptGramBase(spark, sfDir), 8)
   }
 
@@ -1326,7 +1306,6 @@ object TextOps extends OpCatalog {
     * pairs included), matching the DuckDB oracle's `string_split`
     * semantics even on astral-plane text. */
   def charEntropy(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     charEntropyOf(
       GraftSession.spread(Tables.documents(spark, sfDir), col("doc_id")))
   }
@@ -1392,7 +1371,6 @@ object TextOps extends OpCatalog {
     * aggregates land on a |sources|-row grid joined broadcast-size. No
     * window, no self-join, nothing driver-side. */
   def gramNovelty(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     // the declared query reads the session-shared PRE-cap gram base —
     // q120 is exactly why the base keeps all grams (no df cap)
     gramNoveltyFrom(gramBase(spark, sfDir))
@@ -1462,7 +1440,6 @@ object TextOps extends OpCatalog {
     * appear only inside the regression sums (≤200 terms, 4dp-rounded —
     * q107's log2 cross-engine precedent). */
   def zipfSlope(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     zipfSlopeOf(GraftSession.spread(
       Tables.documents(spark, sfDir), col("doc_id")))
   }
@@ -1524,7 +1501,6 @@ object TextOps extends OpCatalog {
     * hash-joins when they don't; the min-count filter prunes the bigram
     * side before any join. */
   def pmiCollocations(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     pmiCollocationsOf(toks(spark, sfDir))
   }
 

@@ -59,7 +59,6 @@ object VectorOps extends OpCatalog {
     * Sims are rounded to 4dp with a vec_id tiebreak so the top-k frontier
     * is deterministic in both engines. */
   def cosineTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     exactCosineScored(spark, sfDir)
       .orderBy(col("sim").desc, col("vec_id"))
       .limit(10)
@@ -196,7 +195,6 @@ object VectorOps extends OpCatalog {
     * strategy-independent), the ONE query vector broadcasts, and top-k is
     * `TakeOrderedAndProject` (per-partition frontier, no global sort). */
   def filteredCosineTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val good = Tables.documents(spark, sfDir)
       .filter(col("n_chars") >= 300)
       .select(col("doc_id").as("vec_id"), col("lang"))
@@ -235,7 +233,6 @@ object VectorOps extends OpCatalog {
   /** Per-label L2-norm stats: posexplode-free elementwise aggregate via
     * higher-order functions; doubles rounded at 4dp. */
   def vectorNorms(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     emb(spark, sfDir)
       .withColumn("norm", sqrt(expr(
         "aggregate(embedding, CAST(0.0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")))
@@ -266,7 +263,6 @@ object VectorOps extends OpCatalog {
     * distance to own centroid. The all-pairs-free way to measure cluster
     * tightness (linear, two shuffles: by (label,pos), by label). */
   def centroidSpread(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val e = emb(spark, sfDir)
     val dims = e.select(col("vec_id"), col("label"),
       posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -376,7 +372,6 @@ object VectorOps extends OpCatalog {
   /** Declared q43: [[annLawFrame]] over [[annLshCore]] — exact cosine
     * top-10 rows + the LSH answer's score/recall law flags. */
   def annLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     annLawFrame(exactCosineScored(spark, sfDir), "sim", asc = false,
       annLshCore(spark, sfDir), lshRecallFloorHits,
       flagExactCosine(emb(spark, sfDir).filter(col("vec_id") =!= 0),
@@ -422,7 +417,6 @@ object VectorOps extends OpCatalog {
     * summed vector. Oracle-checked — the aggregator's double accumulation
     * differs from DuckDB's only at ~1e-12, far below the 4dp rounding. */
   def vectorSumAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val vecSum = udaf(graft.functions.VectorSumAggregator)
     emb(spark, sfDir)
       .groupBy(col("label"))
@@ -606,7 +600,6 @@ object VectorOps extends OpCatalog {
   /** Declared q45: [[annLawFrame]] over [[annIvfCore]] — exact cosine
     * top-10 rows + the IVF answer's score/recall law flags. */
   def annIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     annLawFrame(exactCosineScored(spark, sfDir), "sim", asc = false,
       annIvfCore(spark, sfDir), ivfRecallFloorHits,
       flagExactCosine(emb(spark, sfDir).filter(col("vec_id") =!= 0),
@@ -648,7 +641,6 @@ object VectorOps extends OpCatalog {
     * need the unbounded exact answer (q48 recall) call [[exactPairs]]
     * directly on the corpora they plant. */
   def embeddingNeardup(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     exactPairs(declaredSlice(spark, sfDir, "q46"), threshold = 0.5)
   }
 
@@ -745,7 +737,6 @@ object VectorOps extends OpCatalog {
     * this report (q93 declares the unbounded form with its own oracle);
     * production runs [[lshPairs]] alone. */
   def embeddingNeardupLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val (bands, rowBits) =
       AnnParams.bandedLsh(corpusSize(spark, sfDir), threshold = 0.5)
     val lsh = lshPairs(emb(spark, sfDir), threshold = 0.5,
@@ -851,7 +842,6 @@ object VectorOps extends OpCatalog {
     * Oracle: exact pairs in SQL + a recursive CTE computing the same
     * transitive closure (q60's oracle pattern). */
   def semanticDedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val pairs = exactPairs(declaredSlice(spark, sfDir, "q78"), threshold = 0.35)
     GraphOps.connectedComponents(pairs, "id_a", "id_b")
       .select(col("node").as("vec_id"), col("canon").as("canon_id"))
@@ -880,7 +870,6 @@ object VectorOps extends OpCatalog {
     * hashing change that DOES break a component fails the driver gate
     * loudly. `VectorOpsSpec` asserts the same equality in-suite. */
   def semanticDedupLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val (bands, rowBits) = AnnParams.bandedLsh(corpusSize(spark, sfDir),
       threshold = 0.35, targetRecall = 0.999)
     val pairs = lshPairs(emb(spark, sfDir), threshold = 0.35,
@@ -966,7 +955,6 @@ object VectorOps extends OpCatalog {
     * `round(·,6)`. Scale: a pure per-row map; the only shuffle is the
     * output sort. */
   def embeddingQuantize(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     emb(spark, sfDir)
       .withColumn("x", expr("transform(embedding, v -> CAST(v AS DOUBLE))"))
       .withColumn("scale",
@@ -1025,7 +1013,6 @@ object VectorOps extends OpCatalog {
     * Scale: one ≤|labels|-row centroid agg (map-combined) broadcast back,
     * a per-row map for the cosine, one final ≤|labels| agg. */
   def centroidOutliers(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val vecSum = udaf(graft.functions.VectorSumAggregator)
     val cents = emb(spark, sfDir)
       .groupBy(col("label"))
@@ -1250,7 +1237,6 @@ object VectorOps extends OpCatalog {
     * code-shape invariants, re-partitioning invariance, and the core's
     * zero-exchange serving plan. */
   def pqAdcTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     annLawFrame(exactL2Scored(spark, sfDir), "l2", asc = true,
       pqAdcTopKOf(emb(spark, sfDir), spark, memoKey = Some(sfDir)),
       pqRecallFloorHits,
@@ -1389,7 +1375,6 @@ object VectorOps extends OpCatalog {
     * `VectorOpsSpec` pins planted-cluster recall vs exact L2 and the
     * pruned-candidate fraction on the core. */
   def ivfAdcTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     annLawFrame(exactL2Scored(spark, sfDir), "l2", asc = true,
       ivfAdcTopKCore(spark, sfDir), ivfadcRecallFloorHits,
       flagExactL2(emb(spark, sfDir).filter(col("vec_id") =!= 0),
@@ -1823,7 +1808,6 @@ object VectorOps extends OpCatalog {
     * ([[annLawFrame]]); `PqIndexSpec` pins the artifact probe equal to
     * q117's in-query answer on the same corpus. */
   def pqIndexProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val e = emb(spark, sfDir)
     val qOpt = collectQueryVec(e)
     val served = qOpt match {
@@ -1894,7 +1878,6 @@ object VectorOps extends OpCatalog {
     * the pruned scan + exact cosine inside the probed cells. Same
     * corpus-identity artifact keying, same law-flag oracle as q45. */
   def ivfIndexProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val e = emb(spark, sfDir)
     val q = queryVec(spark, sfDir)
     val corpus = e.filter(col("vec_id") =!= 0)
@@ -1996,7 +1979,6 @@ object VectorOps extends OpCatalog {
     * `IvfIndexSpec` pins the pruned multi-query plan and the planted-
     * cluster recall. */
   def batchIvfIndexProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val e = emb(spark, sfDir)
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -2051,7 +2033,6 @@ object VectorOps extends OpCatalog {
     * `PqIndexSpec` pins the single-scan multi-query plan and the
     * batch==single-probe consistency. */
   def batchPqIndexProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val e = emb(spark, sfDir)
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -2220,7 +2201,6 @@ object VectorOps extends OpCatalog {
     * maintenance lifecycle (assignment movement, partition routing,
     * manifest resolution), not just the final probe. */
   def ivfVersionedProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val e = emb(spark, sfDir)
     val q = queryVec(spark, sfDir)
     val (_, _, corpusV2) = plantedVecV2(e)
@@ -2268,7 +2248,6 @@ object VectorOps extends OpCatalog {
     * contract). Declared as the batched law-flag frame vs exact L2 over
     * the planted-v2 corpus. */
   def pqVersionedBatchProbe(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val e = emb(spark, sfDir)
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -2333,7 +2312,6 @@ object VectorOps extends OpCatalog {
     * Rounded sims + vec_id tiebreak keep the frontier deterministic
     * cross-engine (q40's rule). */
   def batchCosineTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     val queries = emb(spark, sfDir).filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     batchCosineTopKOf(emb(spark, sfDir).filter(col("vec_id") >= 8), queries, 5)
@@ -2404,7 +2382,6 @@ object VectorOps extends OpCatalog {
     * dim·|pairs| rows of GRID data, never touching the corpus. Upper
     * triangle only (src_a < src_b), q106's convention. */
   def sourceSemanticDistance(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftSession.tune(spark)
     sourceSemanticDistanceOf(
       Tables.documents(spark, sfDir), emb(spark, sfDir))
   }

@@ -563,7 +563,6 @@ object StreamingOps {
     * stream as a literal. Partial per-partition filters OR-merge
     * (order-free), so the bytes are deterministic. */
   def seenSketch(seen: DataFrame): Array[Byte] = {
-    graft.GraftSession.tune(seen.sparkSession) // registers bloom_filter_agg
     val bytes = seen
       .selectExpr("bloom_filter_agg(xxhash64(text), 100000L, 1048576L) AS bf")
       .collect()(0).getAs[Array[Byte]](0)

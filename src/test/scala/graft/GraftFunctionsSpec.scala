@@ -1,10 +1,36 @@
 package graft
 
-/** SQL-surface checks for the registered custom functions. */
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+
+/** SQL-surface checks for the registered custom functions, and the
+  * session invariant that registers them (see [[GraftSession]]). */
 class GraftFunctionsSpec extends SparkSpec {
 
+  test("a GraftSession.local session is tuned once: confs set, every function resolves") {
+    // the shared fixture IS a GraftSession.local(4) session
+    Seq("spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.parquet.aggregatePushdown" -> "true",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true").foreach {
+      case (k, v) => assert(spark.conf.get(k) == v, k)
+    }
+    val registry = spark.sessionState.functionRegistry
+    val missing = GraftFunctions.all.map(_._1)
+      .filterNot(n => registry.functionExists(FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"unregistered: ${missing.mkString(", ")}")
+  }
+
+  test("building and collecting a declared query leaves caller-set confs alone") {
+    val key = "spark.sql.adaptive.skewJoin.enabled"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try Seq("q01_pricing_summary", "q34_simhash_pairs").foreach { q =>
+      SparkEntry.queries(q)(spark, sfDir).collect()
+      assert(spark.conf.get(key) == "false", s"$q re-set $key")
+    } finally spark.conf.set(key, prior)
+  }
+
   test("custom functions are callable from spark.sql") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  simhash64(array('a','b','c')) AS sh,
@@ -32,7 +58,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("general WKB functions are callable from spark.sql (codegen route)") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  st_geometrytype(st_point(1.0, 2.0)) AS gt,
@@ -50,7 +75,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("sorted_intersect_count == size(array_intersect) on sorted-distinct inputs") {
-    GraftFunctions.register(spark)
     // golden: 2 shared elements, probe array unsorted (only the RIGHT side
     // must be sorted), miss-before-first / miss-after-last covered
     val g = spark.sql(
@@ -86,7 +110,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("nfc_normalize: composition, idempotence, fast path, nulls, types") {
-    GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     // canonical composition: "e" + U+0301 composes to the single code
@@ -132,7 +155,6 @@ class GraftFunctionsSpec extends SparkSpec {
     // (works in tests, breaks when codegen kicks in, or vice versa).
     // Evaluate the same inputs under CODEGEN_ONLY and NO_CODEGEN factory
     // modes and require identical results.
-    GraftFunctions.register(spark)
     val exprs = Seq(
       "simhash64(array('a','b','c'))",
       "minhash_signature(array('x','y','z'), 8)",
@@ -164,7 +186,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("non-literal k in minhash_signature is rejected with a clear error") {
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT minhash_signature(array('a'), 1 + 1)").collect()
     }

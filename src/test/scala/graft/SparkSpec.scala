@@ -12,17 +12,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(s)
-    s
+    // a static conf, so it goes in before the session exists; the dir
+    // lives as long as the test JVM
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh")
+    sys.addShutdownHook(operators.VectorOps.deleteRecursively(warehouse))
+    System.setProperty("spark.sql.warehouse.dir", warehouse.toString)
+    GraftSession.local(4)
   }
 }

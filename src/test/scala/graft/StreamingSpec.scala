@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 class StreamingSpec extends SparkSpec {
 
   private def eventsBatch = {
-    GraftSession.tune(spark)
     Tables.events(spark, sfDir)
       .withColumn("tsc", expr("timestamp_micros(ts div 1000)"))
       .select(col("tsc").as("ts"), col("user_id"), col("event_type"),
@@ -391,7 +390,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming anomaly screen == batch q88 flags, stateless across batches") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    GraftSession.tune(spark)
     // the real hourly grid from the fixture, split across micro-batches;
     // stats computed from the same history (the static side)
     val grid = Tables.events(spark, sfDir)
@@ -424,7 +422,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming MAD screen == batch q104 outlier counts, stateless across batches") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    GraftSession.tune(spark)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
     // the static side: per-lang median/MAD from the batch operator itself
@@ -456,7 +453,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming semantic screen: flags == brute-force max-cosine vs the same static centers") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    GraftSession.tune(spark)
     // static centers: two orthogonal axes; streamed vectors planted near,
     // between, and far from them
     val centers = Seq(Seq(1f, 0f, 0f), Seq(0f, 1f, 0f))

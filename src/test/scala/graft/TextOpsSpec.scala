@@ -418,7 +418,6 @@ class TextOpsSpec extends SparkSpec {
 
   test("q119 compression ratio: repetitive text scores low, noise high, deterministic") {
     import spark.implicits._
-    graft.GraftSession.tune(spark)
     // planted corpus: template spam (one phrase repeated), natural-ish
     // prose, and base64-like noise (already-compressed garbage)
     val spam = Array.fill(80)("click here to win a free prize now").mkString(" ")
