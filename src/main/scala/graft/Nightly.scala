@@ -287,7 +287,7 @@ object Nightly {
       val (ups, rem) = IndexMaintenance.deltaFromChangesIn(feed, "doc_id",
         Seq("embedding"))
       // mirror the build's vec_id≠0 convention (PqIndex reserves id 0
-      // for the query vector) so updateFrom(feed) == build(v2) holds
+      // for the query vector) so maintenance(feed) == build(v2) holds
       PqIndex.updateFromVersioned(spark, roots.pq,
         vecRows(ups).filter(col("vec_id") =!= 0),
         rem.select(col("doc_id").as("vec_id")), cursorProp)

@@ -13,29 +13,30 @@ import org.apache.spark.sql.types._
   * re-tokenizes the corpus on EVERY query — at 100 TB, lexical
   * retrieval serves from a prebuilt inverted index, not a re-tokenize
   * (Robertson et al., TREC-3; every Lucene/ES deployment). The build
-  * step runs the tokenize ONCE and stores:
+  * step runs the tokenize ONCE and publishes one [[VersionedTable]]
+  * snapshot:
   *
-  *   `<path>/postings/` — (w, doc_id, tf, dl, df) PARTITIONED BY
-  *                        `bucket` = xxhash64(w) mod [[Buckets]]: the
-  *                        term-sharded layout a cluster co-locates
-  *                        postings by. dl/df are denormalized into the
-  *                        row (Lucene stores per-doc norms the same
-  *                        way) so serving needs NO join against a
-  *                        doc-lengths table.
-  *   `<path>/stats/`    — 1 row (n_docs, total_len) — the corpus
-  *                        constants of the BM25 formula.
+  *   partitions — (w, doc_id, tf, dl, df) PARTITIONED BY `bucket` =
+  *                xxhash64(w) mod [[Buckets]]: the term-sharded layout
+  *                a cluster co-locates postings by. dl/df are
+  *                denormalized into the row (Lucene stores per-doc
+  *                norms the same way) so serving needs NO join against
+  *                a doc-lengths table.
+  *   `stats`    — extra: 1 row (n_docs, total_len) — the corpus
+  *                constants of the BM25 formula, versioned WITH the
+  *                postings they must agree with.
   *
-  * Serving a query is then: map its terms to their buckets (partition
-  * pruning — the scan touches |terms| of [[Buckets]] partitions), push
-  * `w IN (terms)` into the pruned scan (`PushedFilters`), score each
-  * surviving posting row against the memoized corpus constants
-  * (literals in the plan — the stats parquet is read once per path per
-  * JVM, not once per probe), and
-  * aggregate per doc — cost proportional to the matched postings, not
-  * the corpus. `Bm25IndexSpec` pins the pruned/pushed plan and the
-  * answer's equality to q133's re-tokenize path; the declared q134
-  * carries q133's exact DuckDB oracle (identical integer inputs,
-  * identical double expression, one `round(·,4)`).
+  * Serving a query is then: map its terms to their buckets (literal
+  * path selection off the manifest — the scan touches |terms| of
+  * [[Buckets]] partitions), push `w IN (terms)` into the pruned scan,
+  * score each surviving posting row against the memoized corpus
+  * constants (literals in the plan — the stats extra is read once per
+  * snapshot per JVM, not once per probe), and aggregate per doc — cost
+  * proportional to the matched postings, not the corpus.
+  * `Bm25IndexSpec` pins the pruned/pushed plan and the answer's
+  * equality to q133's re-tokenize path; the declared q134 carries
+  * q133's exact DuckDB oracle (identical integer inputs, identical
+  * double expression, one `round(·,4)`).
   */
 object Bm25Index {
 
@@ -52,8 +53,8 @@ object Bm25Index {
   def formatTag: String = s"b$Buckets-v1"
 
   /** Postings schema, used for explicit-schema reads so an
-    * empty-corpus artifact (zero part files under `postings/`) still
-    * serves an empty result instead of failing schema inference. */
+    * empty-corpus artifact (zero postings partitions) still serves an
+    * empty result instead of failing schema inference. */
   val postingsSchema: StructType = StructType(Seq(
     StructField("w", StringType),
     StructField("doc_id", LongType),
@@ -69,45 +70,16 @@ object Bm25Index {
   private def bucketCol(w: org.apache.spark.sql.Column) =
     pmod(xxhash64(w), lit(Buckets.toLong)).cast("int")
 
-  /** Per-artifact (n_docs, total_len) memo: a ready artifact is
-    * immutable (identity-keyed cache dirs; [[updateFrom]] invalidates
-    * explicitly), so the 1-row stats parquet is read ONCE per path per
-    * JVM instead of once per probe (round-9 verdict item 6 — the
-    * PqIndex family already memoizes its corpus metadata this way).
-    * The constants then enter the probe plan as literals: no stats
-    * scan, no crossJoin, one less file read per query. */
-  private val statsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-
-  private def corpusStats(spark: SparkSession, path: String): (Long, Long) = {
-    val cached = statsMemo.get(path)
-    if (cached != null) return cached
-    val r = spark.read.schema(statsSchema).parquet(s"$path/stats")
-      .collect().headOption
-    r match {
-      case Some(row) =>
-        val v = (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-        statsMemo.put(path, v)
-        v
-      case None =>
-        // a complete build always writes exactly one stats row (the
-        // aggregate of an empty corpus is (0, null)), so zero rows
-        // means a torn/in-progress artifact: serve zeros WITHOUT
-        // caching — the pre-memo per-probe read self-healed once stats
-        // landed, and memoizing the degenerate read would pin bogus
-        // IDF/avgdl constants forever
-        (0L, 0L)
-    }
-  }
-
   private val vStatsMemo = new VersionedTable.SnapshotMemo[(Long, Long)]
 
   /** Per-(root, version) corpus constants for the versioned probes —
     * ONE definition for single and batched serving (the [[termFreq]]
     * rule), on the shared [[VersionedTable.SnapshotMemo]] (key format,
     * rollover eviction, and the degenerate-read no-cache policy live
-    * there). A zero-row stats read (lost part file) serves zeros
-    * UNCACHED — [[corpusStats]]' same self-healing rule. */
+    * there). A complete build always writes exactly one stats row (the
+    * aggregate of an empty corpus is (0, null)), so a zero-row read
+    * means a lost part file: serve zeros UNCACHED — memoizing the
+    * degenerate read would pin bogus IDF/avgdl constants forever. */
   private def versionedStats(spark: SparkSession, root: String,
       snap: VersionedTable.Snapshot): (Long, Long) =
     vStatsMemo.get(root, snap) {
@@ -117,34 +89,25 @@ object Bm25Index {
     }.getOrElse((0L, 0L))
 
   /** q133's lower+space-split token contract — ONE definition shared
-    * by [[build]] and [[updateFrom]], whose df/dl math silently
-    * diverges from the stored postings if the tokenize forks. */
+    * by [[buildVersioned]] and [[updateFromVersioned]], whose df/dl
+    * math silently diverges from the stored postings if the tokenize
+    * forks. */
   private def termFreq(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("w"))
     .filter(col("w") =!= "")
     .groupBy(col("doc_id"), col("w"))
     .agg(count(lit(1)).as("tf"))
 
-  /** Build the index at `path` from a `(doc_id, text)` frame: ONE
-    * tokenize pass (q133's lower+space-split token contract), tf per
-    * (doc, term), dl/df derived from the tf frame (no second
-    * tokenize), everything denormalized into the bucket-partitioned
-    * postings. Offline cost: the tokenize plus two tf-frame
+  /** Build the index into a [[VersionedTable]] at `root` from a
+    * `(doc_id, text)` frame: ONE tokenize pass (q133's lower+space-split
+    * token contract), tf per (doc, term), dl/df derived from the tf
+    * frame (no second tokenize), everything denormalized into the
+    * bucket-partitioned postings. Postings and the stats extra publish
+    * as ONE atomic snapshot (they must agree — df/n_docs enter the same
+    * formula). Offline cost: the tokenize plus two tf-frame
     * aggregations and two joins — paid once per corpus. */
-  def build(docs: DataFrame, path: String): Unit = {
-    val (rows, stats) = buildFrames(docs)
-    rows.write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/postings")
-    stats.write.mode("overwrite").parquet(s"$path/stats")
-    // an in-place rebuild at a served path must not leave v(old)'s
-    // corpus constants memoized (same contract as updateFrom)
-    statsMemo.remove(path)
-  }
-
-  /** ONE tokenize pass → (posting rows incl. `bucket`, 1-row stats) —
-    * the math of [[build]], shared verbatim with [[buildVersioned]] so
-    * the two layouts cannot drift. */
-  private def buildFrames(docs: DataFrame): (DataFrame, DataFrame) = {
+  def buildVersioned(spark: SparkSession, docs: DataFrame,
+      root: String, properties: Map[String, String] = Map.empty): Long = {
     val tf = termFreq(docs)
       .localCheckpoint() // dl, df, AND the postings write all read it
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
@@ -155,174 +118,117 @@ object Bm25Index {
         col("bucket"))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       sum(col("dl")).as("total_len"))
-    (rows, stats)
-  }
-
-  /** [[build]] into a [[VersionedTable]] at `root` instead of a plain
-    * directory: postings partitions and the stats side-table publish as
-    * ONE atomic snapshot (they must agree — df/n_docs enter the same
-    * formula), the contract [[IndexMaintenance.replacePartitions]]'
-    * in-place layout cannot give. */
-  def buildVersioned(spark: SparkSession, docs: DataFrame,
-      root: String, properties: Map[String, String] = Map.empty): Long = {
-    val (rows, stats) = buildFrames(docs)
     VersionedTable.publishFull(spark, root, "bucket", rows,
       Map("stats" -> stats), properties)
   }
 
   /** Incremental maintenance — apply a corpus delta (q100's diff
     * classes: `upserts` = added ∪ changed docs as `(doc_id, text)`,
-    * `removedIds` = `(doc_id)` of removed docs) to a built index
-    * WITHOUT re-tokenizing the unchanged corpus. Only the delta is
-    * tokenized; the rewrite touches exactly the buckets of the
-    * AFFECTED terms — every term whose doc-set changed, which is by
-    * construction the union of the delta docs' term sets, so every
-    * stale row (dropped doc, moved df) lives inside the rewritten
-    * partitions and untouched buckets stay byte-identical. df is
-    * denormalized, so affected terms' surviving rows are rewritten
-    * with `df − removedDocs(w) + addedDocs(w)`; dl rides only on the
-    * delta docs' own rows. One pushed-`doc_id IN` read of the old
-    * postings recovers the dropped docs' term sets and lengths (the
-    * reverse index IS the forward information at delta size; a 100 TB
-    * deployment that wants to skip even that keeps a doc→terms
-    * manifest beside the index). Stats move by the same deltas.
-    * `IndexMaintenanceSpec` pins `updateFrom(v1→v2) == build(v2)` as
-    * row-set + stats equality on the planted-v2 fixture. */
-  def updateFrom(spark: SparkSession, path: String, upserts: DataFrame,
-      removedIds: DataFrame): Unit = {
-    val old = spark.read.schema(postingsSchema).parquet(s"$path/postings")
-    val oldStats = spark.read.schema(statsSchema).parquet(s"$path/stats")
-      .collect().headOption
-    val stats1 = (oldStats.map(_.getLong(0)).getOrElse(0L),
-      oldStats.filter(!_.isNullAt(1)).map(_.getLong(1)).getOrElse(0L))
-    val (affectedBuckets, replacement, newStats) =
-      deltaFrames(spark, old, stats1, upserts, removedIds)
-    IndexMaintenance.replacePartitions(spark, s"$path/postings", "bucket",
-      affectedBuckets, replacement)
-    newStats.write.mode("overwrite").parquet(s"$path/stats")
-    statsMemo.remove(path) // the artifact at this path is no longer v1
-  }
-
-  /** [[updateFrom]] against a [[VersionedTable]] at `root`: the same
-    * delta math, but the affected buckets' replacements and the moved
-    * stats land as ONE copy-on-write snapshot — readers see the old
-    * index or the new one, never postings from v2 scored against v1's
-    * corpus constants, and the previous snapshot stays serveable until
-    * [[VersionedTable.vacuum]]. Published through
+    * `removedIds` = `(doc_id)` of removed docs) WITHOUT re-tokenizing
+    * the unchanged corpus. Only the delta is tokenized; the rewrite
+    * touches exactly the buckets of the AFFECTED terms — every term
+    * whose doc-set changed, which is by construction the union of the
+    * delta docs' term sets, so every stale row (dropped doc, moved df)
+    * lives inside the rewritten partitions and untouched buckets stay
+    * shared with the previous snapshot. df is denormalized, so affected
+    * terms' surviving rows are rewritten with
+    * `df − removedDocs(w) + addedDocs(w)`; dl rides only on the delta
+    * docs' own rows. One pushed-`doc_id IN` read of the old postings
+    * recovers the dropped docs' term sets and lengths (the reverse
+    * index IS the forward information at delta size). Stats move by
+    * the same deltas, and the affected buckets' replacements and the
+    * moved stats land as ONE copy-on-write snapshot — readers see the
+    * old index or the new one, never postings from v2 scored against
+    * v1's corpus constants. Published through
     * [[VersionedTable.retryingPublish]]: the delta is DERIVED from the
     * attempt's own base snapshot, so a concurrent commit (a backfill
     * colliding with the nightly job) makes this recompute against the
-    * winner's state and retry instead of dying — or worse, applying
-    * df/dl/stats movements computed against a superseded base. */
+    * winner's state and retry instead of applying df/dl/stats movements
+    * computed against a superseded base. `IndexMaintenanceSpec` pins
+    * the result equal to `buildVersioned(v2)`. */
   def updateFromVersioned(spark: SparkSession, root: String,
       upserts: DataFrame, removedIds: DataFrame,
       properties: Map[String, String] = Map.empty): Long =
     VersionedTable.retryingPublish(spark, root) { snap =>
+      import spark.implicits._
       val old = VersionedTable.read(spark, snap, root, postingsSchema)
       val s = VersionedTable.readExtra(spark, snap, root, "stats",
         statsSchema).collect().headOption
-      val stats1 = (s.map(_.getLong(0)).getOrElse(0L),
+      val (n1, len1) = (s.map(_.getLong(0)).getOrElse(0L),
         s.filter(!_.isNullAt(1)).map(_.getLong(1)).getOrElse(0L))
-      val (affectedBuckets, replacement, newStats) =
-        deltaFrames(spark, old, stats1, upserts, removedIds)
-      VersionedTable.Delta(affectedBuckets, replacement,
+      val (ups, dropIds) = IndexMaintenance.keyedDelta(upserts, removedIds,
+        "doc_id", Seq("text"))
+      // the delta docs' OLD rows: df decrements + dropped dl both come
+      // from here — a literal pushed `doc_id IN` predicate (row-group
+      // skipping makes the read delta-bounded; join fallback for huge
+      // deltas)
+      val droppedOld = IndexMaintenance.filterByIds(old, "doc_id", dropIds)
+        .localCheckpoint()
+      val newTf = termFreq(ups).localCheckpoint()
+      val newDl = newTf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+        .localCheckpoint()
+      val dfMinus = droppedOld.groupBy(col("w"))
+        .agg(count(lit(1)).as("minus"))
+      val dfPlus = newTf.groupBy(col("w")).agg(count(lit(1)).as("plus"))
+      val deltas = dfMinus.join(dfPlus, Seq("w"), "full_outer")
+        .select(col("w"), coalesce(col("minus"), lit(0L)).as("minus"),
+          coalesce(col("plus"), lit(0L)).as("plus"))
+        .localCheckpoint()
+      val affectedBuckets = IndexMaintenance.distinctVals(
+        deltas.select(bucketCol(col("w")).as("bucket")), "bucket")
+      // old df of every affected term — from the FULL postings (a term
+      // can gain docs without losing any, so droppedOld alone would
+      // reset its count), read bucket-pruned to the affected set; 0 for
+      // brand-new terms. df2 = df − minus + plus; a term whose df2 hits
+      // 0 has no surviving rows to carry it — it vanishes, as in build
+      val oldDf = old.filter(col("bucket").isin(affectedBuckets: _*))
+        .join(broadcast(deltas.select(col("w"))), "w")
+        .groupBy(col("w")).agg(max(col("df")).as("df_old"))
+      val df2 = deltas.join(oldDf, Seq("w"), "left")
+        .select(col("w"),
+          (coalesce(col("df_old"), lit(0L)) - col("minus") + col("plus"))
+            .as("df2"))
+        .localCheckpoint()
+      // surviving rows of the affected buckets, with moved df values;
+      // the bucket filter partition-prunes the read to the rewrite set
+      val kept = old
+        .filter(col("bucket").isin(affectedBuckets: _*))
+        .join(broadcast(dropIds), Seq("doc_id"), "left_anti")
+        .join(broadcast(df2), Seq("w"), "left")
+        .select(col("w"), col("doc_id"), col("tf"), col("dl"),
+          coalesce(col("df2"), col("df")).as("df"), col("bucket"))
+      val added = newTf.join(newDl, "doc_id")
+        .join(broadcast(df2), "w")
+        .select(col("w"), col("doc_id"), col("tf"), col("dl"),
+          col("df2").as("df"), bucketCol(col("w")).as("bucket"))
+      // corpus constants move by the delta (a doc counts iff it has ≥1
+      // token — droppedOld/newDl carry exactly those docs)
+      val droppedDl = droppedOld.select(col("doc_id"), col("dl")).distinct()
+        .agg(count(lit(1)).as("n"),
+          coalesce(sum(col("dl")), lit(0L)).as("len"))
+        .collect().head
+      val addedDl = newDl
+        .agg(count(lit(1)).as("n"),
+          coalesce(sum(col("dl")), lit(0L)).as("len"))
+        .collect().head
+      val newStats = Seq((n1 - droppedDl.getLong(0) + addedDl.getLong(0),
+          len1 - droppedDl.getLong(1) + addedDl.getLong(1)))
+        .toDF("n_docs", "total_len")
+      VersionedTable.Delta(affectedBuckets, kept.unionByName(added),
         Map("stats" -> newStats), properties)
     }
 
-  /** The delta math of [[updateFrom]] (doc-set diff → affected buckets,
-    * full replacement rows for exactly those buckets, moved corpus
-    * stats), factored over an abstract `old` postings frame so the
-    * in-place and versioned layouts share it verbatim. */
-  private def deltaFrames(spark: SparkSession, old: DataFrame,
-      stats1: (Long, Long), upserts: DataFrame,
-      removedIds: DataFrame): (Seq[Any], DataFrame, DataFrame) = {
-    val dropIds = removedIds.select(col("doc_id"))
-      .union(upserts.select(col("doc_id"))).distinct().localCheckpoint()
-    // the delta docs' OLD rows: df decrements + dropped dl both come
-    // from here — a literal pushed `doc_id IN` predicate (row-group
-    // skipping makes the read delta-bounded; join fallback for huge
-    // deltas)
-    val droppedOld = IndexMaintenance.filterByIds(old, "doc_id", dropIds)
-      .localCheckpoint()
-    val newTf = termFreq(upserts).localCheckpoint()
-    val newDl = newTf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      .localCheckpoint()
-    val dfMinus = droppedOld.groupBy(col("w"))
-      .agg(count(lit(1)).as("minus"))
-    val dfPlus = newTf.groupBy(col("w")).agg(count(lit(1)).as("plus"))
-    val deltas = dfMinus.join(dfPlus, Seq("w"), "full_outer")
-      .select(col("w"), coalesce(col("minus"), lit(0L)).as("minus"),
-        coalesce(col("plus"), lit(0L)).as("plus"))
-      .localCheckpoint()
-    val affectedBuckets = IndexMaintenance.distinctVals(
-      deltas.select(bucketCol(col("w")).as("bucket")), "bucket")
-    // old df of every affected term — from the FULL postings (a term
-    // can gain docs without losing any, so droppedOld alone would
-    // reset its count), read bucket-pruned to the affected set; 0 for
-    // brand-new terms. df2 = df − minus + plus; a term whose df2 hits
-    // 0 has no surviving rows to carry it — it vanishes, as in build
-    val oldDf = old.filter(col("bucket").isin(affectedBuckets: _*))
-      .join(broadcast(deltas.select(col("w"))), "w")
-      .groupBy(col("w")).agg(max(col("df")).as("df_old"))
-    val df2 = deltas.join(oldDf, Seq("w"), "left")
-      .select(col("w"),
-        (coalesce(col("df_old"), lit(0L)) - col("minus") + col("plus"))
-          .as("df2"))
-      .localCheckpoint()
-    // surviving rows of the affected buckets, with moved df values;
-    // the bucket filter partition-prunes the read to the rewrite set
-    val kept = old
-      .filter(col("bucket").isin(affectedBuckets: _*))
-      .join(broadcast(dropIds), Seq("doc_id"), "left_anti")
-      .join(broadcast(df2), Seq("w"), "left")
-      .select(col("w"), col("doc_id"), col("tf"), col("dl"),
-        coalesce(col("df2"), col("df")).as("df"), col("bucket"))
-    val added = newTf.join(newDl, "doc_id")
-      .join(broadcast(df2), "w")
-      .select(col("w"), col("doc_id"), col("tf"), col("dl"),
-        col("df2").as("df"), bucketCol(col("w")).as("bucket"))
-    // corpus constants move by the delta (a doc counts iff it has ≥1
-    // token — droppedOld/newDl carry exactly those docs)
-    val (n1, len1) = stats1
-    val droppedDl = droppedOld.select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("len"))
-      .collect().head
-    val addedDl = newDl
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("len"))
-      .collect().head
-    import spark.implicits._
-    val newStats = Seq((n1 - droppedDl.getLong(0) + addedDl.getLong(0),
-        len1 - droppedDl.getLong(1) + addedDl.getLong(1)))
-      .toDF("n_docs", "total_len")
-    (affectedBuckets, kept.unionByName(added), newStats)
-  }
-
-  /** Serve one keyword query from the built artifact: top-`k` docs by
+  /** Serve one keyword query from the CURRENT snapshot: top-`k` docs by
     * Okapi BM25 (k1=1.2, b=0.75, Lucene's +1-inside-the-log IDF),
     * (doc_id, bm25, n_query_terms) in q133's exact shape — rounded
-    * score, doc_id tiebreak. The scan is bucket-pruned + term-pushed;
-    * everything after it is posting-proportional. */
-  def probe(spark: SparkSession, path: String, terms: Seq[String],
-      k: Int = 20): DataFrame = {
-    require(terms.nonEmpty, "empty query")
-    val (distinctTerms, mult, buckets) = queryPrep(spark, terms)
-    // corpus constants from the per-path memo — LITERALS in the plan,
-    // so the only scan left is the pruned postings read
-    val (nDocs, totalLen) = corpusStats(spark, path)
-    val postings = spark.read.schema(postingsSchema)
-      .parquet(s"$path/postings")
-      .filter(col("bucket").isin(buckets: _*)) // partition pruning
-      .filter(col("w").isin(distinctTerms: _*)) // pushed into the pruned scan
-    scorePostings(spark, postings, mult, nDocs, totalLen, k)
-  }
-
-  /** [[probe]] against the CURRENT snapshot of a [[VersionedTable]]
-    * BM25 index: identical scoring, but bucket pruning is literal path
-    * selection off the manifest (only the query terms' partitions are
-    * even handed to the scan) and the corpus constants come from the
-    * snapshot the postings came from — a mid-probe publish cannot mix
-    * versions. Stats memo keyed by (root, version): a new snapshot is
-    * a new key, no invalidation protocol needed. */
+    * score, doc_id tiebreak. Bucket pruning is literal path selection
+    * off the manifest (only the query terms' partitions are even handed
+    * to the scan), the term list is pushed into the pruned scan, and
+    * the corpus constants come from the snapshot the postings came
+    * from — a mid-probe publish cannot mix versions. Stats memo keyed
+    * by (root, version): a new snapshot is a new key, no invalidation
+    * protocol needed. Everything after the scan is
+    * posting-proportional. */
   def probeVersioned(spark: SparkSession, root: String, terms: Seq[String],
       k: Int = 20): DataFrame = {
     require(terms.nonEmpty, "empty query")
@@ -368,85 +274,46 @@ object Bm25Index {
     scorePostings(spark, postings, mult, nDocs, totalLen, k)
   }
 
-  /** Batched serving — [[probe]] for a query BATCH in ONE postings
-    * scan (the lexical rung of the batch matrix: q122 batched brute /
-    * q135 batched IVF / q137 batched PQ / this): the scan is pruned to
-    * the UNION of the batch's term buckets with the union term list
-    * pushed, each surviving posting row joins the broadcast
-    * (q_id, w, mult) block — so a posting matched by several queries
-    * scores once PER QUERY, with per-query multiplicity — and the
-    * per-query top-`k` runs as `row_number ≤ k` over q_id: Spark's
-    * map-side `WindowGroupLimit` frontier, the q_id exchange carrying
-    * ≤ k·|queries|·partitions rows no matter the corpus. Output
-    * (q_id, doc_id, bm25, n_query_terms), totally ordered for the
-    * declared form. */
-  def probeBatch(spark: SparkSession, path: String,
-      queries: Seq[(Long, Seq[String])], k: Int = 20): DataFrame = {
-    val (mults, distinctTerms, buckets) = batchPrep(spark, queries)
-    val (nDocs, totalLen) = corpusStats(spark, path)
-    val postings = spark.read.schema(postingsSchema)
-      .parquet(s"$path/postings")
-      .filter(col("bucket").isin(buckets: _*))
-      .filter(col("w").isin(distinctTerms: _*))
-    scoreBatch(spark, postings, mults, nDocs, totalLen, k)
-  }
-
-  /** [[probeBatch]] against the CURRENT snapshot of a versioned index —
-    * the online serving tier's inner loop: resolve ONE manifest for the
-    * whole batch (all queries in a batch see the same snapshot; the
-    * rollover boundary is the batch boundary), literal-path-prune to
-    * the batch's buckets, serve. [[graft.streaming.StreamingOps]] wraps
-    * exactly this per micro-batch. */
+  /** Batched serving — [[probeVersioned]] for a query BATCH in ONE
+    * postings scan, against the CURRENT snapshot (the lexical rung of
+    * the batch matrix: q122 batched brute / q135 batched IVF / q137
+    * batched PQ / this). ONE manifest resolve covers the whole batch
+    * (all queries see the same snapshot; the rollover boundary is the
+    * batch boundary — [[graft.streaming.StreamingOps]] wraps exactly
+    * this per micro-batch). The scan is pruned to the UNION of the
+    * batch's term buckets with the union term list pushed, each
+    * surviving posting row joins the broadcast (q_id, w, mult) block —
+    * so a posting matched by several queries scores once PER QUERY,
+    * with per-query multiplicity — and the per-query top-`k` runs as
+    * `row_number ≤ k` over q_id: Spark's map-side `WindowGroupLimit`
+    * frontier, the q_id exchange carrying ≤ k·|queries|·partitions
+    * rows no matter the corpus. Output (q_id, doc_id, bm25,
+    * n_query_terms), totally ordered for the declared form. */
   def probeBatchVersioned(spark: SparkSession, root: String,
       queries: Seq[(Long, Seq[String])], k: Int = 20): DataFrame = {
-    val snap = VersionedTable.currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(s"no BM25 snapshot at $root"))
-    val (mults, distinctTerms, buckets) = batchPrep(spark, queries)
-    val (nDocs, totalLen) = versionedStats(spark, root, snap)
-    val postings = VersionedTable.read(spark, snap, root, postingsSchema,
-        wanted = Some(buckets))
-      .filter(col("w").isin(distinctTerms: _*))
-    scoreBatch(spark, postings, mults, nDocs, totalLen, k)
-  }
-
-  private def batchPrep(spark: SparkSession,
-      queries: Seq[(Long, Seq[String])])
-      : (Seq[(Long, String, Long)], Seq[String], Seq[Int]) = {
+    import spark.implicits._
     require(queries.nonEmpty, "empty query batch")
     require(queries.forall(_._2.nonEmpty), "a batch query has no terms")
+    val snap = VersionedTable.currentSnapshot(spark, root).getOrElse(
+      throw new IllegalStateException(s"no BM25 snapshot at $root"))
     val mults = queries.flatMap { case (qid, ts) =>
       ts.groupBy(identity).toSeq.map { case (t, occ) =>
         (qid, t, occ.size.toLong) }
     }
     val distinctTerms = queries.flatMap(_._2).distinct
-    val buckets = spark.range(1).select(
-        distinctTerms.map(t => bucketCol(lit(t))): _*)
-      .collect().head.toSeq.map(_.asInstanceOf[Int]).distinct
-    (mults, distinctTerms, buckets)
-  }
-
-  /** Batch scoring core: [[scorePostings]]' formula keyed by q_id, with
-    * the per-query frontier as `row_number ≤ k` (map-side
-    * `WindowGroupLimit`) instead of a global TakeOrdered. */
-  private def scoreBatch(spark: SparkSession, postings: DataFrame,
-      mults: Seq[(Long, String, Long)], nDocs: Long, totalLen: Long,
-      k: Int): DataFrame = {
-    import spark.implicits._
-    val score =
-      log((lit(nDocs) - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
-        (col("tf") * (lit(1.2) + 1.0)) /
-        (col("tf") + lit(1.2) *
-          (lit(1.0) - 0.75 + lit(0.75) * col("dl") / col("avgdl")))
-    val avgdl = if (nDocs == 0) 0.0 else totalLen.toDouble / nDocs
+    val (nDocs, totalLen) = versionedStats(spark, root, snap)
+    val postings = VersionedTable.read(spark, snap, root, postingsSchema,
+        wanted = Some(termBuckets(spark, distinctTerms)))
+      .filter(col("w").isin(distinctTerms: _*))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id"))
       .orderBy(col("bm25").desc, col("doc_id"))
     postings
       .join(broadcast(mults.toDF("q_id", "w", "mult")), "w")
-      .withColumn("avgdl", lit(avgdl))
+      .withColumn("avgdl", lit(avgdlOf(nDocs, totalLen)))
       .groupBy(col("q_id"), col("doc_id"))
-      .agg(graft.functions.Rounding.roundVal(sum(score * col("mult")), 4)
-        .as("bm25"),
+      .agg(graft.functions.Rounding.roundVal(
+          sum(score(nDocs) * col("mult")), 4).as("bm25"),
         sum(col("mult")).as("n_query_terms"))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
@@ -455,49 +322,54 @@ object Bm25Index {
       .orderBy(col("q_id"), col("bm25").desc, col("doc_id"))
   }
 
-  /** Query-side prep shared by both probes: distinct terms for the scan
-    * predicates, per-term multiplicity for q133 parity under duplicated
-    * query terms (bm25SearchOf scores one term-column per OCCURRENCE,
-    * postings carry each (doc, term) once — so each matched posting is
-    * weighted by its term's query multiplicity), and the terms' buckets.
-    * The terms are driver literals, but the bucket rule is Spark's
-    * xxhash64 — evaluated on a literal frame (LocalTableScan, no file
-    * I/O) rather than re-implemented driver-side. */
+  /** Query-side prep shared by the single probes: distinct terms for
+    * the scan predicates, per-term multiplicity for q133 parity under
+    * duplicated query terms (bm25SearchOf scores one term-column per
+    * OCCURRENCE, postings carry each (doc, term) once — so each matched
+    * posting is weighted by its term's query multiplicity), and the
+    * terms' buckets. */
   private def queryPrep(spark: SparkSession, terms: Seq[String])
       : (Seq[String], Seq[(String, Long)], Seq[Int]) = {
     val distinctTerms = terms.distinct
     val mult = terms.groupBy(identity).toSeq
       .map { case (t, occ) => (t, occ.size.toLong) }
-    val buckets = spark.range(1).select(
-        distinctTerms.map(t => bucketCol(lit(t))): _*)
-      .collect().head.toSeq.map(_.asInstanceOf[Int]).distinct
-    (distinctTerms, mult, buckets)
+    (distinctTerms, mult, termBuckets(spark, distinctTerms))
   }
 
+  /** The buckets of driver-literal terms. The bucket rule is Spark's
+    * xxhash64 — evaluated on a literal frame (LocalTableScan, no file
+    * I/O) rather than re-implemented driver-side. */
+  private def termBuckets(spark: SparkSession, terms: Seq[String]): Seq[Int] =
+    spark.range(1).select(terms.map(t => bucketCol(lit(t))): _*)
+      .collect().head.toSeq.map(_.asInstanceOf[Int]).distinct
+
+  /** Okapi BM25's per-posting score (k1=1.2, b=0.75, Lucene's
+    * +1-inside-the-log IDF) over the `tf`/`dl`/`df`/`avgdl` columns. */
+  private def score(nDocs: Long): org.apache.spark.sql.Column =
+    log((lit(nDocs) - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
+      (col("tf") * (lit(1.2) + 1.0)) /
+      (col("tf") + lit(1.2) *
+        (lit(1.0) - 0.75 + lit(0.75) * col("dl") / col("avgdl")))
+
+  /** nDocs == 0 means no postings exist to score — but the avgdl
+    * literal still constant-folds eagerly under ANSI, so the 0/0 must
+    * be resolved driver-side, not left to the (empty) plan. */
+  private def avgdlOf(nDocs: Long, totalLen: Long): Double =
+    if (nDocs == 0) 0.0 else totalLen.toDouble / nDocs
+
   /** Okapi BM25 scoring over an already-pruned postings frame —
-    * (doc_id, bm25, n_query_terms) in q133's exact shape (k1=1.2,
-    * b=0.75, Lucene's +1-inside-the-log IDF, rounded score, doc_id
-    * tiebreak). Everything here is posting-proportional. */
+    * (doc_id, bm25, n_query_terms) in q133's exact shape (rounded
+    * score, doc_id tiebreak). Everything here is posting-proportional. */
   private def scorePostings(spark: SparkSession, postings: DataFrame,
       mult: Seq[(String, Long)], nDocs: Long, totalLen: Long,
       k: Int): DataFrame = {
     import spark.implicits._
-    val score =
-      log((lit(nDocs) - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
-        (col("tf") * (lit(1.2) + 1.0)) /
-        (col("tf") + lit(1.2) *
-          (lit(1.0) - 0.75 + lit(0.75) * col("dl") / col("avgdl")))
-    // nDocs == 0 means no postings exist to score — but the avgdl
-    // literal still constant-folds eagerly under ANSI, so the 0/0 must
-    // be resolved driver-side, not left to the (empty) plan
-    val avgdl =
-      if (nDocs == 0) 0.0 else totalLen.toDouble / nDocs
     postings
       .join(broadcast(mult.toDF("w", "mult")), "w")
-      .withColumn("avgdl", lit(avgdl))
+      .withColumn("avgdl", lit(avgdlOf(nDocs, totalLen)))
       .groupBy(col("doc_id"))
-      .agg(graft.functions.Rounding.roundVal(sum(score * col("mult")), 4)
-        .as("bm25"),
+      .agg(graft.functions.Rounding.roundVal(
+          sum(score(nDocs) * col("mult")), 4).as("bm25"),
         sum(col("mult")).as("n_query_terms"))
       .orderBy(col("bm25").desc, col("doc_id"))
       .limit(k)

@@ -1450,34 +1450,23 @@ object CurationOps extends OpCatalog {
     * diff ([[VersionedTable.retryingPublish]] — the nightly commit
     * path). Both manifests stay retained (no vacuum): the whole point
     * is diffing them. Returns the table root. */
-  private def docVtArtifact(spark: SparkSession, sfDir: String): String = {
-    val dir = VectorOps.artifactDir("graft_docvt_changes_fmt1", sfDir,
-      sourceFile = "documents.parquet")
-    if (VectorOps.buildArtifactOnce(dir, Seq("READY"))(tmp => {
-        val v1 = vtBucketed(Tables.documents(spark, sfDir))
-        VersionedTable.publishFull(spark, tmp, "bucket", v1)
-        val v2 = vtBucketed(plantedV2(Tables.documents(spark, sfDir)))
-        val (upserts, removed) = hashDiff(
-          v1.select(col("doc_id"), col("text")),
-          v2.select(col("doc_id"), col("text")))
-        // buckets containing any diff — ≤16 values, a bounded collect
-        val touched = upserts.select(pmod(col("doc_id"), lit(16L)).as("b"))
-          .union(removed.select(pmod(col("doc_id"), lit(16L)).as("b")))
-          .distinct().collect().map(_.getLong(0)).sorted.toSeq
-        VersionedTable.retryingPublish(spark, tmp)(_ =>
-          VersionedTable.Delta(touched,
-            v2.filter(col("bucket").isin(touched: _*))))
-        val ready = java.nio.file.Paths.get(tmp, "READY")
-        java.nio.file.Files.createDirectories(ready)
-        java.nio.file.Files.createFile(ready.resolve("_SUCCESS"))
-      })) {
-      org.slf4j.LoggerFactory.getLogger(getClass).info(
-        s"q143/q144: published v1 + planted crawl delta at $dir (first " +
-          "touch; later runs serve off the retained manifests)")
-      VectorOps.sweepStaleArtifacts(dir, "graft_docvt_changes_", sfDir)
+  private def docVtArtifact(spark: SparkSession, sfDir: String): String =
+    VectorOps.ensureArtifact("graft_docvt_changes_", "fmt1", sfDir,
+        "documents.parquet", "q143/q144: v1 + planted crawl delta") { tmp =>
+      val v1 = vtBucketed(Tables.documents(spark, sfDir))
+      VersionedTable.publishFull(spark, tmp, "bucket", v1)
+      val v2 = vtBucketed(plantedV2(Tables.documents(spark, sfDir)))
+      val (upserts, removed) = hashDiff(
+        v1.select(col("doc_id"), col("text")),
+        v2.select(col("doc_id"), col("text")))
+      // buckets containing any diff — ≤16 values, a bounded collect
+      val touched = upserts.select(pmod(col("doc_id"), lit(16L)).as("b"))
+        .union(removed.select(pmod(col("doc_id"), lit(16L)).as("b")))
+        .distinct().collect().map(_.getLong(0)).sorted.toSeq
+      VersionedTable.retryingPublish(spark, tmp)(_ =>
+        VersionedTable.Delta(touched,
+          v2.filter(col("bucket").isin(touched: _*))))
     }
-    dir.toString
-  }
 
   private def docVtSnap(spark: SparkSession, root: String,
       v: Long): VersionedTable.Snapshot =
@@ -1579,27 +1568,16 @@ object CurationOps extends OpCatalog {
     * whose ids are assigned in ingestion order. v2 COW-rewrites one
     * in-range bucket with identical content, so the served read crosses
     * BOTH a staged-stats generation and carried-over ones. */
-  private def zoneVtArtifact(spark: SparkSession, sfDir: String): String = {
-    val dir = VectorOps.artifactDir("graft_zonevt_fmt1", sfDir,
-      sourceFile = "documents.parquet")
-    if (VectorOps.buildArtifactOnce(dir, Seq("READY"))(tmp => {
-        val v1 = Tables.documents(spark, sfDir)
-          .select(col("doc_id"), col("n_chars"),
-            (col("doc_id") / 100).cast("long").as("rbucket"))
-        VersionedTable.publishFull(spark, tmp, "rbucket", v1)
-        VersionedTable.publishDelta(spark, tmp, Seq(2L),
-          v1.filter(col("rbucket") === 2L))
-        val ready = java.nio.file.Paths.get(tmp, "READY")
-        java.nio.file.Files.createDirectories(ready)
-        java.nio.file.Files.createFile(ready.resolve("_SUCCESS"))
-      })) {
-      org.slf4j.LoggerFactory.getLogger(getClass).info(
-        s"q147: published range-bucketed v1 + COW rewrite at $dir (first " +
-          "touch; later runs serve off the retained manifests)")
-      VectorOps.sweepStaleArtifacts(dir, "graft_zonevt_", sfDir)
+  private def zoneVtArtifact(spark: SparkSession, sfDir: String): String =
+    VectorOps.ensureArtifact("graft_zonevt_", "fmt1", sfDir,
+        "documents.parquet", "q147: range-bucketed v1 + COW rewrite") { tmp =>
+      val v1 = Tables.documents(spark, sfDir)
+        .select(col("doc_id"), col("n_chars"),
+          (col("doc_id") / 100).cast("long").as("rbucket"))
+      VersionedTable.publishFull(spark, tmp, "rbucket", v1)
+      VersionedTable.publishDelta(spark, tmp, Seq(2L),
+        v1.filter(col("rbucket") === 2L))
     }
-    dir.toString
-  }
 
   /** A doc_id-range read served THROUGH the manifest zone map
     * ([[VersionedTable.readRange]]): only partitions whose recorded

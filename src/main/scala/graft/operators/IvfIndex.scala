@@ -10,21 +10,19 @@ import org.apache.spark.sql.functions._
   * In-query codebook training ([[VectorOps.annIvf]] memoizes it per
   * session) is fine at bench scale, but it is offline-training cost
   * riding in a query: at 100 TB the index is built ONCE and served many
-  * times. This object factors that step into an explicit parquet
-  * artifact with the layout a real IVF deployment uses:
+  * times. This object factors that step into a [[VersionedTable]]
+  * snapshot with the layout a real IVF deployment uses:
   *
-  *   `<path>/codebook/`     — (cell, centroid), ≤ nlist rows
-  *   `<path>/assignments/`  — (vec_id, embedding) PARTITIONED BY cell
+  *   partitions  — (vec_id, embedding) PARTITIONED BY cell
+  *   `codebook`  — extra of the same snapshot: (cell, centroid),
+  *                 ≤ nlist rows
   *
-  * Partitioning the assignments by cell is the point: a probe filters on
-  * ONE cell value, so the parquet scan partition-prunes to ~1/nlist of
-  * the corpus — the serving read is `corpus/√n` rows, with no training,
-  * no full-corpus assignment pass, and no shuffle in the probe plan.
-  * Parameters derive from corpus stats ([[AnnParams.ivfCells]]).
-  *
-  * Reference scope note: the reference app imports parquet; this is the
-  * engine-side artifact produced/consumed by the same parquet machinery
-  * (`ParquetIngest`'s sinks could ship it anywhere a table goes).
+  * Partitioning the assignments by cell is the point: a probe reads ONE
+  * cell's directory per probed cell (literal path selection off the
+  * manifest), so the serving read is `corpus/√n` rows, with no
+  * training, no full-corpus assignment pass, and no shuffle in the
+  * probe plan. Parameters derive from corpus stats
+  * ([[AnnParams.ivfCells]]).
   */
 object IvfIndex {
 
@@ -47,25 +45,6 @@ object IvfIndex {
     VectorOps.ivfCodebook(e,
       nlist.getOrElse(AnnParams.ivfCells(e.count())), iters)
 
-  /** Build the full index at `path`: train, then materialize every
-    * vector's cell assignment partitioned by cell. The assignment pass is
-    * the one full-corpus job serving probes never re-pay. */
-  def build(e: DataFrame, path: String, iters: Int = 3,
-      nlist: Option[Int] = None): Unit = {
-    val cb = train(e, iters, nlist).localCheckpoint()
-    cb.write.mode("overwrite").parquet(s"$path/codebook")
-    // repartition by the partition column before the partitioned write
-    // (guide §6): round-15's map-only assignCells no longer carries the
-    // groupBy exchange that implicitly coalesced each cell's rows — an
-    // unrepartitioned write would emit one file per (scan task × cell)
-    // and push every cell dir over the nightly compaction threshold
-    VectorOps.assignCells(e, cb).repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/assignments")
-  }
-
-  def loadCodebook(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/codebook")
-
   /** Assignments schema for explicit-schema versioned reads (the cell
     * partition column parses from the generation dir names). */
   val assignmentsSchema: org.apache.spark.sql.types.StructType = {
@@ -82,25 +61,39 @@ object IvfIndex {
       StructField("centroid", ArrayType(FloatType))))
   }
 
-  /** [[build]] into a [[VersionedTable]] at `root`: the codebook rides
-    * as an extra of the SAME snapshot as the assignments it produced —
-    * a delta can never be served against a codebook it wasn't assigned
-    * under (the model/derived-state pairing, committed atomically). */
+  /** Build the index into a [[VersionedTable]] at `root`: train, then
+    * publish every vector's cell assignment partitioned by cell, with
+    * the codebook as an extra of the SAME snapshot — a delta can never
+    * be served against a codebook it wasn't assigned under (the
+    * model/derived-state pairing, committed atomically). The assignment
+    * pass is the one full-corpus job serving probes never re-pay. */
   def buildVersioned(spark: SparkSession, e: DataFrame, root: String,
       iters: Int = 3, nlist: Option[Int] = None,
       properties: Map[String, String] = Map.empty): Long = {
     val cb = train(e, iters, nlist).localCheckpoint()
-    // repartition before the partitioned write — [[build]]'s note
+    // repartition by the partition column before the partitioned write:
+    // the map-only assignCells carries no exchange that would coalesce
+    // each cell's rows — an unrepartitioned write would emit one file
+    // per (scan task × cell) and push every cell dir over the nightly
+    // compaction threshold
     VersionedTable.publishFull(spark, root, "cell",
       VectorOps.assignCells(e, cb).repartition(col("cell")),
       Map("codebook" -> cb), properties)
   }
 
-  /** [[updateFrom]] against a versioned index: same frozen-codebook
-    * delta math, published as ONE copy-on-write snapshot — readers keep
-    * a consistent (codebook, assignments) pair mid-maintenance, and the
-    * previous snapshot stays serveable until vacuumed. The codebook
-    * extra carries over untouched (frozen by construction). */
+  /** Incremental maintenance under the FROZEN codebook (the
+    * FAISS/Lucene split — assignments are derived state and move with
+    * the delta; retraining centroids is a model refresh, a different
+    * operation): apply q100's diff (`upserts` = added ∪ changed
+    * `(vec_id, embedding)`, `removedIds` = `(vec_id)`) by rewriting
+    * ONLY the affected cell partitions — the cells the dropped vectors
+    * sat in (one pushed-`vec_id IN` read recovers them) plus the cells
+    * the upserts assign to — as ONE copy-on-write snapshot. Untouched
+    * cells stay shared with the previous snapshot, readers keep a
+    * consistent (codebook, assignments) pair mid-maintenance, and the
+    * codebook extra carries over untouched (frozen by construction).
+    * `IndexMaintenanceSpec` pins the result row-set-equal to a fresh
+    * `assignCells(v2, frozen codebook)`. */
   def updateFromVersioned(spark: SparkSession, root: String,
       upserts: DataFrame, removedIds: DataFrame,
       properties: Map[String, String] = Map.empty): Long =
@@ -110,29 +103,39 @@ object IvfIndex {
       // re-applying a diff routed by a superseded base)
       val cb = VersionedTable.readExtra(spark, snap, root, "codebook",
         codebookSchema).localCheckpoint()
-      val dropIds = removedIds.select(col("vec_id"))
-        .union(upserts.select(col("vec_id"))).distinct().localCheckpoint()
+      val (ups, dropIds) = IndexMaintenance.keyedDelta(upserts, removedIds,
+        "vec_id", Seq("embedding"))
       val old = VersionedTable.read(spark, snap, root, assignmentsSchema)
-      val newAssign = VectorOps.assignCells(
-        upserts.select(col("vec_id"), col("embedding")), cb).localCheckpoint()
+      val newAssign = VectorOps.assignCells(ups, cb).localCheckpoint()
       val affectedCells = IndexMaintenance.distinctVals(
         IndexMaintenance.filterByIds(old, "vec_id", dropIds)
           .select(col("cell"))
           .union(newAssign.select(col("cell"))), "cell")
       val kept = old.filter(col("cell").isin(affectedCells: _*))
         .join(broadcast(dropIds), Seq("vec_id"), "left_anti")
-      // repartition before the partitioned write — [[build]]'s note
+      // repartition before the partitioned write: [[buildVersioned]]
       VersionedTable.Delta(affectedCells,
         kept.unionByName(newAssign).repartition(col("cell")),
         properties = properties)
     }
 
-  /** [[probe]] against the CURRENT snapshot: the probed cells resolve
-    * against the snapshot's own codebook extra, and the pruning is
-    * literal path selection off the manifest — only the probed cells'
-    * directories are handed to the scan. One resolve covers the whole
-    * probe: a publish landing mid-probe cannot mix a new codebook with
-    * old assignments. */
+  /** Serve one query vector from the CURRENT snapshot: score the
+    * ≤nlist-row codebook extra, pick the `nProbe` nearest cells, and
+    * scan ONLY those cells. The cell set is computed DRIVER-SIDE (a
+    * ≤nlist-row job collecting ≤nProbe ints) and becomes literal path
+    * selection off the manifest — only the probed cells' directories are
+    * handed to the scan, never dependent on dynamic-partition-pruning
+    * heuristics (which decline small scans). This is also the 100 TB
+    * shape: a retrieval tier resolves probe sets against the (tiny,
+    * often cached) codebook first, then issues the pruned scan. One
+    * resolve covers the whole probe: a publish landing mid-probe cannot
+    * mix a new codebook with old assignments. Exact cosine top-10 inside
+    * the probed cells; `q` is a 1-row frame with column `q_emb`. The
+    * `nProbe` DEFAULT derives from the TRAINED cell count — which is ≤
+    * the requested nlist, because Lloyd can empty cells — so it can be
+    * one cell narrower than the in-query q45's width (derived from the
+    * REQUESTED nlist). Callers that need exact q45 answer parity pass
+    * nProbe explicitly (q132 and `IvfIndexSpec` do). */
   def probeVersioned(spark: SparkSession, root: String, q: DataFrame,
       nProbeOpt: Option[Int] = None): DataFrame = {
     val snap = VersionedTable.currentSnapshot(spark, root).getOrElse(
@@ -158,133 +161,36 @@ object IvfIndex {
       .limit(10)
   }
 
-  /** Incremental maintenance under the FROZEN codebook (the
-    * FAISS/Lucene split — assignments are derived state and move with
-    * the delta; retraining centroids is a model refresh, a different
-    * operation): apply q100's diff (`upserts` = added ∪ changed
-    * `(vec_id, embedding)`, `removedIds` = `(vec_id)`) by rewriting
-    * ONLY the affected cell partitions — the cells the dropped vectors
-    * sat in (one pushed-`vec_id IN` read recovers them) plus the cells
-    * the upserts assign to. Untouched cells stay byte-identical, so
-    * probe plans keep partition-pruning over mostly-unchanged data.
-    * `IndexMaintenanceSpec` pins `updateFrom(v1→v2)` row-set-equal to
-    * a fresh `assignCells(v2, frozen codebook)`. */
-  def updateFrom(spark: SparkSession, path: String, upserts: DataFrame,
-      removedIds: DataFrame): Unit = {
-    val cb = loadCodebook(spark, path).localCheckpoint()
-    val dropIds = removedIds.select(col("vec_id"))
-      .union(upserts.select(col("vec_id"))).distinct().localCheckpoint()
-    val old = spark.read.parquet(s"$path/assignments")
-    val newAssign = VectorOps.assignCells(
-      upserts.select(col("vec_id"), col("embedding")), cb).localCheckpoint()
-    val affectedCells = IndexMaintenance.distinctVals(
-      IndexMaintenance.filterByIds(old, "vec_id", dropIds)
-        .select(col("cell"))
-        .union(newAssign.select(col("cell"))), "cell")
-    val kept = old.filter(col("cell").isin(affectedCells: _*))
-      .join(broadcast(dropIds), Seq("vec_id"), "left_anti")
-    // repartition before the partitioned write — [[build]]'s note
-    IndexMaintenance.replacePartitions(spark, s"$path/assignments", "cell",
-      affectedCells, kept.unionByName(newAssign).repartition(col("cell")))
-  }
-
-  /** Serve one query vector from a built index: score the ≤nlist-row
-    * codebook, pick the `nProbe` nearest cells, and scan ONLY those
-    * cells' partitions. The cell set is computed DRIVER-SIDE (a
-    * ≤nlist-row job collecting ≤nProbe ints) so the scan carries a
-    * LITERAL `cell IN (…)` partition predicate — static pruning visible
-    * in `PartitionFilters`, never dependent on the dynamic-partition-
-    * pruning heuristics (which decline small scans; an earlier in-plan
-    * broadcast-join formulation read every partition at fixture scale
-    * for exactly that reason). This is also the 100 TB shape: a
-    * retrieval tier resolves probe sets against the (tiny, often
-    * cached) codebook first, then issues the pruned scan — the literal
-    * predicate is what partition metadata services consume. Exact
-    * cosine top-10 inside the probed cells; `q` is a 1-row frame with
-    * column `q_emb`. The `nProbe` DEFAULT derives from the TRAINED
-    * cell count — which is ≤ the requested nlist, because Lloyd can
-    * empty cells — so it can be one cell narrower than the in-query
-    * q45's width (derived from the REQUESTED nlist). Callers that need
-    * exact q45 answer parity pass nProbe explicitly (q132 and
-    * `IvfIndexSpec` do); the default is the right standalone behavior
-    * for an artifact consumed without the training-side context. */
-  def probe(spark: SparkSession, path: String, q: DataFrame,
-      nProbeOpt: Option[Int] = None): DataFrame = {
-    val cb = loadCodebook(spark, path)
-    val nProbe = nProbeOpt.getOrElse(
-      AnnParams.ivfProbeCells(cb.count().toInt))
-    val cells = cb.crossJoin(broadcast(q))
-      .select(col("cell"),
-        graft.functions.VectorExpressions
-          .cosineSimilarity(col("centroid"), col("q_emb")).as("csim"))
-      .orderBy(col("csim").desc, col("cell"))
-      .limit(nProbe)
-      .collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(s"$path/assignments")
-      .filter(col("cell").isin(cells: _*)) // static partition pruning
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        roundVal(graft.functions.VectorExpressions
-          .cosineSimilarity(col("embedding"), col("q_emb")), 4).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(10)
-  }
-
   /** Batched serving — q122's query-batch frontier composed with the
     * partition-pruned artifact probe (the shape an online retrieval
     * tier actually runs at 100 TB): a BATCH of `(q_id, q_emb)` queries
-    * against the built index in ONE scan. Per query the `nProbe`
-    * nearest cells are picked against the tiny codebook; the UNION of
-    * probed cells becomes a LITERAL `cell IN (…)` partition predicate
-    * on the assignments scan (static pruning — [[probe]]'s rationale),
-    * and the (cell, q_id) probe map rides as a broadcast routing join,
-    * so each corpus row is scored only against the queries that probed
-    * its cell (no corpus row meets a query whose probe missed its
-    * cell). Top-`k` per query via `row_number ≤ k`, which Spark
-    * runs as a map-side `WindowGroupLimit` frontier (q122's law): the
-    * q_id exchange carries ≤ k·|queries|·partitions rows regardless of
+    * against the CURRENT snapshot in ONE scan — the per-micro-batch
+    * resolve behind [[graft.streaming.StreamingOps.ivfServeStreamVersioned]]'s
+    * live rollover. ONE resolve covers codebook and assignments (a
+    * publish landing mid-probe cannot mix a new codebook with old
+    * cells). Per query the `nProbe` nearest cells are picked against the
+    * tiny codebook; the UNION of probed cells becomes literal path
+    * selection off the manifest ([[probeVersioned]]'s rationale), and
+    * the (cell, q_id) probe map rides as a broadcast routing join, so
+    * each corpus row is scored only against the queries that probed its
+    * cell. Top-`k` per query via `row_number ≤ k`, which Spark runs as a
+    * map-side `WindowGroupLimit` frontier (q122's law): the q_id
+    * exchange carries ≤ k·|queries|·partitions rows regardless of
     * corpus size. Rounded sims + vec_id tiebreak keep the frontier
     * deterministic cross-engine. */
-  def probeBatch(spark: SparkSession, path: String, queries: DataFrame,
-      nProbe: Int, k: Int): DataFrame =
-    probeBatchCore(spark, loadCodebook(spark, path),
-      cells => spark.read.parquet(s"$path/assignments")
-        .filter(col("cell").isin(cells: _*)), // static partition pruning
-      queries, nProbe, k)
-
-  /** [[probeBatch]] against the CURRENT snapshot of a [[VersionedTable]]
-    * at `root` — the per-micro-batch resolve behind
-    * [[graft.streaming.StreamingOps.ivfServeStreamVersioned]]'s live
-    * rollover. ONE resolve covers codebook and assignments (a publish
-    * landing mid-probe cannot mix a new codebook with old cells), and
-    * the probed-cell pruning becomes literal path selection off the
-    * manifest. */
   def probeBatchVersioned(spark: SparkSession, root: String,
       queries: DataFrame, nProbe: Int, k: Int): DataFrame = {
+    import spark.implicits._
     val snap = VersionedTable.currentSnapshot(spark, root).getOrElse(
       throw new IllegalStateException(s"no IVF snapshot at $root"))
-    probeBatchCore(spark,
-      VersionedTable.readExtra(spark, snap, root, "codebook", codebookSchema),
-      cells => VersionedTable.read(spark, snap, root, assignmentsSchema,
-        wanted = Some(cells)),
-      queries, nProbe, k)
-  }
-
-  /** The ONE definition of the batched-probe plan (path-backed and
-    * versioned callers differ only in where the codebook and the
-    * pruned assignments scan come from — a plan fix must have one
-    * site, not two). `scanOf` receives the union of probed cells and
-    * must return an assignments frame already pruned to them. */
-  private def probeBatchCore(spark: SparkSession, cb: DataFrame,
-      scanOf: Seq[Int] => DataFrame, queries: DataFrame,
-      nProbe: Int, k: Int): DataFrame = {
-    import spark.implicits._
+    val cb = VersionedTable.readExtra(spark, snap, root, "codebook",
+      codebookSchema)
     val probeW = Window.partitionBy(col("q_id"))
       .orderBy(col("csim").desc, col("cell"))
     // the probe map is |queries|·nProbe (cell, q_id) pairs — resolved
     // DRIVER-SIDE against the tiny codebook (single-probe's rationale:
-    // a literal predicate, not a DPP heuristic), then re-broadcast as a
-    // local relation for the per-query routing join
+    // literal path selection, not a DPP heuristic), then re-broadcast as
+    // a local relation for the per-query routing join
     val probed = cb.crossJoin(broadcast(queries))
       .select(col("cell"), col("q_id"),
         graft.functions.VectorExpressions
@@ -293,11 +199,11 @@ object IvfIndex {
       .filter(col("rn") <= nProbe)
       .select(col("cell"), col("q_id"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    val unionCells = probed.map(_._1).distinct
     val routing = probed.toDF("cell", "q_id")
     val frontier = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("vec_id"))
-    scanOf(unionCells)
+    VersionedTable.read(spark, snap, root, assignmentsSchema,
+        wanted = Some(probed.map(_._1).distinct))
       .join(broadcast(routing), "cell") // rows meet ONLY their probers
       .join(broadcast(queries), "q_id")
       .select(col("q_id"), col("vec_id"),

@@ -45,27 +45,16 @@ object NightlyOps extends OpCatalog {
     * fingerprints the whole fixture directory — the corpus derives from
     * two tables, so either file changing must re-key the artifact. */
   private def nightlyArtifact(spark: SparkSession,
-      sfDir: String): Nightly.Roots = {
-    val dir = VectorOps.artifactDir(s"graft_nightly_$formatTag", sfDir,
-      sourceFile = "")
-    if (VectorOps.buildArtifactOnce(dir, Seq("READY"))(tmp => {
-        val roots = rootsAt(tmp)
-        val v1 = corpusV1(spark, sfDir)
-        Nightly.run(spark, roots, v1, vacuumGraceMs = 0L)
-        Nightly.run(spark, roots, CurationOps.plantedV2(v1),
-          vacuumGraceMs = 0L)
-        val ready = java.nio.file.Paths.get(tmp, "READY")
-        java.nio.file.Files.createDirectories(ready)
-        java.nio.file.Files.createFile(ready.resolve("_SUCCESS"))
-      })) {
-      org.slf4j.LoggerFactory.getLogger(getClass).info(
-        s"q145/q146: ran the two-night lifecycle (bootstrap + CDC-driven " +
-          s"incremental) at $dir (first touch; later runs serve off the " +
-          "committed manifests)")
-      VectorOps.sweepStaleArtifacts(dir, "graft_nightly_", sfDir)
-    }
-    rootsAt(dir.toString)
-  }
+      sfDir: String): Nightly.Roots =
+    rootsAt(VectorOps.ensureArtifact("graft_nightly_", formatTag, sfDir, "",
+        "q145/q146: the two-night lifecycle (bootstrap + CDC-driven " +
+          "incremental)") { tmp =>
+      val roots = rootsAt(tmp)
+      val v1 = corpusV1(spark, sfDir)
+      Nightly.run(spark, roots, v1, vacuumGraceMs = 0L)
+      Nightly.run(spark, roots, CurationOps.plantedV2(v1),
+        vacuumGraceMs = 0L)
+    })
 
   // --------------------------------------------------------------- q145
   /** The nightly-maintained downstream stats grid, read off its current

@@ -3,11 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Snapshot-versioned partitioned-parquet table — the manifest/pointer
-  * layer [[IndexMaintenance.replacePartitions]] deliberately does NOT
-  * provide (its scaladoc: "a serving tier swaps a manifest/pointer;
-  * spelled out here rather than pretended away"). This is that serving
-  * tier's storage contract, in the shape every table format converged
+/** Snapshot-versioned partitioned-parquet table — the one storage
+  * layout of every index artifact ([[IndexMaintenance]]'s invariant)
+  * and of the versioned fixtures. This is the serving tier's storage
+  * contract, in the shape every table format converged
   * on (Iceberg's HadoopTableOperations, Delta's log, Hive ACID's base
   * files): data files are IMMUTABLE once written, a delta publishes
   * copy-on-write replacements for only the partitions it touches, and
@@ -29,7 +28,7 @@ import org.apache.spark.sql.types.StructType
   * name) and every extra to the generation holding its current files.
   * Unlisted = the partition holds zero rows: "this partition is now
   * empty" is a mapping entry that disappears, not a directory that
-  * lingers ([[IndexMaintenance.replacePartitions]]' same contract).
+  * lingers.
   *
   * Commit protocol: stage the generation dir, then publish the next
   * `v%08d.json` via exists-check + rename, serialized per table by
@@ -601,9 +600,8 @@ object VersionedTable {
   }
 
   /** Copy-on-write delta: `rows` holds the full replacement content of
-    * exactly the partitions in `replacedParts` (same contract as
-    * [[IndexMaintenance.replacePartitions]] — a replaced partition with
-    * no replacement rows becomes empty); every extra present in
+    * exactly the partitions in `replacedParts` (a replaced partition
+    * with no replacement rows becomes empty); every extra present in
     * `extras` is replaced, the rest carry over. Untouched partitions'
     * files are SHARED with the previous snapshot, not copied: the cost
     * of a nightly delta is proportional to the delta, and the previous

@@ -736,43 +736,16 @@ object StreamingOps {
       }
       .start()
 
-  /** Streaming retrieval twin (round-9 verdict item 4): an arriving
-    * QUERY stream served against the STATIC [[graft.operators.IvfIndex]]
-    * artifact — the online half of the import-then-query lifecycle the
-    * whole index family builds offline. Each micro-batch of
-    * `(q_id, q_emb)` queries is answered by ONE partition-pruned codes
-    * scan ([[graft.operators.IvfIndex.probeBatch]]: union-of-probed-
-    * cells literal filter, broadcast routing join, map-side
-    * `WindowGroupLimit` frontier) — exactly what an online retrieval
-    * tier does with a request queue: micro-batch it, serve each batch
-    * in one pruned scan. STATELESS between batches (no watermark, no
-    * state store): each query's answer depends only on the immutable
-    * artifact, so ingest rate is flat no matter how much query history
-    * has streamed past, and the stream==batch law is exact — the union
-    * of per-batch answers equals one big [[graft.operators.IvfIndex
-    * .probeBatch]] over all queries (per-query independence:
-    * `StreamingSpec`). `sink` receives each batch's answer frame
-    * (q_id, rnk, vec_id, sim) — a memory table in the spec, a serving
-    * log/push channel in production. */
-  def ivfServeStream(queries: DataFrame, path: String, nProbe: Int,
-      k: Int)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    serveLoop(queries, vecQueryClean) { clean =>
-      localized(clean).map(qs => graft.operators.IvfIndex.probeBatch(
-        qs.sparkSession, path, qs, nProbe, k))
-    }(sink)
-
-  /** ONE definition of the retrieval serve loop shared by all four
-    * serve streams (BM25 / IVF / versioned IVF / versioned PQ): each
+  /** ONE definition of the retrieval serve loop shared by the three
+    * serve streams (BM25 / IVF / PQ, each over a versioned index): each
     * micro-batch is sanitized by `clean` (malformed rows DEGRADE —
     * dropped, never aborting the StreamingQuery into a checkpoint
     * replay loop of the same poison), then a NON-EMPTY clean batch is
     * answered by `answer` (None = nothing answerable survived) and the
     * frame handed to `sink`. Stateless between batches by construction:
     * no watermark, no state store — every answer depends only on the
-    * artifact resolved inside `answer`. Previously each wrapper
-    * re-spelled this loop and the degrade policies drifted (the static
-    * IVF twin filtered nothing); one site, one contract. */
+    * artifact resolved inside `answer`. One site, one degrade
+    * contract. */
   private def serveLoop(queries: DataFrame, clean: DataFrame => DataFrame)(
       answer: DataFrame => Option[DataFrame])(sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -803,11 +776,20 @@ object StreamingOps {
   private val vecQueryClean: DataFrame => DataFrame =
     _.filter(col("q_id").isNotNull && col("q_emb").isNotNull)
 
-  /** [[ivfServeStream]] with live index rollover (round-10 verdict item
-    * 1, completing the versioned-serving matrix BM25 opened): the query
-    * stream is served against a [[graft.operators.VersionedTable]] IVF
-    * index, resolving the CURRENT manifest once per micro-batch
-    * ([[graft.operators.IvfIndex.probeBatchVersioned]]). A nightly
+  /** Streaming retrieval twin with live index rollover (round-9 verdict
+    * item 4, round-10 item 1): an arriving QUERY stream served against
+    * a [[graft.operators.VersionedTable]] IVF index — the online half of
+    * the import-then-query lifecycle the whole index family builds
+    * offline. Each micro-batch of `(q_id, q_emb)` queries resolves the
+    * CURRENT manifest once and is answered by ONE pruned assignments
+    * scan ([[graft.operators.IvfIndex.probeBatchVersioned]]: union of
+    * probed cells as literal dir selection, broadcast routing join,
+    * map-side `WindowGroupLimit` frontier) — exactly what an online
+    * retrieval tier does with a request queue. STATELESS between
+    * batches, so against an unchanging snapshot the stream==batch law
+    * is exact: the union of per-batch answers equals one big
+    * [[graft.operators.IvfIndex.probeBatchVersioned]] over all queries
+    * (per-query independence: `StreamingSpec`). A nightly
     * delta publishing mid-stream is picked up at the next batch
     * boundary with NO restart; every query within a batch sees ONE
     * consistent (codebook, assignments) snapshot; vacuum policy must
@@ -855,9 +837,9 @@ object StreamingOps {
     * when the publish lands keeps its already-resolved snapshot
     * (snapshot isolation; vacuum policy must retain the previous
     * version for at least a batch interval). Stateless between batches
-    * like [[ivfServeStream]]: flat ingest rate, exact stream==batch
-    * law per snapshot (`StreamingSpec` pins pre-publish batches to v1's
-    * answers and post-publish batches to v2's). */
+    * like [[ivfServeStreamVersioned]]: flat ingest rate, exact
+    * stream==batch law per snapshot (`StreamingSpec` pins pre-publish
+    * batches to v1's answers and post-publish batches to v2's). */
   def bm25ServeStream(queries: DataFrame, root: String, k: Int = 20)(
       sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Bm25Index, PipelineOps, VectorOps}
+import graft.operators.{Bm25Index, PipelineOps, VectorOps, VersionedTable}
 import org.apache.spark.sql.functions._
 
 /** The offline BM25 posting-list artifact (q134): losslessness vs the
@@ -10,11 +10,24 @@ class Bm25IndexSpec extends SparkSpec {
 
   private val terms = Seq("window", "spark", "stream")
 
+  private def built(docs: org.apache.spark.sql.DataFrame,
+      prefix: String): String = {
+    val root = tempDir(prefix).toString
+    Bm25Index.buildVersioned(spark, docs, root)
+    root
+  }
+
+  /** The distinct `bucket=` partitions of `ts` — what a probe may read. */
+  private def bucketsOf(ts: Seq[String]): Set[String] =
+    spark.range(1)
+      .select(ts.map(t =>
+        pmod(xxhash64(lit(t)), lit(Bm25Index.Buckets.toLong)).cast("int")): _*)
+      .collect().head.toSeq.map(b => s"bucket=$b").toSet
+
   test("artifact probe == q133's re-tokenize answer (lossless index)") {
     val docs = Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25").toString
-    Bm25Index.build(docs, dir)
-    val served = Bm25Index.probe(spark, dir, terms).collect()
+    val root = built(docs, "graft_bm25")
+    val served = Bm25Index.probeVersioned(spark, root, terms).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
     val reTokenized = PipelineOps.bm25Search(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
@@ -22,7 +35,8 @@ class Bm25IndexSpec extends SparkSpec {
       "the index is lossless: artifact scores must be hash-identical")
     // different query terms against the SAME artifact (no rebuild): sane
     // shape, scores positive, doc_id tiebreak ordering
-    val other = Bm25Index.probe(spark, dir, Seq("the", "data"), k = 5).collect()
+    val other = Bm25Index.probeVersioned(spark, root, Seq("the", "data"),
+      k = 5).collect()
     assert(other.length <= 5)
     assert(other.map(_.getLong(0)).toSeq ==
       other.map(r => (-r.getDouble(1), r.getLong(0))).sorted.map(_._2).toSeq)
@@ -32,7 +46,7 @@ class Bm25IndexSpec extends SparkSpec {
     // posting by the term's query multiplicity — parity must hold for
     // the degenerate input too, not just distinct-term queries
     val dupTerms = Seq("spark", "window", "spark")
-    val servedDup = Bm25Index.probe(spark, dir, dupTerms).collect()
+    val servedDup = Bm25Index.probeVersioned(spark, root, dupTerms).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
     val reTokenizedDup = PipelineOps.bm25SearchOf(docs, dupTerms).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
@@ -41,41 +55,32 @@ class Bm25IndexSpec extends SparkSpec {
   }
 
   test("serving plan: bucket-pruned, term-pushed, no tokenize in-plan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_plan").toString
-    Bm25Index.build(Tables.documents(spark, sfDir), dir)
-    val probe = Bm25Index.probe(spark, dir, terms)
+    val root = built(Tables.documents(spark, sfDir), "graft_bm25_plan")
+    val probe = Bm25Index.probeVersioned(spark, root, terms)
     val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("postings"), "must scan the artifact")
+    assert(plan.contains(root), "must scan the artifact")
     assert(!plan.toLowerCase.contains("explode"),
       "serving must NOT re-tokenize — that is the artifact's whole point")
-    // the term predicate reaches the parquet scan, and the partition
-    // column filter prunes to the query terms' buckets
+    // the term predicate reaches the parquet scan
     assert(plan.contains("w IN (") || plan.contains("w#"),
       s"term filter must reach the scan")
-    assert(plan.contains("bucket"), "bucket pruning filter must be present")
-    // pruning is real: the scanned partition count equals the distinct
-    // buckets of the query terms, not the artifact's full bucket count
-    val allBuckets = spark.read.parquet(s"$dir/postings")
-      .select(col("bucket")).distinct().count()
-    val queryBuckets = spark.range(1)
-      .select(terms.map(t =>
-        pmod(xxhash64(lit(t)), lit(Bm25Index.Buckets.toLong)).cast("int")): _*)
-      .collect().head.toSeq.map(_.asInstanceOf[Int]).distinct
+    // pruning is real: every file read lives in one of the query terms'
+    // bucket partitions, and the artifact has buckets it never touches
+    val allBuckets = VersionedTable.currentSnapshot(spark, root).get
+      .parts.size
+    val queryBuckets = bucketsOf(terms)
     assert(queryBuckets.size < allBuckets,
-      s"fixture must have more populated buckets (${allBuckets}) than the " +
+      s"fixture must have more populated buckets ($allBuckets) than the " +
         s"query touches (${queryBuckets.size}) for pruning to be observable")
-    val scannedFiles = probe.queryExecution.executedPlan.collectLeaves()
-      .collectFirst {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.inputRDD.getNumPartitions
-      }
-    info(s"query buckets ${queryBuckets.size} of $allBuckets populated; " +
-      s"scan partitions: $scannedFiles")
-    // round-10: the corpus constants are memoized literals — the ONLY
-    // file scan in a probe plan is the pruned postings read (the old
-    // plan re-read the 1-row stats parquet on every query)
+    val read = probe.inputFiles.flatMap(f =>
+      "bucket=\\d+".r.findFirstIn(f)).toSet
+    assert(read.nonEmpty && read.subsetOf(queryBuckets),
+      s"probe must read only the query terms' buckets: read $read, " +
+        s"wanted $queryBuckets")
+    // the corpus constants are memoized literals — the ONLY file scan in
+    // a probe plan is the pruned postings read
     assert(!plan.contains("/stats"),
-      "stats must come from the per-path memo, not a per-probe file read")
+      "stats must come from the per-snapshot memo, not a per-probe file read")
     // string-based: AQE wraps the plan in a leaf AdaptiveSparkPlanExec,
     // so node-class collection sees no scans at all
     val scanLines = plan.linesIterator.filter(l =>
@@ -107,9 +112,7 @@ class Bm25IndexSpec extends SparkSpec {
   }
 
   test("versioned probe plan: literal-path pruning off the manifest, no stats read, no tokenize") {
-    import graft.operators.VersionedTable
-    val root = java.nio.file.Files.createTempDirectory("graft_bm25_vtp").toString
-    Bm25Index.buildVersioned(spark, Tables.documents(spark, sfDir), root)
+    val root = built(Tables.documents(spark, sfDir), "graft_bm25_vtp")
     val probe = Bm25Index.probeVersioned(spark, root, terms)
     val plan = probe.queryExecution.executedPlan.toString
     assert(!plan.toLowerCase.contains("explode"), "no re-tokenize in-plan")
@@ -119,73 +122,53 @@ class Bm25IndexSpec extends SparkSpec {
     // directories are handed to the scan at all — the file index never
     // lists the rest (stronger than a partition filter, which still
     // discovers everything). The scan's root paths ARE the wanted dirs.
-    val queryBuckets = spark.range(1)
-      .select(terms.map(t =>
-        pmod(xxhash64(lit(t)), lit(Bm25Index.Buckets.toLong)).cast("int")): _*)
-      .collect().head.toSeq.map(_.asInstanceOf[Int]).distinct
-      .map(b => s"bucket=$b")
     val scannedDirs = plan.linesIterator.filter(l =>
       l.contains("Location") || l.contains("file:")).mkString("\n")
     // greedy digit match: a path with bucket=18 extracts "bucket=18",
     // never a false "bucket=1" prefix hit — then exact set equality
     val scannedBuckets = "bucket=\\d+".r.findAllIn(scannedDirs).toSet
-    assert(scannedBuckets == queryBuckets.toSet,
+    assert(scannedBuckets == bucketsOf(terms),
       s"scan roots must be EXACTLY the wanted bucket dirs: " +
-        s"scanned=$scannedBuckets wanted=$queryBuckets\n$scannedDirs")
-    // and the answer equals the plain-layout probe's
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_vtq").toString
-    Bm25Index.build(Tables.documents(spark, sfDir), dir)
+        s"scanned=$scannedBuckets wanted=${bucketsOf(terms)}\n$scannedDirs")
+    // and the answer equals q133's re-tokenize answer
     assert(probe.collect().map(_.toSeq).toSeq ==
-      Bm25Index.probe(spark, dir, terms).collect().map(_.toSeq).toSeq,
-      "versioned and plain layouts must serve identical answers")
+      PipelineOps.bm25Search(spark, sfDir).collect().map(_.toSeq).toSeq,
+      "the manifest-served probe must serve q133's answer")
   }
 
   test("probeBatch == per-query probe, shared postings scored once per query, dup terms weighted") {
-    val docs = Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_bt").toString
-    Bm25Index.build(docs, dir)
+    val root = built(Tables.documents(spark, sfDir), "graft_bm25_bt")
     // overlapping vocabulary + a duplicated term in one query
     val battery = Seq(
       1L -> Seq("window", "spark", "stream"),
       2L -> Seq("query", "join", "merge"),
       3L -> Seq("spark", "the", "spark"))
-    val batched = Bm25Index.probeBatch(spark, dir, battery, k = 20)
+    val batched = Bm25Index.probeBatchVersioned(spark, root, battery, k = 20)
       .collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
     val perQuery = battery.flatMap { case (qid, terms) =>
-      Bm25Index.probe(spark, dir, terms, k = 20).collect().map(r =>
+      Bm25Index.probeVersioned(spark, root, terms, k = 20).collect().map(r =>
         (qid, r.getLong(0), r.getDouble(1), r.getLong(2)))
     }.sortBy { case (qid, doc, sc, _) => (qid, -sc, doc) }
     assert(batched == perQuery,
       "one batched scan must equal each query probed alone (incl. the " +
         "duplicated-term multiplicity and the shared 'spark' postings)")
-    // versioned route: same battery, same answers
-    val root = java.nio.file.Files.createTempDirectory("graft_bm25_btv").toString
-    Bm25Index.buildVersioned(spark, docs, root)
-    val versioned = Bm25Index.probeBatchVersioned(spark, root, battery)
-      .collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
-    assert(versioned == batched,
-      "manifest-served batch must equal the plain-layout batch")
   }
 
   test("empty and degenerate corpora: build + probe degrade to empty, never throw") {
     import spark.implicits._
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val dirE = java.nio.file.Files.createTempDirectory("graft_bm25_e").toString
-    Bm25Index.build(empty, dirE)
-    assert(Bm25Index.probe(spark, dirE, terms).collect().isEmpty)
+    assert(Bm25Index.probeVersioned(spark, built(empty, "graft_bm25_e"),
+      terms).collect().isEmpty)
     // null text + docs with no matching terms
     val sparse = Seq((1L, null: String), (2L, ""), (3L, "nothing relevant"))
       .toDF("doc_id", "text")
-    val dirS = java.nio.file.Files.createTempDirectory("graft_bm25_s").toString
-    Bm25Index.build(sparse, dirS)
-    assert(Bm25Index.probe(spark, dirS, terms).collect().isEmpty)
+    assert(Bm25Index.probeVersioned(spark, built(sparse, "graft_bm25_s"),
+      terms).collect().isEmpty)
     // and a doc that DOES match still scores
     val hit = Seq((1L, "spark streams"), (2L, "x")).toDF("doc_id", "text")
-    val dirH = java.nio.file.Files.createTempDirectory("graft_bm25_h").toString
-    Bm25Index.build(hit, dirH)
-    val r = Bm25Index.probe(spark, dirH, terms).collect()
+    val r = Bm25Index.probeVersioned(spark, built(hit, "graft_bm25_h"), terms)
+      .collect()
     assert(r.length == 1 && r.head.getLong(0) == 1L && r.head.getLong(2) == 1L)
   }
 
@@ -197,7 +180,7 @@ class Bm25IndexSpec extends SparkSpec {
     val marker = VectorOps.artifactDir(
         s"graft_bm25_index_${Bm25Index.formatTag}", sfDir,
         sourceFile = "documents.parquet")
-      .resolve("postings").resolve("_SUCCESS")
+      .resolve("READY").resolve("_SUCCESS")
     val mtime = java.nio.file.Files.getLastModifiedTime(marker).toMillis
     val again = PipelineOps.bm25IndexProbe(spark, sfDir).collect()
     assert(again.map(_.toSeq).toSeq == law.map(_.toSeq).toSeq)

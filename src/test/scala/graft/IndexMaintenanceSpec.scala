@@ -1,13 +1,14 @@
 package graft
 
 import graft.operators.{Bm25Index, CurationOps, IvfIndex, PipelineOps,
-  PqIndex, VectorOps}
+  PqIndex, VectorOps, VersionedTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The incremental-maintenance law per index family (round-9 verdict
-  * item 2): `updateFrom(v1→v2) == build-from-scratch(v2)` — exact
-  * content equality, where "from scratch" for the trained families
+  * item 2): `updateFromVersioned(v1→v2) == build-from-scratch(v2)` —
+  * exact content equality, where "from scratch" for the trained families
   * (IVF, PQ) means re-derived under the SAME frozen codebook (the
   * FAISS/Lucene model/derived-state split). The corpus delta is q100's
   * planted v2 (documents) and an analogous planted delta (embeddings):
@@ -22,84 +23,75 @@ class IndexMaintenanceSpec extends SparkSpec {
     .select(col("doc_id"), col("text"))
 
   /** The diff classes computed the honest way (q100's hash diff), not
-    * read off the planting rule — updateFrom consumes what a real
+    * read off the planting rule — maintenance consumes what a real
     * snapshot-diff job emits, via the ONE shared null-safe definition
     * (a hand-copied h-is-null variant here once misclassified null-text
     * docs as absent — `md5(null)` is null). */
   private def docDiff: (DataFrame, DataFrame) =
     CurationOps.hashDiff(docsV1, docsV2)
 
-  private def postingsRows(dir: String) =
-    spark.read.schema(Bm25Index.postingsSchema).parquet(s"$dir/postings")
+  private def built(docs: DataFrame, prefix: String): String = {
+    val root = tempDir(prefix).toString
+    Bm25Index.buildVersioned(spark, docs, root)
+    root
+  }
+
+  /** The current postings as a SORTED multiset — a duplicated row must
+    * show, so no set comparison. */
+  private def postingsRows(root: String) =
+    VersionedTable.readCurrent(spark, root, Bm25Index.postingsSchema)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getInt(5))).toSet
+        r.getLong(4), r.getInt(5))).toSeq.sorted
+
+  private def bm25Stats(root: String) =
+    VersionedTable.readExtra(spark,
+        VersionedTable.currentSnapshot(spark, root).get, root, "stats",
+        StructType.fromDDL("n_docs BIGINT, total_len BIGINT"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
   test("BM25: updateFrom(v1->v2 diff) == build(v2) — postings, stats, and serving all equal") {
-    val dirA = java.nio.file.Files.createTempDirectory("graft_im_bm25_a").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_im_bm25_b").toString
-    Bm25Index.build(docsV1, dirA)
+    val rootA = built(docsV1, "graft_im_bm25_a")
     val (upserts, removed) = docDiff
     assert(upserts.count() > 0 && removed.count() > 0,
       "fixture must exercise both delta classes")
-    Bm25Index.updateFrom(spark, dirA, upserts, removed)
-    Bm25Index.build(docsV2, dirB)
-    assert(postingsRows(dirA) == postingsRows(dirB),
+    Bm25Index.updateFromVersioned(spark, rootA, upserts, removed)
+    val rootB = built(docsV2, "graft_im_bm25_b")
+    assert(postingsRows(rootA) == postingsRows(rootB),
       "incrementally-maintained postings must equal a fresh v2 build")
-    val statsOf = (d: String) => spark.read.parquet(s"$d/stats")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(statsOf(dirA) == statsOf(dirB), "stats must move by the delta")
+    assert(bm25Stats(rootA) == bm25Stats(rootB), "stats must move by the delta")
     val terms = Seq("window", "spark", "stream")
-    assert(Bm25Index.probe(spark, dirA, terms).collect().map(_.toSeq).toSeq ==
-      Bm25Index.probe(spark, dirB, terms).collect().map(_.toSeq).toSeq)
+    def served(root: String) = Bm25Index.probeVersioned(spark, root, terms)
+      .collect().map(_.toSeq).toSeq
+    assert(served(rootA) == served(rootB))
     // end-to-end: the updated artifact serves the v2 corpus's answer
-    assert(Bm25Index.probe(spark, dirA, terms).collect().map(_.toSeq).toSeq ==
+    assert(served(rootA) ==
       PipelineOps.bm25SearchOf(docsV2, terms).collect().map(_.toSeq).toSeq,
       "updated index must serve q133's answer over v2")
   }
 
   test("BM25: updateFrom rewrites only the affected buckets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_im_bm25_p").toString
-    Bm25Index.build(docsV1, dir)
-    val postingsDir = java.nio.file.Paths.get(dir, "postings")
-    def partMtimes = {
-      val ls = java.nio.file.Files.list(postingsDir)
-      try ls.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(p => p.getFileName.toString.startsWith("bucket="))
-        .map { p =>
-          val fs = java.nio.file.Files.list(p)
-          val newest = try fs.toArray
-            .map(_.asInstanceOf[java.nio.file.Path])
-            .map(f => java.nio.file.Files.getLastModifiedTime(f).toMillis)
-            .max
-          finally fs.close()
-          p.getFileName.toString -> newest
-        }.toMap
-      finally ls.close()
-    }
-    val before = partMtimes
+    val root = built(docsV1, "graft_im_bm25_p")
+    val before = VersionedTable.currentSnapshot(spark, root).get
     // a one-doc delta with an uncommon token set touches few buckets
     val upsert = Seq((4242424242L, "zzyzx qwxyzzy")).toDF("doc_id", "text")
-    Thread.sleep(20) // mtime granularity
-    Bm25Index.updateFrom(spark, dir, upsert,
+    Bm25Index.updateFromVersioned(spark, root, upsert,
       spark.range(0).select(col("id").as("doc_id")))
-    val after = partMtimes
-    val touched = after.filter { case (k, t) => before.get(k).forall(_ < t) }
+    val after = VersionedTable.currentSnapshot(spark, root).get
+    val touched = VersionedTable.changedPartitionDirs(before, after).toSet
     val expected = spark.range(1).select(
         pmod(xxhash64(lit("zzyzx")), lit(Bm25Index.Buckets.toLong)).cast("int"),
         pmod(xxhash64(lit("qwxyzzy")), lit(Bm25Index.Buckets.toLong)).cast("int"))
       .collect().head.toSeq.map(v => s"bucket=$v").toSet
-    assert(touched.keySet == expected,
+    assert(touched == expected,
       s"delta must rewrite exactly the delta terms' buckets: " +
-        s"touched=${touched.keySet} expected=$expected")
-    assert(before.keySet.subsetOf(after.keySet),
+        s"touched=$touched expected=$expected")
+    assert(before.parts.keySet.subsetOf(after.parts.keySet),
       "untouched buckets must survive")
   }
 
   test("BM25 versioned: full lifecycle — build, delta, compact, vacuum — serves v2's answer with snapshot isolation") {
-    import graft.operators.VersionedTable
-    val root = java.nio.file.Files.createTempDirectory("graft_im_vt").toString
-    Bm25Index.buildVersioned(spark, docsV1, root)
+    val root = built(docsV1, "graft_im_vt")
     val terms = Seq("window", "spark", "stream")
     val v1Answer = Bm25Index.probeVersioned(spark, root, terms)
       .collect().map(_.toSeq).toSeq
@@ -119,12 +111,9 @@ class IndexMaintenanceSpec extends SparkSpec {
     // snapshot isolation: the pinned v1 postings still read v1's rows
     val pinned = VersionedTable.read(spark, snap1, root,
       Bm25Index.postingsSchema)
-    val fresh = java.nio.file.Files
-      .createTempDirectory("graft_im_vt_ref").toString
-    Bm25Index.build(docsV1, fresh)
     assert(pinned.collect().map(_.toSeq).toSet ==
-      spark.read.schema(Bm25Index.postingsSchema)
-        .parquet(s"$fresh/postings").collect().map(_.toSeq).toSet,
+      VersionedTable.readCurrent(spark, built(docsV1, "graft_im_vt_ref"),
+        Bm25Index.postingsSchema).collect().map(_.toSeq).toSet,
       "a v1-pinned reader must keep v1's exact postings after v2 lands")
     // compaction folds the delta's fragmentation; answer unchanged
     VersionedTable.compact(spark, root, Bm25Index.postingsSchema,
@@ -161,146 +150,140 @@ class IndexMaintenanceSpec extends SparkSpec {
     (v2, upserts, removed)
   }
 
+  private def embV1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    .filter(col("vec_id") =!= 0)
+    .select(col("vec_id"), col("embedding"))
+
+  private def ivfCodebook(root: String) = VersionedTable.readExtra(spark,
+    VersionedTable.currentSnapshot(spark, root).get, root, "codebook",
+    IvfIndex.codebookSchema).localCheckpoint()
+
+  /** Current (vec_id, cell) assignments as a SORTED multiset. */
+  private def cellsOf(df: DataFrame) = df.select(col("vec_id"), col("cell"))
+    .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
+
+  /** Current PQ codes as a SORTED multiset. */
+  private def codesOf(root: String) =
+    VersionedTable.readCurrent(spark, root, PqIndex.codesSchema)
+      .collect().map(r => (r.getLong(0),
+        r.getSeq[Int](1).mkString(","), r.getInt(2))).toSeq.sorted
+
+  private def pqCount(root: String) = VersionedTable.readExtra(spark,
+      VersionedTable.currentSnapshot(spark, root).get, root, "stats",
+      StructType.fromDDL("n BIGINT"))
+    .collect().head.getLong(0)
+
   test("IVF: updateFrom under the frozen codebook == fresh assignCells(v2)") {
     val (v2, upserts, removed) = embDelta
-    val v1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
+    val v1 = embV1
     assert(upserts.count() > 0 && removed.count() > 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_im_ivf").toString
-    IvfIndex.build(v1, dir)
-    IvfIndex.updateFrom(spark, dir, upserts, removed)
-    val got = spark.read.parquet(s"$dir/assignments")
-      .select(col("vec_id"), col("cell"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val want = VectorOps.assignCells(v2, IvfIndex.loadCodebook(spark, dir))
-      .select(col("vec_id"), col("cell"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(got == want,
-      "incremental assignments must equal re-assigning v2 under the " +
-        "frozen codebook")
-    // the maintained artifact still probes correctly (exact top within
-    // probed cells over v2 — sanity, not recall)
-    val q = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .filter(col("vec_id") === 0)
-      .select(col("embedding").as("q_emb"))
-    val served = IvfIndex.probe(spark, dir, q)
-    assert(served.collect().length == 10)
-  }
-
-  test("IVF versioned: delta snapshot == in-place delta (same frozen codebook), probes equal, isolation holds") {
-    import graft.operators.VersionedTable
-    val (_, upserts, removed) = embDelta
-    val v1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    // plain in-place lifecycle (already law-pinned above) as the reference
-    val dir = java.nio.file.Files.createTempDirectory("graft_im_ivf_p").toString
-    IvfIndex.build(v1, dir)
-    IvfIndex.updateFrom(spark, dir, upserts, removed)
-    // versioned lifecycle — training is deterministic on v1, so the
-    // frozen codebooks agree and the end states must too
-    val root = java.nio.file.Files.createTempDirectory("graft_im_ivf_v").toString
+    val root = tempDir("graft_im_ivf").toString
     IvfIndex.buildVersioned(spark, v1, root)
+    val frozen = ivfCodebook(root)
     val snap1 = VersionedTable.currentSnapshot(spark, root).get
     IvfIndex.updateFromVersioned(spark, root, upserts, removed)
-    val got = VersionedTable.readCurrent(spark, root,
-        IvfIndex.assignmentsSchema)
-      .select(col("vec_id"), col("cell"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val want = spark.read.parquet(s"$dir/assignments")
-      .select(col("vec_id"), col("cell"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(got == want,
-      "versioned delta must land the same assignments as the in-place one")
+    val want = VectorOps.assignCells(v2, frozen)
+    assert(cellsOf(VersionedTable.readCurrent(spark, root,
+        IvfIndex.assignmentsSchema)) == cellsOf(want),
+      "incremental assignments must equal re-assigning v2 under the " +
+        "frozen codebook")
     // snapshot isolation: v1's assignment count is unchanged under v2
-    val v1Count = VersionedTable.read(spark, snap1, root,
-      IvfIndex.assignmentsSchema).count()
-    assert(v1Count == v1.count(),
+    assert(VersionedTable.read(spark, snap1, root, IvfIndex.assignmentsSchema)
+      .count() == v1.count(),
       "the pre-delta snapshot still reads all of v1's assignments")
-    // serving parity at an explicit nProbe (default derivation is
+    // serving parity with a from-scratch v2 snapshot under the same
+    // frozen codebook, at an explicit nProbe (default derivation is
     // count-sensitive; parity needs the same width on both routes)
+    val ref = tempDir("graft_im_ivf_ref").toString
+    VersionedTable.publishFull(spark, ref, "cell", want,
+      Map("codebook" -> frozen))
     val q = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
-    assert(IvfIndex.probeVersioned(spark, root, q, Some(3))
-        .collect().map(_.toSeq).toSeq ==
-      IvfIndex.probe(spark, dir, q, Some(3)).collect().map(_.toSeq).toSeq,
-      "manifest-served probe must equal the plain-layout probe")
-  }
-
-  test("PQ versioned: delta snapshot == in-place delta (same frozen codebook), probes equal, count moves by the delta") {
-    import graft.operators.VersionedTable
-    val (v2, upserts, removed) = embDelta
-    val v1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_im_pq_p").toString
-    PqIndex.build(v1, dir)
-    PqIndex.updateFrom(spark, dir, upserts, removed)
-    val root = java.nio.file.Files.createTempDirectory("graft_im_pq_v").toString
-    PqIndex.buildVersioned(spark, v1, root)
-    PqIndex.updateFromVersioned(spark, root, upserts, removed)
-    val got = VersionedTable.readCurrent(spark, root, PqIndex.codesSchema)
-      .collect().map(r => (r.getLong(0),
-        r.getSeq[Int](1).toSeq, r.getInt(2))).toSet
-    val want = spark.read.parquet(s"$dir/codes")
-      .collect().map(r => (r.getLong(0),
-        r.getSeq[Int](1).toSeq, r.getInt(2))).toSet
-    assert(got == want,
-      "versioned delta must land the same codes as the in-place one")
-    // the delta-moved count equals the truth (the in-place path
-    // recounts; the versioned one moves old-total by the delta)
-    val nStat = VersionedTable.readExtra(spark,
-        VersionedTable.currentSnapshot(spark, root).get, root, "stats",
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType))))
-      .collect().head.getLong(0)
-    assert(nStat == got.size.toLong,
-      "stats extra must carry the post-delta codes count")
-    // serving parity, shortlist default derived from each route's count
-    val qv = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .filter(col("vec_id") === 0).select(col("embedding"))
-      .collect().head.getSeq[Float](0).toArray
-    assert(PqIndex.probeVersioned(spark, root, qv, v2)
-        .collect().map(_.toSeq).toSeq ==
-      PqIndex.probe(spark, dir, qv, v2).collect().map(_.toSeq).toSeq,
-      "manifest-served PQ probe must equal the plain-layout probe")
+    val served = IvfIndex.probeVersioned(spark, root, q, Some(3))
+      .collect().map(_.toSeq).toSeq
+    assert(served.length == 10)
+    assert(served == IvfIndex.probeVersioned(spark, ref, q, Some(3))
+      .collect().map(_.toSeq).toSeq,
+      "the maintained snapshot must serve the from-scratch v2 answer")
   }
 
   test("PQ: updateFrom delta-encode == full re-encode under the frozen codebook; meta re-stamped") {
     val (v2, upserts, removed) = embDelta
-    val v1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val dirA = java.nio.file.Files.createTempDirectory("graft_im_pq_a").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_im_pq_b").toString
-    PqIndex.build(v1, dirA)
-    PqIndex.build(v1, dirB)
+    val v1 = embV1
+    val rootA = tempDir("graft_im_pq_a").toString
+    val rootB = tempDir("graft_im_pq_b").toString
+    PqIndex.buildVersioned(spark, v1, rootA)
+    PqIndex.buildVersioned(spark, v1, rootB)
     // A: the real delta; B: the degenerate full-corpus delta = a
     // complete re-encode of v2 under the same (deterministically
     // trained on v1, hence identical) frozen codebook
-    PqIndex.updateFrom(spark, dirA, upserts, removed)
-    PqIndex.updateFrom(spark, dirB, v2, v1.select(col("vec_id")))
-    def codes(d: String) = spark.read.parquet(s"$d/codes")
-      .collect().map(r => (r.getLong(0),
-        r.getSeq[Int](1).toSeq, r.getInt(2))).toSet
-    assert(codes(dirA) == codes(dirB),
+    PqIndex.updateFromVersioned(spark, rootA, upserts, removed)
+    PqIndex.updateFromVersioned(spark, rootB, v2, v1.select(col("vec_id")))
+    assert(codesOf(rootA) == codesOf(rootB),
       "delta encode must equal the full re-encode under the frozen codebook")
-    // codes_count meta re-stamped to the v2 cardinality
-    val metaA = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(dirA, "codes_count")).trim.toLong
-    assert(metaA == v2.count(), "meta must carry the post-delta count")
+    // the stats extra moved by the delta to the v2 cardinality
+    assert(pqCount(rootA) == v2.count(),
+      "the count must carry the post-delta cardinality")
     // serving: both artifacts answer identically for the fixture query
     val qv = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") === 0).select(col("embedding"))
       .collect().head.getSeq[Float](0).toArray
-    assert(PqIndex.probe(spark, dirA, qv, v2).collect().map(_.toSeq).toSeq ==
-      PqIndex.probe(spark, dirB, qv, v2).collect().map(_.toSeq).toSeq)
+    assert(PqIndex.probeVersioned(spark, rootA, qv, v2)
+        .collect().map(_.toSeq).toSeq ==
+      PqIndex.probeVersioned(spark, rootB, qv, v2)
+        .collect().map(_.toSeq).toSeq)
+  }
+
+  // A feed may deliver a key twice (a replayed batch, two images of one
+  // row). Each family must land it ONCE, and the winner must not depend
+  // on row order: every upsert arrives twice plus a STALE image that
+  // loses `max(struct(payload))` to it.
+
+  test("duplicate upsert keys, BM25: each key lands once — postings and stats == build(v2)") {
+    val root = built(docsV1, "graft_im_dup_bm")
+    val (upserts, removed) = docDiff
+    val stale = upserts.select(col("doc_id"), lit("").as("text"))
+    Bm25Index.updateFromVersioned(spark, root,
+      stale.unionByName(upserts).unionByName(upserts), removed)
+    val ref = built(docsV2, "graft_im_dup_bm_ref")
+    assert(postingsRows(root) == postingsRows(ref),
+      "a duplicated key must not double tf/dl")
+    assert(bm25Stats(root) == bm25Stats(ref))
+  }
+
+  test("duplicate upsert keys, IVF: each key lands once — assignments == assignCells(v2)") {
+    val (v2, upserts, removed) = embDelta
+    val root = tempDir("graft_im_dup_ivf").toString
+    IvfIndex.buildVersioned(spark, embV1, root)
+    val frozen = ivfCodebook(root)
+    val stale = upserts.withColumn("embedding",
+      transform(col("embedding"), x => x - lit(1.0f)))
+    IvfIndex.updateFromVersioned(spark, root,
+      stale.unionByName(upserts).unionByName(upserts), removed)
+    assert(cellsOf(VersionedTable.readCurrent(spark, root,
+        IvfIndex.assignmentsSchema)) ==
+      cellsOf(VectorOps.assignCells(v2, frozen)),
+      "a duplicated key must not store duplicate assignment rows")
+  }
+
+  test("duplicate upsert keys, PQ: each key lands once — codes and count == the deduplicated delta") {
+    val (v2, upserts, removed) = embDelta
+    val rootA = tempDir("graft_im_dup_pq_a").toString
+    val rootB = tempDir("graft_im_dup_pq_b").toString
+    PqIndex.buildVersioned(spark, embV1, rootA)
+    PqIndex.buildVersioned(spark, embV1, rootB)
+    val stale = upserts.withColumn("embedding",
+      transform(col("embedding"), x => x - lit(1.0f)))
+    PqIndex.updateFromVersioned(spark, rootA,
+      stale.unionByName(upserts).unionByName(upserts), removed)
+    PqIndex.updateFromVersioned(spark, rootB, upserts, removed)
+    assert(codesOf(rootA) == codesOf(rootB),
+      s"a duplicated key must encode to ONE ${PqIndex.M}-code row")
+    assert(pqCount(rootA) == v2.count())
   }
 
   test("CDC adapter law, all three families: updateFromVersioned(deltaFromChanges(changes(v1,v2))) == build(v2)") {
-    import graft.operators.{IndexMaintenance, VersionedTable}
+    import graft.operators.IndexMaintenance
     // ONE versioned corpus carrying both modalities (the nightly's
     // shape): text rides the doc, embedding the vector — so ONE q143
     // feed drives every family, never a per-consumer re-diff
@@ -310,8 +293,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val v2 = CurationOps.plantedV2(v1)
     def bucketed(df: DataFrame) = df.select(col("doc_id"), col("text"),
       col("embedding"), pmod(col("doc_id"), lit(16L)).as("bucket"))
-    val corpusRoot = java.nio.file.Files
-      .createTempDirectory("graft_im_cdc_corpus").toString
+    val corpusRoot = tempDir("graft_im_cdc_corpus").toString
     VersionedTable.publishFull(spark, corpusRoot, "bucket", bucketed(v1))
     val s1 = VersionedTable.currentSnapshot(spark, corpusRoot).get
     val (ups, rem) = Nightly.contentDiff(bucketed(v1), bucketed(v2))
@@ -332,8 +314,7 @@ class IndexMaintenanceSpec extends SparkSpec {
         schema: org.apache.spark.sql.types.StructType) =
       VersionedTable.readCurrent(spark, root, schema)
         .collect().map(_.toString).toSet
-    def newRoot(tag: String) = java.nio.file.Files
-      .createTempDirectory(s"graft_im_cdc_$tag").toString
+    def newRoot(tag: String) = tempDir(s"graft_im_cdc_$tag").toString
     // BM25: feed-driven maintenance == one-shot build on v2
     val bmA = newRoot("bm_a"); val bmB = newRoot("bm_b")
     Bm25Index.buildVersioned(spark, docsV1, bmA)
@@ -380,7 +361,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("modality routing: an embedding-only re-embed night leaves the lexical index's generations UNTOUCHED, same end state") {
-    import graft.operators.{IndexMaintenance, VersionedTable}
+    import graft.operators.IndexMaintenance
     // v2 = same text everywhere, every 10th doc re-embedded (negated
     // vector — exact in IEEE) — the nightly shape of a re-embedding run
     val emb = Tables.embeddings(spark, sfDir)
@@ -391,8 +372,7 @@ class IndexMaintenanceSpec extends SparkSpec {
         expr("transform(embedding, x -> -x)")).otherwise(col("embedding")))
     def bucketed(df: DataFrame) = df.select(col("doc_id"), col("text"),
       col("embedding"), pmod(col("doc_id"), lit(16L)).as("bucket"))
-    val corpusRoot = java.nio.file.Files
-      .createTempDirectory("graft_im_modal_corpus").toString
+    val corpusRoot = tempDir("graft_im_modal_corpus").toString
     VersionedTable.publishFull(spark, corpusRoot, "bucket", bucketed(v1))
     val s1 = VersionedTable.currentSnapshot(spark, corpusRoot).get
     val (ups, rem) = Nightly.contentDiff(bucketed(v1), bucketed(v2))
@@ -413,8 +393,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // keeps its generation id (copy-on-write sharing preserved — the
     // point of routing; an unrouted no-op upsert rewrites every bucket
     // of the re-embedded docs' terms for an identical end state)
-    val bmRoot = java.nio.file.Files
-      .createTempDirectory("graft_im_modal_bm").toString
+    val bmRoot = tempDir("graft_im_modal_bm").toString
     Bm25Index.buildVersioned(spark, docsV1, bmRoot)
     val bmBefore = VersionedTable.currentSnapshot(spark, bmRoot).get
     Bm25Index.updateFromVersioned(spark, bmRoot, bmUps, bmRem)

@@ -1,10 +1,10 @@
 package graft
 
-import graft.operators.{AnnParams, IvfIndex, VectorOps}
+import graft.operators.{AnnParams, IvfIndex, VectorOps, VersionedTable}
 import org.apache.spark.sql.functions._
 
-/** Specs for the offline IVF artifact (build/probe) and the corpus-scaled
-  * ANN parameter derivations behind q43/q45/q48. */
+/** Specs for the offline IVF artifact (versioned build/probe) and the
+  * corpus-scaled ANN parameter derivations behind q43/q45/q48. */
 class IvfIndexSpec extends SparkSpec {
 
   test("AnnParams derivations: monotone, clamped, and recall-sound") {
@@ -52,20 +52,40 @@ class IvfIndexSpec extends SparkSpec {
     }
   }
 
+  /** The `cell=` partitions a scan's input files live in. */
+  private def cellsRead(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.inputFiles.flatMap(f => "cell=(\\d+)".r.findFirstMatchIn(f))
+      .map(_.group(1).toInt).toSet
+
+  /** The `nProbe` cells nearest `q`, by the codebook extra of the
+    * current snapshot — the partitions a probe may read. */
+  private def probedCells(root: String, q: org.apache.spark.sql.DataFrame,
+      nProbe: Int): Set[Int] =
+    VersionedTable.readExtra(spark,
+        VersionedTable.currentSnapshot(spark, root).get, root, "codebook",
+        IvfIndex.codebookSchema)
+      .crossJoin(broadcast(q))
+      .select(col("cell"), graft.functions.VectorExpressions
+        .cosineSimilarity(col("centroid"), col("q_emb")).as("csim"))
+      .orderBy(col("csim").desc, col("cell")).limit(nProbe)
+      .collect().map(_.getInt(0)).toSet
+
   test("built index round-trips: artifact probe == in-query q45, partition-pruned") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val root = tempDir("graft_ivf").toString
     val corpus = Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"))
     val t0 = System.nanoTime()
-    IvfIndex.build(corpus, dir)
+    IvfIndex.buildVersioned(spark, corpus, root)
     val tBuild = (System.nanoTime() - t0) / 1e9
-    // codebook round-trip: loaded == retrained (training is deterministic)
-    val loaded = IvfIndex.loadCodebook(spark, dir)
+    // codebook round-trip: stored == retrained (training is deterministic)
+    val loaded = VersionedTable.readExtra(spark,
+        VersionedTable.currentSnapshot(spark, root).get, root, "codebook",
+        IvfIndex.codebookSchema)
       .collect().map(r => r.getInt(0) -> r.getSeq[Float](1)).toMap
     val retrained = IvfIndex.train(corpus)
       .collect().map(r => r.getInt(0) -> r.getSeq[Float](1)).toMap
-    assert(loaded == retrained, "codebook must round-trip through parquet")
+    assert(loaded == retrained, "codebook must round-trip through the snapshot")
     assert(loaded.size > 2 && loaded.size <= AnnParams.ivfCells(corpus.count()))
     // artifact probe == the declared q45 (same derived params, same corpus,
     // ±the count including the query row — both sides land on the same k)
@@ -76,23 +96,25 @@ class IvfIndexSpec extends SparkSpec {
     val nProbe = AnnParams.ivfProbeCells(
       AnnParams.ivfCells(Tables.embeddings(spark, sfDir).count()))
     val t1 = System.nanoTime()
-    val served = IvfIndex.probe(spark, dir, q, Some(nProbe)).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    val probe = IvfIndex.probeVersioned(spark, root, q, Some(nProbe))
+    val served = probe.collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     val tCold = (System.nanoTime() - t1) / 1e9
     val inQuery = VectorOps.annIvfCore(spark, sfDir).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(served == inQuery, "artifact probe must equal the in-query q45 core")
     val t2 = System.nanoTime()
-    IvfIndex.probe(spark, dir, q).collect()
+    IvfIndex.probeVersioned(spark, root, q).collect()
     val tWarm = (System.nanoTime() - t2) / 1e9
     info(f"build $tBuild%.2f s; probe cold $tCold%.2f s / warm $tWarm%.2f s " +
       "(training cost lives in build, not in any probe)")
-    // the probe plan reads the partitioned assignments with a pruning
-    // filter on the cell join key — no training stage, no Lloyd lineage
-    val plan = IvfIndex.probe(spark, dir, q).queryExecution.executedPlan.toString
-    assert(plan.contains("assignments"), "probe must scan the artifact")
-    assert(!plan.toLowerCase.contains("posexplode"),
-      "probe plan must not contain training stages")
+    // the probe reads ONLY the probed cells' partitions, and no training
+    // stage rides in its plan
+    val read = cellsRead(probe)
+    assert(read.nonEmpty && read.subsetOf(probedCells(root, q, nProbe)),
+      s"probe must read only the probed cells: read $read")
+    assert(read.size < loaded.size, "pruning must skip cells")
+    assert(!probe.queryExecution.executedPlan.toString.toLowerCase
+      .contains("posexplode"), "probe plan must not contain training stages")
   }
 
   test("√n boundary: nlist derived from the query-INCLUDING count keeps artifact == in-query parity") {
@@ -115,10 +137,10 @@ class IvfIndexSpec extends SparkSpec {
     val inQuery = VectorOps.ivfProbe(corpus, q, cents, nProbe).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     // artifact side (q132's recipe: explicit nlist override)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_bnd").toString
-    IvfIndex.build(corpus, dir, nlist = Some(k))
-    val served = IvfIndex.probe(spark, dir, q, Some(nProbe)).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    val root = tempDir("graft_ivf_bnd").toString
+    IvfIndex.buildVersioned(spark, corpus, root, nlist = Some(k))
+    val served = IvfIndex.probeVersioned(spark, root, q, Some(nProbe))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(served == inQuery,
       "artifact probe must equal the in-query core at the boundary size")
     // and the naive derivation really is different here — the hazard is
@@ -128,16 +150,17 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("q135 probeBatch: served rows are sound, plan is pruned + frontier-limited, batch == per-query probes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_batch").toString
+    val root = tempDir("graft_ivf_batch").toString
     val e = Tables.embeddings(spark, sfDir)
     val corpus = e.filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"))
     val k = AnnParams.ivfCells(e.count())
-    IvfIndex.build(corpus, dir, nlist = Some(k))
+    IvfIndex.buildVersioned(spark, corpus, root, nlist = Some(k))
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val nProbe = AnnParams.ivfProbeCells(k)
-    val batch = IvfIndex.probeBatch(spark, dir, queries, nProbe, k = 5)
+    val batch = IvfIndex.probeBatchVersioned(spark, root, queries, nProbe,
+      k = 5)
     val got = batch.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     // soundness: per query ≤5 rows, ranks contiguous from 1, sims are the
@@ -151,32 +174,31 @@ class IvfIndexSpec extends SparkSpec {
     }
     // batch == union of single-query probes through the same artifact
     // (the batched plan changes the EXECUTION, never the answer)
+    var probed = Set.empty[Int]
     queries.collect().foreach { row =>
       val qid = row.getLong(0)
-      val single = IvfIndex.probe(spark, dir,
-          queries.filter(col("q_id") === qid).select(col("q_emb")), Some(nProbe))
+      val q = queries.filter(col("q_id") === qid).select(col("q_emb"))
+      probed ++= probedCells(root, q, nProbe)
+      val single = IvfIndex.probeVersioned(spark, root, q, Some(nProbe))
         .limit(5).collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
       val fromBatch = got.filter(_._1 == qid).sortBy(_._2)
         .map(t => t._3 -> t._4).toSeq
       assert(fromBatch == single, s"q$qid: batch must equal the single probe")
     }
-    // plan: ONE statically partition-pruned scan of the assignments
-    // (literal `cell IN (…)` in PartitionFilters — the union of probed
-    // cells), no training lineage, map-side frontier
+    // plan: ONE scan of the snapshot's assignments, reading only the
+    // union of probed cells, no training lineage, map-side frontier
     val plan = batch.queryExecution.executedPlan.toString
-    // AQE wraps the tree (collectLeaves sees only the adaptive root), so
-    // pin the FINAL plan's text: exactly one assignments scan line,
-    // carrying the literal probed-cell partition predicate
+    // AQE prints the final and the initial plan: pin the FINAL plan's
+    // text — exactly one assignments scan for the whole batch
     val finalSection = plan.split("== Initial Plan ==").head
     val scanLines = finalSection.linesIterator.filter(l =>
-      l.contains("BatchScan") && l.contains("assignments")).toSeq
+      l.contains("Scan") && l.contains(root)).toSeq
     assert(scanLines.size == 1,
       s"exactly ONE assignments scan for the whole batch, got ${scanLines.size}")
-    val partFilters = scanLines.head.replaceAll(".*PartitionFilters", "")
-    assert(scanLines.head.contains("PartitionFilters") &&
-      (partFilters.contains(" IN (") || partFilters.contains(" INSET ")),
-      s"assignments scan must carry the literal probed-cell partition " +
-        s"predicate: ${scanLines.head.take(400)}")
+    val read = cellsRead(batch)
+    assert(read.nonEmpty && read.subsetOf(probed),
+      s"the batch must read only the union of probed cells: read $read, " +
+        s"probed $probed")
     assert(!plan.toLowerCase.contains("posexplode"), "no training stages")
     assert(plan.contains("WindowGroupLimit"),
       "per-query top-k must run as the map-side frontier")
@@ -198,9 +220,10 @@ class IvfIndexSpec extends SparkSpec {
     assert(law.forall(r => r.getBoolean(2) && r.getBoolean(3)),
       "recall_ok/score_ok must hold on the fixture")
     // a second invocation serves from the SAME artifact: identical rows,
-    // and the _SUCCESS marker's mtime proves no rebuild happened
-    val marker = VectorOps.ivfArtifactDir(sfDir)
-      .resolve("assignments").resolve("_SUCCESS")
+    // and the READY marker's mtime proves no rebuild happened
+    val marker = VectorOps.artifactDir(
+        s"graft_ivf_index_${IvfIndex.formatTag}", sfDir)
+      .resolve("READY").resolve("_SUCCESS")
     val mtime = java.nio.file.Files.getLastModifiedTime(marker).toMillis
     val again = VectorOps.ivfIndexProbe(spark, sfDir).collect()
     assert(again.map(_.toSeq).toSeq == law.map(_.toSeq).toSeq)

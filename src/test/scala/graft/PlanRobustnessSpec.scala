@@ -130,27 +130,26 @@ class PlanRobustnessSpec extends SparkSpec {
     // shuffle.partitions in the hundreds-to-thousands — re-assert the
     // pins at 200 to prove none of them rides on AQE coalescing or a
     // particular partition count, and that the ANSWERS are config-free.
-    import graft.operators.{Bm25Index, IvfIndex, PqIndex}
+    import graft.operators.{Bm25Index, IvfIndex, PqIndex, VersionedTable}
     import org.apache.spark.sql.functions._
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val corpus = e.filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"))
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val ivfDir = java.nio.file.Files
-      .createTempDirectory("graft_shuf_ivf").toString
-    IvfIndex.build(corpus, ivfDir)
-    val pqDir = java.nio.file.Files
-      .createTempDirectory("graft_shuf_pq").toString
-    PqIndex.build(e, pqDir)
-    val bm25Dir = java.nio.file.Files
-      .createTempDirectory("graft_shuf_bm25").toString
-    Bm25Index.build(Tables.documents(spark, sfDir), bm25Dir)
+    val ivfRoot = tempDir("graft_shuf_ivf").toString
+    IvfIndex.buildVersioned(spark, corpus, ivfRoot)
+    val pqRoot = tempDir("graft_shuf_pq").toString
+    PqIndex.buildVersioned(spark, e, pqRoot)
+    val bm25Root = tempDir("graft_shuf_bm25").toString
+    Bm25Index.buildVersioned(spark, Tables.documents(spark, sfDir), bm25Root)
     val terms = Seq("window", "spark", "stream")
-    def answers() = (
-      IvfIndex.probeBatch(spark, ivfDir, queries, 3, 5).collect().toSeq,
-      PqIndex.probeBatch(spark, pqDir, queries, corpus, 5).collect().toSeq,
-      Bm25Index.probe(spark, bm25Dir, terms).collect().toSeq)
+    def ivfBatch = IvfIndex.probeBatchVersioned(spark, ivfRoot, queries, 3, 5)
+    def pqBatch = PqIndex.probeBatchVersioned(spark, pqRoot, queries,
+      _ => corpus, 5)
+    def bmProbe = Bm25Index.probeVersioned(spark, bm25Root, terms)
+    def answers() = (ivfBatch.collect().toSeq, pqBatch.collect().toSeq,
+      bmProbe.collect().toSeq)
     val before = answers()
     val prior = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
@@ -159,35 +158,32 @@ class PlanRobustnessSpec extends SparkSpec {
       assert(after == before,
         "serving answers must not depend on the shuffle partition count")
       // IVF batch: still exactly ONE pruned assignments scan + frontier
-      val ivfPlan = IvfIndex.probeBatch(spark, ivfDir, queries, 3, 5)
-        .queryExecution.executedPlan.toString
-      val ivfFinal = ivfPlan.split("== Initial Plan ==").head
+      val ivfFinal = ivfBatch.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
       val ivfScans = ivfFinal.linesIterator.filter(l =>
-        l.contains("Scan") && l.contains("assignments")).toSeq
+        l.contains("Scan") && l.contains(ivfRoot)).toSeq
       assert(ivfScans.size == 1, s"one assignments scan, got $ivfScans")
-      val pf = ivfScans.head.replaceAll(".*PartitionFilters", "")
-      assert(ivfScans.head.contains("PartitionFilters") &&
-        (pf.contains(" IN (") || pf.contains(" INSET ")),
-        s"literal probed-cell pruning must survive: ${ivfScans.head.take(300)}")
+      val cells = VersionedTable.currentSnapshot(spark, ivfRoot).get.parts.size
+      assert(ivfBatch.inputFiles.map(_.replaceAll(".*/(cell=\\d+)/.*", "$1"))
+        .toSet.size < cells, "probed-cell pruning must survive")
       assert(ivfFinal.contains("WindowGroupLimit"),
         "IVF frontier must stay the map-side WindowGroupLimit at 200")
       // PQ batch: ONE codes scan, frontier intact
-      val pqPlan = PqIndex.probeBatch(spark, pqDir, queries, corpus, 5)
-        .queryExecution.executedPlan.toString
-      val pqFinal = pqPlan.split("== Initial Plan ==").head
+      val pqFinal = pqBatch.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
       assert(pqFinal.linesIterator.count(l =>
-        l.contains("Scan") && l.contains("/codes")) == 1,
+        l.contains("Scan") && l.contains(pqRoot)) == 1,
         "batch must scan codes ONCE at 200 partitions")
       assert(pqFinal.contains("WindowGroupLimit"),
         "PQ shortlist/re-rank frontiers must stay map-side at 200")
       // BM25: bucket-pruned, term-pushed, no re-tokenize, single scan
-      val bmPlan = Bm25Index.probe(spark, bm25Dir, terms)
-        .queryExecution.executedPlan.toString
-      val bmFinal = bmPlan.split("== Initial Plan ==").head
+      val bmFinal = bmProbe.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
       assert(!bmFinal.toLowerCase.contains("explode"), "no tokenize in-plan")
       assert(bmFinal.contains("w IN (") || bmFinal.contains("w#"),
         "term filter must reach the scan at 200 partitions")
-      assert(bmFinal.contains("bucket"), "bucket pruning must be present")
+      assert(bmProbe.inputFiles.forall(_.contains("/bucket=")),
+        "bucket pruning must be present")
       assert(bmFinal.linesIterator.count(l =>
         l.toLowerCase.contains("scan") && l.toLowerCase.contains("parquet"))
         == 1, "probe plan must contain exactly the postings scan")

@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-import graft.operators.{PqIndex, VectorOps}
+import graft.operators.{PqIndex, VectorOps, VersionedTable}
 import org.apache.spark.sql.functions._
 
 /** The offline PQ artifact must serve the SAME answers as q117's
@@ -12,15 +12,20 @@ class PqIndexSpec extends SparkSpec {
   private lazy val e = Tables.embeddings(spark, sfDir)
     .select(col("vec_id"), col("embedding"))
 
+  private val codebookSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "sub INT, code INT, centroid ARRAY<FLOAT>")
+
   test("build -> probe == q117's in-query top-10; codes artifact well-formed") {
-    val path = Files.createTempDirectory("graft_pq_idx").toString
-    PqIndex.build(e, path)
+    val root = tempDir("graft_pq_idx").toString
+    PqIndex.buildVersioned(spark, e, root)
+    val snap = VersionedTable.currentSnapshot(spark, root).get
 
     // artifact shape: dense positional codes, full coverage, m*k bound
-    val cb = spark.read.parquet(s"$path/codebook")
+    val cb = VersionedTable.readExtra(spark, snap, root, "codebook",
+      codebookSchema)
     assert(cb.count() <= PqIndex.M.toLong * PqIndex.K)
     assert(cb.select(countDistinct(col("sub"))).head().getLong(0) == PqIndex.M)
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = VersionedTable.read(spark, snap, root, PqIndex.codesSchema)
     val n = e.filter(col("vec_id") =!= 0).count()
     assert(codes.count() == n, "every corpus vector must be encoded")
     val bad = codes.filter(size(col("codes")) =!= PqIndex.M ||
@@ -31,28 +36,30 @@ class PqIndexSpec extends SparkSpec {
     // and the in-row argmin share the lowest-cell tiebreak
     val qv = e.filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0).toArray
-    val fromIndex = PqIndex.probe(spark, path, qv, e).collect()
+    val fromIndex = PqIndex.probeVersioned(spark, root, qv, e).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
     val inQuery = VectorOps.pqAdcTopKOf(e, spark, memoKey = None).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
     assert(fromIndex == inQuery,
       s"artifact probe diverged from q117:\n$fromIndex\n$inQuery")
 
-    // the shortlist stage reads ONLY the codes table: no embedding column
-    // in its scan schema, no join below the shortlist limit
-    val ids = spark.read.parquet(s"$path/codes").columns.toSeq
-    assert(ids == Seq("vec_id", "codes", "vbucket"),
-      "codes artifact must hold nothing but ids, codes, and the " +
-        "vec_id shard key (v3 incremental layout)")
+    // the shortlist stage reads ONLY the codes table: the stored files
+    // hold nothing but ids and codes, sharded by the vec_id bucket
+    assert(snap.partCol == "vbucket")
+    assert(spark.read.parquet(codes.inputFiles.toSeq: _*).columns.toSeq ==
+      Seq("vec_id", "codes"),
+      "codes artifact must hold nothing but ids and codes (the vec_id " +
+        "shard key is the partition)")
   }
 
   test("probeBatch: batched ADC serving == per-query probe, one codes scan (q137)") {
-    val path = Files.createTempDirectory("graft_pq_batch").toString
-    PqIndex.build(e, path)
+    val root = tempDir("graft_pq_batch").toString
+    PqIndex.buildVersioned(spark, e, root)
     val corpus = e.filter(col("vec_id") =!= 0)
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val batchDf = PqIndex.probeBatch(spark, path, queries, corpus)
+    val batchDf = PqIndex.probeBatchVersioned(spark, root, queries,
+      _ => corpus)
     val batch = batchDf.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .groupBy(_._1)
@@ -62,7 +69,7 @@ class PqIndexSpec extends SparkSpec {
     qs.foreach { case (qid, qv) =>
       // same default shortlist, same tiebreaks -> identical ranked ids
       // and distances per query as the single-query probe
-      val single = PqIndex.probe(spark, path, qv, corpus).collect()
+      val single = PqIndex.probeVersioned(spark, root, qv, corpus).collect()
         .map(r => (r.getLong(0), r.getDouble(2))).toSeq
       val got = batch(qid).sortBy(_._2).map(t => (t._3, t._4)).toSeq
       assert(got == single, s"q$qid batched != single: $got vs $single")
@@ -72,64 +79,62 @@ class PqIndexSpec extends SparkSpec {
     // table must not be scanned per query). Pin on a FRESH frame: an
     // executed AQE plan's toString prints Final AND Initial plans,
     // double-counting every scan line.
-    val plan = PqIndex.probeBatch(spark, path, queries, corpus)
+    val plan = PqIndex.probeBatchVersioned(spark, root, queries, _ => corpus)
       .queryExecution.executedPlan.toString
     val codeScans = plan.linesIterator.count(l =>
-      l.contains("Scan") && l.contains("/codes"))
+      l.contains("Scan") && l.contains(root))
     assert(codeScans == 1, s"batch must scan codes ONCE, got $codeScans")
   }
 
+  /** A stand-in build: one data file, content numbered by build count. */
+  private def writePart(tmp: String, n: Int): Unit = {
+    val sub = Paths.get(tmp, "part")
+    Files.createDirectories(sub)
+    Files.writeString(sub.resolve("data"), s"build-$n")
+  }
+
+  private def readyMarker(dir: java.nio.file.Path) =
+    dir.resolve("READY").resolve("_SUCCESS")
+
   test("buildArtifactOnce: builds once, reuses, heals torn dirs, loses races cleanly") {
-    import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_bao")
+    val root = tempDir("graft_bao")
     val dir = root.resolve("artifact")
     var builds = 0
-    def build(tmp: String): Unit = {
-      builds += 1
-      val sub = Paths.get(tmp, "part")
-      Files.createDirectories(sub)
-      Files.writeString(sub.resolve("_SUCCESS"), "")
-      Files.writeString(sub.resolve("data"), s"build-$builds")
-    }
-    // first touch builds and installs
-    assert(VectorOps.buildArtifactOnce(dir, Seq("part"))(build))
+    def build(tmp: String): Unit = { builds += 1; writePart(tmp, builds) }
+    // first touch builds, stamps READY, and installs
+    assert(VectorOps.buildArtifactOnce(dir)(build))
     assert(builds == 1)
-    assert(Files.exists(dir.resolve("part").resolve("_SUCCESS")))
+    assert(Files.exists(readyMarker(dir)))
     // second touch reuses — the build fn never runs
-    assert(!VectorOps.buildArtifactOnce(dir, Seq("part"))(build))
+    assert(!VectorOps.buildArtifactOnce(dir)(build))
     assert(builds == 1)
-    // a torn directory (no _SUCCESS) is healed by a fresh build
-    Files.delete(dir.resolve("part").resolve("_SUCCESS"))
-    assert(VectorOps.buildArtifactOnce(dir, Seq("part"))(build))
+    // a torn directory (no READY marker) is healed by a fresh build
+    Files.delete(readyMarker(dir))
+    assert(VectorOps.buildArtifactOnce(dir)(build))
     assert(builds == 2)
     assert(Files.readString(dir.resolve("part").resolve("data")) == "build-2")
     // outside-the-protocol writer: a competitor installs the artifact
     // BETWEEN this build and its move WITHOUT taking the lock (protocol
     // participants would have blocked on it) — the loser must still
     // discard its tmp and leave the winner's artifact untouched
-    def deleteTree(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val cs = Files.list(p)
-        try cs.forEach(deleteTree(_)) finally cs.close()
-      }
-      Files.deleteIfExists(p)
-    }
-    Files.delete(dir.resolve("part").resolve("_SUCCESS")) // not ready again
+    Files.delete(readyMarker(dir)) // not ready again
     def racingBuild(tmp: String): Unit = {
       build(tmp) // our build (#3)
       val winner = root.resolve("winner")
       build(winner.toString) // competitor's build (#4)...
-      deleteTree(dir) // competitor heals the torn dir
+      Files.createDirectories(winner.resolve("READY"))
+      Files.writeString(readyMarker(winner), "")
+      VectorOps.deleteRecursively(dir) // competitor heals the torn dir
       Files.move(winner, dir) // ...and installs first
     }
-    assert(!VectorOps.buildArtifactOnce(dir, Seq("part"))(racingBuild),
+    assert(!VectorOps.buildArtifactOnce(dir)(racingBuild),
       "rename-race loser must report no install")
     assert(Files.readString(dir.resolve("part").resolve("data")) == "build-4",
       "the race winner's artifact must survive")
-    // a build that THROWS cleans its tmp up on the way out
-    deleteTree(dir)
+    // a build that THROWS cleans its tmp up on the way out, unstamped
+    VectorOps.deleteRecursively(dir)
     intercept[RuntimeException] {
-      VectorOps.buildArtifactOnce(dir, Seq("part")) { tmp =>
+      VectorOps.buildArtifactOnce(dir) { tmp =>
         Files.createDirectories(Paths.get(tmp, "part"))
         throw new RuntimeException("boom")
       }
@@ -146,11 +151,11 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("sweepStaleArtifacts: stale tokens and fingerprints GC'd; other corpora and lock-held entries survive") {
-    import java.nio.file.{Files, StandardOpenOption}
+    import java.nio.file.StandardOpenOption
     // a private tmp root standing in for java.io.tmpdir: the sweep only
     // ever navigates relative to the CURRENT entry, so the layout is all
     // that matters
-    val tmpRoot = Files.createTempDirectory("graft_gc_root")
+    val tmpRoot = tempDir("graft_gc_root")
     val famCur = tmpRoot.resolve("graft_tst_index_v2")
     val famOld = tmpRoot.resolve("graft_tst_index_v1")
     val unrelated = tmpRoot.resolve("graft_other_index_v1")
@@ -219,32 +224,27 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("buildArtifactOnce: concurrent same-JVM attempts serialize on the lock — one build, both served") {
-    import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_bao_lock")
-    val dir = root.resolve("artifact")
+    val dir = tempDir("graft_bao_lock").resolve("artifact")
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val inBuild = new java.util.concurrent.atomic.AtomicInteger(0)
     def build(tmp: String): Unit = {
       assert(inBuild.incrementAndGet() == 1,
         "two builds of the same artifact must never overlap")
       try {
-        builds.incrementAndGet()
         Thread.sleep(200) // hold the lock long enough for real overlap
-        val sub = Paths.get(tmp, "part")
-        Files.createDirectories(sub)
-        Files.writeString(sub.resolve("_SUCCESS"), "")
+        writePart(tmp, builds.incrementAndGet())
       } finally inBuild.decrementAndGet()
     }
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
     val attempts = (1 to 4).map(_ => Future {
-      VectorOps.buildArtifactOnce(dir, Seq("part"))(build)
+      VectorOps.buildArtifactOnce(dir)(build)
     })
     val results = Await.result(Future.sequence(attempts), 60.seconds)
     assert(builds.get() == 1, s"exactly one attempt builds, got ${builds.get()}")
     assert(results.count(identity) == 1, "exactly one attempt reports the install")
-    assert(Files.exists(dir.resolve("part").resolve("_SUCCESS")),
+    assert(Files.exists(readyMarker(dir)),
       "every attempt returns with the artifact ready")
   }
 
@@ -253,8 +253,8 @@ class PqIndexSpec extends SparkSpec {
     assert(law.length == 10)
     assert(law.forall(r => r.getBoolean(2) && r.getBoolean(3)),
       "recall_ok/score_ok must hold on the fixture")
-    val marker = VectorOps.pqArtifactDir(sfDir)
-      .resolve("codes").resolve("_SUCCESS")
+    val marker = readyMarker(VectorOps.artifactDir(
+      s"graft_pq_index_${PqIndex.formatTag}", sfDir))
     val mtime = java.nio.file.Files.getLastModifiedTime(marker).toMillis
     val again = VectorOps.pqIndexProbe(spark, sfDir).collect()
     assert(again.map(_.toSeq).toSeq == law.map(_.toSeq).toSeq)

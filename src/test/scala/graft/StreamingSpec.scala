@@ -102,10 +102,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("exactly-once JDBC sink: batch replay converges, stream lands once (Derby)") {
-    import java.nio.file.Files
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val url = s"jdbc:derby:${Files.createTempDirectory("graft_eo").toString}/db;create=true"
+    val url = s"jdbc:derby:${tempDir("graft_eo")}/db;create=true"
     def tableCount(t: String) = spark.read.format("jdbc")
       .option("url", url).option("dbtable", t).load()
     // 1) the idempotence law itself: same (batch, batchId) written twice
@@ -125,7 +124,7 @@ class StreamingSpec extends SparkSpec {
     val (r1, r2) = rows.splitAt(25)
     mem.addData(r1)
     mem.addData(r2)
-    val ckpt = Files.createTempDirectory("graft_eo_ckpt").toString
+    val ckpt = tempDir("graft_eo_ckpt").toString
     val q = StreamingOps.jdbcSinkStream(
       mem.toDF().toDF("id", "v"), url, "eo_stream", ckpt)
     try q.processAllAvailable() finally q.stop()
@@ -690,16 +689,15 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("restart from checkpoint: file-source stream resumes with no loss, no dupes") {
-    import java.nio.file.Files
     import spark.implicits._
     // The production recovery property none of the single-run laws touch:
     // a streaming query is STOPPED and a NEW query object restarts from
     // the same checkpoint — committed source offsets must not be re-read
     // (no dupes), uncommitted files must be picked up (no loss), and the
     // idempotent JDBC sink must converge across the restart boundary.
-    val srcDir = Files.createTempDirectory("graft_restart_src").toString
-    val ckpt = Files.createTempDirectory("graft_restart_ckpt").toString
-    val url = s"jdbc:derby:${Files.createTempDirectory("graft_restart_db")}/db;create=true"
+    val srcDir = tempDir("graft_restart_src").toString
+    val ckpt = tempDir("graft_restart_ckpt").toString
+    val url = s"jdbc:derby:${tempDir("graft_restart_db")}/db;create=true"
     def stream() = spark.readStream
       .schema("id LONG, v DOUBLE")
       .parquet(srcDir)
@@ -754,9 +752,8 @@ class StreamingSpec extends SparkSpec {
     val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_stream").toString
-    graft.operators.IvfIndex.build(corpus, dir)
+    val root = tempDir("graft_ivf_stream").toString
+    graft.operators.IvfIndex.buildVersioned(spark, corpus, root)
     val queryRows = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") < 8)
       .select(col("vec_id"), col("embedding"))
@@ -766,8 +763,8 @@ class StreamingSpec extends SparkSpec {
     val k = 5
     val mem = MemoryStream[(Long, Array[Float])]
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Int, Long, Double)]()
-    val q = StreamingOps.ivfServeStream(
-        mem.toDS().toDF("q_id", "q_emb"), dir, nProbe, k) { ans =>
+    val q = StreamingOps.ivfServeStreamVersioned(
+        mem.toDS().toDF("q_id", "q_emb"), root, nProbe, k) { ans =>
       buf.synchronized {
         buf ++= ans.collect().map(r =>
           (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
@@ -775,7 +772,7 @@ class StreamingSpec extends SparkSpec {
     }.start()
     try {
       // two REAL micro-batches: the twin must serve each batch from the
-      // static artifact with no state carried between them
+      // unchanging v1 snapshot with no state carried between them
       val (b1, b2) = queryRows.splitAt(queryRows.length / 2)
       mem.addData(b1.toSeq)
       q.processAllAvailable()
@@ -784,7 +781,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
     val queriesDf = queryRows.toSeq.toDF("q_id", "q_emb")
     val batchAns = graft.operators.IvfIndex
-      .probeBatch(spark, dir, queriesDf, nProbe, k)
+      .probeBatchVersioned(spark, root, queriesDf, nProbe, k)
       .collect().map(r =>
         (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     assert(buf.toSet == batchAns,
@@ -801,8 +798,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     val docsV2 = CurationOps.plantedV2(Tables.documents(spark, sfDir))
       .select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_bm25_roll").toString
+    val root = tempDir("graft_bm25_roll").toString
     Bm25Index.buildVersioned(spark, docsV1, root)
     val battery = Seq(1L -> Seq("window", "spark", "stream"),
       2L -> Seq("query", "join"))
@@ -832,22 +828,18 @@ class StreamingSpec extends SparkSpec {
       // pre-publish batch served v1's answers, post-publish batch v2's —
       // the rollover happened at the batch boundary with no restart
       val v2Served = buf.toList.drop(v1Served.length)
-      // recompute each side's expectation from fresh plain builds (the
-      // versioned reader has already rolled to v2)
-      val refV1 = java.nio.file.Files
-        .createTempDirectory("graft_bm25_roll_r1").toString
-      Bm25Index.build(docsV1, refV1)
-      val wantV1 = battery.flatMap { case (qid, ts) =>
-        Bm25Index.probe(spark, refV1, ts).collect().map(r =>
-          (qid, r.getLong(0), r.getDouble(1), r.getLong(2)))
-      }.sortBy { case (qid, doc, sc, _) => (qid, -sc, doc) }
-      val refV2 = java.nio.file.Files
-        .createTempDirectory("graft_bm25_roll_r2").toString
-      Bm25Index.build(docsV2, refV2)
-      val wantV2 = battery.flatMap { case (qid, ts) =>
-        Bm25Index.probe(spark, refV2, ts).collect().map(r =>
-          (qid, r.getLong(0), r.getDouble(1), r.getLong(2)))
-      }.sortBy { case (qid, doc, sc, _) => (qid, -sc, doc) }
+      // recompute each side's expectation from fresh from-scratch builds
+      // (the rolling reader has already moved to v2)
+      def want(docs: org.apache.spark.sql.DataFrame, prefix: String) = {
+        val ref = tempDir(prefix).toString
+        Bm25Index.buildVersioned(spark, docs, ref)
+        battery.flatMap { case (qid, ts) =>
+          Bm25Index.probeVersioned(spark, ref, ts).collect().map(r =>
+            (qid, r.getLong(0), r.getDouble(1), r.getLong(2)))
+        }.sortBy { case (qid, doc, sc, _) => (qid, -sc, doc) }
+      }
+      val wantV1 = want(docsV1, "graft_bm25_roll_r1")
+      val wantV2 = want(docsV2, "graft_bm25_roll_r2")
       assert(v1Served == wantV1, "pre-publish batch must serve v1's index")
       assert(v2Served == wantV2, "post-publish batch must serve v2's index")
       assert(wantV1 != wantV2,
@@ -886,9 +878,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sc = spark.sqlContext
     import graft.operators.IvfIndex
-    val (corpusV1, upserts, removed, _) = vectorDeltaFixture()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivf_roll").toString
+    val (corpusV1, upserts, removed, corpusV2) = vectorDeltaFixture()
+    val root = tempDir("graft_ivf_roll").toString
     IvfIndex.buildVersioned(spark, corpusV1, root)
     val queryRows = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") < 8)
@@ -917,18 +908,23 @@ class StreamingSpec extends SparkSpec {
       mem.addData(queryRows.toSeq)
       q.processAllAvailable()
       val v2Served = buf.toList.drop(v1Served.length)
-      // expectations from fresh PLAIN (path-backed) builds — the same
-      // train + delta math without the manifest layer
-      val ref = java.nio.file.Files
-        .createTempDirectory("graft_ivf_roll_ref").toString
-      IvfIndex.build(corpusV1, ref)
-      val wantV1 = IvfIndex.probeBatch(spark, ref, queriesDf, nProbe, k)
-        .collect().map(r =>
-          (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-      IvfIndex.updateFrom(spark, ref, upserts, removed)
-      val wantV2 = IvfIndex.probeBatch(spark, ref, queriesDf, nProbe, k)
-        .collect().map(r =>
-          (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+      // expectations from FROM-SCRATCH snapshots: a fresh v1 build, and
+      // v2 assigned whole under v1's frozen codebook (no delta math)
+      def served(ref: String) =
+        IvfIndex.probeBatchVersioned(spark, ref, queriesDf, nProbe, k)
+          .collect().map(r =>
+            (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+      val refV1 = tempDir("graft_ivf_roll_r1").toString
+      IvfIndex.buildVersioned(spark, corpusV1, refV1)
+      val wantV1 = served(refV1)
+      val frozen = graft.operators.VersionedTable.readExtra(spark,
+        graft.operators.VersionedTable.currentSnapshot(spark, refV1).get,
+        refV1, "codebook", IvfIndex.codebookSchema).localCheckpoint()
+      val refV2 = tempDir("graft_ivf_roll_r2").toString
+      graft.operators.VersionedTable.publishFull(spark, refV2, "cell",
+        graft.operators.VectorOps.assignCells(corpusV2, frozen),
+        Map("codebook" -> frozen))
+      val wantV2 = served(refV2)
       assert(ordered(v1Served) == ordered(wantV1),
         "pre-publish batch must serve v1's index")
       assert(ordered(v2Served) == ordered(wantV2),
@@ -953,8 +949,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     import graft.operators.PqIndex
     val (corpusV1, upserts, removed, corpusV2) = vectorDeltaFixture()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_pq_roll").toString
+    val root = tempDir("graft_pq_roll").toString
     PqIndex.buildVersioned(spark, corpusV1, root)
     // the rerank store is bound PER RESOLVED VERSION — serving v2 codes
     // against v1 embeddings would score the wrong vector for every
@@ -986,16 +981,19 @@ class StreamingSpec extends SparkSpec {
       mem.addData(queryRows.toSeq)
       q.processAllAvailable()
       val v2Served = buf.toList.drop(v1Served.length)
-      val ref = java.nio.file.Files
-        .createTempDirectory("graft_pq_roll_ref").toString
-      PqIndex.build(corpusV1, ref)
-      val wantV1 = PqIndex.probeBatch(spark, ref, queriesDf, corpusV1, k)
-        .collect().map(r =>
-          (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-      PqIndex.updateFrom(spark, ref, upserts, removed)
-      val wantV2 = PqIndex.probeBatch(spark, ref, queriesDf, corpusV2, k)
-        .collect().map(r =>
-          (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+      // expectations from a fresh v1 build, then v2 RE-ENCODED whole
+      // under its frozen codebook (the degenerate full-corpus delta —
+      // no delta-routing math on the reference side)
+      def served(ref: String, corpus: org.apache.spark.sql.DataFrame) =
+        PqIndex.probeBatchVersioned(spark, ref, queriesDf, _ => corpus, k)
+          .collect().map(r =>
+            (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+      val ref = tempDir("graft_pq_roll_ref").toString
+      PqIndex.buildVersioned(spark, corpusV1, ref)
+      val wantV1 = served(ref, corpusV1)
+      PqIndex.updateFromVersioned(spark, ref, corpusV2,
+        corpusV1.select(col("vec_id")))
+      val wantV2 = served(ref, corpusV2)
       assert(ordered(v1Served) == ordered(wantV1),
         "pre-publish batch must serve v1's codes against v1's embeddings")
       assert(ordered(v2Served) == ordered(wantV2),
@@ -1013,8 +1011,7 @@ class StreamingSpec extends SparkSpec {
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("v", StringType), StructField("bucket", IntegerType)))
     def df(rows: (Long, String, Int)*) = rows.toDF("k", "v", "bucket")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_vt_cdc_stream").toString
+    val root = tempDir("graft_vt_cdc_stream").toString
     VersionedTable.publishFull(spark, root, "bucket",
       df((1L, "a", 0), (2L, "b", 1)))
     val mem = MemoryStream[Long]
@@ -1067,10 +1064,8 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text"),
         typedLit(Seq(0.5f, -0.5f)).as("embedding"),
         pmod(col("doc_id"), lit(16L)).as("bucket"))
-    val corpusRoot = java.nio.file.Files
-      .createTempDirectory("graft_cdc_maint_c").toString
-    val statsRoot = java.nio.file.Files
-      .createTempDirectory("graft_cdc_maint_s").toString
+    val corpusRoot = tempDir("graft_cdc_maint_c").toString
+    val statsRoot = tempDir("graft_cdc_maint_s").toString
     val v1 = corpusDf((1L, "aa"), (2L, "bbb"), (17L, "cccc"), (33L, "d"))
     VersionedTable.publishFull(spark, corpusRoot, "bucket", v1)
     // bootstrap the grid WITH its cursor (the nightly's bootstrap shape)
@@ -1143,10 +1138,8 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text"),
         typedLit(Seq(0.5f, -0.5f)).as("embedding"),
         pmod(col("doc_id"), lit(16L)).as("bucket"))
-    val corpusRoot = java.nio.file.Files
-      .createTempDirectory("graft_cdc_bm25_c").toString
-    val bm25Root = java.nio.file.Files
-      .createTempDirectory("graft_cdc_bm25_i").toString
+    val corpusRoot = tempDir("graft_cdc_bm25_c").toString
+    val bm25Root = tempDir("graft_cdc_bm25_i").toString
     val v1 = corpusDf((1L, "spark streams windows"),
       (2L, "window functions rank"), (17L, "stream state stores"),
       (33L, "broadcast joins"))
@@ -1160,8 +1153,7 @@ class StreamingSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
     def freshBuild(corpus: org.apache.spark.sql.DataFrame)
         : Seq[(Long, Double, Long)] = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_cdc_bm25_fresh").toString
+      val tmp = tempDir("graft_cdc_bm25_fresh").toString
       Bm25Index.buildVersioned(spark,
         corpus.select(col("doc_id"), col("text")), tmp)
       Bm25Index.probeVersioned(spark, tmp, terms).collect()
@@ -1232,12 +1224,12 @@ class StreamingSpec extends SparkSpec {
           (pmod(col("doc_id") * (i + 3), lit(97L)) / 97.0)
             .cast("float")): _*).as("embedding"))
     def newWorld(tag: String): Nightly.Roots = {
-      val d = java.nio.file.Files.createTempDirectory(s"graft_onl_$tag")
+      val d = tempDir(s"graft_onl_$tag")
       Nightly.Roots(s"$d/corpus", s"$d/bm25", s"$d/ivf", s"$d/pq",
         s"$d/stats")
     }
     def copyWorld(src: Nightly.Roots, tag: String): Nightly.Roots = {
-      val dst = java.nio.file.Files.createTempDirectory(s"graft_onl_$tag")
+      val dst = tempDir(s"graft_onl_$tag")
       val srcBase = java.nio.file.Paths.get(src.corpus).getParent
       java.nio.file.Files.walk(srcBase).forEach { p =>
         val t = dst.resolve(srcBase.relativize(p))
@@ -1329,8 +1321,7 @@ class StreamingSpec extends SparkSpec {
     val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_resolve_law").toString
+    val root = tempDir("graft_resolve_law").toString
     IvfIndex.buildVersioned(spark, corpus, root)
     val queryRows = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") === 0).select(col("embedding"))
