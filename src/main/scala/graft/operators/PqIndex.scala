@@ -106,7 +106,10 @@ object PqIndex {
       iters: Int = 3, properties: Map[String, String] = Map.empty): Long = {
     import spark.implicits._
     val corpus = e.filter(col("vec_id") =!= 0)
-    val dim = corpus.select(size(col("embedding"))).limit(1)
+    // the width comes from a non-null row: a null embedding has no size,
+    // and which row `limit(1)` meets first depends on the plan above it
+    val dim = corpus.filter(col("embedding").isNotNull)
+      .select(size(col("embedding"))).limit(1)
       .collect().headOption.map(_.getInt(0)).getOrElse(0)
     require(dim > 0 && dim % M == 0, s"dim $dim not divisible by m=$M")
     val cents = VectorOps.pqCodebook(e, M, dim / M, K, iters)

@@ -52,6 +52,21 @@ class PqIndexSpec extends SparkSpec {
         "shard key is the partition)")
   }
 
+  test("build: a null embedding in the first corpus row does not hide the width") {
+    val root = tempDir("graft_pq_null").toString
+    val firstId = e.filter(col("vec_id") =!= 0)
+      .agg(min(col("vec_id"))).head().getLong(0)
+    val withNull = e.withColumn("embedding",
+        when(col("vec_id") === firstId, lit(null)).otherwise(col("embedding")))
+      .orderBy(col("vec_id"))
+    PqIndex.buildVersioned(spark, withNull, root)
+    val codes = VersionedTable.readCurrent(spark, root, PqIndex.codesSchema)
+    val want = e.filter(col("vec_id") =!= 0).select(col("vec_id"))
+      .collect().map(_.getLong(0)).toSet
+    assert(codes.select(col("vec_id")).collect().map(_.getLong(0)).toSet ==
+      want, "every corpus vector must be encoded")
+  }
+
   test("probeBatch: batched ADC serving == per-query probe, one codes scan (q137)") {
     val root = tempDir("graft_pq_batch").toString
     PqIndex.buildVersioned(spark, e, root)
