@@ -24,9 +24,10 @@ import org.apache.spark.sql.types._
   *     [[IndexMaintenance.deltaFromChangesIn]] with MODALITY ROUTING
   *     (an embedding-only update never rewrites BM25 buckets, a
   *     text-only edit never re-encodes vectors); NEVER a re-diff of the
-  *     corpus per consumer. Each consumer's publish carries
-  *     `corpus_version` in its manifest [[VersionedTable.Snapshot
-  *     .properties]] — the cursor commits ATOMICALLY with the state it
+  *     corpus per consumer. How each consumer follows the feed is ONE
+  *     table, [[consumers]], shared with the online stream. Each
+  *     consumer's publish carries `corpus_version` in its manifest
+  *     [[VersionedTable.Snapshot.properties]] — the cursor commits ATOMICALLY with the state it
   *     describes (the offsets-in-the-transaction pattern), which is the
   *     whole crash-resume story: a consumer killed mid-night either
   *     never committed (cursor unmoved — the re-run redoes its step
@@ -123,24 +124,103 @@ object Nightly {
 
   /** Signal OUT of [[applyStatsFeed]]: the grid's committed cursor is
     * neither the feed's from-version nor at/past its target — a racing
-    * maintainer (a live [[graft.streaming.StreamingOps.cdcMaintainStream]]
-    * tick, an overlapping nightly) applied a PARTIAL overlap of this
-    * feed's span, so applying the precomputed deltas on top would
-    * double-count the overlap. The caller must recompute the feed from
-    * the new cursor (the nightly's stats step does) or no-op and let
-    * the next tick catch up (the stream does) — round-12 advisor:
-    * the >=-target gate alone left exactly this window. */
+    * maintainer (a live
+    * [[graft.streaming.StreamingOps.cdcMaintainIndexesStream]] tick, an
+    * overlapping nightly) applied a PARTIAL overlap of this feed's span,
+    * so applying the precomputed deltas on top would double-count the
+    * overlap. The caller must recompute the feed from the new cursor
+    * (the nightly's sync retry does) or no-op and let the next tick
+    * catch up (the stream does) — round-12 advisor: the >=-target gate
+    * alone left exactly this window. */
   private[graft] final case class FeedSuperseded(cursor: Option[Long])
     extends RuntimeException(
       s"stats cursor moved to $cursor since the feed was derived")
     with scala.util.control.NoStackTrace
 
   /** Parse a cursor property defensively: a non-numeric value reads as
-    * unreadable (None), never a crash — the documented response is a
-    * loud rebuild, not a night that dies every night. */
-  private def parseCursor(s: VersionedTable.Snapshot): Option[Long] =
+    * unreadable (None), never a NumberFormatException. What an
+    * unreadable cursor MEANS is the caller's policy — the nightly
+    * rebuilds the consumer full, the online stream fails its batch. */
+  private[graft] def parseCursor(s: VersionedTable.Snapshot): Option[Long] =
     s.properties.get(CorpusVersionProp)
       .flatMap(v => scala.util.Try(v.toLong).toOption)
+
+  /** The feed cache: ONE materialized CDC frame `from → to` per distinct
+    * from-version, shared by every consumer at that cursor (the common
+    * case: all four sit on the previous sync's version, so the span is
+    * diffed + key-validated ONCE, and the localCheckpoint keeps each
+    * consumer's several actions from re-running the full-outer CDC
+    * join — round-12 review). */
+  private[graft] def feedCache(spark: SparkSession, corpusRoot: String,
+      to: VersionedTable.Snapshot): VersionedTable.Snapshot => DataFrame = {
+    val cache = scala.collection.mutable.Map[Long, DataFrame]()
+    from => cache.getOrElseUpdate(from.version,
+      VersionedTable.changes(spark, corpusRoot, from, to, corpusSchema,
+        "doc_id").localCheckpoint())
+  }
+
+  /** One consumer of the corpus change feed. `bootstrap(spark, root,
+    * corpus, v)` builds it from the whole corpus snapshot `v`;
+    * `applyFeed(spark, root, feed, fromV, toV)` brings it from corpus
+    * version `fromV` to `toV` off the CDC span between them. Both commit
+    * `corpus_version` in the SAME manifest as the state it describes and
+    * return the committed version; `schema` is the body row schema
+    * compaction folds. */
+  private[graft] final case class Consumer(name: String,
+      root: Roots => String, schema: StructType,
+      bootstrap: (SparkSession, String, DataFrame, Long) => Long,
+      applyFeed: (SparkSession, String, DataFrame, Long, Long) => Long)
+
+  private def cursorAt(v: Long) = Map(CorpusVersionProp -> v.toString)
+  private def vecRows(df: DataFrame): DataFrame =
+    df.select(col("doc_id").as("vec_id"), col("embedding"))
+  private def vecIds(df: DataFrame): DataFrame =
+    df.select(col("doc_id").as("vec_id"))
+
+  /** Every CDC consumer, in sync order — the ONE definition of how each
+    * follows the corpus, shared by [[run]] and
+    * [[graft.streaming.StreamingOps.cdcMaintainIndexesStream]]. Feeds
+    * are routed by MODALITY ([[IndexMaintenance.deltaFromChangesIn]]):
+    * an embedding-only update never rewrites BM25 buckets, a text-only
+    * edit never re-encodes vectors. The index updates are set math, so
+    * re-applying a span converges; the stats grid's add/retract is not,
+    * so [[applyStatsFeed]] gates its commit on the exact cursor. */
+  private[graft] val consumers: Seq[Consumer] = Seq(
+    Consumer("bm25", _.bm25, Bm25Index.postingsSchema,
+      (spark, root, corpus, v) => Bm25Index.buildVersioned(spark,
+        corpus.select(col("doc_id"), col("text")), root, cursorAt(v)),
+      (spark, root, feed, _, to) => {
+        val (ups, rem) = IndexMaintenance.deltaFromChangesIn(feed,
+          "doc_id", Seq("text"))
+        Bm25Index.updateFromVersioned(spark, root,
+          ups.select(col("doc_id"), col("text")), rem, cursorAt(to))
+      }),
+    Consumer("ivf", _.ivf, IvfIndex.assignmentsSchema,
+      (spark, root, corpus, v) => IvfIndex.buildVersioned(spark,
+        vecRows(corpus), root, properties = cursorAt(v)),
+      (spark, root, feed, _, to) => {
+        val (ups, rem) = IndexMaintenance.deltaFromChangesIn(feed,
+          "doc_id", Seq("embedding"))
+        IvfIndex.updateFromVersioned(spark, root, vecRows(ups),
+          vecIds(rem), cursorAt(to))
+      }),
+    Consumer("pq", _.pq, PqIndex.codesSchema,
+      (spark, root, corpus, v) => PqIndex.buildVersioned(spark,
+        vecRows(corpus), root, properties = cursorAt(v)),
+      (spark, root, feed, _, to) => {
+        val (ups, rem) = IndexMaintenance.deltaFromChangesIn(feed,
+          "doc_id", Seq("embedding"))
+        // mirror the build's vec_id≠0 convention (PqIndex reserves id 0
+        // for the query vector) so maintenance(feed) == build(v2) holds
+        PqIndex.updateFromVersioned(spark, root,
+          vecRows(ups).filter(col("vec_id") =!= 0), vecIds(rem),
+          cursorAt(to))
+      }),
+    // the downstream per-bucket grid (q144's consumer)
+    Consumer("stats", _.stats, statsSchema,
+      (spark, root, corpus, v) => VersionedTable.publishFull(spark, root,
+        "bucket", fullStats(corpus), Map.empty, cursorAt(v)),
+      applyStatsFeed))
 
   private def log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -208,40 +288,33 @@ object Nightly {
 
     // every consumer syncs to ONE resolved corpus state
     val corpusCur = VersionedTable.currentSnapshot(spark, roots.corpus).get
-    val cursorProp = Map(CorpusVersionProp -> corpusCur.version.toString)
-
-    // ONE materialized feed per distinct from-version, shared by every
-    // consumer at that cursor (the common case: all four sit on last
-    // night's version, so the span is diffed + key-validated ONCE, and
-    // the localCheckpoint keeps each consumer's several actions from
-    // re-running the full-outer CDC join — round-12 review)
-    val feedCache = scala.collection.mutable.Map[Long, DataFrame]()
-    def feedFrom(from: VersionedTable.Snapshot): DataFrame =
-      feedCache.getOrElseUpdate(from.version,
-        VersionedTable.changes(spark, roots.corpus, from, corpusCur,
-          corpusSchema, "doc_id").localCheckpoint())
+    val feedFrom = feedCache(spark, roots.corpus, corpusCur)
+    def corpusRows: DataFrame =
+      VersionedTable.read(spark, corpusCur, roots.corpus, corpusSchema)
 
     /** Bring one consumer to `corpusCur`: skip when its committed
       * cursor already covers it, feed it the manifest-diff CDC span
       * otherwise, rebuild FULL (loudly) when its cursor is unreadable
       * or vacuumed past. */
-    def sync(name: String, root: String)(bootstrap: () => Long)(
-        applyFeed: (DataFrame, Long) => Long): Step = {
+    def sync(c: Consumer): Step = {
+      val root = c.root(roots)
+      def bootstrap() =
+        c.bootstrap(spark, root, corpusRows, corpusCur.version)
       def rebuild(why: String): Step = {
-        log.warn(s"nightly: $name at $root $why — rebuilding full " +
+        log.warn(s"nightly: ${c.name} at $root $why — rebuilding full " +
           s"from corpus v${corpusCur.version}")
-        Step(name, "rebuilt", bootstrap())
+        Step(c.name, "rebuilt", bootstrap())
       }
       VersionedTable.currentSnapshot(spark, root) match {
-        case None => Step(name, "bootstrapped", bootstrap())
+        case None => Step(c.name, "bootstrapped", bootstrap())
         case Some(s) =>
           parseCursor(s) match {
             case Some(v) if v >= corpusCur.version =>
-              Step(name, "skipped", s.version)
+              Step(c.name, "skipped", s.version)
             case Some(v) =>
               VersionedTable.snapshotAt(spark, roots.corpus, v) match {
-                case Some(from) =>
-                  Step(name, "updated", applyFeed(feedFrom(from), v))
+                case Some(from) => Step(c.name, "updated", c.applyFeed(
+                  spark, root, feedFrom(from), v, corpusCur.version))
                 case None =>
                   rebuild(s"has cursor v$v but that corpus manifest is " +
                     "vacuumed (consumer slower than retention)")
@@ -253,89 +326,34 @@ object Nightly {
       }
     }
 
-    def corpusRows: DataFrame =
-      VersionedTable.read(spark, corpusCur, roots.corpus, corpusSchema)
-
-    // ---- 2a. BM25 (lexical) ------------------------------------------
-    steps += sync("bm25", roots.bm25)(() =>
-      Bm25Index.buildVersioned(spark,
-        corpusRows.select(col("doc_id"), col("text")), roots.bm25,
-        cursorProp)) { (feed, _) =>
-      val (ups, rem) = IndexMaintenance.deltaFromChangesIn(feed, "doc_id",
-        Seq("text"))
-      Bm25Index.updateFromVersioned(spark, roots.bm25, ups, rem, cursorProp)
-    }
-    chk("bm25")
-
-    // ---- 2b. IVF (vector) --------------------------------------------
-    def vecRows(df: DataFrame): DataFrame =
-      df.select(col("doc_id").as("vec_id"), col("embedding"))
-    steps += sync("ivf", roots.ivf)(() =>
-      IvfIndex.buildVersioned(spark, vecRows(corpusRows), roots.ivf,
-        properties = cursorProp)) { (feed, _) =>
-      val (ups, rem) = IndexMaintenance.deltaFromChangesIn(feed, "doc_id",
-        Seq("embedding"))
-      IvfIndex.updateFromVersioned(spark, roots.ivf, vecRows(ups),
-        rem.select(col("doc_id").as("vec_id")), cursorProp)
-    }
-    chk("ivf")
-
-    // ---- 2c. PQ (vector, quantized) ----------------------------------
-    steps += sync("pq", roots.pq)(() =>
-      PqIndex.buildVersioned(spark, vecRows(corpusRows), roots.pq,
-        properties = cursorProp)) { (feed, _) =>
-      val (ups, rem) = IndexMaintenance.deltaFromChangesIn(feed, "doc_id",
-        Seq("embedding"))
-      // mirror the build's vec_id≠0 convention (PqIndex reserves id 0
-      // for the query vector) so maintenance(feed) == build(v2) holds
-      PqIndex.updateFromVersioned(spark, roots.pq,
-        vecRows(ups).filter(col("vec_id") =!= 0),
-        rem.select(col("doc_id").as("vec_id")), cursorProp)
-    }
-    chk("pq")
-
-    // ---- 2d. downstream stats grid (q144's consumer) ------------------
-    steps += {
-      def statsSync(): Step = sync("stats", roots.stats)(() =>
-        VersionedTable.publishFull(spark, roots.stats, "bucket",
-          fullStats(corpusRows), Map.empty, cursorProp)) { (feed, fromV) =>
-        applyStatsFeed(spark, roots.stats, feed, fromV, corpusCur.version)
+    // a racing maintainer (live stream tick, overlapping nightly) can
+    // move the stats grid's cursor to an INTERMEDIATE version between
+    // sync's cursor read and the commit — applyStatsFeed then refuses
+    // (FeedSuperseded) instead of double-applying the overlap, and sync
+    // re-runs, re-resolving the new cursor and recomputing the feed
+    // from it. Bounded like retryingPublish: a grid this hot should get
+    // a single maintainer, not unbounded spin.
+    def syncRetrying(c: Consumer, attempt: Int = 1): Step =
+      try sync(c) catch {
+        case FeedSuperseded(cur) if attempt < 5 =>
+          log.info(s"nightly: ${c.name} cursor moved to $cur mid-sync " +
+            s"(attempt $attempt/5) — recomputing the feed from it")
+          syncRetrying(c, attempt + 1)
       }
-      // a racing maintainer (live cdcMaintainStream tick, overlapping
-      // nightly) can move the grid's cursor to an INTERMEDIATE version
-      // between sync's cursor read and the commit — applyStatsFeed then
-      // refuses (FeedSuperseded) instead of double-applying the overlap,
-      // and this loop re-enters sync, which re-resolves the new cursor
-      // and recomputes the feed from it. Bounded like retryingPublish:
-      // a grid this hot should get a single maintainer, not unbounded
-      // spin.
-      var attempt = 0
-      var res: Option[Step] = None
-      while (res.isEmpty) {
-        attempt += 1
-        try res = Some(statsSync())
-        catch {
-          case FeedSuperseded(cur) if attempt < 5 =>
-            log.info(s"nightly: stats cursor moved to $cur mid-sync " +
-              s"(attempt $attempt/5) — recomputing the feed from it")
-        }
-      }
-      res.get
+
+    // ---- 2. consumers, in table order --------------------------------
+    consumers.foreach { c =>
+      steps += syncRetrying(c)
+      chk(c.name)
     }
-    chk("stats")
 
     // ---- 3. housekeeping ---------------------------------------------
-    val compacted = Map(
-      "corpus" -> VersionedTable.compact(spark, roots.corpus, corpusSchema,
-        compactFilesPerPart).size,
-      "bm25" -> VersionedTable.compact(spark, roots.bm25,
-        Bm25Index.postingsSchema, compactFilesPerPart).size,
-      "ivf" -> VersionedTable.compact(spark, roots.ivf,
-        IvfIndex.assignmentsSchema, compactFilesPerPart).size,
-      "pq" -> VersionedTable.compact(spark, roots.pq, PqIndex.codesSchema,
-        compactFilesPerPart).size,
-      "stats" -> VersionedTable.compact(spark, roots.stats, statsSchema,
-        compactFilesPerPart).size)
+    val compacted = (("corpus", roots.corpus, corpusSchema) +:
+        consumers.map(c => (c.name, c.root(roots), c.schema)))
+      .map { case (name, root, schema) =>
+        name -> VersionedTable.compact(spark, root, schema,
+          compactFilesPerPart).size
+      }.toMap
     chk("compact")
     // ---- 3b. night pin -----------------------------------------------
     // AFTER compaction (so the pinned versions are the night's final
@@ -505,15 +523,15 @@ object Nightly {
     * were derived against. A cursor at/past `targetVersion` means a
     * racing winner already applied the whole span (no-op, return its
     * version); ANY other cursor — including an intermediate one a live
-    * [[graft.streaming.StreamingOps.cdcMaintainStream]] tick advanced
-    * to mid-span — throws [[FeedSuperseded]]: re-applying the
+    * [[graft.streaming.StreamingOps.cdcMaintainIndexesStream]] tick
+    * advanced to mid-span — throws [[FeedSuperseded]]: re-applying the
     * precomputed deltas on top of a partial overlap would silently
     * double-count n_docs/n_chars (round-12 advisor: the >=-target gate
     * alone left exactly that window). Callers recompute the feed from
     * the new cursor or no-op until the next tick. */
   private[graft] def applyStatsFeed(spark: SparkSession, statsRoot: String,
       feed: DataFrame, fromVersion: Long, targetVersion: Long): Long = {
-    val cursorProp = Map(CorpusVersionProp -> targetVersion.toString)
+    val cursorProp = cursorAt(targetVersion)
     val f = feed.localCheckpoint() // touched-bucket collect + the merge
     val touched = f.select(col("bucket")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq // ≤ grid size by contract
@@ -566,14 +584,21 @@ object Nightly {
     val roots = Roots(args(0), args(2), args(3), args(4), args(5))
     val arriving = spark.read.parquet(args(1))
       .select(col("doc_id"), col("text"), col("embedding"))
-    val r = run(spark, roots, arriving)
-    def j(s: String) = VerifyCommon.jsonStr(s)
-    println(s"""{"nightly":{"corpus_version":${r.corpusVersion},""" +
-      s""""steps":[${r.steps.map(s =>
-        s"""{"component":${j(s.component)},"action":${j(s.action)},""" +
-          s""""version":${s.version}}""").mkString(",")}],""" +
-      s""""compacted":{${r.compacted.toSeq.sortBy(_._1).map {
-        case (k, v) => s"${j(k)}:$v" }.mkString(",")}}}}""")
+    println(reportJson(run(spark, roots, arriving)))
     spark.stop()
+  }
+
+  /** The CLI's one-line JSON report: `{"nightly": {corpus_version,
+    * steps, compacted, pinned}}`, map keys sorted. */
+  private[graft] def reportJson(r: Report): String = {
+    import scala.jdk.CollectionConverters._
+    def sorted[V](m: Map[String, V]) =
+      new java.util.TreeMap[String, V](m.asJava)
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
+      Map("nightly" -> Map("corpus_version" -> r.corpusVersion,
+        "steps" -> r.steps.map(s => Map("component" -> s.component,
+          "action" -> s.action, "version" -> s.version).asJava).asJava,
+        "compacted" -> sorted(r.compacted),
+        "pinned" -> sorted(r.pinned)).asJava).asJava)
   }
 }

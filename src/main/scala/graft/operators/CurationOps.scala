@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.{GraftSession, Op, OpCatalog, Tables}
+import graft.functions.Rounding.{roundKey, roundKeySql, roundVal,
+  roundValSql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,10 +18,10 @@ import org.apache.spark.sql.functions._
   * All four are oracle-declared: every decision predicate is integer
   * arithmetic (LCG / md5-hex-nibble hashes, `k·df ≥ n` threshold forms)
   * so both engines agree bit-for-bit, and every emitted double is one
-  * [[roundVal]] (`floor(x·1e4+0.5)/1e4`) of a ratio of exact integers —
+  * [[graft.functions.Rounding.roundVal]] (`floor(x·1e4+0.5)/1e4`) of a ratio of exact integers —
   * the floor form, not SQL `round`, because Spark and DuckDB `round`
   * genuinely disagree on half-way doubles and integer ratios land on
-  * exactly those (see [[roundKey]]).
+  * exactly those (see [[graft.functions.Rounding]]).
   */
 object CurationOps extends OpCatalog {
 
@@ -88,19 +90,6 @@ object CurationOps extends OpCatalog {
   private[graft] def splitLabel: Column =
     when(splitBucket < 90, "train").when(splitBucket < 95, "valid")
       .otherwise("test")
-
-  /** Cross-engine half-up rounding — [[graft.functions.Rounding]] is
-    * the canonical definition (and the WHY: Spark and DuckDB SQL
-    * `round(DOUBLE, n)` genuinely disagree on half-way doubles, which
-    * integer ratios land on). Local aliases for this file's dense use. */
-  private[graft] def roundKey(c: Column, scale: Int): Column =
-    graft.functions.Rounding.roundKey(c, scale)
-  private[graft] def roundVal(c: Column, scale: Int): Column =
-    graft.functions.Rounding.roundVal(c, scale)
-  private[graft] def roundKeySql(e: String, scale: Int): String =
-    graft.functions.Rounding.roundKeySql(e, scale)
-  private[graft] def roundValSql(e: String, scale: Int): String =
-    graft.functions.Rounding.roundValSql(e, scale)
 
   /** Core of q94 over any (source, doc_id) frame — spec entry point. */
   private[graft] def sourceCapOf(docs: DataFrame, cap: Int): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GraftSession, Memo, Op, OpCatalog, Tables}
-import graft.functions.Rounding.roundVal
+import graft.functions.Rounding.{roundVal, roundValSql}
 import graft.functions.TextExpressions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -236,13 +236,6 @@ object TextOps extends OpCatalog {
     * definition (ccOracleCtes' q73/q83 rule) for the q32/q33/q34 oracles
     * and the q60/q86 closure chain; previously four verbatim copies an
     * edit to the shingle construction would have to hand-sync. */
-  /** [[graft.functions.Rounding.roundValSql]] alias for this file's
-    * oracle strings — the floor form is generated, not hand-rolled, so
-    * a convention change edits ONE definition (round-9 review; commit
-    * e4c8c29 paid the 17-copy edit this removes). */
-  private def rv(e: String, scale: Int): String =
-    graft.functions.Rounding.roundValSql(e, scale)
-
   private def shingleDocsCte(name: String): String =
     s"""$name AS (
        |  SELECT doc_id, lang,
@@ -252,7 +245,7 @@ object TextOps extends OpCatalog {
 
   private val neardupShingleSql =
     s"""WITH ${shingleDocsCte("d")}
-      |SELECT id_a, id_b, ${rv("jac", 4)} AS jac FROM (
+      |SELECT id_a, id_b, ${roundValSql("jac", 4)} AS jac FROM (
       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
       |    len(list_intersect(a.sh, b.sh)) /
       |      CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) AS jac
@@ -357,7 +350,7 @@ object TextOps extends OpCatalog {
       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       |  FROM bnd a JOIN bnd b ON a.band = b.band AND a.bsig = b.bsig
       |    AND a.lang = b.lang AND a.doc_id < b.doc_id)
-      |SELECT id_a, id_b, ${rv("jac", 4)} AS jac FROM (
+      |SELECT id_a, id_b, ${roundValSql("jac", 4)} AS jac FROM (
       |  SELECT c.id_a, c.id_b,
       |    len(list_intersect(x.sh, y.sh)) /
       |      CAST(len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)) AS DOUBLE) AS jac
@@ -458,8 +451,8 @@ object TextOps extends OpCatalog {
     s"""SELECT doc_id,
       |  len(w) AS n_tokens,
       |  len(list_distinct(w)) AS n_distinct,
-      |  ${rv("len(list_distinct(w)) / CAST(len(w) AS DOUBLE)", 4)} AS ttr,
-      |  ${rv("list_sum(list_transform(w, x -> length(x))) / CAST(len(w) AS DOUBLE)", 4)} AS avg_tok_len
+      |  ${roundValSql("len(list_distinct(w)) / CAST(len(w) AS DOUBLE)", 4)} AS ttr,
+      |  ${roundValSql("list_sum(list_transform(w, x -> length(x))) / CAST(len(w) AS DOUBLE)", 4)} AS avg_tok_len
       |FROM (SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents)
       |ORDER BY doc_id""".stripMargin
 
@@ -530,7 +523,7 @@ object TextOps extends OpCatalog {
       |  SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents),
       |tot AS (SELECT count(*) AS n FROM tok)
       |SELECT word, count(*) AS cnt,
-      |  ${rv("count(*) / CAST(n AS DOUBLE)", 4)} AS share
+      |  ${roundValSql("count(*) / CAST(n AS DOUBLE)", 4)} AS share
       |FROM tok CROSS JOIN tot
       |GROUP BY word, n
       |HAVING count(*) * 32 >= n
@@ -612,9 +605,9 @@ object TextOps extends OpCatalog {
 
   private val qualityScoreSql =
     s"""SELECT lang, count(*) AS n_docs,
-      |  ${rv("avg(len(list_distinct(w)) / CAST(len(w) AS DOUBLE))", 4)} AS avg_ttr,
-      |  ${rv("avg(len(list_filter(w, x -> list_contains(['the','a','of','and','to'], x))) / CAST(len(w) AS DOUBLE))", 4)} AS avg_stop_ratio,
-      |  ${rv("avg(n_chars / CAST(len(w) AS DOUBLE))", 4)} AS avg_chars_per_tok
+      |  ${roundValSql("avg(len(list_distinct(w)) / CAST(len(w) AS DOUBLE))", 4)} AS avg_ttr,
+      |  ${roundValSql("avg(len(list_filter(w, x -> list_contains(['the','a','of','and','to'], x))) / CAST(len(w) AS DOUBLE))", 4)} AS avg_stop_ratio,
+      |  ${roundValSql("avg(n_chars / CAST(len(w) AS DOUBLE))", 4)} AS avg_chars_per_tok
       |FROM (SELECT lang, n_chars, string_split(lower(text), ' ') AS w FROM documents)
       |GROUP BY lang
       |ORDER BY lang""".stripMargin
@@ -844,7 +837,7 @@ object TextOps extends OpCatalog {
     s"""SELECT doc_id,
       |  len(string_split(lower(text), ' ')) AS ws_tokens,
       |  len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9 \t\n\r\f]')) AS re_tokens,
-      |  ${rv("n_chars / CAST(len(string_split(lower(text), ' ')) AS DOUBLE)", 4)} AS chars_per_ws_token
+      |  ${roundValSql("n_chars / CAST(len(string_split(lower(text), ' ')) AS DOUBLE)", 4)} AS chars_per_ws_token
       |FROM documents
       |ORDER BY doc_id""".stripMargin
 
@@ -1112,7 +1105,7 @@ object TextOps extends OpCatalog {
       |SELECT doc_a, doc_b,
       |  CAST(sa.n AS BIGINT) AS n_grams_a,
       |  CAST(n_common AS BIGINT) AS n_common,
-      |  ${rv("n_common / CAST(sa.n AS DOUBLE)", 4)} AS containment
+      |  ${roundValSql("n_common / CAST(sa.n AS DOUBLE)", 4)} AS containment
       |FROM inter JOIN sz sa ON sa.doc_id = inter.doc_a
       |ORDER BY containment DESC, doc_a, doc_b LIMIT 20""".stripMargin
 
@@ -1280,7 +1273,7 @@ object TextOps extends OpCatalog {
       |SELECT doc_a, doc_b,
       |  CAST(sa.n AS BIGINT) AS n_grams_a,
       |  CAST(n_common AS BIGINT) AS n_common,
-      |  ${rv("n_common / CAST(sa.n AS DOUBLE)", 4)} AS containment
+      |  ${roundValSql("n_common / CAST(sa.n AS DOUBLE)", 4)} AS containment
       |FROM inter JOIN sz sa ON sa.doc_id = inter.doc_a
       |ORDER BY containment DESC, doc_a, doc_b LIMIT 20""".stripMargin
 
@@ -1344,7 +1337,7 @@ object TextOps extends OpCatalog {
       |SELECT doc_id, lang,
       |  CAST(sum(c) AS BIGINT) AS n_chars_total,
       |  CAST(count(*) AS BIGINT) AS n_distinct_chars,
-      |  ${rv("log2(CAST(sum(c) AS DOUBLE)) " +
+      |  ${roundValSql("log2(CAST(sum(c) AS DOUBLE)) " +
         "- sum(c * log2(CAST(c AS DOUBLE))) / CAST(sum(c) AS DOUBLE)", 4)}
       |    AS entropy
       |FROM cnt GROUP BY doc_id, lang
@@ -1419,7 +1412,7 @@ object TextOps extends OpCatalog {
       |  CAST(n_docs AS BIGINT) AS n_docs,
       |  CAST(coalesce(novel_grams, 0) AS BIGINT) AS novel_grams,
       |  CAST(total_grams AS BIGINT) AS total_grams,
-      |  ${rv("coalesce(novel_grams, 0) / CAST(total_grams AS DOUBLE)", 4)}
+      |  ${roundValSql("coalesce(novel_grams, 0) / CAST(total_grams AS DOUBLE)", 4)}
       |    AS novelty
       |FROM t LEFT JOIN novel ON novel.source = t.source
       |ORDER BY t.source""".stripMargin
@@ -1476,9 +1469,9 @@ object TextOps extends OpCatalog {
       |  FROM counts),
       |top AS (SELECT * FROM ranked WHERE r <= 200)
       |SELECT source, CAST(count(*) AS BIGINT) AS n_ranks,
-      |  ${rv("regr_slope(log2(c), log2(r))", 4)} AS zipf_slope,
-      |  ${rv("regr_intercept(log2(c), log2(r))", 4)} AS zipf_intercept,
-      |  ${rv("regr_r2(log2(c), log2(r))", 4)} AS fit_r2
+      |  ${roundValSql("regr_slope(log2(c), log2(r))", 4)} AS zipf_slope,
+      |  ${roundValSql("regr_intercept(log2(c), log2(r))", 4)} AS zipf_intercept,
+      |  ${roundValSql("regr_r2(log2(c), log2(r))", 4)} AS fit_r2
       |FROM top GROUP BY source ORDER BY source""".stripMargin
 
   // ---------------------------------------------------------------- q130
@@ -1545,7 +1538,7 @@ object TextOps extends OpCatalog {
       |  CAST(n_ab AS BIGINT) AS n_ab,
       |  CAST(a.cnt AS BIGINT) AS cnt_a,
       |  CAST(b.cnt AS BIGINT) AS cnt_b,
-      |  ${rv("log2(n_ab) + 2.0 * log2(n1) - log2(n2) " +
+      |  ${roundValSql("log2(n_ab) + 2.0 * log2(n1) - log2(n2) " +
         "- log2(a.cnt) - log2(b.cnt)", 4)} AS pmi
       |FROM bcnt
       |JOIN ucnt a ON a.tok = string_split(gram, ' ')[1]

@@ -908,205 +908,73 @@ object StreamingOps {
       }
   }
 
-  /** Online CDC-maintained downstream aggregate — the STREAMING twin of
-    * the nightly's stats step (round-11 verdict item 6: `changesStream`
-    * tails the feed, but nothing maintained state FROM it online). Each
-    * micro-batch of the driving tick stream resolves the corpus's
-    * CURRENT manifest once; if it advanced past the stats table's own
-    * committed cursor (the `corpus_version` property of ITS current
-    * manifest — [[graft.Nightly]]'s offsets-in-the-transaction slot),
-    * the span's [[graft.operators.VersionedTable.changes]] feed is
-    * applied as one add/retract delta commit
-    * ([[graft.Nightly.applyStatsFeed]] — the SAME maintenance math the
-    * nightly runs, one definition), which moves the cursor atomically
-    * with the grid it describes.
+  /** Online CDC index maintenance — the STREAMING twin of the nightly's
+    * consumer steps, for any subset of its consumers (the roots given).
+    * Each micro-batch of the driving tick stream (its rows are ignored —
+    * it is the trigger clock) resolves the corpus's CURRENT manifest
+    * once; every given consumer whose committed `corpus_version` cursor
+    * (the property of ITS current manifest — [[graft.Nightly]]'s
+    * offsets-in-the-transaction slot) is behind gets the span's CDC
+    * feed through the nightly's own feed-apply ([[graft.Nightly
+    * .consumers]] — one definition of modality routing and update
+    * math), from the shared feed cache: the common case is every
+    * consumer on last tick's version, so the span is diffed and
+    * key-validated once for all four. Each commit moves the consumer's
+    * cursor atomically with the state it describes.
     *
     * Exactly-once WITHOUT a checkpoint: the cursor is not stream state
-    * at all — a replayed or duplicated tick re-resolves, finds
-    * `cursor ≥ current`, and no-ops; a crash between the feed read and
-    * the commit left the cursor unmoved, so the retry re-applies the
-    * same span onto the same base. Restarts resume from the stats
-    * table itself. Retention contract: corpus vacuum must keep
-    * manifests back to the stats cursor ([[changesStream]]'s same
-    * rule) — a vacuumed cursor fails the batch loudly. The stats table
-    * must be bootstrapped first (the nightly's bootstrap, or any
-    * `publishFull` of the grid carrying the cursor property).
-    * `StreamingSpec` pins the stream==batch law: after each committed
-    * corpus version, the grid equals a direct recompute (q144's
-    * oracle shape). */
-  def cdcMaintainStream(ticks: DataFrame, corpusRoot: String,
-      statsRoot: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.VersionedTable
-    ticks.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        VersionedTable.currentSnapshot(spark, corpusRoot).foreach { cur =>
-          val statsCur = VersionedTable.currentSnapshot(spark, statsRoot)
-            .getOrElse(throw new IllegalStateException(
-              s"stats table at $statsRoot is unborn — bootstrap the grid " +
-                "(publishFull with the corpus_version property) first"))
-          // Try-parsed like the nightly's reader, but a stream cannot
-          // rebuild a grid it doesn't own the bootstrap of — an
-          // unreadable cursor fails the batch LOUDLY with the cause,
-          // never a NumberFormatException three frames deep
-          val raw = statsCur.properties
-            .get(graft.Nightly.CorpusVersionProp)
-          val cursor = raw.flatMap(v => scala.util.Try(v.toLong).toOption)
-            .getOrElse(throw new IllegalStateException(
-              s"stats table at $statsRoot carries no readable " +
-                s"corpus_version cursor (raw: $raw) — bootstrap it via " +
-                "the nightly/publishFull path before tailing"))
-          if (cur.version > cursor) {
-            val from = VersionedTable.snapshotAt(spark, corpusRoot, cursor)
-              .getOrElse(throw new IllegalStateException(
-                s"stats cursor v$cursor at $corpusRoot was vacuumed — " +
-                  "retention must cover the slowest consumer"))
-            // applyStatsFeed re-checks the cursor INSIDE its commit
-            // retry: a racing nightly applying the same span makes this
-            // tick a no-op, never a double-applied add/retract; a racer
-            // that moved the cursor to an INTERMEDIATE version instead
-            // (partial overlap — FeedSuperseded) also no-ops here, and
-            // the NEXT tick recomputes the feed from the new cursor
-            try graft.Nightly.applyStatsFeed(spark, statsRoot,
-              VersionedTable.changes(spark, corpusRoot, from, cur,
-                graft.Nightly.corpusSchema, "doc_id"), cursor, cur.version)
-            catch {
-              case graft.Nightly.FeedSuperseded(moved) =>
-                org.slf4j.LoggerFactory.getLogger(getClass).info(
-                  s"cdcMaintainStream: stats cursor moved to $moved " +
-                    s"mid-tick (feed was v$cursor->v${cur.version}) — " +
-                    "no-op; the next tick recomputes from the new cursor")
-            }
-          }
-        }
-      }
-  }
-
-  /** Online CDC-maintained BM25 index — the STREAMING twin of the
-    * nightly's lexical step (round-12 verdict item 5: the stats grid
-    * synced online, the index families only nightly). Each micro-batch
-    * resolves the corpus's CURRENT manifest once; if it advanced past
-    * the index's committed `corpus_version` cursor, the span's CDC feed
-    * is routed through [[graft.operators.IndexMaintenance
-    * .deltaFromChangesIn]] with the LEXICAL modality filter (an
-    * embedding-only publish rewrites no postings bucket — the feed's
-    * text-unchanged update pairs drop out) and applied via
-    * [[graft.operators.Bm25Index.updateFromVersioned]], whose commit
-    * carries the new cursor atomically with the postings and stats it
-    * describes.
-    *
-    * Exactly-once WITHOUT a checkpoint, by a DIFFERENT mechanism than
-    * [[cdcMaintainStream]]'s: the index update is SET math (upserted
-    * keys replace their own old rows, df re-derived against the
-    * index's current state), so a crash-retry that re-applies a span
-    * converges to the identical content — the cursor pre-check is what
-    * makes a replayed tick cheap (zero commits), not what makes it
-    * safe. An other-modality-only corpus version still commits (the
-    * cursor must advance to mark coverage) but carries over every
-    * postings generation untouched — copy-on-write sharing preserved,
-    * spec-pinned by generation-id equality. Retention contract:
-    * [[changesStream]]'s same rule. `StreamingSpec` pins stream==batch
-    * (the online index serves exactly what a fresh build of the
-    * current corpus serves) and the replayed-tick no-op. */
-  def cdcMaintainBm25Stream(ticks: DataFrame, corpusRoot: String,
-      bm25Root: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    cdcMaintainIndexesStream(ticks, corpusRoot, bm25Root = Some(bm25Root))
-
-  /** The whole NIGHTLY consumer set as an online stream (the full form
-    * of round-12 verdict item 5 — "at least BM25" done for every
-    * family): one micro-batch resolves the corpus's current manifest
-    * once, derives ONE CDC feed per distinct consumer cursor
-    * (`localCheckpoint`ed and shared, exactly [[graft.Nightly]]'s
-    * feedCache — the common case is every consumer on last tick's
-    * version, so the span is diffed and key-validated once for all
-    * four), routes it per MODALITY ([[graft.operators.IndexMaintenance
-    * .deltaFromChangesIn]] — a text-only edit never re-encodes vectors,
-    * an embedding-only re-embed never rewrites a postings bucket), and
-    * drives each present consumer's versioned update with the cursor
-    * committed atomically with its state.
-    *
-    * Exactly-once story per consumer is inherited: set-math index
-    * updates converge under re-application (cursor pre-check makes
-    * replays free); the add/retract stats grid refuses superseded feeds
-    * ([[graft.Nightly.FeedSuperseded]]) and catches up next tick.
-    * `StreamingSpec` pins ONLINE == NIGHTLY: the stream-maintained
-    * world content-equals the batch night's on the same v2. */
+    * — a replayed or duplicated tick re-resolves, finds `cursor ≥
+    * current`, and commits nothing; restarts resume from the tables
+    * themselves. The index updates are set math, so a crash-retry that
+    * re-applies a span converges; the add/retract stats grid refuses a
+    * feed a racer superseded ([[graft.Nightly.FeedSuperseded]]), which
+    * here is a no-op — the next tick recomputes from the new cursor.
+    * Unlike the nightly, the stream owns no bootstrap: every given
+    * consumer's cursor is read BEFORE anything commits, and an unborn
+    * table or an unreadable cursor fails the batch loudly, naming the
+    * root, with no root touched. Retention contract: corpus vacuum must
+    * keep manifests back to the slowest cursor ([[changesStream]]'s
+    * rule) — a vacuumed cursor fails the batch loudly. `StreamingSpec`
+    * pins stream == batch per family and ONLINE == NIGHTLY for the
+    * whole set. */
   def cdcMaintainIndexesStream(ticks: DataFrame, corpusRoot: String,
       bm25Root: Option[String] = None, ivfRoot: Option[String] = None,
       pqRoot: Option[String] = None, statsRoot: Option[String] = None)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.{Bm25Index, IndexMaintenance, IvfIndex,
-      PqIndex, VersionedTable}
+    import graft.Nightly
+    import graft.operators.VersionedTable
+    val rootOf = Map("bm25" -> bm25Root, "ivf" -> ivfRoot, "pq" -> pqRoot,
+      "stats" -> statsRoot)
     ticks.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
         VersionedTable.currentSnapshot(spark, corpusRoot).foreach { cur =>
-          // one feed per distinct from-version, shared by every consumer
-          // at that cursor; checkpointed because up to four consumers'
-          // several actions each would otherwise re-run the CDC join
-          val feedCache = scala.collection.mutable.Map[Long, DataFrame]()
-          def feedFrom(v: Long): DataFrame =
-            feedCache.getOrElseUpdate(v, {
-              val from = VersionedTable.snapshotAt(spark, corpusRoot, v)
+          val cursors = Nightly.consumers.flatMap { c =>
+            rootOf(c.name).map { root =>
+              val snap = VersionedTable.currentSnapshot(spark, root)
                 .getOrElse(throw new IllegalStateException(
-                  s"cursor v$v at $corpusRoot was vacuumed — retention " +
-                    "must cover the slowest consumer"))
-              VersionedTable.changes(spark, corpusRoot, from, cur,
-                graft.Nightly.corpusSchema, "doc_id").localCheckpoint()
-            })
-          def cursorOf(name: String, root: String): Long = {
-            val snap = VersionedTable.currentSnapshot(spark, root)
-              .getOrElse(throw new IllegalStateException(
-                s"$name at $root is unborn — bootstrap it (buildVersioned/" +
-                  "publishFull with the corpus_version property) first"))
-            val raw = snap.properties.get(graft.Nightly.CorpusVersionProp)
-            raw.flatMap(v => scala.util.Try(v.toLong).toOption)
-              .getOrElse(throw new IllegalStateException(
-                s"$name at $root carries no readable corpus_version " +
-                  s"cursor (raw: $raw) — bootstrap it via the nightly/" +
-                  "build path before tailing"))
-          }
-          val prop = Map(
-            graft.Nightly.CorpusVersionProp -> cur.version.toString)
-          def sync(name: String, rootOpt: Option[String])(
-              apply: (String, DataFrame, Long) => Unit): Unit =
-            rootOpt.foreach { root =>
-              val cursor = cursorOf(name, root)
-              if (cur.version > cursor) apply(root, feedFrom(cursor), cursor)
+                  s"${c.name} at $root is unborn — bootstrap it (the " +
+                    "nightly, or a build/publishFull carrying the " +
+                    "corpus_version property) first"))
+              (c, root, Nightly.parseCursor(snap).getOrElse(
+                throw new IllegalStateException(s"${c.name} at $root " +
+                  "carries no readable corpus_version cursor (raw: " +
+                  s"${snap.properties.get(Nightly.CorpusVersionProp)}) — " +
+                  "bootstrap it via the nightly/build path before tailing")))
             }
-          def vecRows(df: DataFrame): DataFrame =
-            df.select(col("doc_id").as("vec_id"), col("embedding"))
-          sync("BM25 index", bm25Root) { (root, feed, _) =>
-            val (ups, rem) = IndexMaintenance.deltaFromChangesIn(feed,
-              "doc_id", Seq("text"))
-            Bm25Index.updateFromVersioned(spark, root,
-              ups.select(col("doc_id"), col("text")), rem, prop)
           }
-          sync("IVF index", ivfRoot) { (root, feed, _) =>
-            val (ups, rem) = IndexMaintenance.deltaFromChangesIn(feed,
-              "doc_id", Seq("embedding"))
-            IvfIndex.updateFromVersioned(spark, root, vecRows(ups),
-              rem.select(col("doc_id").as("vec_id")), prop)
-          }
-          sync("PQ index", pqRoot) { (root, feed, _) =>
-            val (ups, rem) = IndexMaintenance.deltaFromChangesIn(feed,
-              "doc_id", Seq("embedding"))
-            // the build's vec_id≠0 convention (0 is the query slot)
-            PqIndex.updateFromVersioned(spark, root,
-              vecRows(ups).filter(col("vec_id") =!= 0),
-              rem.select(col("doc_id").as("vec_id")), prop)
-          }
-          sync("stats grid", statsRoot) { (root, feed, cursor) =>
-            try graft.Nightly.applyStatsFeed(spark, root, feed,
-              cursor, cur.version)
+          val feedFrom = Nightly.feedCache(spark, corpusRoot, cur)
+          cursors.filter(_._3 < cur.version).foreach { case (c, root, v) =>
+            val from = VersionedTable.snapshotAt(spark, corpusRoot, v)
+              .getOrElse(throw new IllegalStateException(
+                s"${c.name} cursor v$v at $corpusRoot was vacuumed — " +
+                  "retention must cover the slowest consumer"))
+            try c.applyFeed(spark, root, feedFrom(from), v, cur.version)
             catch {
-              case graft.Nightly.FeedSuperseded(moved) =>
+              case Nightly.FeedSuperseded(moved) =>
                 org.slf4j.LoggerFactory.getLogger(getClass).info(
-                  s"cdcMaintainIndexesStream: stats cursor moved to " +
+                  s"cdcMaintainIndexesStream: ${c.name} cursor moved to " +
                     s"$moved mid-tick — no-op; next tick recomputes")
             }
           }

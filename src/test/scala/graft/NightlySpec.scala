@@ -35,15 +35,18 @@ class NightlySpec extends SparkSpec {
   // embedding — a re-crawl of the same content)
   private def corpusV2: DataFrame = CurationOps.plantedV2(corpusV1)
 
+  // `graft_nightlyspec_`, not `graft_nightly_`: that is the NightlyOps
+  // artifact family prefix, and an artifact build's stale-family sweep
+  // (VectorOps.sweepStaleArtifacts) deletes every unlocked dir under it
   private def newRoots(tag: String): Nightly.Roots = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_nightly_$tag")
+    val d = tempDir(s"graft_nightlyspec_$tag")
     Nightly.Roots(s"$d/corpus", s"$d/bm25", s"$d/ivf", s"$d/pq", s"$d/stats")
   }
 
   /** Byte-copy a whole root set — the cheap way to fork one bootstrapped
     * world into N crash-injection branches with IDENTICAL bits. */
   private def copyRoots(src: Nightly.Roots, tag: String): Nightly.Roots = {
-    val dstBase = java.nio.file.Files.createTempDirectory(s"graft_nightly_$tag")
+    val dstBase = tempDir(s"graft_nightlyspec_$tag")
     val srcBase = java.nio.file.Paths.get(src.corpus).getParent
     java.nio.file.Files.walk(srcBase).forEach { p =>
       val t = dstBase.resolve(srcBase.relativize(p))
@@ -121,6 +124,16 @@ class NightlySpec extends SparkSpec {
     assert(Seq("bm25", "ivf", "pq", "stats").forall(c =>
       night2.steps.find(_.component == c).get.action == "updated"),
       s"every consumer must ride the CDC feed: ${night2.steps}")
+    // the CLI report carries every field of the Report, pin included
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Nightly.reportJson(night2)).get("nightly")
+    assert(json.get("corpus_version").asLong() == night2.corpusVersion)
+    assert(json.get("steps").size() == night2.steps.size)
+    assert(json.get("steps").get(0).get("action").asText() == "published")
+    assert(night2.pinned.keySet.nonEmpty && night2.pinned.forall {
+      case (k, v) => json.get("pinned").get(k).asLong() == v })
+    assert(night2.compacted.forall { case (k, v) =>
+      json.get("compacted").get(k).asInt() == v })
     // every consumer's cursor committed WITH its state, on one version
     val st = stateOf(roots)
     assert(Seq("bm25", "ivf", "pq", "stats").forall(c =>
@@ -181,40 +194,53 @@ class NightlySpec extends SparkSpec {
       "a re-run must not commit ANY new manifest on any root")
   }
 
-  test("crash-resume: kill after any step, re-run, converge to the uninterrupted night's exact state", SlowTest) {
-    // ONE bootstrapped world, forked per crash point by byte-copy —
-    // every branch starts from identical bits, so convergence is
-    // checked as exact state equality against the uninterrupted branch
+  /** ONE bootstrapped world and the uninterrupted second night forked
+    * from it by byte-copy — what every crash-resume branch starts from
+    * (identical bits) and must converge to: (base, state, manifests,
+    * night pin). */
+  private lazy val crashWorld = {
     val base = newRoots("crashbase")
     Nightly.run(spark, base, corpusV1, vacuumGraceMs = 0L)
     val reference = copyRoots(base, "crashref")
-    Nightly.run(spark, reference, corpusV2, vacuumGraceMs = 0L)
-    val want = stateOf(reference)
-    val wantManifests = manifestNames(reference)
-    for (crashAt <- Seq("corpus", "ivf", "stats", "compact", "pin")) {
-      val branch = copyRoots(base, s"crash_$crashAt")
-      val e = intercept[Nightly.InjectedCrash] {
-        Nightly.run(spark, branch, corpusV2, vacuumGraceMs = 0L,
-          failAfter = Set(crashAt))
-      }
-      assert(e.getMessage.contains(crashAt))
-      // the resume: same arriving corpus, no injection
-      val resumed = Nightly.run(spark, branch, corpusV2, vacuumGraceMs = 0L)
-      // steps completed before the crash re-run as skipped/unchanged
-      if (crashAt != "corpus")
-        assert(resumed.steps.find(_.component == "corpus").get.action ==
-          "unchanged", s"crash at $crashAt: corpus already published")
-      assert(stateOf(branch) == want,
-        s"crash at $crashAt: resumed state must equal the uninterrupted " +
-          "night's")
-      assert(manifestNames(branch) == wantManifests,
-        s"crash at $crashAt: same retained manifest set")
-      assert(Nightly.nightPin(spark, branch.corpus, resumed.corpusVersion)
-          .map(_.versions) ==
-        Nightly.nightPin(spark, reference.corpus, resumed.corpusVersion)
-          .map(_.versions),
-        s"crash at $crashAt: the night pin must converge too")
+    val night = Nightly.run(spark, reference, corpusV2, vacuumGraceMs = 0L)
+    (base, stateOf(reference), manifestNames(reference),
+      Nightly.nightPin(spark, reference.corpus, night.corpusVersion)
+        .map(_.versions))
+  }
+
+  /** Fork the base world, crash the second night after `crashAt`, re-run
+    * it, and require convergence to the uninterrupted night's exact
+    * state, retained manifests and night pin. */
+  private def assertResumes(crashAt: String): Unit = {
+    val (base, want, wantManifests, wantPin) = crashWorld
+    val branch = copyRoots(base, s"crash_$crashAt")
+    val e = intercept[Nightly.InjectedCrash] {
+      Nightly.run(spark, branch, corpusV2, vacuumGraceMs = 0L,
+        failAfter = Set(crashAt))
     }
+    assert(e.getMessage.contains(crashAt))
+    // the resume: same arriving corpus, no injection
+    val resumed = Nightly.run(spark, branch, corpusV2, vacuumGraceMs = 0L)
+    // steps completed before the crash re-run as skipped/unchanged
+    if (crashAt != "corpus")
+      assert(resumed.steps.find(_.component == "corpus").get.action ==
+        "unchanged", s"crash at $crashAt: corpus already published")
+    assert(stateOf(branch) == want,
+      s"crash at $crashAt: resumed state must equal the uninterrupted " +
+        "night's")
+    assert(manifestNames(branch) == wantManifests,
+      s"crash at $crashAt: same retained manifest set")
+    assert(Nightly.nightPin(spark, branch.corpus, resumed.corpusVersion)
+        .map(_.versions) == wantPin,
+      s"crash at $crashAt: the night pin must converge too")
+  }
+
+  test("crash-resume, default gate: a crash inside the consumer loop (after ivf) resumes to the uninterrupted night's exact state") {
+    assertResumes("ivf")
+  }
+
+  test("crash-resume: kill after any step, re-run, converge to the uninterrupted night's exact state", SlowTest) {
+    Seq("corpus", "ivf", "stats", "compact", "pin").foreach(assertResumes)
   }
 
   test("night pin: a reader pinned to night N sees identical answers before, during, and after night N+1; stale pins resolve loudly") {
@@ -293,7 +319,7 @@ class NightlySpec extends SparkSpec {
       s1.version, s2.version)
     val after = stateOf(roots)("stats")
     // the race-loser path: SAME span re-applied (a duplicate nightly, a
-    // cdcMaintainStream tick that passed its pre-check before the
+    // cdcMaintainIndexesStream tick that passed its pre-check before the
     // winner committed) — the in-loop cursor gate must no-op, because a
     // second add/retract pass would double-count every delta
     val v2nd = Nightly.applyStatsFeed(spark, roots.stats, feed,

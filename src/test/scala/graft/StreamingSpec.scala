@@ -1088,8 +1088,8 @@ class StreamingSpec extends SparkSpec {
       finally s.close()
     }
     val mem = MemoryStream[Long]
-    val q = StreamingOps.cdcMaintainStream(mem.toDS().toDF("tick"),
-      corpusRoot, statsRoot).start()
+    val q = StreamingOps.cdcMaintainIndexesStream(mem.toDS().toDF("tick"),
+      corpusRoot, statsRoot = Some(statsRoot)).start()
     try {
       mem.addData(1L)
       q.processAllAvailable()
@@ -1161,8 +1161,8 @@ class StreamingSpec extends SparkSpec {
     }
     def idxSnap() = VersionedTable.currentSnapshot(spark, bm25Root).get
     val mem = MemoryStream[Long]
-    val q = StreamingOps.cdcMaintainBm25Stream(mem.toDS().toDF("tick"),
-      corpusRoot, bm25Root).start()
+    val q = StreamingOps.cdcMaintainIndexesStream(mem.toDS().toDF("tick"),
+      corpusRoot, bm25Root = Some(bm25Root)).start()
     try {
       mem.addData(1L)
       q.processAllAvailable()
@@ -1206,6 +1206,54 @@ class StreamingSpec extends SparkSpec {
           "copy-on-write sharing preserved (generation-id equality)")
       assert(served() == freshBuild(v2), "content unchanged")
       assert(q.isActive)
+    } finally q.stop()
+  }
+
+  test("online CDC maintenance fails loud: an unreadable consumer cursor fails the micro-batch naming its root, and no root commits anything") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    import graft.operators.{Bm25Index, VersionedTable}
+    def corpusDf(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+      .select(col("doc_id"), col("text"),
+        typedLit(Seq(0.5f, -0.5f)).as("embedding"),
+        pmod(col("doc_id"), lit(16L)).as("bucket"))
+    val corpusRoot = tempDir("graft_cdc_loud_c").toString
+    val bm25Root = tempDir("graft_cdc_loud_i").toString
+    val statsRoot = tempDir("graft_cdc_loud_s").toString
+    val v1 = corpusDf((1L, "spark streams"), (2L, "window rank"))
+    VersionedTable.publishFull(spark, corpusRoot, "bucket", v1)
+    Bm25Index.buildVersioned(spark, v1.select(col("doc_id"), col("text")),
+      bm25Root, Map(Nightly.CorpusVersionProp -> "1"))
+    // the stats grid carries a non-numeric cursor (an external tool's
+    // publishFull) — the nightly would rebuild it; the stream must not
+    VersionedTable.publishFull(spark, statsRoot, "bucket",
+      v1.groupBy(col("bucket")).agg(count(lit(1)).as("n_docs"),
+        sum(length(col("text")).cast("long")).as("n_chars")),
+      properties = Map(Nightly.CorpusVersionProp -> "v-twelve"))
+    // a corpus v2 both consumers are behind on
+    VersionedTable.publishDelta(spark, corpusRoot, Seq(2L),
+      corpusDf((2L, "window window rank")))
+    def versions() = Seq(corpusRoot, bm25Root, statsRoot)
+      .map(VersionedTable.currentSnapshot(spark, _).get.version)
+    val before = versions()
+    val mem = MemoryStream[Long]
+    val q = StreamingOps.cdcMaintainIndexesStream(mem.toDS().toDF("tick"),
+      corpusRoot, bm25Root = Some(bm25Root),
+      statsRoot = Some(statsRoot)).start()
+    try {
+      mem.addData(1L)
+      val e = intercept[org.apache.spark.sql.streaming
+        .StreamingQueryException](q.processAllAvailable())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).toSeq
+      val ise = causes.collectFirst { case i: IllegalStateException => i }
+      assert(ise.exists(_.getMessage.contains(statsRoot)),
+        s"the batch must fail with an IllegalStateException naming " +
+          s"$statsRoot, got: ${causes.map(_.toString)}")
+      assert(!q.isActive)
+      assert(versions() == before,
+        "every cursor is read before anything commits — the healthy " +
+          "BM25 consumer must not move either")
     } finally q.stop()
   }
 
