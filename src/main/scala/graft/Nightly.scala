@@ -25,7 +25,11 @@ import org.apache.spark.sql.types._
   *     (an embedding-only update never rewrites BM25 buckets, a
   *     text-only edit never re-encodes vectors); NEVER a re-diff of the
   *     corpus per consumer. How each consumer follows the feed is ONE
-  *     table, [[consumers]], shared with the online stream. Each
+  *     table, [[consumers]], shared with the online stream. The
+  *     consumers sync CONCURRENTLY, one driver thread each, so one
+  *     consumer's planning and driver gaps overlap another's tasks;
+  *     they are independent (each reads the same resolved corpus
+  *     snapshot and commits only to its own root). Each
   *     consumer's publish carries `corpus_version` in its manifest
   *     [[VersionedTable.Snapshot.properties]] — the cursor commits ATOMICALLY with the state it
   *     describes (the offsets-in-the-transaction pattern), which is the
@@ -47,6 +51,21 @@ import org.apache.spark.sql.types._
   * **idempotence** (re-running the same night is a no-op: zero new
   * versions anywhere) and **crash-resume** (kill after any step, re-run,
   * converge to exactly the uninterrupted night's state).
+  *
+  * Concurrency invariants of step 2:
+  *  - the report lists the steps in table order, whatever order the
+  *    consumers finish in; each step's `startS`/`wallS` show the overlap;
+  *  - the consumer threads are created per night by the calling thread,
+  *    so their jobs carry the caller's Spark local properties (job
+  *    group, description) and `cancelJobGroup` reaches them;
+  *  - `run` joins every consumer before it returns or rethrows: no
+  *    commit lands after it has thrown. A failure is rethrown only once
+  *    every consumer has finished — the FIRST failure in table order,
+  *    the others attached as suppressed — and the consumers that
+  *    succeeded keep their commits (their cursors say so, and the
+  *    re-run skips them);
+  *  - the concurrency is the number of consumers; steps 1 and 3 run
+  *    alone.
   *
   * CLI: `runMain graft.Nightly <corpusRoot> <arrivingParquet>
   * <bm25Root> <ivfRoot> <pqRoot> <statsRoot>` — prints one JSON report
@@ -88,7 +107,11 @@ object Nightly {
       "bm25" -> bm25, "ivf" -> ivf, "pq" -> pq, "stats" -> stats)
   }
 
-  final case class Step(component: String, action: String, version: Long)
+  /** One component's outcome. `startS` is the step's start offset from
+    * the start of [[run]] and `wallS` its wall time, both in seconds;
+    * overlapping consumer steps show the concurrent sync. */
+  final case class Step(component: String, action: String, version: Long,
+      startS: Double = 0.0, wallS: Double = 0.0)
 
   final case class Report(corpusVersion: Long, steps: Seq[Step],
       compacted: Map[String, Int],
@@ -150,13 +173,16 @@ object Nightly {
     * case: all four sit on the previous sync's version, so the span is
     * diffed + key-validated ONCE, and the localCheckpoint keeps each
     * consumer's several actions from re-running the full-outer CDC
-    * join — round-12 review). */
+    * join — round-12 review). Safe to call from several threads: the
+    * first caller at a from-version materializes the frame while the
+    * others wait for it, so concurrent consumers never diff one span
+    * twice. */
   private[graft] def feedCache(spark: SparkSession, corpusRoot: String,
       to: VersionedTable.Snapshot): VersionedTable.Snapshot => DataFrame = {
     val cache = scala.collection.mutable.Map[Long, DataFrame]()
-    from => cache.getOrElseUpdate(from.version,
+    from => cache.synchronized(cache.getOrElseUpdate(from.version,
       VersionedTable.changes(spark, corpusRoot, from, to, corpusSchema,
-        "doc_id").localCheckpoint())
+        "doc_id").localCheckpoint()))
   }
 
   /** One consumer of the corpus change feed. `bootstrap(spark, root,
@@ -237,13 +263,20 @@ object Nightly {
     val steps = scala.collection.mutable.ArrayBuffer[Step]()
     def chk(step: String): Unit =
       if (failAfter(step)) throw new InjectedCrash(step)
+    val t0 = System.nanoTime()
+    def timed(body: => Step): Step = {
+      val start = System.nanoTime()
+      val s = body
+      s.copy(startS = (start - t0) / 1e9,
+        wallS = (System.nanoTime() - start) / 1e9)
+    }
 
     val bucketed = arriving.select(col("doc_id"), col("text"),
       col("embedding"),
       pmod(col("doc_id"), lit(buckets.toLong)).as("bucket"))
 
     // ---- 1. corpus publish -------------------------------------------
-    steps += (VersionedTable.currentSnapshot(spark, roots.corpus) match {
+    steps += timed(VersionedTable.currentSnapshot(spark, roots.corpus) match {
       case None =>
         Step("corpus", "bootstrapped", VersionedTable.publishFull(
           spark, roots.corpus, "bucket", bucketed))
@@ -341,10 +374,34 @@ object Nightly {
           syncRetrying(c, attempt + 1)
       }
 
-    // ---- 2. consumers, in table order --------------------------------
-    consumers.foreach { c =>
-      steps += syncRetrying(c)
-      chk(c.name)
+    // ---- 2. consumers, concurrently ----------------------------------
+    // one driver thread per consumer, created HERE so it inherits the
+    // caller's Spark local properties (job group, description) — a
+    // shared pool's threads would carry whatever their first caller set
+    val outcomes = new Array[Either[Throwable, Step]](consumers.size)
+    val threads = consumers.zipWithIndex.map { case (c, i) =>
+      new Thread(() => outcomes(i) =
+        try { val s = timed(syncRetrying(c)); chk(c.name); Right(s) }
+        catch { case e: Throwable => Left(e) }, s"nightly-${c.name}")
+    }
+    // join ALL (even when a start fails) before returning or rethrowing,
+    // so no commit lands after run has thrown; an interrupt of the
+    // caller is re-asserted once every consumer is done
+    try threads.foreach(_.start())
+    finally {
+      var interrupted = false
+      threads.foreach { t =>
+        while (t.isAlive)
+          try t.join()
+          catch { case _: InterruptedException => interrupted = true }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+    outcomes.collect { case Left(e) => e }.toList match {
+      case first :: rest =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case Nil => steps ++= outcomes.collect { case Right(s) => s }
     }
 
     // ---- 3. housekeeping ---------------------------------------------
@@ -589,15 +646,18 @@ object Nightly {
   }
 
   /** The CLI's one-line JSON report: `{"nightly": {corpus_version,
-    * steps, compacted, pinned}}`, map keys sorted. */
+    * steps, compacted, pinned}}`, map keys sorted; each step carries its
+    * `start_s`/`wall_s` to the millisecond. */
   private[graft] def reportJson(r: Report): String = {
     import scala.jdk.CollectionConverters._
     def sorted[V](m: Map[String, V]) =
       new java.util.TreeMap[String, V](m.asJava)
+    def ms(secs: Double) = math.round(secs * 1000) / 1000.0
     new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
       Map("nightly" -> Map("corpus_version" -> r.corpusVersion,
         "steps" -> r.steps.map(s => Map("component" -> s.component,
-          "action" -> s.action, "version" -> s.version).asJava).asJava,
+          "action" -> s.action, "version" -> s.version,
+          "start_s" -> ms(s.startS), "wall_s" -> ms(s.wallS)).asJava).asJava,
         "compacted" -> sorted(r.compacted),
         "pinned" -> sorted(r.pinned)).asJava).asJava)
   }

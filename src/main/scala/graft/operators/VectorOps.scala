@@ -1689,8 +1689,11 @@ object VectorOps extends OpCatalog {
     * orphans the old-fingerprint entry inside the CURRENT family —
     * both accumulated forever under `java.io.tmpdir`. Called after a
     * successful build (the moment a fresh artifact proves the old ones
-    * superseded), it deletes (a) sibling family dirs sharing
-    * `familyPrefix` but carrying a stale token, and (b) same-corpus
+    * superseded), it deletes (a) the entries of sibling family dirs
+    * sharing `familyPrefix` but carrying a stale token — only entries
+    * that carry an artifact's own marks (the `.lock` beside them, or
+    * their corpus/`READY` marker), so an unrelated dir whose name
+    * merely starts with the prefix survives — and (b) same-corpus
     * (`entryPrefix` = the sfDir tag) entries with a different
     * fingerprint. Every deletion first `tryLock`s the target's own
     * build lock file NON-blocking — a concurrent session still
@@ -1754,6 +1757,14 @@ object VectorOps extends OpCatalog {
       } catch { case scala.util.control.NonFatal(_) => () }
     def eligible(n: String): Boolean =
       !n.endsWith(".lock") && !n.contains(".build-")
+    // an artifact entry carries its own marks: the build lock beside it,
+    // or the corpus/READY marker inside. Anything else under a
+    // family-prefixed name (a caller's scratch dir that happens to share
+    // the prefix) is not ours to delete.
+    def isArtifactEntry(e: java.nio.file.Path): Boolean =
+      Files.exists(e.resolveSibling(s"${e.getFileName}.lock")) ||
+        Files.exists(e.resolve(CorpusMarker)) ||
+        Files.exists(e.resolve(ReadyMarker))
     try {
       // (a) sibling FAMILY dirs with a stale format token: every entry
       // inside is unusable by current code, whatever corpus it keyed
@@ -1766,7 +1777,8 @@ object VectorOps extends OpCatalog {
             eligible(n) && Files.isDirectory(p)) {
           val entries = Files.list(p)
           try entries.forEach { e =>
-            if (eligible(e.getFileName.toString) && Files.isDirectory(e))
+            if (eligible(e.getFileName.toString) && Files.isDirectory(e) &&
+                isArtifactEntry(e))
               tryDelete(e)
           } finally entries.close()
           // sweep lock-file litter whose entry is gone, then remove the

@@ -36,8 +36,8 @@ class NightlySpec extends SparkSpec {
   private def corpusV2: DataFrame = CurationOps.plantedV2(corpusV1)
 
   // `graft_nightlyspec_`, not `graft_nightly_`: that is the NightlyOps
-  // artifact family prefix, and an artifact build's stale-family sweep
-  // (VectorOps.sweepStaleArtifacts) deletes every unlocked dir under it
+  // artifact family prefix, swept by every nightly artifact build
+  // (VectorOps.sweepStaleArtifacts spares dirs without artifact marks)
   private def newRoots(tag: String): Nightly.Roots = {
     val d = tempDir(s"graft_nightlyspec_$tag")
     Nightly.Roots(s"$d/corpus", s"$d/bm25", s"$d/ivf", s"$d/pq", s"$d/stats")
@@ -130,6 +130,12 @@ class NightlySpec extends SparkSpec {
     assert(json.get("corpus_version").asLong() == night2.corpusVersion)
     assert(json.get("steps").size() == night2.steps.size)
     assert(json.get("steps").get(0).get("action").asText() == "published")
+    night2.steps.zipWithIndex.foreach { case (s, i) =>
+      val js = json.get("steps").get(i)
+      assert(s.wallS > 0 && s.startS >= 0, s"step timing recorded: $s")
+      assert(math.abs(js.get("start_s").asDouble() - s.startS) < 1e-3 &&
+        math.abs(js.get("wall_s").asDouble() - s.wallS) < 1e-3)
+    }
     assert(night2.pinned.keySet.nonEmpty && night2.pinned.forall {
       case (k, v) => json.get("pinned").get(k).asLong() == v })
     assert(night2.compacted.forall { case (k, v) =>
@@ -211,14 +217,23 @@ class NightlySpec extends SparkSpec {
   /** Fork the base world, crash the second night after `crashAt`, re-run
     * it, and require convergence to the uninterrupted night's exact
     * state, retained manifests and night pin. */
-  private def assertResumes(crashAt: String): Unit = {
+  private def assertResumes(crashAt: String): Unit =
+    assertResumesAfter(Set(crashAt), crashAt) { (_, e) =>
+      assert(e.getMessage.contains(crashAt))
+    }
+
+  /** [[assertResumes]] for a night injected to fail after every step in
+    * `failAfter`; `atCrash` inspects the branch and the thrown crash
+    * before the resume. */
+  private def assertResumesAfter(failAfter: Set[String], crashAt: String)(
+      atCrash: (Nightly.Roots, Nightly.InjectedCrash) => Unit): Unit = {
     val (base, want, wantManifests, wantPin) = crashWorld
     val branch = copyRoots(base, s"crash_$crashAt")
     val e = intercept[Nightly.InjectedCrash] {
       Nightly.run(spark, branch, corpusV2, vacuumGraceMs = 0L,
-        failAfter = Set(crashAt))
+        failAfter = failAfter)
     }
-    assert(e.getMessage.contains(crashAt))
+    atCrash(branch, e)
     // the resume: same arriving corpus, no injection
     val resumed = Nightly.run(spark, branch, corpusV2, vacuumGraceMs = 0L)
     // steps completed before the crash re-run as skipped/unchanged
@@ -241,6 +256,77 @@ class NightlySpec extends SparkSpec {
 
   test("crash-resume: kill after any step, re-run, converge to the uninterrupted night's exact state", SlowTest) {
     Seq("corpus", "ivf", "stats", "compact", "pin").foreach(assertResumes)
+  }
+
+  test("concurrent consumers: a failure is rethrown only after every consumer finished — first in table order, the rest suppressed; nothing commits after the throw; the re-run converges") {
+    // stats is the fastest consumer: a run that rethrew as soon as stats
+    // failed would leave the slower consumers uncommitted
+    assertResumesAfter(Set("stats", "ivf"), "stats_ivf") { (branch, e) =>
+      assert(e.getMessage.contains("'ivf'"),
+        s"the first failure in table order is rethrown: $e")
+      assert(e.getSuppressed.map(_.getMessage).toSeq ==
+        Seq("injected crash after step 'stats'"))
+      val corpusV = VersionedTable.currentSnapshot(spark, branch.corpus)
+        .get.version
+      val cursors = branch.all.filter(_._1 != "corpus").map { case (c, r) =>
+        c -> VersionedTable.currentSnapshot(spark, r).flatMap(
+          _.properties.get(Nightly.CorpusVersionProp))
+      }.toMap
+      assert(cursors.values.forall(_.contains(corpusV.toString)),
+        s"every consumer committed before run threw: $cursors")
+      val atThrow = manifestNames(branch)
+      Thread.sleep(1000)
+      assert(manifestNames(branch) == atThrow,
+        "no manifest may land on any root after run has thrown")
+    }
+  }
+
+  test("concurrent consumers: every job of the night carries the caller's job group, and the consumer steps overlap") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (base, want, _, _) = crashWorld
+    val roots = copyRoots(base, "jobgroup")
+    val sc = spark.sparkContext
+    // groups of the jobs started between the two marker jobs; the bus
+    // delivers in order, so the end marker flushes every night job
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>")
+        if (g.startsWith("marker")) seen.incrementAndGet()
+        else if (seen.get == 1) groups.add(g)
+      }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobGroup(name, name)
+      try spark.range(1).collect() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    val night = try {
+      marker("marker-begin")
+      sc.setJobGroup("nightly-law", "concurrent consumers")
+      val n = try Nightly.run(spark, roots, corpusV2, vacuumGraceMs = 0L)
+        finally sc.clearJobGroup()
+      marker("marker-end")
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (seen.get < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      n
+    } finally sc.removeSparkListener(listener)
+    assert(seen.get == 2, "both marker jobs reached the listener")
+    import scala.jdk.CollectionConverters._
+    val gs = groups.asScala.toSeq
+    assert(gs.nonEmpty && gs.forall(_ == "nightly-law"),
+      s"jobs outside the caller's group: ${gs.filterNot(_ == "nightly-law")}")
+    // the consumers ran at the same time: each started before any ended
+    val cs = night.steps.filter(_.component != "corpus")
+    assert(cs.map(_.component) == Seq("bm25", "ivf", "pq", "stats"),
+      "steps stay in table order")
+    assert(cs.forall(_.action == "updated"), s"${night.steps}")
+    assert(cs.map(_.startS).max < cs.map(s => s.startS + s.wallS).min,
+      s"consumer steps must overlap: $cs")
+    assert(stateOf(roots) == want, "the same state as the reference night")
   }
 
   test("night pin: a reader pinned to night N sees identical answers before, during, and after night N+1; stale pins resolve loudly") {

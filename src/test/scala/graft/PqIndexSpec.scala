@@ -238,6 +238,38 @@ class PqIndexSpec extends SparkSpec {
     assert(Files.exists(cur.resolve("data")))
   }
 
+  test("sweepStaleArtifacts: a dir that only shares the family prefix survives; marked stale entries are still swept") {
+    val tmpRoot = tempDir("graft_gc_prefix")
+    val cur = tmpRoot.resolve("graft_nightly_v2").resolve("sfA_cur")
+    Files.createDirectories(cur)
+    // a caller's scratch dir under a prefixed name (a spec's roots): no
+    // lock beside its entry, no corpus or READY marker inside it
+    val scratch = tmpRoot.resolve("graft_nightly_ref123")
+    Files.createDirectories(scratch.resolve("x"))
+    Files.writeString(scratch.resolve("x").resolve("file"), "x")
+    // stale-token entries, each carrying one artifact mark
+    val stale = tmpRoot.resolve("graft_nightly_v1")
+    val byLock = stale.resolve("sfA_lock")
+    val byCorpus = stale.resolve("sfB_corpus")
+    val byReady = stale.resolve("sfC_ready")
+    Seq(byLock, byCorpus, byReady).foreach { d =>
+      Files.createDirectories(d)
+      Files.writeString(d.resolve("data"), "x")
+    }
+    Files.writeString(stale.resolve("sfA_lock.lock"), "")
+    Files.writeString(byCorpus.resolve(".corpus"), "/x/sfB")
+    Files.createDirectories(byReady.resolve("READY"))
+    Files.createFile(byReady.resolve("READY").resolve("_SUCCESS"))
+    VectorOps.sweepStaleArtifacts(cur, "graft_nightly_", "/x/sfA")
+    assert(Files.exists(scratch.resolve("x").resolve("file")),
+      "a non-artifact dir under a family-prefixed name must survive")
+    Seq(byLock, byCorpus, byReady).foreach(d =>
+      assert(!Files.exists(d), s"stale artifact entry $d must be swept"))
+    assert(!Files.exists(stale),
+      "the emptied stale-token family dir is removed")
+    assert(Files.exists(cur), "current artifact untouched")
+  }
+
   test("buildArtifactOnce: concurrent same-JVM attempts serialize on the lock — one build, both served") {
     val dir = tempDir("graft_bao_lock").resolve("artifact")
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
