@@ -225,12 +225,17 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** The sentinel sample: one timed run of the flagship q01 scan+agg. */
+  private val q01Sentinel: (SparkSession, String) => Double =
+    timeNoop(_, "q01_pricing_summary", _)
+
   /** Run `names` in order with interleaved sentinels and post-suite
-    * replay of band outliers. `onQueryStart` is a test seam (`BenchSpec`
-    * uses it to open/close a busy-load window mid-suite). */
+    * replay of band outliers. `sentinel` takes one sentinel sample;
+    * it and `onQueryStart` are test seams (`BenchSpec` scripts the
+    * samples, or opens/closes a busy-load window mid-suite). */
   private[graft] def runSuite(spark: SparkSession, sfDir: String,
       names: Seq[String], bands: Map[String, Double],
-      sentinel: String = "q01_pricing_summary",
+      sentinel: (SparkSession, String) => Double = q01Sentinel,
       sentinelEvery: Int = SentinelEvery,
       sentinelBand: Double = SentinelBandSec,
       onQueryStart: Int => Unit = _ => ()): SuiteResult = {
@@ -243,7 +248,7 @@ object Bench {
     // a window in which the flagship query cannot even run is the
     // strongest possible contamination signal
     def sentinelSample(): Double =
-      try timeNoop(spark, sentinel, sfDir)
+      try sentinel(spark, sfDir)
       catch {
         case e: Throwable =>
           System.err.println(
@@ -354,10 +359,11 @@ object Bench {
   private[graft] def runAdjudicated(spark: SparkSession, sfDir: String,
       names: Seq[String], bands: Map[String, Double], calibrated: Boolean,
       waitQuiet: () => Double = () => waitForQuiet(),
+      sentinel: (SparkSession, String) => Double = q01Sentinel,
       sentinelBand: Double = SentinelBandSec,
       sentinelEvery: Int = SentinelEvery,
       onQueryStart: Int => Unit = _ => ()): AdjudicatedRun = {
-    val first = runSuite(spark, sfDir, names, bands,
+    val first = runSuite(spark, sfDir, names, bands, sentinel = sentinel,
       sentinelEvery = sentinelEvery, sentinelBand = sentinelBand,
       onQueryStart = onQueryStart)
     if (!calibrated || !first.contaminated)
@@ -378,7 +384,7 @@ object Bench {
     // pay its own shared-intermediate builds, not ride the first run's
     // session memo (runSuite's replay-eviction comment)
     graft.Memo.evict(spark)
-    val rr = runSuite(spark, sfDir, span, bands,
+    val rr = runSuite(spark, sfDir, span, bands, sentinel = sentinel,
       sentinelEvery = sentinelEvery, sentinelBand = sentinelBand,
       onQueryStart = onQueryStart)
     // a re-run that FAILED a query (-1.0) must not shadow a valid

@@ -14,9 +14,10 @@ import org.apache.spark.sql.types._
   *  1. **Corpus publish** — content-hash diff against the current
   *     snapshot ([[CurationOps.hashDiff]]'s presence-flag discipline,
   *     over text AND embedding), published copy-on-write over only the
-  *     touched buckets via [[VersionedTable.retryingPublish]]. An
-  *     arriving corpus identical to the current snapshot publishes
-  *     NOTHING (the idempotence anchor).
+  *     touched buckets via [[VersionedTable.retryingPublish]]: one
+  *     diff per attempt, against that attempt's base. An arriving
+  *     corpus identical to the current snapshot publishes NOTHING (the
+  *     idempotence anchor).
   *  2. **CDC-driven index maintenance** — all three index families
   *     (BM25 / IVF / PQ) and the downstream stats grid are brought to
   *     the new corpus version off the [[VersionedTable.changes]] feed
@@ -139,9 +140,9 @@ object Nightly {
     extends RuntimeException(s"injected crash after step '$step'")
 
   /** Control-flow signal OUT of a `retryingPublish` closure: the
-    * attempt's base snapshot shows the work is already done (a racing
-    * duplicate run committed it), so publish nothing and report the
-    * base's version. Never escapes this object. */
+    * attempt's base snapshot shows the work is already done (a repeat
+    * night, or a racing duplicate run committed it), so publish nothing
+    * and report the base's version. Never escapes this object. */
   private final case class AlreadyCovered(version: Long)
     extends RuntimeException with scala.util.control.NoStackTrace
 
@@ -280,41 +281,32 @@ object Nightly {
       case None =>
         Step("corpus", "bootstrapped", VersionedTable.publishFull(
           spark, roots.corpus, "bucket", bucketed))
-      case Some(cur) =>
-        // diff against the CURRENT content; empty diff → no commit at
-        // all (re-running the same night must not bump versions)
-        val (ups0, rem0) = contentDiff(
-          VersionedTable.read(spark, cur, roots.corpus, corpusSchema),
-          bucketed)
-        if (ups0.isEmpty && rem0.isEmpty)
-          Step("corpus", "unchanged", cur.version)
-        else {
-          try {
-            val v = VersionedTable.retryingPublish(spark, roots.corpus) {
-              base =>
-                // re-derive against the attempt's base (a backfill may
-                // have landed): touched buckets are computable from the
-                // diff IDS alone — bucket is a pure function of doc_id
-                val (ups, rem) = contentDiff(
-                  VersionedTable.read(spark, base, roots.corpus,
-                    corpusSchema), bucketed)
-                val touched = ups.select(col("bucket"))
-                  .union(rem.select(pmod(col("doc_id"),
-                    lit(buckets.toLong))))
-                  .distinct().collect().map(_.getLong(0)).sorted.toSeq
-                // a racing duplicate run may have landed THIS content
-                // between the outer emptiness check and this attempt:
-                // an empty re-derived diff must publish NOTHING, not a
-                // content-free version bump (the idempotence anchor
-                // holds under races too)
-                if (touched.isEmpty) throw AlreadyCovered(base.version)
-                VersionedTable.Delta(touched,
-                  bucketed.filter(col("bucket").isin(touched: _*)))
-            }
-            Step("corpus", "published", v)
-          } catch {
-            case AlreadyCovered(v) => Step("corpus", "unchanged", v)
+      case Some(_) =>
+        // diff against the attempt's base (a backfill may have landed
+        // since the resolve above); an empty diff commits nothing — a
+        // re-run of the same night must not bump versions
+        try {
+          val v = VersionedTable.retryingPublish(spark, roots.corpus) {
+            base =>
+              // touched buckets are computable from the diff IDS alone —
+              // bucket is a pure function of doc_id
+              val (ups, rem) = contentDiff(
+                VersionedTable.read(spark, base, roots.corpus,
+                  corpusSchema), bucketed)
+              val touched = ups.select(col("bucket"))
+                .union(rem.select(pmod(col("doc_id"),
+                  lit(buckets.toLong))))
+                .distinct().collect().map(_.getLong(0)).sorted.toSeq
+              // nothing to publish (a repeat night, or a racing duplicate
+              // run that landed THIS content first): no content-free
+              // version bump — the idempotence anchor
+              if (touched.isEmpty) throw AlreadyCovered(base.version)
+              VersionedTable.Delta(touched,
+                bucketed.filter(col("bucket").isin(touched: _*)))
           }
+          Step("corpus", "published", v)
+        } catch {
+          case AlreadyCovered(v) => Step("corpus", "unchanged", v)
         }
     })
     chk("corpus")

@@ -1440,7 +1440,7 @@ object CurationOps extends OpCatalog {
     * path). Both manifests stay retained (no vacuum): the whole point
     * is diffing them. Returns the table root. */
   private def docVtArtifact(spark: SparkSession, sfDir: String): String =
-    VectorOps.ensureArtifact("graft_docvt_changes_", "fmt1", sfDir,
+    VectorOps.ensureArtifact("docvt_changes", "fmt1", sfDir,
         "documents.parquet", "q143/q144: v1 + planted crawl delta") { tmp =>
       val v1 = vtBucketed(Tables.documents(spark, sfDir))
       VersionedTable.publishFull(spark, tmp, "bucket", v1)
@@ -1558,7 +1558,7 @@ object CurationOps extends OpCatalog {
     * in-range bucket with identical content, so the served read crosses
     * BOTH a staged-stats generation and carried-over ones. */
   private def zoneVtArtifact(spark: SparkSession, sfDir: String): String =
-    VectorOps.ensureArtifact("graft_zonevt_", "fmt1", sfDir,
+    VectorOps.ensureArtifact("zonevt", "fmt1", sfDir,
         "documents.parquet", "q147: range-bucketed v1 + COW rewrite") { tmp =>
       val v1 = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("n_chars"),

@@ -46,7 +46,7 @@ object NightlyOps extends OpCatalog {
     * two tables, so either file changing must re-key the artifact. */
   private def nightlyArtifact(spark: SparkSession,
       sfDir: String): Nightly.Roots =
-    rootsAt(VectorOps.ensureArtifact("graft_nightly_", formatTag, sfDir, "",
+    rootsAt(VectorOps.ensureArtifact("nightly", formatTag, sfDir, "",
         "q145/q146: the two-night lifecycle (bootstrap + CDC-driven " +
           "incremental)") { tmp =>
       val roots = rootsAt(tmp)

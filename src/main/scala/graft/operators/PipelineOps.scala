@@ -144,7 +144,7 @@ object PipelineOps extends OpCatalog {
     * single- and batch-probe declared forms exercise ONE offline build. */
   private def bm25Artifact(spark: SparkSession, sfDir: String,
       tag: String): String =
-    VectorOps.ensureArtifact("graft_bm25_index_", Bm25Index.formatTag, sfDir,
+    VectorOps.ensureArtifact("bm25_index", Bm25Index.formatTag, sfDir,
         "documents.parquet", s"$tag: BM25 posting-list snapshot")(tmp =>
       Bm25Index.buildVersioned(spark, GraftSession.spread(
         Tables.documents(spark, sfDir), col("doc_id")), tmp))
@@ -352,7 +352,7 @@ object PipelineOps extends OpCatalog {
   /** The q136/q138/q148 build-once lifecycle artifact (same snapshots —
     * q148 differs ONLY in the read surface). */
   private def bm25VtArtifact(spark: SparkSession, sfDir: String): String =
-    VectorOps.ensureArtifact("graft_bm25vt_index_", Bm25Index.formatTag,
+    VectorOps.ensureArtifact("bm25vt_index", Bm25Index.formatTag,
         sfDir, "documents.parquet",
         "q136/q138: v1 + delta + compact + vacuum snapshots") { tmp =>
       val v1 = GraftSession.spread(

@@ -1502,29 +1502,38 @@ object VectorOps extends OpCatalog {
   }
 
   // --------------------------------------------------------------- q131
-  /** Directory of a per-corpus index artifact: keyed by the corpus
-    * file's identity, under the system temp dir — a fresh JVM finds an
-    * artifact a previous session built, which is the point: the offline
-    * step happens once per corpus, not once per session. A corpus
-    * rewrite changes the fingerprint and orphans the stale artifact
-    * instead of serving from it. The fingerprint must work for BOTH
-    * corpus shapes `spark.read.parquet` accepts: a single file (size +
-    * mtime) and a Spark-written DIRECTORY — whose own size/mtime do NOT
-    * change when a part file is rewritten in place, so directories hash
-    * the sorted part-file listing (name, size, mtime) instead.
+  /** The one root of the on-disk artifact cache, under `java.io.tmpdir`
+    * (read on every call, so a process that moves its tmpdir moves its
+    * cache): nothing outside this tree is ever created or deleted. */
+  private val ArtifactRoot = "graft_artifacts"
+
+  /** Directory of a per-corpus artifact entry:
+    * `<java.io.tmpdir>/graft_artifacts/<family>/<corpus key>/<token>_<fp>`.
+    * A fresh JVM finds an entry a previous session built, which is the
+    * point: the offline step happens once per corpus, not once per
+    * session.
     *
-    * The `family` string MUST carry a format/params token (round-8
-    * advisor): corpus identity alone would let a change to the index
-    * parameters or training recipe silently serve a stale artifact
-    * built by OLD code from the shared temp dir across JVMs — surfacing
-    * only as downstream law-flag/parity failures instead of a rebuild.
-    * Each index object owns its token ([[PqIndex.formatTag]],
-    * [[IvfIndex.formatTag]], [[Bm25Index.formatTag]]); bumping it
-    * orphans old artifacts exactly the way a corpus rewrite does. */
-  private[graft] def artifactDir(family: String, sfDir: String,
-      sourceFile: String = "embeddings.parquet"): java.nio.file.Path = {
+    * The corpus key names the source (`sfDir/sourceFile`, absolute and
+    * normalized) unambiguously: a readable tag (the corpus directory's
+    * name) and a hash of the whole path, so the key directory holds the
+    * entries of exactly one corpus and nothing else. `token` is the
+    * family's format/params token ([[PqIndex.formatTag]],
+    * [[IvfIndex.formatTag]], [[Bm25Index.formatTag]], …): corpus
+    * identity alone would let a change to the index parameters or
+    * training recipe silently serve an artifact built by old code.
+    * `fp` fingerprints the source's content for BOTH corpus shapes
+    * `spark.read.parquet` accepts: a single file (size + mtime) and a
+    * Spark-written DIRECTORY — whose own size/mtime do NOT change when a
+    * part file is rewritten in place, so directories hash the sorted
+    * recursive part-file listing (name, size, mtime) instead. A token
+    * bump or a corpus rewrite therefore names a NEW entry beside the
+    * superseded one, and [[ensureArtifact]] deletes the superseded one
+    * as a sibling once the new entry is installed. */
+  private[graft] def artifactDir(family: String, token: String,
+      sfDir: String, sourceFile: String = "embeddings.parquet")
+      : java.nio.file.Path = {
     import java.nio.file.{Files, Paths}
-    val src = Paths.get(s"$sfDir/$sourceFile")
+    val src = Paths.get(sfDir, sourceFile).toAbsolutePath.normalize
     val fp =
       if (!Files.exists(src)) "absent"
       else if (Files.isDirectory(src)) {
@@ -1549,15 +1558,15 @@ object VectorOps extends OpCatalog {
             (h, b) => h * 31 + b
           }, 16)
       } else s"${Files.size(src)}_${Files.getLastModifiedTime(src).toMillis}"
-    Paths.get(sys.props("java.io.tmpdir"), family, s"${sfTag(sfDir)}_$fp")
+    val corpus = Paths.get(sfDir).toAbsolutePath.normalize.getFileName
+    val tag = Option(corpus).fold("root")(
+      _.toString.replaceAll("[^A-Za-z0-9._-]", "_"))
+    val hash = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(src.toString.getBytes("UTF-8")).take(8)
+      .map(b => f"${b & 0xff}%02x").mkString
+    Paths.get(sys.props("java.io.tmpdir"), ArtifactRoot, family,
+      s"$tag-$hash", s"${token}_$fp")
   }
-
-  /** The corpus-directory component of an artifact entry name — purely
-    * cosmetic/namespacing: corpus IDENTITY for the GC sweep lives in
-    * each entry's [[CorpusMarker]] file (tag erasure makes names
-    * ambiguous). */
-  private[graft] def sfTag(sfDir: String): String =
-    sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
 
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     import java.nio.file.Files
@@ -1581,28 +1590,27 @@ object VectorOps extends OpCatalog {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Race-safe artifact build: heal + build + install run under an
-    * OS-level lock file (`<dir>.lock`, `FileChannel.lock` — round-8
-    * advisor), so concurrent sessions SERIALIZE instead of racing:
-    * the loser blocks, re-checks readiness, and serves the winner's
-    * artifact (both are deterministic, so either is correct). An
-    * artifact is ready when its `READY/_SUCCESS` marker exists; the
-    * marker is stamped here, after `build` returns, so a torn earlier
-    * build is never mistaken for ready.
+    * OS-level lock file (`<dir>.lock`, `FileChannel.lock`), so
+    * concurrent sessions SERIALIZE instead of racing: the loser blocks,
+    * re-checks readiness, and serves the winner's artifact (both are
+    * deterministic, so either is correct). An artifact is ready when
+    * its `READY/_SUCCESS` marker exists; the marker is stamped here,
+    * after `build` returns, so a torn earlier build is never mistaken
+    * for ready.
     *
-    * The lock closes the round-7 protocol's acknowledged window: the
-    * pre-build heal of a torn directory can no longer delete a
+    * The pre-build heal of a torn directory cannot delete a
     * competitor's COMPLETE artifact installed between the ready-check
     * and the delete, because installs only happen under the same lock.
     * Readers never take the lock (the fast path serves a ready
     * artifact lock-free) — safe because a ready artifact is immutable:
     * no path under the lock deletes a CURRENT dir whose marker is
-    * present. The one carve-out is [[sweepStaleArtifacts]]: a
-    * SUPERSEDED artifact (stale format token or stale corpus
-    * fingerprint) may be GC'd while an old binary / pre-rewrite session
-    * still probes it — that reader's scan can die mid-flight, which is
-    * accepted: it was already serving answers for a world that no
-    * longer exists, and the alternative (readers locking) would put a
-    * file lock on every probe's hot path. A build that throws cleans
+    * present. The one carve-out is [[ensureArtifact]]'s sibling sweep:
+    * a SUPERSEDED entry (stale format token or stale corpus
+    * fingerprint) may be deleted while an old binary / pre-rewrite
+    * session still probes it — that reader's scan can die mid-flight,
+    * which is accepted: it was already serving answers for a world that
+    * no longer exists, and the alternative (readers locking) would put
+    * a file lock on every probe's hot path. A build that throws cleans
     * its tmp up on the way out and releases the lock.
     *
     * Filesystem contract: this cache lives under `java.io.tmpdir` and
@@ -1629,15 +1637,14 @@ object VectorOps extends OpCatalog {
     val jvmLock = artifactJvmLocks.computeIfAbsent(
       dir.toAbsolutePath.toString, _ => new Object)
     jvmLock.synchronized {
-      val ch = java.nio.channels.FileChannel.open(
-        dir.resolveSibling(s"${dir.getFileName}.lock"),
+      val ch = java.nio.channels.FileChannel.open(lockFile(dir),
         StandardOpenOption.CREATE, StandardOpenOption.WRITE)
       try {
         val osLock = ch.lock() // blocks until a competing session finishes
         try {
           if (ready) return false // the competitor we waited on built it
           if (Files.exists(dir)) deleteRecursively(dir) // torn build: heal
-          val tmp = dir.resolveSibling(s"${dir.getFileName}.build-" +
+          val tmp = dir.resolveSibling(s"${dir.getFileName}$BuildInfix" +
             java.util.UUID.randomUUID().toString.take(8))
           try {
             build(tmp.toString)
@@ -1661,85 +1668,54 @@ object VectorOps extends OpCatalog {
   /** The directory whose `_SUCCESS` marks an artifact entry complete. */
   private val ReadyMarker = "READY"
 
+  /** Infix of an in-flight build's tmp dir, beside its entry. */
+  private val BuildInfix = ".build-"
+
+  /** The build lock of an entry: a file beside it, never inside. */
+  private def lockFile(entry: java.nio.file.Path): java.nio.file.Path =
+    entry.resolveSibling(s"${entry.getFileName}.lock")
+
   /** The ONE build-once site for every on-disk artifact (the index
     * snapshots, the versioned fixtures, the nightly world): resolve the
-    * identity-keyed entry `<familyPrefix><token>/<corpus>_<fingerprint>`
+    * entry `graft_artifacts/<family>/<corpus key>/<token>_<fingerprint>`
     * ([[artifactDir]]), run `lifecycle` into a tmp dir under
     * [[buildArtifactOnce]]'s lock (which stamps `READY/_SUCCESS` only
-    * once the whole lifecycle survived), then log the build and sweep
-    * the entries it supersedes ([[sweepStaleArtifacts]]). Returns the
-    * entry's path; later calls — fresh JVMs included — serve it off
-    * disk. `what` names the artifact in the log line. */
-  private[graft] def ensureArtifact(familyPrefix: String, token: String,
+    * once the whole lifecycle survived), then log the build and delete
+    * the entries it supersedes: every other entry in the same corpus
+    * key directory, i.e. the same (family, corpus) at a stale token or
+    * a stale fingerprint ([[deleteSiblings]]). One token per family is
+    * the invariant this relies on — two call sites sharing a family
+    * must share its token. Returns the entry's path; later calls —
+    * fresh JVMs included — serve it off disk. `what` names the artifact
+    * in the log line. */
+  private[graft] def ensureArtifact(family: String, token: String,
       sfDir: String, sourceFile: String, what: String)(
       lifecycle: String => Unit): String = {
-    val dir = artifactDir(familyPrefix + token, sfDir, sourceFile)
+    val dir = artifactDir(family, token, sfDir, sourceFile)
     if (buildArtifactOnce(dir)(lifecycle)) {
       org.slf4j.LoggerFactory.getLogger(getClass).info(
         s"$what: built at $dir (first touch of this corpus — the offline " +
           "step; later runs serve off the committed manifest)")
-      sweepStaleArtifacts(dir, familyPrefix, sfDir)
+      deleteSiblings(dir)
     }
     dir.toString
   }
 
-  /** Best-effort garbage collection of orphaned artifact dirs
-    * (round-9 verdict item 5): a format-token bump orphans every
-    * `graft_<family>_index_<oldToken>` sibling, and a corpus rewrite
-    * orphans the old-fingerprint entry inside the CURRENT family —
-    * both accumulated forever under `java.io.tmpdir`. Called after a
-    * successful build (the moment a fresh artifact proves the old ones
-    * superseded), it deletes (a) the entries of sibling family dirs
-    * sharing `familyPrefix` but carrying a stale token — only entries
-    * that carry an artifact's own marks (the `.lock` beside them, or
-    * their corpus/`READY` marker), so an unrelated dir whose name
-    * merely starts with the prefix survives — and (b) same-corpus
-    * (`entryPrefix` = the sfDir tag) entries with a different
-    * fingerprint. Every deletion first `tryLock`s the target's own
-    * build lock file NON-blocking — a concurrent session still
-    * building or healing that dir keeps it alive (and `tryLock` in
-    * the same JVM surfaces as [[OverlappingFileLockException]], also
-    * a skip) — so concurrent probes of the CURRENT artifact are
-    * untouched and an in-flight competitor is never pulled out from
-    * under its lock. Failures are swallowed: GC is hygiene, not
-    * correctness — the worst outcome of a skipped sweep is the disk
-    * usage we had for nine rounds. */
-  /** Name of the per-entry corpus marker: a file inside each artifact
-    * entry recording the EXACT source-corpus path it was built from.
-    * The same-corpus sweep keys on marker equality — never on parsing
-    * the entry NAME, whose `${sfTag}_${fp}` form is ambiguous: sfTag
-    * erases path boundaries, so a sibling corpus `/x/sfA/123` with an
-    * all-decimal dir-hash renders as `sfA_123_<digits>`, which a
-    * shape-guess can misread as `sfA` + a `size_mtime` fingerprint and
-    * GC a LIVE artifact (round-10 review). Markerless entries (built
-    * by pre-marker code) are never same-corpus-swept — bounded one-time
-    * litter, reclaimed when their format token bumps. */
-  private val CorpusMarker = ".corpus"
-
-  private[graft] def sweepStaleArtifacts(current: java.nio.file.Path,
-      familyPrefix: String, corpusId: String): Unit = {
+  /** Best-effort deletion of the entries `current` supersedes: every
+    * other directory beside it (its corpus key directory holds only this
+    * (family, corpus)'s entries), except lock files and in-flight
+    * `.build-` tmp dirs. Each deletion first `tryLock`s the target's own
+    * build lock NON-blocking: a concurrent session still building or
+    * healing that entry keeps it (in the same JVM the overlap surfaces
+    * as `OverlappingFileLockException`, also a skip), and the next
+    * install's sweep removes it once the lock is free. A deleted
+    * entry's lock file goes with it. Failures are swallowed: this is
+    * hygiene, not correctness. */
+  private def deleteSiblings(current: java.nio.file.Path): Unit = {
     import java.nio.file.{Files, StandardOpenOption}
-    val familyDir = current.getParent
-    val entryName = current.getFileName.toString
-    // canonicalize BEFORE stamping or comparing: a raw relative sfDir
-    // ('data/sf1') spells the same from two working directories while
-    // naming DIFFERENT corpora — raw-string equality would GC a live
-    // sibling (round-10 review) — and '/abs/data/sf1' vs 'data/sf1'
-    // for the SAME corpus would never match, leaking stale entries
-    val canonicalId =
-      try java.nio.file.Paths.get(corpusId).toAbsolutePath.normalize.toString
-      catch { case scala.util.control.NonFatal(_) => corpusId }
-    // stamp the current entry's marker first (idempotent; a ready
-    // artifact is immutable but a dot-file is invisible to readers) so
-    // future sweeps can recognize it
-    try {
-      val m = current.resolve(CorpusMarker)
-      if (!Files.exists(m)) Files.writeString(m, canonicalId)
-    } catch { case scala.util.control.NonFatal(_) => () }
     def tryDelete(target: java.nio.file.Path): Unit =
       try {
-        val lockPath = target.resolveSibling(s"${target.getFileName}.lock")
-        val ch = java.nio.channels.FileChannel.open(lockPath,
+        val ch = java.nio.channels.FileChannel.open(lockFile(target),
           StandardOpenOption.CREATE, StandardOpenOption.WRITE)
         var deleted = false
         try {
@@ -1749,73 +1725,22 @@ object VectorOps extends OpCatalog {
             finally l.release()
         } finally ch.close()
         // the entry is gone, so its lock file is litter — delete it too
-        // or every GC'd fingerprint leaks one immortal lock file (a
+        // or every deleted fingerprint leaks one immortal lock file (a
         // waiter blocked on the old inode can race a fresh-lock taker,
         // but only toward rebuilding a SUPERSEDED entry — a torn stale
         // dir the next heal handles)
-        if (deleted) Files.deleteIfExists(lockPath)
+        if (deleted) Files.deleteIfExists(lockFile(target))
       } catch { case scala.util.control.NonFatal(_) => () }
-    def eligible(n: String): Boolean =
-      !n.endsWith(".lock") && !n.contains(".build-")
-    // an artifact entry carries its own marks: the build lock beside it,
-    // or the corpus/READY marker inside. Anything else under a
-    // family-prefixed name (a caller's scratch dir that happens to share
-    // the prefix) is not ours to delete.
-    def isArtifactEntry(e: java.nio.file.Path): Boolean =
-      Files.exists(e.resolveSibling(s"${e.getFileName}.lock")) ||
-        Files.exists(e.resolve(CorpusMarker)) ||
-        Files.exists(e.resolve(ReadyMarker))
     try {
-      // (a) sibling FAMILY dirs with a stale format token: every entry
-      // inside is unusable by current code, whatever corpus it keyed
-      val tmpRoot = familyDir.getParent
-      val fams = Files.list(tmpRoot)
-      try fams.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith(familyPrefix) &&
-            n != familyDir.getFileName.toString &&
-            eligible(n) && Files.isDirectory(p)) {
-          val entries = Files.list(p)
-          try entries.forEach { e =>
-            if (eligible(e.getFileName.toString) && Files.isDirectory(e) &&
-                isArtifactEntry(e))
-              tryDelete(e)
-          } finally entries.close()
-          // sweep lock-file litter whose entry is gone, then remove the
-          // family dir IF now empty — never recursively: an entry that
-          // survived did so because its lock is HELD, and a recursive
-          // delete would pull it out from under the holder
-          val rest = Files.list(p)
-          try rest.forEach { e =>
+      val entries = Files.list(current.getParent)
+      val siblings =
+        try entries.toArray.map(_.asInstanceOf[java.nio.file.Path]).filter {
+          e =>
             val n = e.getFileName.toString
-            if (n.endsWith(".lock") &&
-                !Files.isDirectory(e.resolveSibling(n.stripSuffix(".lock"))))
-              Files.deleteIfExists(e)
-          } finally rest.close()
-          try Files.delete(p)
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-      } finally fams.close()
-      // (b) the SAME corpus at a stale fingerprint in the current
-      // family — superseded by the build that just installed. Identity
-      // comes from the [[CorpusMarker]] file, compared for EXACT
-      // equality with this build's corpus path: other corpora (other
-      // SFs, other tables, tag-extension siblings like '/x/sfA_alt' —
-      // and '/x/sfA/123', whose NAME can be indistinguishable from an
-      // 'sfA' fingerprint) carry a different marker and survive;
-      // markerless legacy entries are skipped outright.
-      val entries = Files.list(familyDir)
-      try entries.forEach { e =>
-        val n = e.getFileName.toString
-        if (n != entryName && eligible(n) && Files.isDirectory(e)) {
-          val marker = e.resolve(CorpusMarker)
-          val sameCorpus =
-            try Files.exists(marker) &&
-              Files.readString(marker) == canonicalId
-            catch { case scala.util.control.NonFatal(_) => false }
-          if (sameCorpus) tryDelete(e)
-        }
-      } finally entries.close()
+            e != current && !n.endsWith(".lock") &&
+              !n.contains(BuildInfix) && Files.isDirectory(e)
+        } finally entries.close()
+      siblings.foreach(tryDelete)
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
@@ -1864,10 +1789,10 @@ object VectorOps extends OpCatalog {
     * corpus therefore publishes no snapshot, and the None returned then
     * is the caller's empty answer — decided off the manifest, with no
     * emptiness job on the serving path. */
-  private def vecArtifact(spark: SparkSession, familyPrefix: String,
+  private def vecArtifact(spark: SparkSession, family: String,
       token: String, sfDir: String, corpus: DataFrame, what: String)(
       lifecycle: String => Unit): Option[String] = {
-    val root = ensureArtifact(familyPrefix, token, sfDir,
+    val root = ensureArtifact(family, token, sfDir,
       "embeddings.parquet", what)(tmp => if (!corpus.isEmpty) lifecycle(tmp))
     VersionedTable.currentSnapshot(spark, root).map(_ => root)
   }
@@ -1878,7 +1803,7 @@ object VectorOps extends OpCatalog {
     * not two). */
   private def pqArtifact(spark: SparkSession, sfDir: String, e: DataFrame,
       qname: String): Option[String] =
-    vecArtifact(spark, "graft_pq_index_", PqIndex.formatTag, sfDir,
+    vecArtifact(spark, "pq_index", PqIndex.formatTag, sfDir,
       e.filter(col("vec_id") =!= 0), s"$qname: PQ index snapshot")(
       tmp => PqIndex.buildVersioned(spark, e, tmp))
 
@@ -1890,7 +1815,7 @@ object VectorOps extends OpCatalog {
   private def ivfArtifact(spark: SparkSession, sfDir: String,
       corpus: DataFrame, qname: String): Option[(String, Int)] = {
     val k = AnnParams.ivfCells(corpusSize(spark, sfDir))
-    vecArtifact(spark, "graft_ivf_index_", IvfIndex.formatTag, sfDir, corpus,
+    vecArtifact(spark, "ivf_index", IvfIndex.formatTag, sfDir, corpus,
       s"$qname: IVF index snapshot")(
       tmp => IvfIndex.buildVersioned(spark, corpus, tmp, nlist = Some(k)))
       .map(root => (root, k))
@@ -2203,13 +2128,13 @@ object VectorOps extends OpCatalog {
     * version — `READY` is stamped only when the whole lifecycle
     * survived (q138's torn-build contract). */
   private def ensureVersionedVecArtifact(spark: SparkSession, sfDir: String,
-      e: DataFrame, familyPrefix: String, token: String, qname: String)(
+      e: DataFrame, family: String, token: String, qname: String)(
       buildV1: (String, DataFrame) => Unit,
       applyDelta: (String, DataFrame, DataFrame) => Unit,
       schema: org.apache.spark.sql.types.StructType): Option[String] = {
     val corpusV1 = e.filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"))
-    vecArtifact(spark, familyPrefix, token, sfDir, corpusV1,
+    vecArtifact(spark, family, token, sfDir, corpusV1,
         s"$qname: v1 + planted delta + compact + vacuum snapshots") { tmp =>
       val (upserts, removed, _) = plantedVecV2(e)
       buildV1(tmp, corpusV1)
@@ -2234,7 +2159,7 @@ object VectorOps extends OpCatalog {
     val q = queryVec(spark, sfDir)
     val (_, _, corpusV2) = plantedVecV2(e)
     val served = collectQueryVec(e).flatMap(qv =>
-        ensureVersionedVecArtifact(spark, sfDir, e, "graft_ivfvt_index_",
+        ensureVersionedVecArtifact(spark, sfDir, e, "ivfvt_index",
           IvfIndex.formatTag, "q140")(
           (tmp, v1) => IvfIndex.buildVersioned(spark, v1, tmp),
           (tmp, up, rm) => IvfIndex.updateFromVersioned(spark, tmp, up, rm),
@@ -2279,7 +2204,7 @@ object VectorOps extends OpCatalog {
     val exactScored = batchL2ScoredOf(corpusV2, queries)
     val served = (if (!anyQuery) None
         else ensureVersionedVecArtifact(spark, sfDir, e,
-          "graft_pqvt_index_", PqIndex.formatTag, "q141")(
+          "pqvt_index", PqIndex.formatTag, "q141")(
           (tmp, _) => PqIndex.buildVersioned(spark, e, tmp),
           (tmp, up, rm) => PqIndex.updateFromVersioned(spark, tmp, up, rm),
           PqIndex.codesSchema))

@@ -1139,35 +1139,49 @@ object VersionedTable {
     * with one file each, and published as a normal delta commit:
     * content-identical (the spec pins row-set equality), atomic,
     * snapshot-isolated like any other publish. Extras are untouched.
-    * Returns the rewritten partition values' dir names (empty = nothing
-    * exceeded the threshold, no commit made). */
+    * The oversized set and its rows are derived inside
+    * [[retryingPublish]], from each attempt's base: a commit that lands
+    * mid-compaction (an online index tick on this root) makes the
+    * attempt lose the race and re-derive, instead of putting older rows
+    * back over the racer's partitions under its carried-over
+    * properties. Returns the rewritten partition values' dir names
+    * (empty = nothing exceeded the threshold, no commit made). */
   def compact(spark: SparkSession, root: String, schema: StructType,
       maxFilesPerPart: Int = 4): Seq[String] = {
-    val snap = currentSnapshot(spark, root).getOrElse(return Nil)
+    if (currentSnapshot(spark, root).isEmpty) return Nil
     val fs = hadoopFs(spark, dataDir(root))
-    val oversized = snap.parts.toSeq.sortBy(_._1).filter { case (k, gen) =>
-      val dir = new org.apache.hadoop.fs.Path(dataDir(root), s"$gen/$k")
-      fs.listStatus(dir).count { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      } > maxFilesPerPart
-    }.map(_._1)
-    if (oversized.isEmpty) return Nil
-    // unescape the dir-name component back to the VALUE the publish
-    // APIs take — partDirName re-escapes it to the same dir name
-    val vals = oversized.map(k =>
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(k.substring(snap.partCol.length + 1)))
-    // one shuffle task per partition VALUE (hash-colliding values still
-    // write one file each under partitionBy), so compaction wall-clock
-    // scales with the largest partition, not the total compacted volume
-    // — coalesce(1) would funnel every oversized partition through a
-    // single core
-    val rows = read(spark, snap, root, schema, Some(vals))
-      .repartition(org.apache.spark.sql.functions.col(snap.partCol))
-    publishDelta(spark, root, vals, rows)
-    oversized
+    var oversized = Seq.empty[String]
+    try {
+      retryingPublish(spark, root) { base =>
+        oversized = base.parts.toSeq.sortBy(_._1).filter { case (k, gen) =>
+          val dir = new org.apache.hadoop.fs.Path(dataDir(root), s"$gen/$k")
+          fs.listStatus(dir).count { st =>
+            val n = st.getPath.getName
+            st.isFile && !n.startsWith("_") && !n.startsWith(".")
+          } > maxFilesPerPart
+        }.map(_._1)
+        if (oversized.isEmpty) throw NothingToCompact
+        // unescape the dir-name component back to the VALUE the publish
+        // APIs take — partDirName re-escapes it to the same dir name
+        val vals = oversized.map(k =>
+          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .unescapePathName(k.substring(base.partCol.length + 1)))
+        // one shuffle task per partition VALUE (hash-colliding values
+        // still write one file each under partitionBy), so compaction
+        // wall-clock scales with the largest partition, not the total
+        // compacted volume — coalesce(1) would funnel every oversized
+        // partition through a single core
+        Delta(vals, read(spark, base, root, schema, Some(vals))
+          .repartition(org.apache.spark.sql.functions.col(base.partCol)))
+      }
+      oversized
+    } catch { case NothingToCompact => Nil }
   }
+
+  /** Control-flow signal out of [[compact]]'s publish closure: the
+    * attempt's base has no oversized partition, so nothing commits. */
+  private case object NothingToCompact
+    extends RuntimeException with scala.util.control.NoStackTrace
 
   /** Reclaim space: drop all but the newest `keepVersions` manifests,
     * then every generation subdirectory no retained manifest references

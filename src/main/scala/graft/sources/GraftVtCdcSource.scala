@@ -12,12 +12,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * (round-13 verdict item 1, the Delta-CDF idiom): a micro-batch source
   * whose OFFSETS are committed table versions, so the engine's own
   * checkpoint mechanism persists the consumer's cursor and a restart
-  * resumes the tail exactly where the last batch committed. Before
-  * this, tailing the feed took library calls driven by a caller-managed
-  * ticks stream + cursor ([[graft.streaming.StreamingOps.changesStream]]
-  * — which stays, for consumers that commit the cursor WITH their sink
-  * state transactionally); this source is the idiomatic surface for
-  * everyone else.
+  * resumes the tail exactly where the last batch committed. A consumer
+  * that commits its cursor WITH its sink state transactionally resumes
+  * instead from that stored cursor: `startingVersion = cursor + 1`.
+  * This source is the one streaming tail of the feed.
   *
   * Options (beyond `path`):
   *  - `readChangeFeed` (required `true`): the snapshot itself is a

@@ -858,56 +858,6 @@ object StreamingOps {
         clean.sparkSession, root, qs, k))
     }(sink)
 
-  /** Streaming CDC tail of a [[graft.operators.VersionedTable]] — the
-    * online consumer of [[graft.operators.VersionedTable.changes]]. Each
-    * micro-batch of the driving tick stream (any stream; its ROWS are
-    * ignored — it is the trigger clock, the way a real tailer runs on a
-    * timer) resolves the CURRENT manifest once. If the version advanced
-    * past the consumer's cursor, `sink` receives the NET change feed
-    * cursor→current ([[graft.operators.VersionedTable.changes]]
-    * semantics: per-key insert/delete plus update_pre/update_post image
-    * pairs, COW-carried unchanged rows suppressed, multi-commit gaps
-    * collapsed to the net diff) plus
-    * a `commit_version` column naming the new cursor position; then the
-    * cursor advances. A quiet tick (no publish since the cursor) is
-    * silent. Within a live stream delivery is in-order with no
-    * re-emission; if `sink` throws, the foreachBatch retry re-emits the
-    * same span (at-least-once) — exactly-once is the caller pairing an
-    * idempotent/transactional sink with the span's `commit_version`
-    * (the [[writeBatchIdempotent]] recipe).
-    *
-    * Cursor scope: in-memory, initialized at `startVersion` — a restart
-    * re-tails from the caller's cursor, not from a checkpoint; a
-    * production deployment persists the cursor WITH the sink's output
-    * and passes it back in. Retention contract: vacuum must keep
-    * manifests back to the slowest consumer's cursor (`keepVersions` ≥
-    * the tail window) — a vacuumed cursor fails the batch loudly
-    * (snapshotAt returns None), never silently re-bases the feed. */
-  def changesStream(ticks: DataFrame, root: String,
-      schema: org.apache.spark.sql.types.StructType, keyCol: String,
-      startVersion: Long)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.VersionedTable
-    val cursor = new java.util.concurrent.atomic.AtomicLong(startVersion)
-    ticks.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        VersionedTable.currentSnapshot(spark, root)
-          .filter(_.version > cursor.get()).foreach { cur =>
-            val fromV = cursor.get()
-            val from = VersionedTable.snapshotAt(spark, root, fromV)
-              .getOrElse(throw new IllegalStateException(
-                s"changes cursor v$fromV at $root was vacuumed — " +
-                  "retention must cover the slowest consumer"))
-            sink(VersionedTable.changes(spark, root, from, cur,
-                schema, keyCol)
-              .withColumn("commit_version", lit(cur.version)))
-            cursor.set(cur.version)
-          }
-      }
-  }
-
   /** Online CDC index maintenance — the STREAMING twin of the nightly's
     * consumer steps, for any subset of its consumers (the roots given).
     * Each micro-batch of the driving tick stream (its rows are ignored —
@@ -933,8 +883,9 @@ object StreamingOps {
     * consumer's cursor is read BEFORE anything commits, and an unborn
     * table or an unreadable cursor fails the batch loudly, naming the
     * root, with no root touched. Retention contract: corpus vacuum must
-    * keep manifests back to the slowest cursor ([[changesStream]]'s
-    * rule) — a vacuumed cursor fails the batch loudly. `StreamingSpec`
+    * keep manifests back to the slowest cursor (the change-feed source's
+    * rule, [[graft.sources.GraftVtCdcSource]]) — a vacuumed cursor fails
+    * the batch loudly. `StreamingSpec`
     * pins stream == batch per family and ONLINE == NIGHTLY for the
     * whole set. */
   def cdcMaintainIndexesStream(ticks: DataFrame, corpusRoot: String,

@@ -177,8 +177,7 @@ class Bm25IndexSpec extends SparkSpec {
     val q133 = PipelineOps.bm25Search(spark, sfDir).collect()
     assert(law.map(_.toSeq).toSeq == q133.map(_.toSeq).toSeq,
       "q134 must serve q133's exact answer")
-    val marker = VectorOps.artifactDir(
-        s"graft_bm25_index_${Bm25Index.formatTag}", sfDir,
+    val marker = VectorOps.artifactDir("bm25_index", Bm25Index.formatTag, sfDir,
         sourceFile = "documents.parquet")
       .resolve("READY").resolve("_SUCCESS")
     val mtime = java.nio.file.Files.getLastModifiedTime(marker).toMillis

@@ -278,6 +278,54 @@ class GraftVtSourceSpec extends SparkSpec {
     assert(sunkCount() == 5, "a quiet span must produce no batch rows")
   }
 
+  test("change feed stream from a stored cursor (startingVersion = 2): a quiet trigger emits nothing, one publish emits exactly its delta, a two-commit gap emits the net diff") {
+    val root = newRoot("cdccursor")
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_cdccursor_ck").toString
+    VersionedTable.publishFull(spark, root, "bucket",
+      rowsDf((1L, "a", 0), (2L, "b", 1)))
+    val batches = scala.collection.mutable
+      .ArrayBuffer[Set[(Long, String, Int, String, Long)]]()
+    // one trigger: every committed version past the cursor, as one batch
+    def trigger(): Unit = {
+      val q = cdcReader(root, starting = 2L).writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (feed: DataFrame, _: Long) =>
+          val rows = feed.select(col("k"), col("v"), col("bucket"),
+              col("change_type"), col("commit_version")).collect()
+            .map(r => (r.getLong(0), r.getString(1), r.getInt(2),
+              r.getString(3), r.getLong(4))).toSet
+          batches.synchronized { batches += rows; () }
+        }.start()
+      assert(q.awaitTermination(120000), "AvailableNow run must finish")
+    }
+    // the cursor stored with the sink is v1: nothing committed since
+    trigger()
+    assert(batches.isEmpty, "no publish since the cursor → silent trigger")
+    // one commit, one trigger: exactly that delta's change rows, stamped
+    // with the commit version the cursor advances to
+    VersionedTable.publishDelta(spark, root, Seq(1),
+      rowsDf((2L, "B2", 1), (3L, "c", 1)))
+    trigger()
+    assert(batches.toList == List(Set(
+      (2L, "b", 1, "update_pre", 2L), (2L, "B2", 1, "update_post", 2L),
+      (3L, "c", 1, "insert", 2L))),
+      "the trigger after a publish emits exactly the delta's feed")
+    // two commits land between triggers: the next one emits the NET
+    // v2→v4 diff in one batch (row 3 inserted-at-v2 then deleted-at-v4
+    // never re-appears; 1's update and 3's delete ride commit 4)
+    VersionedTable.publishDelta(spark, root, Seq(0), rowsDf((1L, "A", 0)))
+    VersionedTable.publishDelta(spark, root, Seq(1), rowsDf((2L, "B2", 1)))
+    trigger()
+    assert(batches.toList.drop(1) == List(Set(
+      (1L, "a", 0, "update_pre", 4L), (1L, "A", 0, "update_post", 4L),
+      (3L, "c", 1, "delete", 4L))),
+      "a multi-commit gap collapses to the net diff at the new cursor")
+    trigger()
+    assert(batches.length == 2, "the drained cursor goes silent again")
+  }
+
   test("change feed stream: live publishes while the query runs land as their own spans — the stream==batch law") {
     val root = newRoot("cdclive")
     VersionedTable.publishFull(spark, root, "bucket",

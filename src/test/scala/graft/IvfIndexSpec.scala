@@ -221,8 +221,7 @@ class IvfIndexSpec extends SparkSpec {
       "recall_ok/score_ok must hold on the fixture")
     // a second invocation serves from the SAME artifact: identical rows,
     // and the READY marker's mtime proves no rebuild happened
-    val marker = VectorOps.artifactDir(
-        s"graft_ivf_index_${IvfIndex.formatTag}", sfDir)
+    val marker = VectorOps.artifactDir("ivf_index", IvfIndex.formatTag, sfDir)
       .resolve("READY").resolve("_SUCCESS")
     val mtime = java.nio.file.Files.getLastModifiedTime(marker).toMillis
     val again = VectorOps.ivfIndexProbe(spark, sfDir).collect()

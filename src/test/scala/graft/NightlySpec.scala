@@ -35,9 +35,9 @@ class NightlySpec extends SparkSpec {
   // embedding — a re-crawl of the same content)
   private def corpusV2: DataFrame = CurationOps.plantedV2(corpusV1)
 
-  // `graft_nightlyspec_`, not `graft_nightly_`: that is the NightlyOps
-  // artifact family prefix, swept by every nightly artifact build
-  // (VectorOps.sweepStaleArtifacts spares dirs without artifact marks)
+  // the artifact cache deletes only inside its own tree
+  // (`<tmpdir>/graft_artifacts/`, VectorOps.artifactDir), so any name
+  // outside it is safe
   private def newRoots(tag: String): Nightly.Roots = {
     val d = tempDir(s"graft_nightlyspec_$tag")
     Nightly.Roots(s"$d/corpus", s"$d/bm25", s"$d/ivf", s"$d/pq", s"$d/stats")

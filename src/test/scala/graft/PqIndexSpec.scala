@@ -165,109 +165,88 @@ class PqIndexSpec extends SparkSpec {
     } finally leftovers.close()
   }
 
-  test("sweepStaleArtifacts: stale tokens and fingerprints GC'd; other corpora and lock-held entries survive") {
-    import java.nio.file.StandardOpenOption
-    // a private tmp root standing in for java.io.tmpdir: the sweep only
-    // ever navigates relative to the CURRENT entry, so the layout is all
-    // that matters
-    val tmpRoot = tempDir("graft_gc_root")
-    val famCur = tmpRoot.resolve("graft_tst_index_v2")
-    val famOld = tmpRoot.resolve("graft_tst_index_v1")
-    val unrelated = tmpRoot.resolve("graft_other_index_v1")
-    // entry names follow artifactDir's `${tag}_${fp}` scheme; corpus
-    // identity lives in each entry's .corpus marker (names are
-    // ambiguous — see CorpusMarker's scaladoc)
-    val cur = famCur.resolve("sfA_deadbee2")
-    val staleFp = famCur.resolve("sfA_deadbee1")
-    val staleFileFp = famCur.resolve("sfA_500_1700")
-    val otherCorpus = famCur.resolve("sfB_deadbee9")
-    // a SIBLING corpus '/x/sfA/123' whose all-decimal dir-hash renders
-    // its NAME exactly like an 'sfA' size_mtime fingerprint — the
-    // collision class a name-shape guess GC'd; its marker differs, so
-    // it must SURVIVE
-    val numericCousin = famCur.resolve("sfA_123_4567")
-    // a tag-extension sibling ('/x/sfA_alt'): also survives by marker
-    val prefixCousin = famCur.resolve("sfA_alt_deadbeef")
-    // a legacy entry with NO marker (pre-marker binary): never
-    // same-corpus-swept, whatever its name looks like
-    val markerless = famCur.resolve("sfA_deadbee0")
-    val lockedStale = famOld.resolve("sfA_deadbeeX")
-    val unrelatedEntry = unrelated.resolve("sfA_deadbee1")
-    Seq(cur, staleFp, staleFileFp, otherCorpus, numericCousin,
-        prefixCousin, markerless, lockedStale, unrelatedEntry).foreach { d =>
+  test("ensureArtifact: one entry per (family, corpus) — token bumps and rewrites leave one; other corpora, held locks and dirs outside the cache survive") {
+    import java.nio.file.{Path, StandardOpenOption}
+    // a private tmp root standing in for java.io.tmpdir, which the cache
+    // reads on every call
+    val tmpRoot = tempDir("graft_cache_root")
+    val corpora = tempDir("graft_cache_corpora")
+    val sfA = corpora.resolve("sfA")
+    val sfB = corpora.resolve("sfB")
+    Seq(sfA, sfB).foreach { d =>
       Files.createDirectories(d)
-      Files.writeString(d.resolve("data"), "x")
+      Files.writeString(d.resolve("src.bin"), "v1")
     }
-    Seq(cur, staleFp, staleFileFp, lockedStale).foreach(d =>
-      Files.writeString(d.resolve(".corpus"), "/x/sfA"))
-    Files.writeString(otherCorpus.resolve(".corpus"), "/x/sfB")
-    Files.writeString(numericCousin.resolve(".corpus"), "/x/sfA/123")
-    Files.writeString(prefixCousin.resolve(".corpus"), "/x/sfA_alt")
-    Files.writeString(unrelatedEntry.resolve(".corpus"), "/x/sfA")
-    // an in-flight competitor: its entry's build lock is HELD (same-JVM
-    // overlap surfaces as OverlappingFileLockException — the same skip)
-    val ch = java.nio.channels.FileChannel.open(
-      famOld.resolve("sfA_deadbeeX.lock"),
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val held = ch.lock()
-    try VectorOps.sweepStaleArtifacts(cur, "graft_tst_index_", "/x/sfA")
-    finally { held.release(); ch.close() }
-    assert(Files.exists(cur.resolve("data")), "current artifact untouched")
-    assert(!Files.exists(staleFp),
-      "same-corpus stale hex fingerprint must be GC'd")
-    assert(!Files.exists(staleFileFp),
-      "same-corpus stale size_mtime fingerprint must be GC'd")
-    assert(!Files.exists(famCur.resolve("sfA_deadbee1.lock")),
-      "a GC'd entry's lock file must go with it")
-    assert(Files.exists(otherCorpus), "other corpora's entries survive")
-    assert(Files.exists(numericCousin),
-      "a sibling corpus whose NAME mimics an 'sfA' size_mtime " +
-        "fingerprint must survive — identity is the marker, not the name")
-    assert(Files.exists(prefixCousin),
-      "a tag-extension sibling corpus must survive (different marker)")
-    assert(Files.exists(markerless),
-      "a legacy markerless entry is never same-corpus-swept")
-    assert(Files.exists(lockedStale),
-      "a lock-held stale entry must survive the sweep")
-    assert(Files.exists(unrelatedEntry),
-      "a different family prefix is out of scope")
-    // lock released: the next build's sweep removes the old-token family
-    VectorOps.sweepStaleArtifacts(cur, "graft_tst_index_", "/x/sfA")
-    assert(!Files.exists(famOld),
-      "stale-token family dir must be fully removed once unlocked")
-    assert(Files.exists(cur.resolve("data")))
-  }
-
-  test("sweepStaleArtifacts: a dir that only shares the family prefix survives; marked stale entries are still swept") {
-    val tmpRoot = tempDir("graft_gc_prefix")
-    val cur = tmpRoot.resolve("graft_nightly_v2").resolve("sfA_cur")
-    Files.createDirectories(cur)
-    // a caller's scratch dir under a prefixed name (a spec's roots): no
-    // lock beside its entry, no corpus or READY marker inside it
-    val scratch = tmpRoot.resolve("graft_nightly_ref123")
-    Files.createDirectories(scratch.resolve("x"))
-    Files.writeString(scratch.resolve("x").resolve("file"), "x")
-    // stale-token entries, each carrying one artifact mark
-    val stale = tmpRoot.resolve("graft_nightly_v1")
-    val byLock = stale.resolve("sfA_lock")
-    val byCorpus = stale.resolve("sfB_corpus")
-    val byReady = stale.resolve("sfC_ready")
-    Seq(byLock, byCorpus, byReady).foreach { d =>
-      Files.createDirectories(d)
-      Files.writeString(d.resolve("data"), "x")
+    // dirs directly under the tmpdir that the cache must never touch: a
+    // scratch dir named like an artifact family, and an entry of the
+    // old `<tmpdir>/graft_<family>_<token>/` layout with its marks
+    val scratch = tmpRoot.resolve("graft_nightly_ref123").resolve("x")
+    Files.createDirectories(scratch)
+    Files.writeString(scratch.resolve("file"), "x")
+    val legacy = tmpRoot.resolve("graft_nightly_old").resolve("sfA_1_2")
+    Files.createDirectories(legacy.resolve("READY"))
+    Files.createFile(legacy.resolve("READY").resolve("_SUCCESS"))
+    Files.writeString(legacy.resolveSibling("sfA_1_2.lock"), "")
+    var builds = 0
+    def ensure(family: String, token: String, sf: Path): Path =
+      Paths.get(VectorOps.ensureArtifact(family, token, sf.toString,
+        "src.bin", "spec artifact") { tmp => builds += 1; writePart(tmp, builds) })
+    def names(cur: Path, dirs: Boolean): Set[String] = {
+      val s = Files.list(cur.getParent)
+      try s.toArray.map(_.asInstanceOf[Path])
+        .filter(p => Files.isDirectory(p) == dirs)
+        .map(_.getFileName.toString).toSet
+      finally s.close()
     }
-    Files.writeString(stale.resolve("sfA_lock.lock"), "")
-    Files.writeString(byCorpus.resolve(".corpus"), "/x/sfB")
-    Files.createDirectories(byReady.resolve("READY"))
-    Files.createFile(byReady.resolve("READY").resolve("_SUCCESS"))
-    VectorOps.sweepStaleArtifacts(cur, "graft_nightly_", "/x/sfA")
-    assert(Files.exists(scratch.resolve("x").resolve("file")),
-      "a non-artifact dir under a family-prefixed name must survive")
-    Seq(byLock, byCorpus, byReady).foreach(d =>
-      assert(!Files.exists(d), s"stale artifact entry $d must be swept"))
-    assert(!Files.exists(stale),
-      "the emptied stale-token family dir is removed")
-    assert(Files.exists(cur), "current artifact untouched")
+    def only(cur: Path): Unit = {
+      assert(names(cur, dirs = true) == Set(cur.getFileName.toString),
+        s"exactly one entry must remain beside $cur")
+      assert(names(cur, dirs = false) == Set(s"${cur.getFileName}.lock"),
+        "a deleted entry's lock file goes with it")
+    }
+    val saved = sys.props("java.io.tmpdir")
+    sys.props("java.io.tmpdir") = tmpRoot.toString
+    try {
+      val a1 = ensure("tst", "v1", sfA)
+      assert(a1.startsWith(tmpRoot.resolve("graft_artifacts").resolve("tst")))
+      val b1 = ensure("tst", "v1", sfB)
+      assert(a1.getParent != b1.getParent, "one key directory per corpus")
+      // (1) a format-token bump leaves exactly one entry
+      val a2 = ensure("tst", "v2", sfA)
+      assert(a2 != a1)
+      only(a2)
+      // (2) a corpus rewrite (new fingerprint) leaves exactly one entry
+      Files.writeString(sfA.resolve("src.bin"), "v2, rewritten")
+      val a3 = ensure("tst", "v2", sfA)
+      assert(a3 != a2 && a3.getParent == a2.getParent)
+      only(a3)
+      // (3) another corpus's entry survives both
+      assert(Files.exists(readyMarker(b1)), "other corpora's entries survive")
+      // (4) a sibling whose build lock is HELD survives (same-JVM overlap
+      // surfaces as OverlappingFileLockException — the same skip) ...
+      val ch = java.nio.channels.FileChannel.open(
+        a3.resolveSibling(s"${a3.getFileName}.lock"),
+        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+      val held = ch.lock()
+      val a4 = try ensure("tst", "v3", sfA)
+      finally { held.release(); ch.close() }
+      assert(Files.exists(readyMarker(a3)), "a lock-held sibling survives")
+      assert(names(a4, dirs = true) ==
+        Set(a3.getFileName.toString, a4.getFileName.toString))
+      // ... and the next build removes it once the lock is free
+      val a5 = ensure("tst", "v4", sfA)
+      only(a5)
+      assert(builds == 6)
+      // (5) nightly-family builds (one install, then a superseding one)
+      // leave every dir outside the cache's own tree alone
+      val n1 = ensure("nightly", "v1", sfA)
+      only(ensure("nightly", "v2", sfA))
+      assert(!Files.exists(n1))
+      assert(Files.exists(scratch.resolve("file")),
+        "a graft_nightly_… dir under the tmpdir survives")
+      assert(Files.exists(readyMarker(legacy)),
+        "an old-layout entry is outside the cache's tree: never swept")
+    } finally sys.props("java.io.tmpdir") = saved
   }
 
   test("buildArtifactOnce: concurrent same-JVM attempts serialize on the lock — one build, both served") {
@@ -301,7 +280,7 @@ class PqIndexSpec extends SparkSpec {
     assert(law.forall(r => r.getBoolean(2) && r.getBoolean(3)),
       "recall_ok/score_ok must hold on the fixture")
     val marker = readyMarker(VectorOps.artifactDir(
-      s"graft_pq_index_${PqIndex.formatTag}", sfDir))
+      "pq_index", PqIndex.formatTag, sfDir))
     val mtime = java.nio.file.Files.getLastModifiedTime(marker).toMillis
     val again = VectorOps.pqIndexProbe(spark, sfDir).collect()
     assert(again.map(_.toSeq).toSeq == law.map(_.toSeq).toSeq)

@@ -1003,59 +1003,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming CDC tail: quiet ticks silent, a mid-stream publish emits exactly its delta at the next tick, a multi-commit gap emits the net diff") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    import graft.operators.VersionedTable
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("k", LongType),
-      StructField("v", StringType), StructField("bucket", IntegerType)))
-    def df(rows: (Long, String, Int)*) = rows.toDF("k", "v", "bucket")
-    val root = tempDir("graft_vt_cdc_stream").toString
-    VersionedTable.publishFull(spark, root, "bucket",
-      df((1L, "a", 0), (2L, "b", 1)))
-    val mem = MemoryStream[Long]
-    val batches = scala.collection.mutable
-      .ArrayBuffer[Set[(Long, String, Int, String, Long)]]()
-    val q = StreamingOps.changesStream(mem.toDS().toDF("tick"), root,
-        schema, "k", startVersion = 1L) { feed =>
-      batches.synchronized {
-        batches += feed.collect().map(r => (r.getLong(0), r.getString(1),
-          r.getInt(2), r.getString(3), r.getLong(4))).toSet
-      }
-    }.start()
-    try {
-      mem.addData(1L)
-      q.processAllAvailable()
-      assert(batches.isEmpty, "no publish since the cursor → silent tick")
-      // one commit, one tick: exactly that delta's change rows, stamped
-      // with the commit version the cursor advanced to
-      VersionedTable.publishDelta(spark, root, Seq(1),
-        df((2L, "B2", 1), (3L, "c", 1)))
-      mem.addData(2L)
-      q.processAllAvailable()
-      assert(batches.toList == List(Set(
-        (2L, "b", 1, "update_pre", 2L), (2L, "B2", 1, "update_post", 2L),
-        (3L, "c", 1, "insert", 2L))),
-        "the tick after a publish emits exactly the delta's feed")
-      // two commits land between ticks: the next tick emits the NET
-      // v2→v4 diff in one frame (row 3 inserted-at-v2 then deleted-at-v4
-      // never re-appears; 1's update and 3's delete ride commit 4)
-      VersionedTable.publishDelta(spark, root, Seq(0), df((1L, "A", 0)))
-      VersionedTable.publishDelta(spark, root, Seq(1), df((2L, "B2", 1)))
-      mem.addData(3L)
-      q.processAllAvailable()
-      assert(batches.toList.drop(1) == List(Set(
-        (1L, "a", 0, "update_pre", 4L), (1L, "A", 0, "update_post", 4L),
-        (3L, "c", 1, "delete", 4L))),
-        "a multi-commit gap collapses to the net diff at the new cursor")
-      mem.addData(4L)
-      q.processAllAvailable()
-      assert(batches.length == 2, "the drained cursor goes silent again")
-      assert(q.isActive)
-    } finally q.stop()
-  }
-
   test("online CDC maintenance: the stats grid tracks every mid-stream publish, cursor-in-the-manifest makes replayed ticks no-ops") {
     import spark.implicits._
     implicit val sc = spark.sqlContext

@@ -143,6 +143,45 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.compact(spark, root, schema, 1).isEmpty)
   }
 
+  test("compact: a commit landing between the compactor's read and its commit survives — the compactor re-derives") {
+    val root = newRoot("compactrace")
+    VersionedTable.publishFull(spark, root, "bucket",
+      rowsDf((1L to 30L).map(i => (i, s"v$i", (i % 2).toInt)): _*)
+        .repartition(3),
+      properties = Map("corpus_version" -> "1"))
+    val bucket1 = contents(VersionedTable.readCurrent(spark, root, schema,
+      wanted = Some(Seq(1))))
+    // the racer: an online index tick rewriting bucket 0 and moving the
+    // cursor, landed the first time the compactor lists a partition dir
+    var fired = false
+    HookedLocalFs.arm(new org.apache.hadoop.fs.Path(root, "data")) {
+      fired = true
+      VersionedTable.publishDelta(spark, root, Seq(0), rowsDf((2L, "R", 0)),
+        properties = Map("corpus_version" -> "2"))
+    }
+    spark.conf.set("fs.file.impl", classOf[HookedLocalFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    val rewritten =
+      try VersionedTable.compact(spark, root, schema, maxFilesPerPart = 1)
+      finally {
+        spark.conf.unset("fs.file.impl")
+        spark.conf.unset("fs.file.impl.disable.cache")
+        HookedLocalFs.disarm()
+      }
+    assert(fired, "the racer must land inside the compaction")
+    val snap = VersionedTable.currentSnapshot(spark, root).get
+    assert(snap.version == 3L, "racer v2, then the re-derived compaction")
+    assert(contents(VersionedTable.readCurrent(spark, root, schema,
+      wanted = Some(Seq(0)))) == Set((2L, "R", 0)),
+      "the racer's rows must survive the compaction")
+    assert(rewritten == Seq("bucket=1"),
+      "bucket 0 is one file after the racer: only bucket 1 is oversized")
+    assert(contents(VersionedTable.readCurrent(spark, root, schema,
+      wanted = Some(Seq(1)))) == bucket1, "compaction is content-identical")
+    assert(snap.properties("corpus_version") == "2",
+      "the cursor describes the content it carries")
+  }
+
   test("vacuum: MANY live partitions sharing one generation all survive") {
     // regression: the live-set flip must not re-key by generation —
     // that collapsed every partition sharing a gen to one survivor and
@@ -1038,5 +1077,34 @@ class VersionedTableSpec extends SparkSpec {
     assert(memo.get("r3", s1)(dload).isEmpty && dloads == 1)
     assert(memo.get("r3", s1)(dload).isEmpty && dloads == 2,
       "a degenerate (None) read is never cached — the memo self-heals")
+  }
+}
+
+/** A local filesystem whose `listStatus` runs a one-shot hook the first
+  * time it lists a partition dir (`<col>=<value>`) under an armed
+  * prefix: a deterministic way to land a commit inside another
+  * operation's read-then-commit window. Bound through `fs.file.impl`
+  * (with the FS cache off) on the session for one test. */
+class HookedLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def listStatus(f: org.apache.hadoop.fs.Path)
+      : Array[org.apache.hadoop.fs.FileStatus] = {
+    HookedLocalFs.fire(f)
+    super.listStatus(f)
+  }
+}
+
+object HookedLocalFs {
+  private val hook =
+    new java.util.concurrent.atomic.AtomicReference[(String, () => Unit)]()
+
+  def arm(under: org.apache.hadoop.fs.Path)(body: => Unit): Unit =
+    hook.set((under.toUri.getPath + "/", () => body))
+
+  def disarm(): Unit = hook.set(null)
+
+  private def fire(p: org.apache.hadoop.fs.Path): Unit = {
+    val h = hook.get()
+    if (h != null && p.toUri.getPath.startsWith(h._1) &&
+        p.getName.contains("=") && hook.compareAndSet(h, null)) h._2()
   }
 }
