@@ -165,28 +165,18 @@ class PqIndexSpec extends SparkSpec {
     } finally leftovers.close()
   }
 
-  test("ensureArtifact: one entry per (family, corpus) — token bumps and rewrites leave one; other corpora, held locks and dirs outside the cache survive") {
-    import java.nio.file.{Path, StandardOpenOption}
-    // a private tmp root standing in for java.io.tmpdir, which the cache
-    // reads on every call
-    val tmpRoot = tempDir("graft_cache_root")
-    val corpora = tempDir("graft_cache_corpora")
-    val sfA = corpora.resolve("sfA")
-    val sfB = corpora.resolve("sfB")
+  /** A private tmp root standing in for java.io.tmpdir, which the cache
+    * reads on every call, and two corpora `sfA`/`sfB` beside it. */
+  private class CacheFixture {
+    import java.nio.file.Path
+    val tmpRoot: Path = tempDir("graft_cache_root")
+    private val corpora = tempDir("graft_cache_corpora")
+    val sfA: Path = corpora.resolve("sfA")
+    val sfB: Path = corpora.resolve("sfB")
     Seq(sfA, sfB).foreach { d =>
       Files.createDirectories(d)
       Files.writeString(d.resolve("src.bin"), "v1")
     }
-    // dirs directly under the tmpdir that the cache must never touch: a
-    // scratch dir named like an artifact family, and an entry of the
-    // old `<tmpdir>/graft_<family>_<token>/` layout with its marks
-    val scratch = tmpRoot.resolve("graft_nightly_ref123").resolve("x")
-    Files.createDirectories(scratch)
-    Files.writeString(scratch.resolve("file"), "x")
-    val legacy = tmpRoot.resolve("graft_nightly_old").resolve("sfA_1_2")
-    Files.createDirectories(legacy.resolve("READY"))
-    Files.createFile(legacy.resolve("READY").resolve("_SUCCESS"))
-    Files.writeString(legacy.resolveSibling("sfA_1_2.lock"), "")
     var builds = 0
     def ensure(family: String, token: String, sf: Path): Path =
       Paths.get(VectorOps.ensureArtifact(family, token, sf.toString,
@@ -204,9 +194,18 @@ class PqIndexSpec extends SparkSpec {
       assert(names(cur, dirs = false) == Set(s"${cur.getFileName}.lock"),
         "a deleted entry's lock file goes with it")
     }
-    val saved = sys.props("java.io.tmpdir")
-    sys.props("java.io.tmpdir") = tmpRoot.toString
-    try {
+    def withTmpRoot(body: => Unit): Unit = {
+      val saved = sys.props("java.io.tmpdir")
+      sys.props("java.io.tmpdir") = tmpRoot.toString
+      try body finally sys.props("java.io.tmpdir") = saved
+    }
+  }
+
+  test("ensureArtifact: one entry per (family, corpus) — token bumps and rewrites leave one; other corpora and lock-held siblings survive") {
+    import java.nio.file.StandardOpenOption
+    val f = new CacheFixture
+    import f._
+    withTmpRoot {
       val a1 = ensure("tst", "v1", sfA)
       assert(a1.startsWith(tmpRoot.resolve("graft_artifacts").resolve("tst")))
       val b1 = ensure("tst", "v1", sfB)
@@ -237,16 +236,33 @@ class PqIndexSpec extends SparkSpec {
       val a5 = ensure("tst", "v4", sfA)
       only(a5)
       assert(builds == 6)
-      // (5) nightly-family builds (one install, then a superseding one)
-      // leave every dir outside the cache's own tree alone
+    }
+  }
+
+  test("ensureArtifact: dirs outside the cache's own tree survive a nightly-family build; the superseded nightly entry is cleared") {
+    val f = new CacheFixture
+    import f._
+    // dirs directly under the tmpdir that the cache must never touch: a
+    // scratch dir named like an artifact family, and an entry of the
+    // old `<tmpdir>/graft_<family>_<token>/` layout with its marks
+    val scratch = tmpRoot.resolve("graft_nightly_ref123").resolve("x")
+    Files.createDirectories(scratch)
+    Files.writeString(scratch.resolve("file"), "x")
+    val legacy = tmpRoot.resolve("graft_nightly_old").resolve("sfA_1_2")
+    Files.createDirectories(legacy.resolve("READY"))
+    Files.createFile(legacy.resolve("READY").resolve("_SUCCESS"))
+    Files.writeString(legacy.resolveSibling("sfA_1_2.lock"), "")
+    withTmpRoot {
+      // one install, then a superseding one
       val n1 = ensure("nightly", "v1", sfA)
       only(ensure("nightly", "v2", sfA))
       assert(!Files.exists(n1))
+      assert(builds == 2)
       assert(Files.exists(scratch.resolve("file")),
         "a graft_nightly_… dir under the tmpdir survives")
       assert(Files.exists(readyMarker(legacy)),
         "an old-layout entry is outside the cache's tree: never swept")
-    } finally sys.props("java.io.tmpdir") = saved
+    }
   }
 
   test("buildArtifactOnce: concurrent same-JVM attempts serialize on the lock — one build, both served") {
