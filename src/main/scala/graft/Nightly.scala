@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
   * steady-state operational form). Given tonight's arriving corpus:
   *
   *  1. **Corpus publish** — content-hash diff against the current
-  *     snapshot ([[CurationOps.hashDiff]]'s presence-flag discipline,
-  *     over text AND embedding), published copy-on-write over only the
+  *     snapshot ([[IndexMaintenance.contentDiff]] over text AND
+  *     embedding), published copy-on-write over only the
   *     touched buckets via [[VersionedTable.retryingPublish]]: one
   *     diff per attempt, against that attempt's base. An arriving
   *     corpus identical to the current snapshot publishes NOTHING (the
@@ -290,9 +290,9 @@ object Nightly {
             base =>
               // touched buckets are computable from the diff IDS alone —
               // bucket is a pure function of doc_id
-              val (ups, rem) = contentDiff(
+              val (ups, rem) = IndexMaintenance.contentDiff(
                 VersionedTable.read(spark, base, roots.corpus,
-                  corpusSchema), bucketed)
+                  corpusSchema), bucketed, Seq("text", "embedding"))
               val touched = ups.select(col("bucket"))
                 .union(rem.select(pmod(col("doc_id"),
                   lit(buckets.toLong))))
@@ -520,36 +520,6 @@ object Nightly {
           s"$name at v$v but that version is not retained (vacuumed) — " +
           "size keepVersions/retainMs to cover pinned nights"))
     }
-  }
-
-  /** Presence-flag content diff over (text, embedding) — [[CurationOps
-    * .hashDiff]]'s null-safe discipline generalized to the multimodal
-    * row: a doc with null text must classify by PRESENCE, never by a
-    * null hash reading as "absent". Returns (upserts = added ∪ changed
-    * rows of `v2` incl. bucket, removed = ids only in `v1`). */
-  private[graft] def contentDiff(v1: DataFrame,
-      v2: DataFrame): (DataFrame, DataFrame) = {
-    // xxhash64 SKIPS null inputs and hashes zero elements for an empty
-    // array — both leave the running hash untouched, so (null text) vs
-    // (absent) and (embedding null) vs (embedding []) would collide and
-    // the update silently never publish (round-12 review). Explicit
-    // presence/size markers ride in the hash so those states differ,
-    // matching the classifier's null-safe struct <=> semantics.
-    def h(df: DataFrame, hc: String, fc: String) =
-      df.select(col("doc_id"),
-        xxhash64(col("text"), col("embedding"),
-          when(col("text").isNull, 1L).otherwise(0L),
-          coalesce(size(col("embedding")).cast("long"), lit(-2L))).as(hc),
-        lit(true).as(fc))
-    val d = h(v1, "h1", "in1")
-      .join(h(v2, "h2", "in2"), Seq("doc_id"), "full_outer")
-      .localCheckpoint() // consumed twice; at nightly cadence this is an
-                         // id+hash frame, far smaller than the corpus
-    val removed = d.filter(col("in2").isNull).select(col("doc_id"))
-    val upsertIds = d.filter(col("in2").isNotNull &&
-        (col("in1").isNull || !(col("h1") <=> col("h2"))))
-      .select(col("doc_id"))
-    (v2.join(upsertIds, "doc_id"), removed)
   }
 
   /** The full per-bucket grid (bootstrap path / the oracle's shape). */

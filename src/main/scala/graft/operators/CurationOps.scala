@@ -508,28 +508,6 @@ object CurationOps extends OpCatalog {
       .unionByName(base.filter(pmod(col("doc_id"), lit(101L)) === 0)
         .withColumn("doc_id", col("doc_id") + 1000000L))
 
-  /** q100's diff CLASSES as consumable frames — the honest hash-diff
-    * every maintenance consumer (q136/q138 index deltas, the streaming
-    * rollover, the maintenance specs) feeds from, in ONE definition
-    * (the [[plantedV2]] rationale: hand-copied diff logic silently
-    * desyncs). Null-safe via PRESENCE flags, not hash comparison alone:
-    * `md5(null)` is null, so a live doc with null text would look
-    * "absent" under a bare h-is-null test — the in1/in2 flags classify
-    * it correctly (its unchanged re-delivery is a no-op upsert).
-    * Returns (upserts = added ∪ changed rows of v2, removed ids). */
-  private[graft] def hashDiff(v1: DataFrame, v2: DataFrame)
-      : (DataFrame, DataFrame) = {
-    val d = v1.select(col("doc_id"), md5(col("text")).as("h1"),
-        lit(true).as("in1"))
-      .join(v2.select(col("doc_id"), md5(col("text")).as("h2"),
-        lit(true).as("in2")), Seq("doc_id"), "full_outer")
-    val removed = d.filter(col("in2").isNull).select(col("doc_id"))
-    val upsertIds = d.filter(col("in2").isNotNull &&
-      (col("in1").isNull || !(col("h1") <=> col("h2"))))
-      .select(col("doc_id"))
-    (v2.join(upsertIds, "doc_id"), removed)
-  }
-
   // --------------------------------------------------------------- q100
   /** Corpus snapshot diff — the incremental-processing primitive: given
     * crawl v1 and crawl v2, classify every doc_id as added / removed /
@@ -1445,9 +1423,9 @@ object CurationOps extends OpCatalog {
       val v1 = vtBucketed(Tables.documents(spark, sfDir))
       VersionedTable.publishFull(spark, tmp, "bucket", v1)
       val v2 = vtBucketed(plantedV2(Tables.documents(spark, sfDir)))
-      val (upserts, removed) = hashDiff(
+      val (upserts, removed) = IndexMaintenance.contentDiff(
         v1.select(col("doc_id"), col("text")),
-        v2.select(col("doc_id"), col("text")))
+        v2.select(col("doc_id"), col("text")), Seq("text"))
       // buckets containing any diff — ≤16 values, a bounded collect
       val touched = upserts.select(pmod(col("doc_id"), lit(16L)).as("b"))
         .union(removed.select(pmod(col("doc_id"), lit(16L)).as("b")))
@@ -1476,9 +1454,9 @@ object CurationOps extends OpCatalog {
     * hash-differ→an update_pre/update_post image pair, unchanged
     * suppressed). PRESENCE is the doc_id, never the hash — md5(null) is
     * null, so a null-text doc classified by `h IS NULL` would read as
-    * absent ([[hashDiff]]'s documented trap) and a bare `h1 <> h2`
-    * would suppress a null↔non-null flip; `IS DISTINCT FROM` mirrors
-    * the engine's null-safe struct equality. */
+    * absent ([[IndexMaintenance.contentDiff]]'s presence rule) and a
+    * bare `h1 <> h2` would suppress a null↔non-null flip; `IS DISTINCT
+    * FROM` mirrors the engine's null-safe struct equality. */
   private val versionedChangesSql =
     """WITH v1 AS (SELECT doc_id, md5(text) AS h1 FROM documents),
       |v2 AS (

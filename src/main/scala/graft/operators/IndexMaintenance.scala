@@ -28,8 +28,11 @@ import org.apache.spark.sql.DataFrame
   *     buckets are computable from the delta's IDS alone — no read of
   *     the old artifact needed to route the rewrite.
   *
-  * Every family reads its `(upserts, removedIds)` pair through
-  * [[keyedDelta]], so a key delivered twice lands once.
+  * A delta comes from [[contentDiff]] (two snapshots) or
+  * [[deltaFromChanges]] (a CDC feed). Every family reads its
+  * `(upserts, removedIds)` pair through [[keyedDelta]], so a key
+  * delivered twice lands once; on the serving side every family keys
+  * its query batch through [[oneQueryPerId]] by the same rule.
   * `IndexMaintenanceSpec` pins the law per family:
   * `updateFromVersioned(v1→v2) == buildVersioned(v2)` (content
   * equality; for IVF/PQ "from scratch" means re-derived under the SAME
@@ -67,6 +70,74 @@ object IndexMaintenance {
     val dropIds = removedIds.select(col(key))
       .union(upserts.select(col(key))).distinct().localCheckpoint()
     (one, dropIds)
+  }
+
+  /** A query batch keyed by `q_id`: one row per id that arrived with
+    * ONE payload (first-seen order), and the ids that arrived with two
+    * different payloads. A replayed request delivers its (q_id, payload)
+    * twice, and scoring both copies would double BM25's multiplicities
+    * and return every ANN row twice — so identical copies collapse. Two
+    * payloads under one id have no single answer: the probes reject
+    * them ([[oneQueryPerId]]), the serve streams drop them. */
+  private[graft] def keyedQueries[P](qs: Seq[(Long, P)])
+      : (Seq[(Long, P)], Set[Long]) = {
+    val one = qs.distinct
+    val conflicting = one.groupBy(_._1)
+      .collect { case (id, rows) if rows.size > 1 => id }.toSet
+    (one.filterNot(q => conflicting(q._1)), conflicting)
+  }
+
+  /** [[keyedQueries]] for a library probe: a `q_id` with two different
+    * payloads is an error that names it. */
+  private[graft] def oneQueryPerId[P](qs: Seq[(Long, P)]): Seq[(Long, P)] = {
+    val (one, conflicting) = keyedQueries(qs)
+    require(conflicting.isEmpty, "q_id " +
+      conflicting.toSeq.sorted.mkString(", ") +
+      " delivered with different payloads in one batch")
+    one
+  }
+
+  /** A `(q_id, q_emb)` vector query frame, collected driver-side — the
+    * vector families' batch payloads for [[keyedQueries]]. Batch-sized
+    * by the serve contract: never call this on a data-sized frame. */
+  private[graft] def vectorQueries(queries: DataFrame)
+      : Seq[(Long, Seq[Float])] =
+    queries.select("q_id", "q_emb").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+
+  /** The diff classes of two `doc_id`-keyed snapshots over the compared
+    * columns `cols`: (upserts = added ∪ changed rows of `v2`, removed
+    * ids = in `v1` only) — the one null-safe full-outer diff every
+    * maintenance consumer of two snapshots feeds from (the nightly's
+    * corpus step, the q136/q138 lifecycle, the q143/q144 fixture, the
+    * specs). PRESENCE decides added/removed, never a null hash, and
+    * each row's hash carries one marker per column beside its value:
+    * xxhash64 SKIPS null inputs and hashes zero elements for an empty
+    * array — both leave the running hash untouched, so (null text) vs
+    * (absent) and (embedding null) vs (embedding []) would collide and
+    * the update silently never publish. A non-array column's marker is
+    * its null flag, an array's its size (-2 when null). */
+  private[graft] def contentDiff(v1: DataFrame, v2: DataFrame,
+      cols: Seq[String]): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.ArrayType
+    def h(df: DataFrame, hc: String, fc: String) = {
+      val markers = cols.map(c => df.schema(c).dataType match {
+        case _: ArrayType => coalesce(size(col(c)).cast("long"), lit(-2L))
+        case _ => when(col(c).isNull, 1L).otherwise(0L)
+      })
+      df.select(col("doc_id"), xxhash64(cols.map(col) ++ markers: _*).as(hc),
+        lit(true).as(fc))
+    }
+    val d = h(v1, "h1", "in1")
+      .join(h(v2, "h2", "in2"), Seq("doc_id"), "full_outer")
+      .localCheckpoint() // consumed twice; an id+hash frame, far smaller
+                         // than the corpus
+    val removed = d.filter(col("in2").isNull).select(col("doc_id"))
+    val upsertIds = d.filter(col("in2").isNotNull &&
+        (col("in1").isNull || !(col("h1") <=> col("h2"))))
+      .select(col("doc_id"))
+    (v2.join(upsertIds, "doc_id"), removed)
   }
 
   /** Adapt a [[VersionedTable.changes]] CDC feed into the

@@ -119,79 +119,65 @@ object IvfIndex {
         properties = properties)
     }
 
-  /** Serve one query vector from the CURRENT snapshot: score the
-    * ≤nlist-row codebook extra, pick the `nProbe` nearest cells, and
-    * scan ONLY those cells. The cell set is computed DRIVER-SIDE (a
-    * ≤nlist-row job collecting ≤nProbe ints) and becomes literal path
-    * selection off the manifest — only the probed cells' directories are
-    * handed to the scan, never dependent on dynamic-partition-pruning
-    * heuristics (which decline small scans). This is also the 100 TB
-    * shape: a retrieval tier resolves probe sets against the (tiny,
-    * often cached) codebook first, then issues the pruned scan. One
-    * resolve covers the whole probe: a publish landing mid-probe cannot
-    * mix a new codebook with old assignments. Exact cosine top-10 inside
-    * the probed cells; `q` is a 1-row frame with column `q_emb`. The
-    * `nProbe` DEFAULT derives from the TRAINED cell count — which is ≤
-    * the requested nlist, because Lloyd can empty cells — so it can be
-    * one cell narrower than the in-query q45's width (derived from the
-    * REQUESTED nlist). Callers that need exact q45 answer parity pass
-    * nProbe explicitly (q132 and `IvfIndexSpec` do). */
+  /** Serve a BATCH of `(q_id, q_emb)` queries from the CURRENT snapshot
+    * in ONE scan — q122's query-batch frontier composed with the
+    * partition-pruned artifact probe (the shape an online retrieval
+    * tier runs at 100 TB), and the family's one serving plan: a single
+    * query is a one-query batch ([[probeVersioned]]), and
+    * [[graft.streaming.StreamingOps.ivfServeStreamVersioned]] resolves
+    * exactly this per micro-batch. ONE resolve covers codebook and
+    * assignments (a publish landing mid-probe cannot mix a new codebook
+    * with old cells). Per query the `nProbe` nearest cells are picked
+    * against the ≤nlist-row codebook DRIVER-SIDE (a tiny job collecting
+    * ≤ |queries|·nProbe (cell, q_id) pairs); the UNION of probed cells
+    * becomes literal path selection off the manifest — only those
+    * cells' directories are handed to the scan, never dependent on
+    * dynamic-partition-pruning heuristics (which decline small scans) —
+    * and the (cell, q_id) probe map rides as a broadcast routing join,
+    * so each corpus row is scored only against the queries that probed
+    * its cell. Top-`k` per query via `row_number ≤ k`, which Spark runs
+    * as a map-side `WindowGroupLimit` frontier (q122's law): the q_id
+    * exchange carries ≤ k·|queries|·partitions rows regardless of
+    * corpus size. Rounded sims + vec_id tiebreak keep the frontier
+    * deterministic cross-engine. A `q_id` delivered twice with the same
+    * vector is answered once; one delivered with two different vectors
+    * is rejected ([[IndexMaintenance.oneQueryPerId]]). Returns
+    * (q_id, rnk, vec_id, sim). */
+  def probeBatchVersioned(spark: SparkSession, root: String,
+      queries: DataFrame, nProbe: Int, k: Int): DataFrame =
+    probeBatch(spark, root, queries, Some(nProbe), k)
+
+  /** One query vector (`q`: a 1-row frame with column `q_emb`): the
+    * batch plan over the one-query batch `q_id = 0`, answered as the
+    * exact cosine top-10 (vec_id, sim) inside the probed cells. The
+    * `nProbe` DEFAULT derives from the TRAINED cell count of the probed
+    * snapshot — which is ≤ the requested nlist, because Lloyd can empty
+    * cells — so it can be one cell narrower than the in-query q45's
+    * width (derived from the REQUESTED nlist). Callers that need exact
+    * q45 answer parity pass nProbe explicitly (q132 and `IvfIndexSpec`
+    * do). */
   def probeVersioned(spark: SparkSession, root: String, q: DataFrame,
-      nProbeOpt: Option[Int] = None): DataFrame = {
+      nProbeOpt: Option[Int] = None): DataFrame =
+    probeBatch(spark, root, q.select(lit(0L).as("q_id"), col("q_emb")),
+        nProbeOpt, k = 10)
+      .orderBy(col("rnk")).select(col("vec_id"), col("sim"))
+
+  /** [[probeBatchVersioned]], with an absent `nProbe` derived from the
+    * codebook of the snapshot being probed. */
+  private def probeBatch(spark: SparkSession, root: String,
+      queries: DataFrame, nProbeOpt: Option[Int], k: Int): DataFrame = {
+    import spark.implicits._
     val snap = VersionedTable.currentSnapshot(spark, root).getOrElse(
       throw new IllegalStateException(s"no IVF snapshot at $root"))
     val cb = VersionedTable.readExtra(spark, snap, root, "codebook",
       codebookSchema)
     val nProbe = nProbeOpt.getOrElse(
       AnnParams.ivfProbeCells(cb.count().toInt))
-    val cells = cb.crossJoin(broadcast(q))
-      .select(col("cell"),
-        graft.functions.VectorExpressions
-          .cosineSimilarity(col("centroid"), col("q_emb")).as("csim"))
-      .orderBy(col("csim").desc, col("cell"))
-      .limit(nProbe)
-      .collect().map(_.getInt(0)).toSeq
-    VersionedTable.read(spark, snap, root, assignmentsSchema,
-        wanted = Some(cells))
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        roundVal(graft.functions.VectorExpressions
-          .cosineSimilarity(col("embedding"), col("q_emb")), 4).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(10)
-  }
-
-  /** Batched serving — q122's query-batch frontier composed with the
-    * partition-pruned artifact probe (the shape an online retrieval
-    * tier actually runs at 100 TB): a BATCH of `(q_id, q_emb)` queries
-    * against the CURRENT snapshot in ONE scan — the per-micro-batch
-    * resolve behind [[graft.streaming.StreamingOps.ivfServeStreamVersioned]]'s
-    * live rollover. ONE resolve covers codebook and assignments (a
-    * publish landing mid-probe cannot mix a new codebook with old
-    * cells). Per query the `nProbe` nearest cells are picked against the
-    * tiny codebook; the UNION of probed cells becomes literal path
-    * selection off the manifest ([[probeVersioned]]'s rationale), and
-    * the (cell, q_id) probe map rides as a broadcast routing join, so
-    * each corpus row is scored only against the queries that probed its
-    * cell. Top-`k` per query via `row_number ≤ k`, which Spark runs as a
-    * map-side `WindowGroupLimit` frontier (q122's law): the q_id
-    * exchange carries ≤ k·|queries|·partitions rows regardless of
-    * corpus size. Rounded sims + vec_id tiebreak keep the frontier
-    * deterministic cross-engine. */
-  def probeBatchVersioned(spark: SparkSession, root: String,
-      queries: DataFrame, nProbe: Int, k: Int): DataFrame = {
-    import spark.implicits._
-    val snap = VersionedTable.currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(s"no IVF snapshot at $root"))
-    val cb = VersionedTable.readExtra(spark, snap, root, "codebook",
-      codebookSchema)
+    val qs = IndexMaintenance.oneQueryPerId(
+        IndexMaintenance.vectorQueries(queries)).toDF("q_id", "q_emb")
     val probeW = Window.partitionBy(col("q_id"))
       .orderBy(col("csim").desc, col("cell"))
-    // the probe map is |queries|·nProbe (cell, q_id) pairs — resolved
-    // DRIVER-SIDE against the tiny codebook (single-probe's rationale:
-    // literal path selection, not a DPP heuristic), then re-broadcast as
-    // a local relation for the per-query routing join
-    val probed = cb.crossJoin(broadcast(queries))
+    val probed = cb.crossJoin(broadcast(qs))
       .select(col("cell"), col("q_id"),
         graft.functions.VectorExpressions
           .cosineSimilarity(col("centroid"), col("q_emb")).as("csim"))
@@ -205,7 +191,7 @@ object IvfIndex {
     VersionedTable.read(spark, snap, root, assignmentsSchema,
         wanted = Some(probed.map(_._1).distinct))
       .join(broadcast(routing), "cell") // rows meet ONLY their probers
-      .join(broadcast(queries), "q_id")
+      .join(broadcast(qs), "q_id")
       .select(col("q_id"), col("vec_id"),
         roundVal(graft.functions.VectorExpressions
           .cosineSimilarity(col("embedding"), col("q_emb")), 4).as("sim"))

@@ -361,8 +361,9 @@ object PipelineOps extends OpCatalog {
       Bm25Index.buildVersioned(spark, v1, tmp)
       val v2 = CurationOps.plantedV2(Tables.documents(spark, sfDir))
         .select(col("doc_id"), col("text"))
-      // q100's diff classes by the shared null-safe hash-diff
-      val (upserts, removed) = CurationOps.hashDiff(v1, v2)
+      // q100's diff classes by the shared null-safe content diff
+      val (upserts, removed) = IndexMaintenance.contentDiff(v1, v2,
+        Seq("text"))
       Bm25Index.updateFromVersioned(spark, tmp, upserts, removed)
       VersionedTable.compact(spark, tmp, Bm25Index.postingsSchema)
       VersionedTable.vacuum(spark, tmp, keepVersions = 1, graceMs = 0L)

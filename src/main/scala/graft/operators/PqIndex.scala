@@ -24,15 +24,15 @@ import org.apache.spark.sql.functions._
   *   `stats`    — extra: the stored-codes count (the shortlist budget)
   *
   * Serving then touches THREE sizes of data, in the right order: the
-  * m·k-row codebook becomes driver literals (the query's ADC distance
-  * table), the codes table is scanned map-only (a builtin higher-order
-  * `aggregate` of table lookups — no embeddings read, no join, no
-  * shuffle; `TakeOrderedAndProject` keeps the 100-candidate shortlist),
-  * and only the 100 survivors' raw embeddings are fetched from the
-  * corpus (vec_id equi-join, broadcast at shortlist size) for the exact
-  * re-rank. At 100 TB that is a 64×-smaller scan per query than q117's
-  * in-row encode, for the identical answer — `PqIndexSpec` pins the
-  * probe's top-10 equal to q117's on the same corpus.
+  * m·k-row codebook becomes driver-side ADC distance tables (one per
+  * query, broadcast), the codes table is scanned map-only (a builtin
+  * higher-order `aggregate` of table lookups — no embeddings read, no
+  * shuffle below the per-query shortlist frontier), and only the
+  * shortlist survivors' raw embeddings are fetched from the corpus
+  * (vec_id equi-join) for the exact re-rank. At 100 TB that is a
+  * 64×-smaller scan per query than q117's in-row encode, for the
+  * identical answer — `PqIndexSpec` pins the probe's top-10 equal to
+  * q117's on the same corpus.
   */
 object PqIndex {
 
@@ -165,58 +165,17 @@ object PqIndex {
     }
   }
 
-  /** Serve one query from the CURRENT snapshot: ADC shortlist over the
-    * stored CODES (map-only — embeddings untouched), exact re-rank of
-    * the ≤`shortlist` survivors against `corpus` by vec_id. Returns
-    * (vec_id, adc, l2) top-10 in q117's shape. The shortlist budget
-    * defaults to the same corpus-derived size q117's in-query path uses
-    * ([[AnnParams.adcShortlist]] over the stored-codes count), keeping
-    * artifact and in-query answers identical. Codebook, codes, and the
-    * budget's count all come from ONE resolved manifest — a publish
-    * landing mid-probe cannot pair a new codebook with old codes or a
-    * stale budget. The count memo is keyed (root, version) with
-    * prior-version eviction, the [[Bm25Index]] pattern. */
-  def probeVersioned(spark: SparkSession, root: String, qv: Array[Float],
-      corpus: DataFrame, shortlistOpt: Option[Int] = None): DataFrame = {
-    val snap = VersionedTable.currentSnapshot(spark, root).getOrElse(
-      throw new IllegalStateException(s"no PQ snapshot at $root"))
-    val shortlist = shortlistOpt.getOrElse(
-      AnnParams.adcShortlist(versionedCount(spark, root, snap)))
-    val cb = VectorOps.codebookMap(
-      VersionedTable.readExtra(spark, snap, root, "codebook",
-        codebookSchema), "code")
-    require(cb.size == M, s"codebook covers ${cb.size} of $M sub-spaces")
-    val dsub = qv.length / M
-    val dt = VectorOps.adcSqTable(cb, M,
-      s => qv.slice(s * dsub, (s + 1) * dsub).map(_.toDouble))
-    val dtLit = typedlit(dt.map(_.toSeq).toSeq)
-    val adc = aggregate(sequence(lit(0), lit(M - 1)), lit(0.0),
-      (acc, s) => acc +
-        element_at(element_at(dtLit, s + 1),
-          element_at(col("codes"), s + 1) + 1))
-    val ids = VersionedTable.read(spark, snap, root, codesSchema)
-      .select(col("vec_id"), roundVal(adc, 4).as("adc"))
-      .orderBy(col("adc").asc, col("vec_id"))
-      .limit(shortlist)
-    ids.join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .select(col("vec_id"), col("adc"),
-        roundVal(VectorOps.sqDist(col("embedding"), typedlit(qv)), 4)
-          .as("l2"))
-      // sqDist NULLs length-mismatched embeddings and asc sorts nulls
-      // FIRST — without this a malformed corpus row in the shortlist
-      // would serve as the #1 result (the guard every sibling exact
-      // re-rank carries)
-      .filter(col("l2").isNotNull)
-      .orderBy(col("l2").asc, col("vec_id"))
-      .limit(10)
-  }
-
-  /** Batched serving — [[probeVersioned]]'s ADC shortlist + exact
-    * re-rank for a query BATCH in ONE codes scan, against the CURRENT
-    * snapshot — the per-micro-batch resolve behind
-    * [[graft.streaming.StreamingOps.pqServeStream]]'s live rollover.
-    * Codebook, codes, and the shortlist budget's count come from ONE
-    * resolved manifest. The per-query ADC distance tables are computed
+  /** Serve a query BATCH `(q_id, q_emb)` from the CURRENT snapshot in
+    * ONE codes scan — the family's one serving plan: a single query is a
+    * one-query batch ([[probeVersioned]]), and
+    * [[graft.streaming.StreamingOps.pqServeStream]] resolves exactly
+    * this per micro-batch. Codebook, codes, and the shortlist budget's
+    * count come from ONE resolved manifest — a publish landing
+    * mid-probe cannot pair a new codebook with old codes or a stale
+    * budget. The budget defaults to the same corpus-derived size q117's
+    * in-query path uses ([[AnnParams.adcShortlist]] over the
+    * stored-codes count), keeping artifact and in-query answers
+    * identical. The per-query ADC distance tables are computed
     * DRIVER-side against the m·k-row codebook (the batch is bounded — a
     * retrieval tier's micro-batch, not a corpus) and ride as ONE
     * broadcast (q_id, dt) block, so each stored code row is scored
@@ -232,7 +191,11 @@ object PqIndex {
     * against another version's embedding of an upserted vec_id would
     * score the wrong vector). Only the ≤ shortlist·|queries| survivors'
     * embeddings are fetched, null-filtered (a malformed corpus row must
-    * not outrank real ones). Returns (q_id, rnk, vec_id, l2). */
+    * not outrank real ones). A `q_id` delivered twice with the same
+    * vector is answered once; one delivered with two different vectors
+    * is rejected ([[IndexMaintenance.oneQueryPerId]]). Returns
+    * (q_id, rnk, vec_id, l2, adc) — the survivor's shortlist distance
+    * rides through the re-rank. */
   def probeBatchVersioned(spark: SparkSession, root: String,
       queries: DataFrame, corpusOf: Long => DataFrame, k: Int = 10,
       shortlistOpt: Option[Int] = None): DataFrame = {
@@ -244,16 +207,16 @@ object PqIndex {
         codebookSchema), "code")
     val shortlist = shortlistOpt.getOrElse(
       AnnParams.adcShortlist(versionedCount(spark, root, snap)))
-    val qs = queries.select(col("q_id"), col("q_emb")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val qs = IndexMaintenance.oneQueryPerId(
+      IndexMaintenance.vectorQueries(queries))
     require(qs.nonEmpty, "empty query batch")
     require(cb.size == M, s"codebook covers ${cb.size} of $M sub-spaces")
     val qdt = qs.map { case (qid, qv) =>
       val dsub = qv.length / M
       (qid, VectorOps.adcSqTable(cb, M,
-        s => qv.slice(s * dsub, (s + 1) * dsub).map(_.toDouble))
+        s => qv.slice(s * dsub, (s + 1) * dsub).map(_.toDouble).toArray)
         .map(_.toSeq).toSeq)
-    }.toSeq.toDF("q_id", "dt")
+    }.toDF("q_id", "dt")
     val adc = aggregate(sequence(lit(0), lit(M - 1)), lit(0.0),
       (acc, s) => acc +
         element_at(element_at(col("dt"), s + 1),
@@ -265,19 +228,31 @@ object PqIndex {
       .select(col("q_id"), col("vec_id"), roundVal(adc, 4).as("adc"))
       .withColumn("srn", row_number().over(shortlistW))
       .filter(col("srn") <= shortlist)
-      .select(col("q_id"), col("vec_id"))
+      .select(col("q_id"), col("vec_id"), col("adc"))
     val rerankW = Window.partitionBy(col("q_id"))
       .orderBy(col("l2").asc, col("vec_id"))
     ids.join(corpusOf(snap.version).select(col("vec_id"), col("embedding")),
         "vec_id")
-      .join(broadcast(queries.select(col("q_id"), col("q_emb"))), "q_id")
-      .select(col("q_id"), col("vec_id"),
+      .join(broadcast(qs.toDF("q_id", "q_emb")), "q_id")
+      .select(col("q_id"), col("vec_id"), col("adc"),
         roundVal(VectorOps.sqDist(col("embedding"), col("q_emb")), 4)
           .as("l2"))
       .filter(col("l2").isNotNull)
       .withColumn("rnk", row_number().over(rerankW))
       .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id"), col("l2"))
+      .select(col("q_id"), col("rnk"), col("vec_id"), col("l2"), col("adc"))
+  }
+
+  /** One query vector: the batch plan over the one-query batch
+    * `q_id = 0`, answered as (vec_id, adc, l2) top-10 in q117's shape,
+    * the exact re-rank against `corpus`. */
+  def probeVersioned(spark: SparkSession, root: String, qv: Array[Float],
+      corpus: DataFrame, shortlistOpt: Option[Int] = None): DataFrame = {
+    import spark.implicits._
+    probeBatchVersioned(spark, root,
+        Seq((0L, qv.toSeq)).toDF("q_id", "q_emb"), _ => corpus,
+        shortlistOpt = shortlistOpt)
+      .orderBy(col("rnk")).select(col("vec_id"), col("adc"), col("l2"))
   }
 
   private val countMemo = new VersionedTable.SnapshotMemo[java.lang.Long]

@@ -1754,7 +1754,7 @@ object VectorOps extends OpCatalog {
       s"the local artifact cache requires a local default filesystem " +
         s"(got '$scheme'): on a cluster, publish index artifacts to a " +
         "shared-FS root with PqIndex/IvfIndex/Bm25Index.buildVersioned " +
-        "and probe that root with their probeVersioned")
+        "and serve that root with their probeBatchVersioned")
   }
 
   /** Artifact-served PQ probe — the import-then-query split as a DECLARED
@@ -2417,9 +2417,9 @@ object VectorOps extends OpCatalog {
     Op("q118_ivfadc", ivfAdcTopK, Some(l2LawSql),
       "ANN via IVFADC (IVF cell pruning x residual-PQ codes, FAISS IndexIVFPQ composition), declared as the law-flag oracle vs exact L2"),
     Op("q131_pq_index_probe", pqIndexProbe, Some(l2LawSql),
-      "artifact-served PQ probe: offline-built PqIndex v1 snapshot (codebook + stored codes, one manifest) serves the query via PqIndex.probeVersioned with NO training in-plan; law-flag oracle vs exact L2"),
+      "artifact-served PQ probe: offline-built PqIndex v1 snapshot (codebook + stored codes, one manifest) serves the query as a one-query PqIndex.probeBatchVersioned batch with NO training in-plan; law-flag oracle vs exact L2"),
     Op("q132_ivf_index_probe", ivfIndexProbe, Some(cosineLawSql),
-      "artifact-served IVF probe: offline-built IvfIndex v1 snapshot (codebook + cell-PARTITIONED assignments) serves via IvfIndex.probeVersioned's manifest-pruned cell scans (nlist and nProbe as q45), no training in-plan; law-flag oracle vs exact cosine"),
+      "artifact-served IVF probe: offline-built IvfIndex v1 snapshot (codebook + cell-PARTITIONED assignments) serves the query as a one-query IvfIndex.probeBatchVersioned batch over manifest-pruned cell scans (nlist and nProbe as q45), no training in-plan; law-flag oracle vs exact cosine"),
     Op("q122_batch_cosine_topk", batchCosineTopK, Some(batchCosineTopKSql),
       "batched serving: exact cosine top-5 per each of 8 broadcast query vectors in ONE corpus scan (map-side WindowGroupLimit frontier)"),
     Op("q135_batch_ivf_index_probe", batchIvfIndexProbe,

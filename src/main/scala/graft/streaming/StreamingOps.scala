@@ -744,7 +744,10 @@ object StreamingOps {
     * answered by `answer` (None = nothing answerable survived) and the
     * frame handed to `sink`. Stateless between batches by construction:
     * no watermark, no state store — every answer depends only on the
-    * artifact resolved inside `answer`. One site, one degrade
+    * artifact resolved inside `answer`, which runs the family's one
+    * serving plan (its `probeBatchVersioned`) over the batch; a `q_id`
+    * the batch carries with two different payloads drops there, a
+    * replayed identical one is answered once. One site, one degrade
     * contract. */
   private def serveLoop(queries: DataFrame, clean: DataFrame => DataFrame)(
       answer: DataFrame => Option[DataFrame])(sink: DataFrame => Unit)
@@ -759,16 +762,18 @@ object StreamingOps {
         answer(clean(batch.toDF())).foreach(sink)
       }
 
-  /** Collect a micro-batch-sized query frame ONCE and rebuild it as a
-    * local relation: the emptiness decision and the probe's query
-    * broadcast then share one driver job instead of an isEmpty take(1)
-    * plus the broadcast's own collect. Micro-batch-sized by the serve
-    * contract — never call this on a data-sized frame. */
-  private def localized(df: DataFrame): Option[DataFrame] = {
-    val rows = df.collect()
-    if (rows.isEmpty) None
-    else Some(df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema))
+  /** A vector micro-batch collected ONCE and rebuilt as a local
+    * `(q_id, q_emb)` relation: the emptiness decision and the probe's
+    * query broadcast then share one driver job instead of an isEmpty
+    * take(1) plus the broadcast's own collect. A replayed query
+    * collapses; a `q_id` delivered with two different vectors has no
+    * single answer and DEGRADES — its rows drop
+    * ([[graft.operators.IndexMaintenance.keyedQueries]]). */
+  private def vecBatch(clean: DataFrame): Option[DataFrame] = {
+    import clean.sparkSession.implicits._
+    val (qs, _) = graft.operators.IndexMaintenance.keyedQueries(
+      graft.operators.IndexMaintenance.vectorQueries(clean))
+    if (qs.isEmpty) None else Some(qs.toDF("q_id", "q_emb"))
   }
 
   /** The vector families' shared degrade rule: a query row with a null
@@ -801,7 +806,7 @@ object StreamingOps {
       nProbe: Int, k: Int)(sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     serveLoop(queries, vecQueryClean) { clean =>
-      localized(clean).map(qs => graft.operators.IvfIndex
+      vecBatch(clean).map(qs => graft.operators.IvfIndex
         .probeBatchVersioned(qs.sparkSession, root, qs, nProbe, k))
     }(sink)
 
@@ -820,7 +825,7 @@ object StreamingOps {
       corpusOf: Long => DataFrame, k: Int = 10)(sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     serveLoop(queries, vecQueryClean) { clean =>
-      localized(clean).map(qs => graft.operators.PqIndex
+      vecBatch(clean).map(qs => graft.operators.PqIndex
         .probeBatchVersioned(qs.sparkSession, root, qs, corpusOf, k))
     }(sink)
 
@@ -847,12 +852,17 @@ object StreamingOps {
       _.filter(col("q_id").isNotNull && col("terms").isNotNull)) { clean =>
       // beyond the shared row-level degrade, null/empty TOKENS inside a
       // surviving query's terms array drop; a query with no usable
-      // tokens left has no answerable terms (reservoirStream's
-      // degrade-not-abort contract)
-      val qs = clean.select("q_id", "terms").collect()
+      // tokens left has no answerable terms, and a q_id delivered with
+      // two different term multisets has no single answer — both drop
+      // (reservoirStream's degrade-not-abort contract)
+      val usable = clean.select("q_id", "terms").collect()
         .map(r => (r.getLong(0),
           r.getSeq[String](1).toSeq.filter(t => t != null && t.nonEmpty)))
         .filter(_._2.nonEmpty).toSeq
+      val (_, conflicting) = graft.operators.IndexMaintenance.keyedQueries(
+        usable.map { case (qid, ts) =>
+          qid -> graft.operators.Bm25Index.termCounts(ts) })
+      val qs = usable.filterNot(q => conflicting(q._1))
       if (qs.isEmpty) None
       else Some(graft.operators.Bm25Index.probeBatchVersioned(
         clean.sparkSession, root, qs, k))

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{Bm25Index, PipelineOps, VectorOps, VersionedTable}
+import graft.operators.{Bm25Index, CurationOps, IndexMaintenance,
+  PipelineOps, VectorOps, VersionedTable}
 import org.apache.spark.sql.functions._
 
 /** The offline BM25 posting-list artifact (q134): losslessness vs the
@@ -153,6 +154,47 @@ class Bm25IndexSpec extends SparkSpec {
     assert(batched == perQuery,
       "one batched scan must equal each query probed alone (incl. the " +
         "duplicated-term multiplicity and the shared 'spark' postings)")
+  }
+
+  test("a q_id delivered twice in one batch is answered once; two term sets under one q_id are rejected") {
+    val root = built(Tables.documents(spark, sfDir), "graft_bm25_dupq")
+    val battery = Seq(1L -> Seq("window", "spark", "stream"),
+      2L -> Seq("query", "join"))
+    def rows(qs: Seq[(Long, Seq[String])]) =
+      Bm25Index.probeBatchVersioned(spark, root, qs).collect()
+        .map(_.toSeq).toSeq
+    assert(rows(battery :+ battery.head) == rows(battery),
+      "a replayed request must not double bm25 or n_query_terms")
+    val err = intercept[IllegalArgumentException] {
+      Bm25Index.probeBatchVersioned(spark, root,
+        battery :+ (2L -> Seq("merge")))
+    }
+    assert(err.getMessage.contains("q_id 2"), err.getMessage)
+  }
+
+  test("q148 law: the graftvt-format probe == the library probe, duplicated terms, and a version pinned before a publish") {
+    def docs(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("doc_id"), col("text"))
+    val docsV1 = docs(Tables.documents(spark, sfDir))
+    val docsV2 = docs(CurationOps.plantedV2(Tables.documents(spark, sfDir)))
+    val root = built(docsV1, "graft_bm25_fmt")
+    val dupTerms = Seq("spark", "window", "spark", "stream")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq
+    // both probes resolve v1 here; the format probe runs only after v2
+    // lands, so it can reach v1 only through its versionAsOf pin
+    val wantV1 = rows(Bm25Index.probeVersioned(spark, root, dupTerms))
+    val pinnedV1 = Bm25Index.probeVersionedViaFormat(spark, root, dupTerms)
+    val (ups, rem) = IndexMaintenance.contentDiff(docsV1, docsV2, Seq("text"))
+    Bm25Index.updateFromVersioned(spark, root, ups, rem)
+    assert(rows(pinnedV1) == wantV1,
+      "the format probe must serve the version it resolved")
+    val wantV2 = rows(Bm25Index.probeVersioned(spark, root, dupTerms))
+    assert(rows(Bm25Index.probeVersionedViaFormat(spark, root, dupTerms)) ==
+      wantV2, "format and library probes must agree on the current version")
+    assert(wantV1 != wantV2, "the publish must move the answer")
+    // duplicated terms weigh per occurrence, as q133 scores them
+    assert(wantV2 == rows(PipelineOps.bm25SearchOf(docsV2, dupTerms)))
   }
 
   test("empty and degenerate corpora: build + probe degrade to empty, never throw") {

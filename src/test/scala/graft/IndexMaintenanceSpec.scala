@@ -1,7 +1,7 @@
 package graft
 
-import graft.operators.{Bm25Index, CurationOps, IvfIndex, PipelineOps,
-  PqIndex, VectorOps, VersionedTable}
+import graft.operators.{Bm25Index, CurationOps, IndexMaintenance, IvfIndex,
+  PipelineOps, PqIndex, VectorOps, VersionedTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -22,13 +22,13 @@ class IndexMaintenanceSpec extends SparkSpec {
   private def docsV2 = CurationOps.plantedV2(Tables.documents(spark, sfDir))
     .select(col("doc_id"), col("text"))
 
-  /** The diff classes computed the honest way (q100's hash diff), not
-    * read off the planting rule — maintenance consumes what a real
+  /** The diff classes computed the honest way (q100's content diff),
+    * not read off the planting rule — maintenance consumes what a real
     * snapshot-diff job emits, via the ONE shared null-safe definition
     * (a hand-copied h-is-null variant here once misclassified null-text
     * docs as absent — `md5(null)` is null). */
   private def docDiff: (DataFrame, DataFrame) =
-    CurationOps.hashDiff(docsV1, docsV2)
+    IndexMaintenance.contentDiff(docsV1, docsV2, Seq("text"))
 
   private def built(docs: DataFrame, prefix: String): String = {
     val root = tempDir(prefix).toString
@@ -283,7 +283,6 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("CDC adapter law, all three families: updateFromVersioned(deltaFromChanges(changes(v1,v2))) == build(v2)") {
-    import graft.operators.IndexMaintenance
     // ONE versioned corpus carrying both modalities (the nightly's
     // shape): text rides the doc, embedding the vector — so ONE q143
     // feed drives every family, never a per-consumer re-diff
@@ -296,7 +295,8 @@ class IndexMaintenanceSpec extends SparkSpec {
     val corpusRoot = tempDir("graft_im_cdc_corpus").toString
     VersionedTable.publishFull(spark, corpusRoot, "bucket", bucketed(v1))
     val s1 = VersionedTable.currentSnapshot(spark, corpusRoot).get
-    val (ups, rem) = Nightly.contentDiff(bucketed(v1), bucketed(v2))
+    val (ups, rem) = IndexMaintenance.contentDiff(bucketed(v1), bucketed(v2),
+      Seq("text", "embedding"))
     val touched = ups.select(col("bucket"))
       .union(rem.select(pmod(col("doc_id"), lit(16L))))
       .distinct().collect().map(_.getLong(0)).toSeq
@@ -361,7 +361,6 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("modality routing: an embedding-only re-embed night leaves the lexical index's generations UNTOUCHED, same end state") {
-    import graft.operators.IndexMaintenance
     // v2 = same text everywhere, every 10th doc re-embedded (negated
     // vector — exact in IEEE) — the nightly shape of a re-embedding run
     val emb = Tables.embeddings(spark, sfDir)
@@ -375,7 +374,8 @@ class IndexMaintenanceSpec extends SparkSpec {
     val corpusRoot = tempDir("graft_im_modal_corpus").toString
     VersionedTable.publishFull(spark, corpusRoot, "bucket", bucketed(v1))
     val s1 = VersionedTable.currentSnapshot(spark, corpusRoot).get
-    val (ups, rem) = Nightly.contentDiff(bucketed(v1), bucketed(v2))
+    val (ups, rem) = IndexMaintenance.contentDiff(bucketed(v1), bucketed(v2),
+      Seq("text", "embedding"))
     assert(rem.isEmpty && ups.count() > 0)
     val touched = ups.select(col("bucket")).distinct()
       .collect().map(_.getLong(0)).toSeq
@@ -413,7 +413,8 @@ class IndexMaintenanceSpec extends SparkSpec {
     val v3 = v2.filter(col("doc_id") =!= 1L)
       .unionByName(v2.filter(col("doc_id") === 2L)
         .withColumn("doc_id", lit(990001L)))
-    val (u3, r3) = Nightly.contentDiff(bucketed(v2), bucketed(v3))
+    val (u3, r3) = IndexMaintenance.contentDiff(bucketed(v2), bucketed(v3),
+      Seq("text", "embedding"))
     val t3 = u3.select(col("bucket"))
       .union(r3.select(pmod(col("doc_id"), lit(16L))))
       .distinct().collect().map(_.getLong(0)).toSeq

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{AnnParams, IvfIndex, VectorOps, VersionedTable}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Specs for the offline IVF artifact (versioned build/probe) and the
@@ -202,6 +203,26 @@ class IvfIndexSpec extends SparkSpec {
     assert(!plan.toLowerCase.contains("posexplode"), "no training stages")
     assert(plan.contains("WindowGroupLimit"),
       "per-query top-k must run as the map-side frontier")
+  }
+
+  test("a q_id delivered twice in one batch is answered once; two vectors under one q_id are rejected") {
+    val root = tempDir("graft_ivf_dupq").toString
+    val e = Tables.embeddings(spark, sfDir)
+    IvfIndex.buildVersioned(spark, e.filter(col("vec_id") =!= 0)
+      .select(col("vec_id"), col("embedding")), root)
+    val queries = e.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    // a multiset: a duplicated answer row must show
+    def rows(qs: DataFrame) =
+      IvfIndex.probeBatchVersioned(spark, root, qs, 3, 5).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq.sorted
+    assert(rows(queries.union(queries.filter(col("q_id") === 1L))) ==
+      rows(queries), "a replayed query must probe nProbe cells, answer once")
+    val other = e.filter(col("vec_id") === 5L)
+      .select(lit(1L).as("q_id"), col("embedding").as("q_emb"))
+    val err = intercept[IllegalArgumentException](rows(queries.union(other)))
+    assert(err.getMessage.contains("q_id 1"), err.getMessage)
   }
 
   test("q135 declared form: exact batch top-5 + green flags; aggregate floor documented-current") {

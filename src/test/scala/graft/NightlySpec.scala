@@ -388,9 +388,9 @@ class NightlySpec extends SparkSpec {
     // plant a v2 corpus delta and its feed, as the nightly does
     val v2b = corpusV2.select(col("doc_id"), col("text"), col("embedding"),
       pmod(col("doc_id"), lit(16L)).as("bucket"))
-    val (ups, rem) = Nightly.contentDiff(
+    val (ups, rem) = IndexMaintenance.contentDiff(
       VersionedTable.readCurrent(spark, roots.corpus, Nightly.corpusSchema),
-      v2b)
+      v2b, Seq("text", "embedding"))
     val touched = ups.select(col("bucket"))
       .union(rem.select(pmod(col("doc_id"), lit(16L))))
       .distinct().collect().map(_.getLong(0)).toSeq
@@ -430,9 +430,9 @@ class NightlySpec extends SparkSpec {
       col("embedding"), pmod(col("doc_id"), lit(16L)).as("bucket"))
     def publish(v: DataFrame): Unit = {
       val vb = bucketed(v)
-      val (ups, rem) = Nightly.contentDiff(
+      val (ups, rem) = IndexMaintenance.contentDiff(
         VersionedTable.readCurrent(spark, roots.corpus, Nightly.corpusSchema),
-        vb)
+        vb, Seq("text", "embedding"))
       val touched = ups.select(col("bucket"))
         .union(rem.select(pmod(col("doc_id"), lit(16L))))
         .distinct().collect().map(_.getLong(0)).toSeq

@@ -101,6 +101,26 @@ class PqIndexSpec extends SparkSpec {
     assert(codeScans == 1, s"batch must scan codes ONCE, got $codeScans")
   }
 
+  test("a q_id delivered twice in one batch is answered once; two vectors under one q_id are rejected") {
+    val root = tempDir("graft_pq_dupq").toString
+    PqIndex.buildVersioned(spark, e, root)
+    val corpus = e.filter(col("vec_id") =!= 0)
+    val queries = e.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    // a multiset: a duplicated answer row must show
+    def rows(qs: org.apache.spark.sql.DataFrame) =
+      PqIndex.probeBatchVersioned(spark, root, qs, _ => corpus, k = 5)
+        .collect().map(r =>
+          (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq.sorted
+    assert(rows(queries.union(queries.filter(col("q_id") === 1L))) ==
+      rows(queries), "a replayed query must be shortlisted and answered once")
+    val other = e.filter(col("vec_id") === 5L)
+      .select(lit(1L).as("q_id"), col("embedding").as("q_emb"))
+    val err = intercept[IllegalArgumentException](rows(queries.union(other)))
+    assert(err.getMessage.contains("q_id 1"), err.getMessage)
+  }
+
   /** A stand-in build: one data file, content numbered by build count. */
   private def writePart(tmp: String, n: Int): Unit = {
     val sub = Paths.get(tmp, "part")

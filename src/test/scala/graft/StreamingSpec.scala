@@ -793,7 +793,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming BM25 with live index rollover: a mid-stream publish serves v2 at the next batch, no restart") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    import graft.operators.{Bm25Index, CurationOps}
+    import graft.operators.{Bm25Index, CurationOps, IndexMaintenance}
     val docsV1 = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     val docsV2 = CurationOps.plantedV2(Tables.documents(spark, sfDir))
@@ -820,8 +820,9 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       val v1Served = buf.toList
       // the nightly delta publishes WHILE the stream is live — the
-      // shared hash-diff, exactly what q136/q138 apply
-      val (upserts, removed) = CurationOps.hashDiff(docsV1, docsV2)
+      // shared content diff, exactly what q136/q138 apply
+      val (upserts, removed) = IndexMaintenance.contentDiff(docsV1, docsV2,
+        Seq("text"))
       Bm25Index.updateFromVersioned(spark, root, upserts, removed)
       mem.addData(battery)
       q.processAllAvailable()
@@ -857,6 +858,63 @@ class StreamingSpec extends SparkSpec {
       assert(poisoned.nonEmpty && poisoned.forall(_._1 == 1L),
         "the clean query in a poisoned batch is answered; poison skipped")
     } finally q.stop()
+  }
+
+  test("serve streams answer a replayed request once and drop a q_id that arrives with two payloads, without stopping") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    import graft.operators.{Bm25Index, IvfIndex}
+    // BM25: one micro-batch carries q1 twice (a replayed request) and
+    // q3 with two different term lists
+    val bmRoot = tempDir("graft_bm25_replay").toString
+    Bm25Index.buildVersioned(spark, Tables.documents(spark, sfDir), bmRoot)
+    val battery = Seq(1L -> Seq("window", "spark", "stream"),
+      2L -> Seq("query", "join"))
+    val bmMem = MemoryStream[(Long, Seq[String])]
+    val bmBuf = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
+    val bq = StreamingOps.bm25ServeStream(
+        bmMem.toDS().toDF("q_id", "terms"), bmRoot) { ans =>
+      bmBuf.synchronized { bmBuf ++= ans.collect().map(_.toSeq) }
+    }.start()
+    try {
+      bmMem.addData(battery ++ Seq(battery.head, 3L -> Seq("merge"),
+        3L -> Seq("the")))
+      bq.processAllAvailable()
+      assert(bq.isActive, "a conflicting q_id must not kill the stream")
+    } finally bq.stop()
+    assert(bmBuf.toList == Bm25Index.probeBatchVersioned(spark, bmRoot,
+        battery).collect().map(_.toSeq).toList,
+      "q1 answered once, q2 answered, q3 dropped")
+    // IVF: the same replay and conflict through the vector families'
+    // shared micro-batch keying
+    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val ivfRoot = tempDir("graft_ivf_replay").toString
+    IvfIndex.buildVersioned(spark, e.filter(col("vec_id") =!= 0)
+      .select(col("vec_id"), col("embedding")), ivfRoot)
+    val rows = e.filter(col("vec_id") < 6)
+      .select(col("vec_id"), col("embedding")).orderBy(col("vec_id"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val (answered, conflict) = rows.splitAt(3)
+    val ivfMem = MemoryStream[(Long, Array[Float])]
+    val ivfBuf = scala.collection.mutable.ArrayBuffer[(Long, Int, Long, Double)]()
+    val iq = StreamingOps.ivfServeStreamVersioned(
+        ivfMem.toDS().toDF("q_id", "q_emb"), ivfRoot, 3, 5) { ans =>
+      ivfBuf.synchronized {
+        ivfBuf ++= ans.collect().map(r =>
+          (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      }
+    }.start()
+    try {
+      ivfMem.addData(answered.toSeq ++ answered.take(1) ++
+        conflict.map(r => (99L, r._2)))
+      iq.processAllAvailable()
+      assert(iq.isActive, "a conflicting q_id must not kill the stream")
+    } finally iq.stop()
+    val want = IvfIndex.probeBatchVersioned(spark, ivfRoot,
+        answered.toSeq.toDF("q_id", "q_emb"), 3, 5).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    assert(ivfBuf.toList.sorted == want.toList.sorted,
+      "the replayed query answered once, q_id 99 dropped")
   }
 
   /** Shared vector-delta fixture for the versioned-serving rollover
