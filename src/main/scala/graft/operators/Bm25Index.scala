@@ -333,33 +333,32 @@ object Bm25Index {
   /** Okapi BM25 over an already-pruned postings frame, per query: each
     * surviving posting row joins the broadcast (q_id, w, mult) block —
     * so a posting matched by several queries scores once PER QUERY,
-    * with per-query multiplicity — and the per-query top-`k` runs as
-    * `row_number ≤ k` over q_id: Spark's map-side `WindowGroupLimit`
-    * frontier, the q_id exchange carrying ≤ k·|queries|·partitions
-    * rows no matter the corpus. The frontier leaves ≤ k rows per query,
-    * so the final total order's `limit(k·|queries|)` cuts nothing: it
-    * lets Spark run it as `TakeOrderedAndProject` instead of a
-    * range-partitioned sort and its sampling job. Everything here is
-    * posting-proportional. */
+    * with per-query multiplicity — and the per-query top-`k` is the one
+    * frontier, [[IndexMaintenance.topKPerQuery]]: a one-query batch runs
+    * as `TakeOrderedAndProject` with no exchange, a larger one as the
+    * map-side `WindowGroupLimit` below the q_id exchange, which carries
+    * ≤ k·|queries|·partitions rows no matter the corpus. The frontier
+    * leaves ≤ k rows per query, so the final total order's
+    * `limit(k·|queries|)` cuts nothing: it lets Spark run it as
+    * `TakeOrderedAndProject` instead of a range-partitioned sort and its
+    * sampling job. Everything here is posting-proportional. */
   private def scoreBatch(spark: SparkSession, postings: DataFrame,
       mults: Seq[(Long, String, Long)], nDocs: Long, totalLen: Long,
       k: Int): DataFrame = {
     import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id"))
-      .orderBy(col("bm25").desc, col("doc_id"))
-    postings
+    val nQueries = mults.map(_._1).distinct.size
+    val scored = postings
       .join(broadcast(mults.toDF("q_id", "w", "mult")), "w")
       .withColumn("avgdl", lit(avgdlOf(nDocs, totalLen)))
       .groupBy(col("q_id"), col("doc_id"))
       .agg(graft.functions.Rounding.roundVal(
           sum(score(nDocs) * col("mult")), 4).as("bm25"),
         sum(col("mult")).as("n_query_terms"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    IndexMaintenance.topKPerQuery(scored, nQueries, k,
+        col("bm25").desc, col("doc_id"))
       .select(col("q_id"), col("doc_id"), col("bm25"),
         col("n_query_terms"))
       .orderBy(col("q_id"), col("bm25").desc, col("doc_id"))
-      .limit(k * mults.map(_._1).distinct.size)
+      .limit(k * nQueries)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Delta maintenance for the index-artifact family. The invariant:
   *
@@ -95,6 +95,32 @@ object IndexMaintenance {
       conflicting.toSeq.sorted.mkString(", ") +
       " delivered with different payloads in one batch")
     one
+  }
+
+  /** The per-query top-`k` of a scored `(q_id, …)` frame under `ord`,
+    * ranked `rnk` 1..k within each `q_id` — the one frontier every
+    * batch ranking (the three index families, q122, the law frames)
+    * runs. `nQueries`, the number of distinct `q_id`s in the batch the
+    * caller already holds driver-side, picks the plan, never the answer:
+    *
+    *   - one query: `orderBy(ord).limit(k)`, which Spark runs as
+    *     `TakeOrderedAndProject` (a top-k per partition, then one merge),
+    *     then `row_number` over `q_id` for `rnk` — the limit's single
+    *     output partition already satisfies the window, so the plan has
+    *     no exchange;
+    *   - several: `row_number ≤ k` over `q_id`, which Spark runs as a
+    *     map-side `WindowGroupLimit` (Partial) below the `q_id` exchange,
+    *     so the exchange carries ≤ k·|queries|·partitions rows whatever
+    *     the corpus size. */
+  private[graft] def topKPerQuery(scored: DataFrame, nQueries: Int, k: Int,
+      ord: Column*): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number}
+    val w = Window.partitionBy(col("q_id")).orderBy(ord: _*)
+    if (nQueries == 1)
+      scored.orderBy(ord: _*).limit(k).withColumn("rnk", row_number().over(w))
+    else
+      scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
   }
 
   /** A `(q_id, q_emb)` vector query frame, collected driver-side — the

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.Rounding.roundVal
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Offline IVF index artifact (E13; the precompute pattern behind q45).
@@ -135,8 +134,10 @@ object IvfIndex {
     * dynamic-partition-pruning heuristics (which decline small scans) —
     * and the (cell, q_id) probe map rides as a broadcast routing join,
     * so each corpus row is scored only against the queries that probed
-    * its cell. Top-`k` per query via `row_number ≤ k`, which Spark runs
-    * as a map-side `WindowGroupLimit` frontier (q122's law): the q_id
+    * its cell. Both the cell pick and the top-`k` are the one
+    * per-query frontier ([[IndexMaintenance.topKPerQuery]]): a one-query
+    * batch runs as `TakeOrderedAndProject` with no exchange, a larger
+    * one as the map-side `WindowGroupLimit` (q122's law), whose q_id
     * exchange carries ≤ k·|queries|·partitions rows regardless of
     * corpus size. Rounded sims + vec_id tiebreak keep the frontier
     * deterministic cross-engine. A `q_id` delivered twice with the same
@@ -173,30 +174,26 @@ object IvfIndex {
       codebookSchema)
     val nProbe = nProbeOpt.getOrElse(
       AnnParams.ivfProbeCells(cb.count().toInt))
-    val qs = IndexMaintenance.oneQueryPerId(
-        IndexMaintenance.vectorQueries(queries)).toDF("q_id", "q_emb")
-    val probeW = Window.partitionBy(col("q_id"))
-      .orderBy(col("csim").desc, col("cell"))
-    val probed = cb.crossJoin(broadcast(qs))
-      .select(col("cell"), col("q_id"),
-        graft.functions.VectorExpressions
-          .cosineSimilarity(col("centroid"), col("q_emb")).as("csim"))
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nProbe)
+    val batch = IndexMaintenance.oneQueryPerId(
+      IndexMaintenance.vectorQueries(queries))
+    val qs = batch.toDF("q_id", "q_emb")
+    val probed = IndexMaintenance.topKPerQuery(
+        cb.crossJoin(broadcast(qs)).select(col("cell"), col("q_id"),
+          graft.functions.VectorExpressions
+            .cosineSimilarity(col("centroid"), col("q_emb")).as("csim")),
+        batch.size, nProbe, col("csim").desc, col("cell"))
       .select(col("cell"), col("q_id"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
     val routing = probed.toDF("cell", "q_id")
-    val frontier = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    VersionedTable.read(spark, snap, root, assignmentsSchema,
+    val scored = VersionedTable.read(spark, snap, root, assignmentsSchema,
         wanted = Some(probed.map(_._1).distinct))
       .join(broadcast(routing), "cell") // rows meet ONLY their probers
       .join(broadcast(qs), "q_id")
       .select(col("q_id"), col("vec_id"),
         roundVal(graft.functions.VectorExpressions
           .cosineSimilarity(col("embedding"), col("q_emb")), 4).as("sim"))
-      .withColumn("rnk", row_number().over(frontier))
-      .filter(col("rnk") <= k)
+    IndexMaintenance.topKPerQuery(scored, batch.size, k,
+        col("sim").desc, col("vec_id"))
       .select(col("q_id"), col("rnk"), col("vec_id"), col("sim"))
   }
 }

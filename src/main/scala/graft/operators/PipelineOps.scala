@@ -222,11 +222,12 @@ object PipelineOps extends OpCatalog {
     * from the q134 posting-list snapshot (bucket-pruned, term-pushed,
     * no re-tokenize — the production serving path, lossless so the
     * oracle's formula ranking is exact); the VECTOR ranking is the
-    * exact cosine top-20 vs the fixed query vector (q40's scoring —
-    * exact, so the fused answer is fully DuckDB-checkable; an ANN
+    * exact cosine top-20 vs the fixed query vector, q40's one-query
+    * batch ([[VectorOps.batchCosineTopKOf]], its `rnk` the channel rank
+    * — exact, so the fused answer is fully DuckDB-checkable; an ANN
     * channel would fuse identically, rank-space fusion doesn't care
     * where ranks come from). Both channels are top-20 frames: the
-    * rank windows and the full-outer fuse run over ≤40 rows — at
+    * rank window and the full-outer fuse run over ≤40 rows — at
     * 100 TB the channels' own serving plans (pruned postings scan /
     * batched ANN frontier) carry the scale, fusion stays frontier-
     * sized. A doc missing from a channel contributes 0 from it
@@ -234,7 +235,6 @@ object PipelineOps extends OpCatalog {
     * sums of ≤2 exact small-integer reciprocals — identical bits in
     * both engines — rounded to 6dp with doc_id tiebreak. */
   def hybridRrf(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val k0 = 60
     val lex = Bm25Index.probeVersioned(spark,
         bm25Artifact(spark, sfDir, "q142"), Seq("window", "spark", "stream"))
@@ -242,16 +242,9 @@ object PipelineOps extends OpCatalog {
         Window.orderBy(col("bm25").desc, col("doc_id"))).cast("int"))
       .select(col("doc_id"), col("lex_rank"))
     val e = Tables.embeddings(spark, sfDir)
-    val q = e.filter(col("vec_id") === 0)
-      .select(col("embedding").as("q_emb"))
-    val vec = VectorOps
-      .exactCosineScoredOf(e.filter(col("vec_id") =!= 0), q)
-      .select(col("vec_id").as("doc_id"), col("sim"))
-      .orderBy(col("sim").desc, col("doc_id"))
-      .limit(20)
-      .withColumn("vec_rank", row_number().over(
-        Window.orderBy(col("sim").desc, col("doc_id"))).cast("int"))
-      .select(col("doc_id"), col("vec_rank"))
+    val vec = VectorOps.batchCosineTopKOf(e.filter(col("vec_id") =!= 0),
+        VectorOps.oneQuery(e), nQueries = 1, k = 20)
+      .select(col("vec_id").as("doc_id"), col("rnk").as("vec_rank"))
     lex.join(vec, Seq("doc_id"), "full_outer")
       .select(col("doc_id"),
         graft.functions.Rounding.roundVal(
@@ -1453,7 +1446,7 @@ object PipelineOps extends OpCatalog {
       Some(bm25BatchSql),
       "batched BM25 artifact serving: 3-query battery (overlapping vocabulary) against the q134 posting-list snapshot (Bm25Index.probeBatchVersioned) in ONE union-bucket-pruned scan -- broadcast (q_id, w, mult) block, shared postings scored once per query, map-side WindowGroupLimit per-query top-20"),
     Op("q142_hybrid_rrf", hybridRrf, Some(hybridRrfSql),
-      "hybrid retrieval via Reciprocal Rank Fusion (k0=60, Cormack et al. 2009): BM25 top-20 served off the q134 snapshot fused with exact-cosine top-20 in rank space (no score calibration across channels); full-outer fuse over frontier-sized channel answers, nullable per-channel ranks, 6dp RRF + doc_id tiebreak"),
+      "hybrid retrieval via Reciprocal Rank Fusion (k0=60, Cormack et al. 2009): BM25 top-20 served off the q134 snapshot fused with exact-cosine top-20 (q40's one-query batch plan, its rank the channel rank) in rank space (no score calibration across channels); full-outer fuse over frontier-sized channel answers, nullable per-channel ranks, 6dp RRF + doc_id tiebreak"),
     Op("q64_stratified_sample", stratifiedSample, Some(stratifiedSampleSql),
       "deterministic hash-mod stratified sampling per language"),
     Op("q65_quality_funnel", qualityFunnel, Some(qualityFunnelSql),

@@ -181,11 +181,13 @@ object PqIndex {
     * broadcast (q_id, dt) block, so each stored code row is scored
     * against every query in-row with table lookups — embeddings
     * untouched, no shuffle below the frontier. Both the shortlist and
-    * the final top-`k` run as `row_number ≤ n` per q_id — Spark's
-    * map-side `WindowGroupLimit` frontier (q122/q135's law): the q_id
-    * exchange carries ≤ n·|queries|·partitions rows regardless of
-    * corpus size. The exact re-rank needs the RAW embeddings, which the
-    * PQ artifact deliberately does not store — `corpusOf` maps the
+    * the final top-`k` are the one per-query frontier
+    * ([[IndexMaintenance.topKPerQuery]]): a one-query batch runs as
+    * `TakeOrderedAndProject` with no q_id exchange, a larger one as the
+    * map-side `WindowGroupLimit` (q122/q135's law), whose q_id exchange
+    * carries ≤ n·|queries|·partitions rows regardless of corpus size.
+    * The exact re-rank needs the RAW embeddings, which the PQ artifact
+    * deliberately does not store — `corpusOf` maps the
     * resolved snapshot VERSION to the rerank store so the caller can
     * bind embeddings that are consistent with that commit (rerank
     * against another version's embedding of an upserted vec_id would
@@ -221,25 +223,22 @@ object PqIndex {
       (acc, s) => acc +
         element_at(element_at(col("dt"), s + 1),
           element_at(col("codes"), s + 1) + 1))
-    val shortlistW = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc").asc, col("vec_id"))
-    val ids = VersionedTable.read(spark, snap, root, codesSchema)
-      .crossJoin(broadcast(qdt))
-      .select(col("q_id"), col("vec_id"), roundVal(adc, 4).as("adc"))
-      .withColumn("srn", row_number().over(shortlistW))
-      .filter(col("srn") <= shortlist)
+    val ids = IndexMaintenance.topKPerQuery(
+        VersionedTable.read(spark, snap, root, codesSchema)
+          .crossJoin(broadcast(qdt))
+          .select(col("q_id"), col("vec_id"), roundVal(adc, 4).as("adc")),
+        qs.size, shortlist, col("adc").asc, col("vec_id"))
       .select(col("q_id"), col("vec_id"), col("adc"))
-    val rerankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("l2").asc, col("vec_id"))
-    ids.join(corpusOf(snap.version).select(col("vec_id"), col("embedding")),
+    val reranked = ids
+      .join(corpusOf(snap.version).select(col("vec_id"), col("embedding")),
         "vec_id")
       .join(broadcast(qs.toDF("q_id", "q_emb")), "q_id")
       .select(col("q_id"), col("vec_id"), col("adc"),
         roundVal(VectorOps.sqDist(col("embedding"), col("q_emb")), 4)
           .as("l2"))
       .filter(col("l2").isNotNull)
-      .withColumn("rnk", row_number().over(rerankW))
-      .filter(col("rnk") <= k)
+    IndexMaintenance.topKPerQuery(reranked, qs.size, k,
+        col("l2").asc, col("vec_id"))
       .select(col("q_id"), col("rnk"), col("vec_id"), col("l2"), col("adc"))
   }
 

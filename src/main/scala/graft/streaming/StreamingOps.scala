@@ -789,7 +789,7 @@ object StreamingOps {
     * CURRENT manifest once and is answered by ONE pruned assignments
     * scan ([[graft.operators.IvfIndex.probeBatchVersioned]]: union of
     * probed cells as literal dir selection, broadcast routing join,
-    * map-side `WindowGroupLimit` frontier) — exactly what an online
+    * the one per-query frontier) — exactly what an online
     * retrieval tier does with a request queue. STATELESS between
     * batches, so against an unchanging snapshot the stream==batch law
     * is exact: the union of per-batch answers equals one big

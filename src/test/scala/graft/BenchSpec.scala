@@ -59,34 +59,39 @@ class BenchSpec extends SparkSpec {
   }
 
   test("mid-suite contention window (invisible to pre/post sentinels) self-labels contaminated") {
-    // this test MANUFACTURES its contention window; on a box already
-    // saturated by an unrelated job (ambient 1-min load beyond the core
-    // count) the clean-calibration phase is itself contaminated and the
-    // spinner adds no detectable delta — cancel rather than flake (the
-    // same condition the bench itself labels, not a code defect)
+    // this test MANUFACTURES its contention window against a baseline it
+    // calibrates in THIS session/JVM, under whatever ambient load the box
+    // carries (a suite run, sbt's own compile threads): one warm-up run
+    // keeps JIT and class loading out of the baseline, then three clean
+    // sentinel samples. Only an unsteady calibration cancels — samples
+    // more than 1.5x apart mean the baseline itself is contended (the
+    // same condition the bench labels), not a code defect.
+    // calibration direction matters per test: THIS test must DETECT a
+    // manufactured contention window, so the band is 2x the MIN clean
+    // sample (the production band is likewise ~2x the clean record; a
+    // tight band = a reliable breach) — relative slowdown, not absolute
+    // machine speed; the verdict-flip test below anchors on the median
+    // instead (loose band = a clean re-run is not flaked by one ambient
+    // burst)
+    Bench.timeNoop(spark, "q01_pricing_summary", sfDir)
+    val samples = (1 to 3).map(_ =>
+      Bench.timeNoop(spark, "q01_pricing_summary", sfDir))
+    assume(samples.max <= samples.min * 1.5,
+      s"clean q01 samples disagree by more than 1.5x: $samples")
+    val clean = samples.min
+    val band = clean * 2.0
+    // the window stays 3x oversubscribed over what the calibration ran
+    // against — the cores plus the measured ambient 1-min load — capped
+    // at 8 spinners a core
     val ambient = scala.util.Try(
       scala.io.Source.fromFile("/proc/loadavg").mkString
         .split(" ")(0).toDouble).getOrElse(0.0)
     val cores = Runtime.getRuntime.availableProcessors()
-    assume(ambient < cores.toDouble / 2,
-      s"ambient load $ambient too high to calibrate a clean baseline")
-    // calibrate: the sentinel's clean time in THIS session/JVM, then set
-    // the band at 2x it (the production band is likewise ~2x the clean
-    // record) so the assertion tracks relative slowdown, not absolute
-    // machine speed
-    // calibration direction matters per test: THIS test must DETECT a
-    // manufactured contention window, so the band anchors on the MIN
-    // clean sample (tight band = reliable breach under 3x
-    // oversubscription); the verdict-flip test below anchors on the
-    // median instead (loose band = a clean re-run is not flaked by one
-    // ambient burst)
-    val clean = (1 to 3).map(_ =>
-      Bench.timeNoop(spark, "q01_pricing_summary", sfDir)).min
-    val band = clean * 2.0
+    val nSpin = math.min(cores * 8, math.ceil(3 * (cores + ambient)).toInt)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val spinners = new java.util.concurrent.atomic.AtomicReference[Seq[Thread]](Nil)
     def startLoad(): Unit = {
-      val ts = (1 to cores * 3).map { _ =>
+      val ts = (1 to nSpin).map { _ =>
         val t = new Thread(() => {
           var x = 0L
           while (!stop.get()) { x += 1; if (x == Long.MaxValue) x = 0 }
@@ -108,9 +113,11 @@ class BenchSpec extends SparkSpec {
       assert(r.sentinels.size >= 4, "mini-suite must interleave sentinels")
       assert(r.contaminated,
         s"a 3x-oversubscribed window spanning queries 1-4 must breach a " +
-          s"mid sentinel: clean=$clean band=$band samples=${r.sentinels}")
-      info(f"clean sentinel $clean%.2f s, band $band%.2f s, " +
-        s"samples ${r.sentinels.map(s => f"$s%.2f").mkString(", ")}")
+          s"mid sentinel: clean=$clean band=$band ambient=$ambient " +
+          s"spinners=$nSpin samples=${r.sentinels}")
+      info(f"clean sentinel $clean%.2f s, band $band%.2f s, ambient " +
+        f"$ambient%.2f, $nSpin spinners, samples " +
+        r.sentinels.map(s => f"$s%.2f").mkString(", "))
     } finally stopLoad()
   }
 

@@ -190,6 +190,137 @@ class PlanRobustnessSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
   }
 
+  test("per-query frontier: one query plans TakeOrderedAndProject with no q_id exchange, a batch keeps the map-side WindowGroupLimit, at 4 and 200 shuffle partitions") {
+    // IndexMaintenance.topKPerQuery picks the frontier's plan from the
+    // batch's q_id count. One query is Spark's TakeOrderedAndProject (a
+    // top-k per partition, one merge) and needs no exchange on q_id;
+    // several keep the Partial WindowGroupLimit below the q_id exchange,
+    // so it carries <= k*queries*partitions rows. Both shapes and every
+    // answer must hold at the suite's shuffle count and at a
+    // cluster-scale 200, on the same artifacts.
+    import graft.operators.{Bm25Index, IvfIndex, PqIndex, VectorOps}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    // the frontier's exchange is hash-partitioned on q_id ALONE (BM25's
+    // per-(q_id, doc_id) aggregate shuffles for its own reason)
+    def qIdExchanges(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      nodes(p).collect { case x: ShuffleExchangeExec
+        if (x.outputPartitioning match {
+          case HashPartitioning(Seq(a: AttributeReference), _) =>
+            a.name == "q_id"
+          case _ => false
+        }) => x }
+    def hasTopK(p: SparkPlan) =
+      nodes(p).exists(_.nodeName == "TakeOrderedAndProject")
+    // a frame's rows, every plan it runs (probe-side collects, lazy
+    // checkpoints, the final collect) and its final plan; the listener
+    // bus is FIFO, so once the final collect's event arrives every
+    // earlier one has too
+    def run(build: => DataFrame): (Seq[String], Seq[SparkPlan], SparkPlan) = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+        (QueryExecution, SparkPlan)]()
+      val l = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          seen.add(qe -> qe.executedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        val df = build
+        val rows = df.collect().map(_.toString).toSeq.sorted
+        def all = seen.toArray.toSeq
+          .map(_.asInstanceOf[(QueryExecution, SparkPlan)])
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        def done = all.exists(_._1 eq df.queryExecution)
+        while (!done && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(done, "the final collect's plan never reached the listener")
+        (rows, all.map(_._2), all.find(_._1 eq df.queryExecution).get._2)
+      } finally spark.listenerManager.unregister(l)
+    }
+    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val corpus = e.filter(col("vec_id") =!= 0)
+      .select(col("vec_id"), col("embedding"))
+    val queries = e.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val q0 = e.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
+    val qv = q0.head().getSeq[Float](0).toArray
+    val ivfRoot = tempDir("graft_frontier_ivf").toString
+    IvfIndex.buildVersioned(spark, corpus, ivfRoot)
+    val pqRoot = tempDir("graft_frontier_pq").toString
+    PqIndex.buildVersioned(spark, e, pqRoot)
+    val bm25Root = tempDir("graft_frontier_bm25").toString
+    Bm25Index.buildVersioned(spark, Tables.documents(spark, sfDir), bm25Root)
+    val words = Seq("window", "spark", "stream", "the", "data", "of",
+      "and", "index")
+    val termBatch = words.indices.map(i =>
+      i.toLong -> Seq(words(i), words((i + 1) % words.size)))
+    val single = Seq[(String, () => DataFrame)](
+      "BM25 probeVersioned" -> (() =>
+        Bm25Index.probeVersioned(spark, bm25Root, words.take(3))),
+      "IVF probeVersioned" -> (() =>
+        IvfIndex.probeVersioned(spark, ivfRoot, q0)),
+      "PQ probeVersioned" -> (() =>
+        PqIndex.probeVersioned(spark, pqRoot, qv, corpus)),
+      "q40" -> (() => VectorOps.cosineTopK(spark, sfDir)),
+      "q132 law frame" -> (() => VectorOps.ivfIndexProbe(spark, sfDir)))
+    val batch = Seq[(String, () => DataFrame)](
+      "BM25 probeBatchVersioned" -> (() =>
+        Bm25Index.probeBatchVersioned(spark, bm25Root, termBatch)),
+      "IVF probeBatchVersioned" -> (() =>
+        IvfIndex.probeBatchVersioned(spark, ivfRoot, queries, 3, 5)),
+      "PQ probeBatchVersioned" -> (() =>
+        PqIndex.probeBatchVersioned(spark, pqRoot, queries, _ => corpus, 5)),
+      "q122" -> (() => VectorOps.batchCosineTopK(spark, sfDir)))
+    def check(partitions: String): Map[String, Seq[String]] = {
+      val one = single.map { case (what, f) =>
+        val (rows, plans, last) = run(f())
+        plans.foreach(p => assert(qIdExchanges(p).isEmpty,
+          s"$what at $partitions partitions: one query pays a q_id " +
+            s"exchange:\n$p"))
+        // a probe's own final plan holds its frontier; the law frame's
+        // frontiers run in its lazy checkpoints
+        val withTopK = if (what.startsWith("q132")) plans else Seq(last)
+        assert(withTopK.exists(hasTopK),
+          s"$what at $partitions partitions: no TakeOrderedAndProject:\n$last")
+        what -> rows
+      }
+      val many = batch.map { case (what, f) =>
+        val (rows, _, last) = run(f())
+        val xs = qIdExchanges(last)
+        assert(xs.nonEmpty,
+          s"$what at $partitions partitions: no q_id exchange:\n$last")
+        xs.foreach(x => assert(nodes(x.child).exists(n =>
+          n.nodeName == "WindowGroupLimit" && n.toString.contains("Partial")),
+          s"$what at $partitions partitions: no Partial WindowGroupLimit " +
+            s"below the q_id exchange:\n$last"))
+        assert(rows.nonEmpty, s"$what answered nothing")
+        what -> rows
+      }
+      (one ++ many).toMap
+    }
+    val prior = spark.conf.get("spark.sql.shuffle.partitions")
+    val before = check(prior)
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try {
+      val after = check("200")
+      before.foreach { case (what, rows) =>
+        assert(after(what) == rows,
+          s"$what: the answer depends on the shuffle partition count")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
+  }
+
   test("query catalog has no duplicate names (driver map would drop them)") {
     assert(SparkEntry.ops.map(_.name).distinct.size == SparkEntry.ops.size)
     // every oracle entry corresponds to a declared query

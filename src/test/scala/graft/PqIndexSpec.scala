@@ -38,7 +38,7 @@ class PqIndexSpec extends SparkSpec {
       .select(col("embedding")).head().getSeq[Float](0).toArray
     val fromIndex = PqIndex.probeVersioned(spark, root, qv, e).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
-    val inQuery = VectorOps.pqAdcTopKOf(e, spark, memoKey = None).collect()
+    val inQuery = VectorOps.pqAdcTopKOf(e, spark, memoKey = None).get.collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
     assert(fromIndex == inQuery,
       s"artifact probe diverged from q117:\n$fromIndex\n$inQuery")

@@ -459,7 +459,7 @@ class ScaleStressSpec extends SparkSpec {
       .toDF("q_id", "q_emb")
       .select(col("q_id"), col("q_emb").cast("array<float>").as("q_emb"))
     val frontierRows = Seq(500, 2000).map { n =>
-      val out = VectorOps.batchCosineTopKOf(corpus(n), queries, k = 5)
+      val out = VectorOps.batchCosineTopKOf(corpus(n), queries, nQueries = 8, k = 5)
       assert(out.collect().length == 8 * 5)
       val partial = allNodes(out.queryExecution.executedPlan).find(p =>
         p.nodeName.contains("WindowGroupLimit") && p.toString.contains("Partial"))

@@ -53,14 +53,14 @@ class VectorOpsSpec extends SparkSpec {
         round(VectorExpressions.cosineSimilarity(col("embedding"), col("q_emb")), 4)
           .as("sim"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val ann = VectorOps.annLshCore(spark, sfDir).collect()
+    val ann = VectorOps.annLshCore(spark, sfDir).get.collect()
       .map(r => r.getLong(0) -> r.getDouble(1))
     assert(ann.nonEmpty, "ANN should return candidates from the probe ball")
     ann.foreach { case (id, sim) =>
       assert(all(id) == sim, s"ANN sim for $id diverges from brute force")
     }
     // deterministic across runs
-    val again = VectorOps.annLshCore(spark, sfDir).collect()
+    val again = VectorOps.annLshCore(spark, sfDir).get.collect()
       .map(r => r.getLong(0) -> r.getDouble(1))
     assert(again.toSeq == ann.toSeq)
     // the declared law-flag frame: rows are the exact top-10, flags green
@@ -93,13 +93,18 @@ class VectorOpsSpec extends SparkSpec {
     val exact = Seq((1L, 0.9), (2L, 0.8), (3L, 0.7), (4L, 0.6), (5L, 0.5),
       (6L, 0.45), (7L, 0.4), (8L, 0.35), (9L, 0.3), (10L, 0.25), (11L, 0.2))
       .toDF("vec_id", "sim")
-    def law(ann: org.apache.spark.sql.DataFrame, minHits: Int) =
-      VectorOps.annLawFrame(exact, "sim", asc = false, ann, minHits,
+    // the single-query laws' shape: a one-query batch, q_id = 0, k = 10
+    val exactQ = exact.withColumn("q_id", lit(0L))
+    def lawOf(served: Option[org.apache.spark.sql.DataFrame], minHits: Int) =
+      VectorOps.batchAnnLawFrame(exactQ, served, nQueries = 1, k = 10,
+          minHits,
           // the flag-side scorer over the same tiny exact table — what
-          // flagExactCosine/L2 do against the real corpus
-          ids => exact.join(broadcast(ids), Seq("vec_id"))
-            .select(col("vec_id"), col("sim").as("exact_score")))
+          // batchFlagExact does against the real corpus
+          pairs => exactQ.join(broadcast(pairs), Seq("q_id", "vec_id"))
+            .select(col("q_id"), col("vec_id"), col("sim").as("exact_score")))
         .select("recall_ok", "score_ok").head()
+    def law(ann: org.apache.spark.sql.DataFrame, minHits: Int) =
+      lawOf(Some(ann.withColumn("q_id", lit(0L))), minHits)
     val good = exact.filter(col("vec_id") <= 10)
     // truthful ANN answer: both flags green
     assert(law(good, 10) == org.apache.spark.sql.Row(true, true))
@@ -120,6 +125,8 @@ class VectorOpsSpec extends SparkSpec {
     // vacuously holds (nothing reported, nothing wrong)
     assert(law(good.filter(col("vec_id") < 0), 1) ==
       org.apache.spark.sql.Row(false, true))
+    // no answer at all (no query vector, nothing indexed) reads the same
+    assert(lawOf(None, 1) == org.apache.spark.sql.Row(false, true))
   }
 
   test("IVF probe returns the exact top-k of its probed cells; declared law flags hold") {
@@ -492,7 +499,7 @@ class VectorOpsSpec extends SparkSpec {
 
   test("q117 ADC + re-rank: recall >= 0.6 vs exact L2 top-10, map-only serving plan") {
     val e = Tables.embeddings(spark, sfDir)
-    val out = VectorOps.pqAdcTopKOf(e, spark, memoKey = None)
+    val out = VectorOps.pqAdcTopKOf(e, spark, memoKey = None).get
     // serving scale law: shortlist + re-rank are both TakeOrderedAndProject
     // passes with NO shuffle anywhere — codes and distance table are plan
     // literals, so nothing joins, nothing exchanges
