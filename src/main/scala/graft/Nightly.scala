@@ -17,7 +17,13 @@ import org.apache.spark.sql.types._
   *     touched buckets via [[VersionedTable.retryingPublish]]: one
   *     diff per attempt, against that attempt's base. An arriving
   *     corpus identical to the current snapshot publishes NOTHING (the
-  *     idempotence anchor).
+  *     idempotence anchor). When the [[NightPin]] at the CURRENT corpus
+  *     version records the arriving frame's [[arrivingFingerprint]],
+  *     the last completed night already published or verified exactly
+  *     these input files, so the step reports `unchanged` without the
+  *     diff and starts no Spark job (a retried or crash-resumed night).
+  *     Any corpus commit after that pin (a backfill, a compaction)
+  *     leaves no pin at the current version, and the diff runs.
   *  2. **CDC-driven index maintenance** — all three index families
   *     (BM25 / IVF / PQ) and the downstream stats grid are brought to
   *     the new corpus version off the [[VersionedTable.changes]] feed
@@ -114,9 +120,12 @@ object Nightly {
   final case class Step(component: String, action: String, version: Long,
       startS: Double = 0.0, wallS: Double = 0.0)
 
+  /** `arrivingFingerprint` is tonight's [[arrivingFingerprint]], None
+    * when the frame is ineligible (so step 1 diffed). */
   final case class Report(corpusVersion: Long, steps: Seq[Step],
       compacted: Map[String, Int],
-      pinned: Map[String, Long] = Map.empty)
+      pinned: Map[String, Long] = Map.empty,
+      arrivingFingerprint: Option[String] = None)
 
   /** A NIGHT as one consistent read set (round-13 verdict item 4): the
     * per-consumer versions the night that synced everything to
@@ -130,9 +139,17 @@ object Nightly {
     * night N+1 running concurrently changes nothing a pinned reader
     * sees (the law `NightlySpec` pins before/during/after N+1).
     * Retention applies as everywhere: a pinned version aged past
-    * `keepVersions` resolves LOUDLY, never to a different state. */
+    * `keepVersions` resolves LOUDLY, never to a different state.
+    *
+    * `arrivingFingerprint` vouches that the corpus at `corpusVersion`
+    * holds the content of the input files it identifies. It is recorded
+    * only when the version the consumers synced to is the one step 1
+    * published or verified, so a commit racing the night is never
+    * vouched for. A pin written without the field reads None, and the
+    * next night diffs. */
   final case class NightPin(corpusVersion: Long,
-      versions: Map[String, Long], committedAtMs: Long)
+      versions: Map[String, Long], committedAtMs: Long,
+      arrivingFingerprint: Option[String] = None)
 
   /** Test seam for the crash-resume law: `NightlySpec` injects a crash
     * after a named step and proves the re-run converges. */
@@ -277,10 +294,17 @@ object Nightly {
       pmod(col("doc_id"), lit(buckets.toLong)).as("bucket"))
 
     // ---- 1. corpus publish -------------------------------------------
+    // fingerprinted BEFORE anything reads `arriving`: a file rewritten
+    // during the night then differs from what the pin records
+    val fingerprint = arrivingFingerprint(spark, arriving, buckets)
     steps += timed(VersionedTable.currentSnapshot(spark, roots.corpus) match {
       case None =>
         Step("corpus", "bootstrapped", VersionedTable.publishFull(
           spark, roots.corpus, "bucket", bucketed))
+      case Some(cur) if fingerprint.isDefined && nightPin(spark,
+          roots.corpus, cur.version).flatMap(_.arrivingFingerprint) ==
+          fingerprint =>
+        Step("corpus", "unchanged", cur.version)
       case Some(_) =>
         // diff against the attempt's base (a backfill may have landed
         // since the resolve above); an empty diff commits nothing — a
@@ -409,13 +433,80 @@ object Nightly {
     // serveable states — compaction is content-identical but commits
     // new versions) and BEFORE vacuum (which retains what compaction
     // just committed, so this night's pin always resolves tonight)
-    val pin = commitNightPin(spark, roots, corpusCur.version)
+    // the fingerprint vouches only for the version step 1 (steps.head)
+    // published or verified, never for a commit that raced the night
+    val pin = commitNightPin(spark, roots, corpusCur.version,
+      fingerprint.filter(_ => steps.head.version == corpusCur.version))
     chk("pin")
     roots.all.foreach { case (_, r) =>
       VersionedTable.vacuum(spark, r, keepVersions, vacuumGraceMs)
     }
 
-    Report(corpusCur.version, steps.toSeq, compacted, pin.versions)
+    Report(corpusCur.version, steps.toSeq, compacted, pin.versions,
+      fingerprint)
+  }
+
+  /** The identity of an arriving frame: SHA-256 over its canonicalized
+    * analyzed plan (every field, no `maxFields` truncation), its output
+    * schema (canonicalization erases names, and the night selects by
+    * name), each file-source leaf's read options, the session time
+    * zone, `buckets`, and the path, length and modification time of
+    * each input file, read fresh from its FileSystem — the content the
+    * night would diff is a function of exactly these. None when it is
+    * not: a leaf that is not a file-source relation (in-memory rows,
+    * JDBC, a stream), a non-deterministic expression (the current-time
+    * functions included: fixed within a query, not across nights), a
+    * user-defined function (its body is opaque to the plan text), or an
+    * input file gone since the frame listed it. Runs no Spark job. */
+  private[graft] def arrivingFingerprint(spark: SparkSession,
+      arriving: DataFrame, buckets: Int): Option[String] = {
+    import org.apache.spark.sql.catalyst.expressions.UserDefinedExpression
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.v2.{
+      DataSourceV2Relation, FileTable}
+    import scala.jdk.CollectionConverters._
+    // a file-source leaf's read options and its listed input files
+    def fileSource(leaf: LogicalPlan)
+        : Option[(Map[String, String], Seq[String])] = leaf match {
+      case l: LogicalRelation if !l.isStreaming => l.relation match {
+        case r: HadoopFsRelation =>
+          Some(r.options -> r.location.inputFiles.toSeq)
+        case _ => None
+      }
+      case r: DataSourceV2Relation => r.table match {
+        case t: FileTable => Some(r.options.asCaseSensitiveMap.asScala
+          .toMap -> t.fileIndex.inputFiles.toSeq)
+        case _ => None
+      }
+      case _ => None
+    }
+    val plan = arriving.queryExecution.analyzed
+    val nodes = plan.collectWithSubqueries { case p => p }
+    val leaves = nodes.filter(_.children.isEmpty)
+    val sources = leaves.flatMap(fileSource)
+    val opaque = nodes.exists(_.expressions.exists(_.exists(e =>
+      !e.deterministic || e.isInstanceOf[UserDefinedExpression] ||
+        e.containsPattern(CURRENT_LIKE))))
+    if (opaque || sources.size != leaves.size) return None
+    val conf = spark.sessionState.newHadoopConf()
+    val files = try sources.flatMap(_._2).distinct.sorted.map { f =>
+      val p = new org.apache.hadoop.fs.Path(new java.net.URI(f))
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      s"$f\t${st.getLen}\t${st.getModificationTime}"
+    } catch { case _: java.io.FileNotFoundException => return None }
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    (Seq(plan.canonicalized.treeString(verbose = true, addSuffix = false,
+        maxFields = Int.MaxValue), arriving.schema.json,
+      spark.sessionState.conf.sessionLocalTimeZone, buckets.toString) ++
+      sources.map(_._1.toSeq.sorted.mkString(",")) ++ files)
+      .foreach { s =>
+        md.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        md.update(0.toByte)
+      }
+    Some(md.digest().map(b => f"${b & 0xff}%02x").mkString)
   }
 
   // ------------------------------------------------------- night pins
@@ -426,24 +517,29 @@ object Nightly {
       f"night-v$v%08d.json")
 
   /** Record the CURRENT version of every component as night
-    * `corpusVersion`'s consistent read set. Idempotent: a re-run whose
-    * resolved versions equal the existing pin writes nothing; a crash
+    * `corpusVersion`'s consistent read set, with the arriving frame's
+    * fingerprint when the night vouches for it. Idempotent: a re-run
+    * whose resolved versions equal the existing pin, and that brings no
+    * other fingerprint, writes nothing; a crash
     * between compaction and pin re-pins deterministically (the same
     * components resolve to the same versions). Atomic via
     * tmp-write + rename, the manifest commit's own pattern — there is
     * no version race to lose here (one night owns one corpus version),
     * so an existing file is replaced, not fought over. */
   private[graft] def commitNightPin(spark: SparkSession, roots: Roots,
-      corpusVersion: Long): NightPin = {
+      corpusVersion: Long, arrivingFingerprint: Option[String] = None)
+      : NightPin = {
     val versions = roots.all.map { case (name, root) =>
       name -> VersionedTable.currentSnapshot(spark, root).map(_.version)
         .getOrElse(throw new IllegalStateException(
           s"cannot pin night v$corpusVersion: component '$name' at " +
             s"$root has no committed snapshot"))
     }.toMap
-    val pin = NightPin(corpusVersion, versions, System.currentTimeMillis())
-    if (nightPin(spark, roots.corpus, corpusVersion)
-        .exists(_.versions == versions)) return pin
+    val pin = NightPin(corpusVersion, versions, System.currentTimeMillis(),
+      arrivingFingerprint)
+    if (nightPin(spark, roots.corpus, corpusVersion).exists(p =>
+        p.versions == versions && (arrivingFingerprint.isEmpty ||
+          p.arrivingFingerprint == arrivingFingerprint))) return pin
     val dir = nightsDir(roots.corpus)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(dir)
@@ -453,6 +549,7 @@ object Nightly {
     node.put("committedAtMs", pin.committedAtMs)
     val vn = node.putObject("versions")
     versions.toSeq.sortBy(_._1).foreach { case (k, v) => vn.put(k, v) }
+    arrivingFingerprint.foreach(node.put("arrivingFingerprint", _))
     val target = nightPinPath(roots.corpus, corpusVersion)
     val tmp = new org.apache.hadoop.fs.Path(dir,
       s".night-v$corpusVersion.tmp-" +
@@ -486,7 +583,9 @@ object Nightly {
       b.result()
     }.getOrElse(Map.empty[String, Long])
     Some(NightPin(node.get("corpusVersion").asLong(), vs,
-      Option(node.get("committedAtMs")).map(_.asLong()).getOrElse(0L)))
+      Option(node.get("committedAtMs")).map(_.asLong()).getOrElse(0L),
+      Option(node.get("arrivingFingerprint")).filter(_.isTextual)
+        .map(_.asText)))
   }
 
   /** Corpus versions with a committed night pin, ascending. */
@@ -608,8 +707,9 @@ object Nightly {
   }
 
   /** The CLI's one-line JSON report: `{"nightly": {corpus_version,
-    * steps, compacted, pinned}}`, map keys sorted; each step carries its
-    * `start_s`/`wall_s` to the millisecond. */
+    * steps, compacted, pinned, arriving_fingerprint}}`, map keys sorted;
+    * each step carries its `start_s`/`wall_s` to the millisecond; the
+    * fingerprint is null when the arriving frame is ineligible. */
   private[graft] def reportJson(r: Report): String = {
     import scala.jdk.CollectionConverters._
     def sorted[V](m: Map[String, V]) =
@@ -621,6 +721,8 @@ object Nightly {
           "action" -> s.action, "version" -> s.version,
           "start_s" -> ms(s.startS), "wall_s" -> ms(s.wallS)).asJava).asJava,
         "compacted" -> sorted(r.compacted),
-        "pinned" -> sorted(r.pinned)).asJava).asJava)
+        "pinned" -> sorted(r.pinned),
+        "arriving_fingerprint" -> r.arrivingFingerprint.orNull).asJava)
+        .asJava)
   }
 }

@@ -121,8 +121,12 @@ object Bm25Index {
         col("bucket"))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       sum(col("dl")).as("total_len"))
-    VersionedTable.publishFull(spark, root, "bucket", rows,
-      Map("stats" -> stats), properties)
+    // repartition by the partition column before the partitioned write,
+    // as IvfIndex does by cell: each write task emits one file per
+    // bucket it holds, so the joins' partitions would scatter every
+    // bucket dir over several files
+    VersionedTable.publishFull(spark, root, "bucket",
+      rows.repartition(col("bucket")), Map("stats" -> stats), properties)
   }
 
   /** Incremental maintenance — apply a corpus delta (q100's diff
@@ -217,15 +221,18 @@ object Bm25Index {
       val newStats = Seq((n1 - droppedDl.getLong(0) + addedDl.getLong(0),
           len1 - droppedDl.getLong(1) + addedDl.getLong(1)))
         .toDF("n_docs", "total_len")
-      VersionedTable.Delta(affectedBuckets, kept.unionByName(added),
+      // repartition before the partitioned write: [[buildVersioned]]
+      VersionedTable.Delta(affectedBuckets,
+        kept.unionByName(added).repartition(col("bucket")),
         Map("stats" -> newStats), properties)
     }
 
   /** Serve a query BATCH from the CURRENT snapshot in ONE postings
     * scan: per query the top-`k` docs by Okapi BM25 (k1=1.2, b=0.75,
     * Lucene's +1-inside-the-log IDF) in q133's exact shape — rounded
-    * score, doc_id tiebreak — as (q_id, doc_id, bm25, n_query_terms),
-    * totally ordered for the declared form. This is the family's one
+    * score, doc_id tiebreak — as (q_id, doc_id, bm25, n_query_terms,
+    * rnk), totally ordered for the declared form, `rnk` the frontier's
+    * 1..k rank within the query. This is the family's one
     * serving plan: a single query is a one-query batch
     * ([[probeVersioned]]), and [[graft.streaming.StreamingOps]] wraps
     * exactly this per micro-batch (the rollover boundary is the batch
@@ -251,10 +258,11 @@ object Bm25Index {
   }
 
   /** One keyword query: [[probeBatchVersioned]] over the one-query batch
-    * `q_id = 0`, answered as (doc_id, bm25, n_query_terms). */
+    * `q_id = 0`, answered as (doc_id, bm25, n_query_terms) — q133's
+    * columns, so its plan prunes the rank window. */
   def probeVersioned(spark: SparkSession, root: String, terms: Seq[String],
       k: Int = 20): DataFrame =
-    probeBatchVersioned(spark, root, Seq(0L -> terms), k).drop("q_id")
+    probeBatchVersioned(spark, root, Seq(0L -> terms), k).drop("q_id", "rnk")
 
   /** [[probeVersioned]] with postings AND corpus stats resolved through
     * the NAMED-FORMAT read surface (`spark.read.format("graftvt")` —
@@ -281,7 +289,8 @@ object Bm25Index {
     val postings = fmt.schema(postingsSchema).load()
       .filter(col("bucket").isin(termBuckets(spark, distinctTerms): _*))
       .filter(col("w").isin(distinctTerms: _*)) // row-level re-apply
-    scoreBatch(spark, postings, mults, nDocs, totalLen, k).drop("q_id")
+    scoreBatch(spark, postings, mults, nDocs, totalLen, k)
+      .drop("q_id", "rnk")
   }
 
   private def currentSnapshot(spark: SparkSession,
@@ -357,7 +366,7 @@ object Bm25Index {
     IndexMaintenance.topKPerQuery(scored, nQueries, k,
         col("bm25").desc, col("doc_id"))
       .select(col("q_id"), col("doc_id"), col("bm25"),
-        col("n_query_terms"))
+        col("n_query_terms"), col("rnk"))
       .orderBy(col("q_id"), col("bm25").desc, col("doc_id"))
       .limit(k * nQueries)
   }

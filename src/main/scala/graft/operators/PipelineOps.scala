@@ -167,7 +167,7 @@ object PipelineOps extends OpCatalog {
     * q134's (same family, same corpus — built once, served by both). */
   def batchBm25IndexProbe(spark: SparkSession, sfDir: String): DataFrame = {
     Bm25Index.probeBatchVersioned(spark,
-      bm25Artifact(spark, sfDir, "q139"), bm25Battery)
+      bm25Artifact(spark, sfDir, "q139"), bm25Battery).drop("rnk")
   }
 
   /** Per-query oracle blocks generated from [[bm25Battery]]: q133's
@@ -219,15 +219,16 @@ object PipelineOps extends OpCatalog {
     * retrieval stack runs over its BM25 and embedding channels,
     * because rank-space fusion needs NO score calibration between
     * channels with incomparable scales). The LEXICAL ranking is served
-    * from the q134 posting-list snapshot (bucket-pruned, term-pushed,
-    * no re-tokenize — the production serving path, lossless so the
-    * oracle's formula ranking is exact); the VECTOR ranking is the
-    * exact cosine top-20 vs the fixed query vector, q40's one-query
-    * batch ([[VectorOps.batchCosineTopKOf]], its `rnk` the channel rank
-    * — exact, so the fused answer is fully DuckDB-checkable; an ANN
+    * from the q134 posting-list snapshot as a one-query batch, its `rnk`
+    * the channel rank (bucket-pruned, term-pushed, no re-tokenize — the
+    * production serving path, lossless so the oracle's formula ranking
+    * is exact); the VECTOR ranking is the exact cosine top-20 vs the
+    * fixed query vector, q40's one-query batch
+    * ([[VectorOps.batchCosineTopKOf]], its `rnk` the channel rank —
+    * exact, so the fused answer is fully DuckDB-checkable; an ANN
     * channel would fuse identically, rank-space fusion doesn't care
-    * where ranks come from). Both channels are top-20 frames: the
-    * rank window and the full-outer fuse run over ≤40 rows — at
+    * where ranks come from). Both channels are top-20 frames ranked by
+    * their own frontier: the full-outer fuse runs over ≤40 rows — at
     * 100 TB the channels' own serving plans (pruned postings scan /
     * batched ANN frontier) carry the scale, fusion stays frontier-
     * sized. A doc missing from a channel contributes 0 from it
@@ -236,11 +237,10 @@ object PipelineOps extends OpCatalog {
     * both engines — rounded to 6dp with doc_id tiebreak. */
   def hybridRrf(spark: SparkSession, sfDir: String): DataFrame = {
     val k0 = 60
-    val lex = Bm25Index.probeVersioned(spark,
-        bm25Artifact(spark, sfDir, "q142"), Seq("window", "spark", "stream"))
-      .withColumn("lex_rank", row_number().over(
-        Window.orderBy(col("bm25").desc, col("doc_id"))).cast("int"))
-      .select(col("doc_id"), col("lex_rank"))
+    val lex = Bm25Index.probeBatchVersioned(spark,
+        bm25Artifact(spark, sfDir, "q142"),
+        Seq(0L -> Seq("window", "spark", "stream")))
+      .select(col("doc_id"), col("rnk").as("lex_rank"))
     val e = Tables.embeddings(spark, sfDir)
     val vec = VectorOps.batchCosineTopKOf(e.filter(col("vec_id") =!= 0),
         VectorOps.oneQuery(e), nQueries = 1, k = 20)

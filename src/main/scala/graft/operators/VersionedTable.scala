@@ -440,6 +440,30 @@ object VersionedTable {
     (gen, parts, stageStats(spark, genPath, partCol, rows.schema, parts))
   }
 
+  private val statsClone =
+    new java.util.concurrent.atomic.AtomicReference[SparkSession]()
+
+  /** [[stageStats]]' session: ONE clone of `spark` (shared SparkContext
+    * and catalog, PRIVATE SQLConf seeded from the builder-time
+    * SparkConf) with parquet aggregate pushdown off, reused while its
+    * SparkContext lives and replaced once that context stops. One clone,
+    * not one per publish: each session runs its tasks under its own
+    * class loader, and the codegen cache is keyed by it, so a fresh
+    * clone per publish recompiled the stats plan on every publish and
+    * every CDC stream tick. Concurrent first callers may each build a
+    * clone; one is kept, and the others serve their own call. */
+  private def statsSession(spark: SparkSession): SparkSession = {
+    val cur = statsClone.get()
+    if (cur != null && (cur.sparkContext eq spark.sparkContext) &&
+        !cur.sparkContext.isStopped) cur
+    else {
+      val clone = spark.newSession()
+      clone.conf.set("spark.sql.parquet.aggregatePushdown", "false")
+      statsClone.set(clone)
+      clone
+    }
+  }
+
   /** Compute [[ColStat]]s for every zone-map-eligible column of a
     * freshly staged generation. NaN/infinite floating bounds (NaN sorts
     * ABOVE +Inf in Spark's ordering, so a single NaN poisons max) drop
@@ -486,16 +510,12 @@ object VersionedTable {
     // (a streaming tick racing the nightly) both publish, and two
     // interleaved set/restore pairs on the shared conf can leave
     // pushdown disabled session-wide or re-enable it mid-scan. The
-    // clone's scan is still column-pruned and delta-bounded.
-    // newSession: shared SparkContext + catalog, PRIVATE SQLConf seeded
-    // from the builder-time SparkConf (shuffle partitions, timezone) —
-    // the toggle never touches the caller's session. The stats job is
-    // conf-insensitive beyond this key: explicit schema, numeric-only
-    // min/max, AQE sizes the tiny shuffle either way.
-    val statsSession = spark.newSession()
-    statsSession.conf.set("spark.sql.parquet.aggregatePushdown", "false")
+    // clone's scan is still column-pruned and delta-bounded, and the
+    // stats job is conf-insensitive beyond this key: explicit schema,
+    // numeric-only min/max, AQE sizes the tiny shuffle either way.
     val grouped =
-      statsSession.read.option("basePath", genPath.toString).schema(schema)
+      statsSession(spark).read.option("basePath", genPath.toString)
+        .schema(schema)
         .parquet(parts.map(p =>
           new org.apache.hadoop.fs.Path(genPath, p).toString): _*)
         .groupBy(col(partCol)).agg(aggs.head, aggs.tail: _*)

@@ -254,6 +254,16 @@ class NightlySpec extends SparkSpec {
     assertResumes("ivf")
   }
 
+  test("crash-resume, default gate: a crash after the pin resumes through the fingerprint fast path to the uninterrupted night's exact state") {
+    assertResumesAfter(Set("pin"), "pin") { (branch, _) =>
+      val cur = VersionedTable.currentSnapshot(spark, branch.corpus).get
+      val fp = Nightly.arrivingFingerprint(spark, corpusV2, Nightly.Buckets)
+      assert(fp.isDefined && Nightly.nightPin(spark, branch.corpus,
+          cur.version).flatMap(_.arrivingFingerprint) == fp,
+        "the crashed night pinned the fingerprint the re-run matches")
+    }
+  }
+
   test("crash-resume: kill after any step, re-run, converge to the uninterrupted night's exact state", SlowTest) {
     Seq("corpus", "ivf", "stats", "compact", "pin").foreach(assertResumes)
   }
@@ -281,13 +291,12 @@ class NightlySpec extends SparkSpec {
     }
   }
 
-  test("concurrent consumers: every job of the night carries the caller's job group, and the consumer steps overlap") {
+  /** `body`'s result and the job group of every Spark job it started,
+    * in start order: the jobs between two marker jobs (the listener bus
+    * delivers in order, so the end marker flushes every job of `body`). */
+  private def jobsDuring[A](body: => A): (A, Seq[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val (base, want, _, _) = crashWorld
-    val roots = copyRoots(base, "jobgroup")
     val sc = spark.sparkContext
-    // groups of the jobs started between the two marker jobs; the bus
-    // delivers in order, so the end marker flushes every night job
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val seen = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
@@ -304,19 +313,38 @@ class NightlySpec extends SparkSpec {
       try spark.range(1).collect() finally sc.clearJobGroup()
     }
     sc.addSparkListener(listener)
-    val night = try {
+    val a = try {
       marker("marker-begin")
-      sc.setJobGroup("nightly-law", "concurrent consumers")
-      val n = try Nightly.run(spark, roots, corpusV2, vacuumGraceMs = 0L)
-        finally sc.clearJobGroup()
+      val a = body
       marker("marker-end")
       val deadline = System.nanoTime() + 60e9.toLong
       while (seen.get < 2 && System.nanoTime() < deadline) Thread.sleep(50)
-      n
+      a
     } finally sc.removeSparkListener(listener)
     assert(seen.get == 2, "both marker jobs reached the listener")
     import scala.jdk.CollectionConverters._
-    val gs = groups.asScala.toSeq
+    (a, groups.asScala.toSeq)
+  }
+
+  /** The Spark jobs step 1 starts on `arriving`: a night injected to
+    * crash right after the corpus step, which on an unchanged corpus
+    * commits nothing. */
+  private def corpusStepJobs(roots: Nightly.Roots,
+      arriving: DataFrame): Int =
+    jobsDuring(intercept[Nightly.InjectedCrash] {
+      Nightly.run(spark, roots, arriving, vacuumGraceMs = 0L,
+        failAfter = Set("corpus"))
+    })._2.size
+
+  test("concurrent consumers: every job of the night carries the caller's job group, and the consumer steps overlap") {
+    val (base, want, _, _) = crashWorld
+    val roots = copyRoots(base, "jobgroup")
+    val sc = spark.sparkContext
+    val (night, gs) = jobsDuring {
+      sc.setJobGroup("nightly-law", "concurrent consumers")
+      try Nightly.run(spark, roots, corpusV2, vacuumGraceMs = 0L)
+      finally sc.clearJobGroup()
+    }
     assert(gs.nonEmpty && gs.forall(_ == "nightly-law"),
       s"jobs outside the caller's group: ${gs.filterNot(_ == "nightly-law")}")
     // the consumers ran at the same time: each started before any ended
@@ -524,5 +552,128 @@ class NightlySpec extends SparkSpec {
           .as("n_chars"))
       .collect().map(_.toString).toSet
     assert(st("stats")._5 == direct)
+  }
+
+  // ------------------------------------------ repeat-night fast path
+
+  test("fast path: a repeat night over file-sourced corpus v1 starts no Spark job in step 1 and reports the same versions") {
+    val roots = newRoots("fast")
+    val n1 = Nightly.run(spark, roots, corpusV1, vacuumGraceMs = 0L)
+    val fp = n1.arrivingFingerprint
+    assert(fp.isDefined, "documents join embeddings reads parquet files")
+    assert(Nightly.nightPin(spark, roots.corpus, n1.corpusVersion)
+      .flatMap(_.arrivingFingerprint) == fp)
+    val before = manifestNames(roots)
+    assert(corpusStepJobs(roots, corpusV1) == 0,
+      "a pinned fingerprint skips the corpus diff")
+    val n2 = Nightly.run(spark, roots, corpusV1, vacuumGraceMs = 0L)
+    assert(n2.steps.map(s => s.component -> s.action).toMap ==
+      Map("corpus" -> "unchanged", "bm25" -> "skipped",
+        "ivf" -> "skipped", "pq" -> "skipped", "stats" -> "skipped"))
+    assert(n2.steps.map(_.version) == n1.steps.map(_.version) &&
+      n2.pinned == n1.pinned && n2.arrivingFingerprint == fp)
+    assert(manifestNames(roots) == before)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Nightly.reportJson(n2)).get("nightly")
+    assert(json.get("arriving_fingerprint").asText() == fp.get)
+  }
+
+  test("fast path: an arriving parquet file rewritten in place (new length and mtime) makes the next night diff and publish") {
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    def partFile(dir: Path): Path = {
+      val s = Files.list(dir)
+      try s.toArray.map(_.asInstanceOf[Path]).filter(p =>
+        p.getFileName.toString.startsWith("part-")).toSeq match {
+        case Seq(one) => one
+        case other => fail(s"expected one part file in $dir: $other")
+      } finally s.close()
+    }
+    val dir = tempDir("graft_nightlyspec_arriving")
+    corpusV1.coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    val roots = newRoots("rewrite")
+    val n1 = Nightly.run(spark, roots,
+      spark.read.parquet(dir.toString), vacuumGraceMs = 0L)
+    assert(n1.arrivingFingerprint.isDefined)
+    // the same file name with v2's content: only length and mtime move
+    val v2Dir = tempDir("graft_nightlyspec_arriving_v2")
+    corpusV2.coalesce(1).write.mode("overwrite").parquet(v2Dir.toString)
+    val part = partFile(dir)
+    Files.copy(partFile(v2Dir), part, StandardCopyOption.REPLACE_EXISTING)
+    Files.deleteIfExists(part.resolveSibling(s".${part.getFileName}.crc"))
+    val arriving = spark.read.parquet(dir.toString)
+    val n2 = Nightly.run(spark, roots, arriving, vacuumGraceMs = 0L)
+    assert(n2.arrivingFingerprint.exists(_ != n1.arrivingFingerprint.get))
+    assert(n2.steps.head.action == "published", s"${n2.steps}")
+    assert(stateOf(roots)("corpus")._5 == arriving.select(col("doc_id"),
+      col("text"), col("embedding"), pmod(col("doc_id"), lit(16L))
+        .as("bucket")).collect().map(_.toString).toSet)
+  }
+
+  test("fast path: a foreign publishDelta landing after the pin makes the next night diff and revert it") {
+    val roots = newRoots("foreign")
+    Nightly.run(spark, roots, corpusV1, vacuumGraceMs = 0L)
+    val want = stateOf(roots)("corpus")._5
+    val bucket0 = VersionedTable.readCurrent(spark, roots.corpus,
+        Nightly.corpusSchema).filter(col("bucket") === 0L)
+      .withColumn("text", concat(col("text"), lit(" backfill")))
+    VersionedTable.publishDelta(spark, roots.corpus, Seq(0L), bucket0)
+    assert(stateOf(roots)("corpus")._5 != want)
+    val night = Nightly.run(spark, roots, corpusV1, vacuumGraceMs = 0L)
+    assert(night.steps.map(s => s.component -> s.action).toMap ==
+      Map("corpus" -> "published", "bm25" -> "updated",
+        "ivf" -> "updated", "pq" -> "updated", "stats" -> "updated"))
+    assert(stateOf(roots)("corpus")._5 == want,
+      "the night restores the arriving content over the backfill")
+  }
+
+  test("fast path: in-memory rows, a udf, or rand() in the arriving plan give no fingerprint, so every night diffs") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val fp = Nightly.arrivingFingerprint(spark, _: DataFrame, Nightly.Buckets)
+    assert(fp(corpusV1).isDefined)
+    assert(fp(corpusV1) == fp(corpusV1), "a re-read of the same files")
+    assert(fp(corpusV1) != Nightly.arrivingFingerprint(spark, corpusV1, 8),
+      "the bucket count is part of the identity")
+    val inMemory = spark.createDataFrame(
+      corpusV1.collect().toSeq.asJava, corpusV1.schema)
+    val same = udf((s: String) => s)
+    val ineligible = Map(
+      "in-memory rows" -> inMemory,
+      "udf" -> corpusV1.withColumn("text", same($"text")),
+      "rand()" -> corpusV1.filter(rand() >= 0.0))
+    ineligible.foreach { case (what, df) =>
+      assert(fp(df).isEmpty, s"$what must not be fingerprinted")
+    }
+    val roots = newRoots("ineligible")
+    val n1 = Nightly.run(spark, roots, inMemory, vacuumGraceMs = 0L)
+    assert(n1.arrivingFingerprint.isEmpty)
+    assert(Nightly.nightPin(spark, roots.corpus, n1.corpusVersion)
+      .exists(_.arrivingFingerprint.isEmpty))
+    ineligible.foreach { case (what, df) =>
+      assert(corpusStepJobs(roots, df) > 0, s"$what: step 1 must diff")
+    }
+  }
+
+  test("fast path: a night pin written without the fingerprint field parses and the next night diffs, then re-pins with it") {
+    val roots = newRoots("oldpin")
+    val n1 = Nightly.run(spark, roots, corpusV1, vacuumGraceMs = 0L)
+    val pinFile = java.nio.file.Paths.get(roots.corpus, "nights",
+      f"night-v${n1.corpusVersion}%08d.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(pinFile.toFile)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(node.remove("arrivingFingerprint") != null)
+    mapper.writeValue(pinFile.toFile, node)
+    // the Hadoop local FS checksums what it writes; an old writer's pin
+    // carries its own, so the stale one goes
+    java.nio.file.Files.delete(
+      pinFile.resolveSibling(s".${pinFile.getFileName}.crc"))
+    val old = Nightly.nightPin(spark, roots.corpus, n1.corpusVersion).get
+    assert(old.arrivingFingerprint.isEmpty && old.versions == n1.pinned)
+    assert(corpusStepJobs(roots, corpusV1) > 0)
+    val n2 = Nightly.run(spark, roots, corpusV1, vacuumGraceMs = 0L)
+    assert(n2.steps.head.action == "unchanged" && n2.pinned == n1.pinned)
+    assert(Nightly.nightPin(spark, roots.corpus, n1.corpusVersion)
+      .flatMap(_.arrivingFingerprint) == n1.arrivingFingerprint)
   }
 }

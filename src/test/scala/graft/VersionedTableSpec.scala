@@ -1056,6 +1056,26 @@ class VersionedTableSpec extends SparkSpec {
       s"exact decimal bounds must keep the [10.3,10.3] dir, got $kept")
   }
 
+  test("zone-map stats: repeat publishes share one stats session, so the stats plan compiles once, not once per publish") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = newRoot("statscodegen")
+    val rows = spark.range(0, 400).select(col("id").as("k"),
+      col("id").cast("string").as("v"), (col("id") % 4).cast("int")
+        .as("bucket"))
+    def compilations(body: => Any): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    def publish() = VersionedTable.publishFull(spark, root, "bucket", rows)
+    publish() // compiles whatever this JVM has not compiled yet
+    val repeats = Seq.fill(3)(compilations(publish()))
+    assert(repeats.forall(_ == 0),
+      s"a repeat publish of one frame compiles nothing new: $repeats")
+    assert(VersionedTable.currentSnapshot(spark, root).get.stats
+      .values.forall(_.contains("k")), "and its zone maps still record")
+  }
+
   test("SnapshotMemo: one entry per root — version hit, rollover replace, degenerate loads pin nothing") {
     val memo = new VersionedTable.SnapshotMemo[java.lang.Long]
     val s1 = VersionedTable.Snapshot(1L, "bucket", Map.empty, Map.empty)
