@@ -124,8 +124,7 @@ object Nightly {
     * when the frame is ineligible (so step 1 diffed). */
   final case class Report(corpusVersion: Long, steps: Seq[Step],
       compacted: Map[String, Int],
-      pinned: Map[String, Long] = Map.empty,
-      arrivingFingerprint: Option[String] = None)
+      pinned: Map[String, Long], arrivingFingerprint: Option[String])
 
   /** A NIGHT as one consistent read set (round-13 verdict item 4): the
     * per-consumer versions the night that synced everything to
@@ -149,7 +148,7 @@ object Nightly {
     * next night diffs. */
   final case class NightPin(corpusVersion: Long,
       versions: Map[String, Long], committedAtMs: Long,
-      arrivingFingerprint: Option[String] = None)
+      arrivingFingerprint: Option[String])
 
   /** Test seam for the crash-resume law: `NightlySpec` injects a crash
     * after a named step and proves the re-run converges. */
@@ -527,7 +526,7 @@ object Nightly {
     * no version race to lose here (one night owns one corpus version),
     * so an existing file is replaced, not fought over. */
   private[graft] def commitNightPin(spark: SparkSession, roots: Roots,
-      corpusVersion: Long, arrivingFingerprint: Option[String] = None)
+      corpusVersion: Long, arrivingFingerprint: Option[String])
       : NightPin = {
     val versions = roots.all.map { case (name, root) =>
       name -> VersionedTable.currentSnapshot(spark, root).map(_.version)
