@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.GraftBridge.{column => toCol, expression => toExpr}
 import org.apache.spark.sql.types._
 
@@ -218,40 +218,50 @@ object VectorExpressions {
     toCol(CosineSimilarity(toExpr(a), toExpr(b)))
   def hyperplaneBucket(v: Column, nBits: Int, planeOffset: Int = 0): Column =
     toCol(HyperplaneBucket(toExpr(v), nBits, planeOffset))
-  /** Positional index of the nearest centroid by squared L2 (FIRST
-    * minimum wins — the lowest-cell tiebreak). The centroid table rides
-    * INSIDE the expression as a reference object (the [[plane]] cache
-    * idea, per-query): one compiled loop per row instead of k separate
-    * higher-order `aggregate(zip_with(...))` columns — Catalyst runs
-    * those interpreted with per-element lambda dispatch, and a √n-cell
-    * IVF assignment built from them measured seconds of analysis +
-    * per-row overhead. Used by q118's in-row coarse assignment. */
-  case class NearestCentroid(child: Expression, cents: Array[Array[Float]])
-      extends UnaryExpression {
-    require(cents.nonEmpty, "empty centroid table")
-    // width guard precomputed ONCE from the constructor-constant table
-    // (round-9 review: recomputing the max per row was an O(k) loop on
-    // exactly the hot serving scan this expression exists to optimize)
-    private val need: Int = cents.map(_.length).max
+
+  /** How a [[NearestCentroid]] scores: `Cosine` keeps the highest
+    * [[CosineSimilarity]], `SquaredL2` the lowest `Σ (x − c)²` summed in
+    * double in index order (`VectorOps.sqDist`'s arithmetic). */
+  sealed trait Metric extends Serializable
+  case object Cosine extends Metric
+  case object SquaredL2 extends Metric
+
+  /** Position of the nearest centroid of `cents`, a codebook ordered by
+    * cell — the one compiled kernel behind every IVF and PQ assignment
+    * (training rounds, artifact builds and updates, q45's serving pass,
+    * q118's in-row coarse cell). The ≤k-row codebook rides inside the
+    * expression as a reference object, so each row runs one primitive
+    * loop. Scores compare in Spark's double order (NaN greatest,
+    * −0.0 = 0.0) and the first best wins, so the lowest cell takes a
+    * tie: the answer of Spark's `array_max`/`array_min` over
+    * (score, cell) structs, bit for bit. A null vector, one whose width
+    * differs from the codebook's, or an empty codebook gets no cell
+    * (null). */
+  case class NearestCentroid(child: Expression, cents: Array[Array[Float]],
+      metric: Metric) extends UnaryExpression {
+    require(cents.forall(_.length == cents(0).length), "ragged codebook")
+    // cosine's centroid norms, summed once exactly as CosineSimilarity
+    // sums them per row; null selects squared L2
+    private val norms: Array[Double] = metric match {
+      case Cosine => cents.map(_.foldLeft(0.0)((s, y) => s + y.toDouble * y))
+      case SquaredL2 => null
+    }
     override def dataType: DataType = IntegerType
-    // a vector SHORTER than the centroid dimension (an empty array from a
-    // failed embedder, a truncated row) degrades to null like every other
-    // malformed-input path in this file — one bad row must never abort a
-    // corpus-scale scan with an index-out-of-bounds
     override def nullable: Boolean = true
     override def nullSafeEval(input: Any): Any =
       VectorExpressions.nearestCentroidOrNull(
-        input.asInstanceOf[ArrayData], cents, need)
+        input.asInstanceOf[ArrayData], cents, norms)
     override protected def doGenCode(
         ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
         ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
         : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("cents", cents, "float[][]")
+      val centsRef = ctx.addReferenceObj("cents", cents, "float[][]")
+      val normsRef = ctx.addReferenceObj("norms", norms, "double[]")
       nullSafeCodeGen(ctx, ev, c => {
         val tmp = ctx.freshName("cell")
         s"""
-           |java.lang.Integer $tmp =
-           |  graft.functions.VectorExpressions.nearestCentroidOrNull($c, $ref, $need);
+           |java.lang.Integer $tmp = graft.functions.VectorExpressions
+           |  .nearestCentroidOrNull($c, $centsRef, $normsRef);
            |if ($tmp == null) { ${ev.isNull} = true; }
            |else { ${ev.value} = $tmp.intValue(); }
          """.stripMargin
@@ -262,28 +272,64 @@ object VectorExpressions {
     override def prettyName: String = "nearest_centroid"
   }
 
-  /** Boxed guard for NearestCentroid: null when the vector is shorter
-    * than the widest centroid (`need`, precomputed by the expression). */
-  def nearestCentroidOrNull(arr: ArrayData,
-      cents: Array[Array[Float]], need: Int): java.lang.Integer =
-    if (arr.numElements() < need) null
-    else java.lang.Integer.valueOf(nearestCentroidEval(arr, cents))
+  /** Static eval for NearestCentroid: null unless the codebook is
+    * non-empty and the vector has its width; `cosineNorms` null means
+    * squared L2. */
+  def nearestCentroidOrNull(arr: ArrayData, cents: Array[Array[Float]],
+      cosineNorms: Array[Double]): java.lang.Integer =
+    if (cents.length == 0 || arr.numElements() != cents(0).length) null
+    else java.lang.Integer.valueOf(
+      if (cosineNorms != null) nearestCosine(arr, cents, cosineNorms)
+      else nearestL2(arr, 0, cents, Array.emptyFloatArray))
 
-  /** Static eval for NearestCentroid's generated code. */
-  def nearestCentroidEval(arr: ArrayData, cents: Array[Array[Float]]): Int = {
-    var best = 0
-    var bestD = Double.MaxValue
+  /** Argmax of the cosine of `arr` to each centroid (first best wins
+    * under Spark's double order). */
+  private def nearestCosine(arr: ArrayData, cents: Array[Array[Float]],
+      norms: Array[Double]): Int = {
+    val n = arr.numElements()
+    var na = 0.0
+    var i = 0
+    while (i < n) { val x = arr.getFloat(i).toDouble; na += x * x; i += 1 }
+    var best = -1
+    var bestS = 0.0
+    var j = 0
+    while (j < cents.length) {
+      val c = cents(j)
+      var dot = 0.0
+      i = 0
+      while (i < n) { dot += arr.getFloat(i).toDouble * c(i); i += 1 }
+      val s = if (na == 0.0 || norms(j) == 0.0) 0.0
+              else dot / math.sqrt(na * norms(j))
+      if (best < 0 || SQLOrderingUtil.compareDoubles(s, bestS) > 0) {
+        best = j; bestS = s
+      }
+      j += 1
+    }
+    best
+  }
+
+  /** Argmin of the squared L2 distance from `arr[off, off + w)` minus
+    * `center[off, off + w)` (no centre when empty) to each w-wide
+    * centroid, first best winning under Spark's double order. */
+  private def nearestL2(arr: ArrayData, off: Int, cents: Array[Array[Float]],
+      center: Array[Float]): Int = {
+    val hasCenter = center.length > 0
+    var best = -1
+    var bestD = 0.0
     var j = 0
     while (j < cents.length) {
       val c = cents(j)
       var d = 0.0
       var i = 0
       while (i < c.length) {
-        val x = arr.getFloat(i).toDouble - c(i)
-        d += x * x
+        val v = arr.getFloat(off + i).toDouble -
+          (if (hasCenter) center(off + i).toDouble else 0.0) - c(i)
+        d += v * v
         i += 1
       }
-      if (d < bestD) { bestD = d; best = j }
+      if (best < 0 || SQLOrderingUtil.compareDoubles(d, bestD) < 0) {
+        best = j; bestD = d
+      }
       j += 1
     }
     best
@@ -295,13 +341,15 @@ object VectorExpressions {
     * PQ against that coarse centroid (q118/IVFADC). Codebook and distance
     * table are expression-embedded reference objects, so the whole encode
     * + lookup is ONE expression per row with tight primitive loops —
-    * replacing m·k HOF columns whose analysis alone dominated serving. */
+    * replacing m·k HOF columns whose analysis alone dominated serving.
+    * Each sub-space argmin is [[NearestCentroid]]'s squared-L2 law, and
+    * a vector whose width is not the sub-spaces' total gets null. */
   case class PqAdcScore(child: Expression, cb: Array[Array[Array[Float]]],
       dt: Array[Array[Double]], center: Array[Float])
       extends UnaryExpression {
     require(cb.nonEmpty && cb.length == dt.length, "codebook/table shape")
-    // concatenated sub-space width precomputed once (NearestCentroid's
-    // rule): the per-row guard is a single comparison
+    // concatenated sub-space width precomputed once: the per-row guard
+    // is a single comparison
     private val need: Int = cb.map(_(0).length).sum
     // the need guard only checks the INPUT vector's width — a residual
     // center shorter than the sub-space concatenation would index past
@@ -310,7 +358,6 @@ object VectorExpressions {
     require(center.isEmpty || center.length >= need,
       s"residual center width ${center.length} < sub-space total $need")
     override def dataType: DataType = DoubleType
-    // short/malformed vectors degrade to null (NearestCentroid's rule)
     override def nullable: Boolean = true
     override def nullSafeEval(input: Any): Any =
       VectorExpressions.pqAdcScoreOrNull(
@@ -337,51 +384,29 @@ object VectorExpressions {
     override def prettyName: String = "pq_adc_score"
   }
 
-  /** Boxed guard for PqAdcScore: null when the vector is shorter than
-    * the concatenated sub-space width (`need`, precomputed). */
+  /** Static eval for PqAdcScore: null unless the vector's width is the
+    * concatenated sub-space width (`need`, precomputed). */
   def pqAdcScoreOrNull(arr: ArrayData, cb: Array[Array[Array[Float]]],
       dt: Array[Array[Double]], center: Array[Float], need: Int)
       : java.lang.Double =
-    if (arr.numElements() < need) null
-    else java.lang.Double.valueOf(pqAdcScoreEval(arr, cb, dt, center))
-
-  /** Static eval for PqAdcScore's generated code. */
-  def pqAdcScoreEval(arr: ArrayData, cb: Array[Array[Array[Float]]],
-      dt: Array[Array[Double]], center: Array[Float]): Double = {
-    val hasCenter = center.length > 0
-    var total = 0.0
-    var off = 0
-    var s = 0
-    while (s < cb.length) {
-      val cells = cb(s)
-      val dsub = cells(0).length
-      var best = 0
-      var bestD = Double.MaxValue
-      var j = 0
-      while (j < cells.length) {
-        val c = cells(j)
-        var d = 0.0
-        var i = 0
-        while (i < dsub) {
-          val v = arr.getFloat(off + i).toDouble -
-            (if (hasCenter) center(off + i).toDouble else 0.0) - c(i)
-          d += v * v
-          i += 1
-        }
-        if (d < bestD) { bestD = d; best = j }
-        j += 1
+    if (arr.numElements() != need) null
+    else {
+      var total = 0.0
+      var off = 0
+      var s = 0
+      while (s < cb.length) {
+        total += dt(s)(nearestL2(arr, off, cb(s), center))
+        off += cb(s)(0).length
+        s += 1
       }
-      total += dt(s)(best)
-      off += dsub
-      s += 1
+      java.lang.Double.valueOf(total)
     }
-    total
-  }
 
   def hyperplaneBands(v: Column, bands: Int, nBits: Int): Column =
     toCol(HyperplaneBands(toExpr(v), bands, nBits))
-  def nearestCentroid(v: Column, cents: Array[Array[Float]]): Column =
-    toCol(NearestCentroid(toExpr(v), cents))
+  def nearestCentroid(v: Column, cents: Array[Array[Float]],
+      metric: Metric): Column =
+    toCol(NearestCentroid(toExpr(v), cents, metric))
   def pqAdcScore(v: Column, cb: Array[Array[Array[Float]]],
       dt: Array[Array[Double]], center: Array[Float]): Column =
     toCol(PqAdcScore(toExpr(v), cb, dt, center))

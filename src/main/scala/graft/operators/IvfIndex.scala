@@ -30,15 +30,16 @@ object IvfIndex {
     * the √n nlist rule, or the training recipe, so stale artifacts
     * built by old code are orphaned rather than served (round-8
     * advisor). v1 = codebook + cell-partitioned assignments, 3-iter
-    * Lloyd, [[AnnParams.ivfCells]] sizing. */
-  def formatTag: String = "sqrtn-lloyd3-v1"
+    * Lloyd, [[AnnParams.ivfCells]] sizing; v2 = null and off-width
+    * embeddings neither train nor get a cell. */
+  def formatTag: String = "sqrtn-lloyd3-v2"
 
   /** Train a codebook over `(vec_id, embedding)` rows. `nlist` defaults
     * to the derived ≈√n rule over THIS frame's count; callers aligning
     * with an in-query path that derived nlist from a slightly different
     * count (q132: the corpus including the query row) pass it
     * explicitly. One count + seeding + 3 Lloyd iterations;
-    * deterministic. */
+    * deterministic. The codebook comes back as a driver-local frame. */
   def train(e: DataFrame, iters: Int = 3,
       nlist: Option[Int] = None): DataFrame =
     VectorOps.ivfCodebook(e,
@@ -69,7 +70,7 @@ object IvfIndex {
   def buildVersioned(spark: SparkSession, e: DataFrame, root: String,
       iters: Int = 3, nlist: Option[Int] = None,
       properties: Map[String, String] = Map.empty): Long = {
-    val cb = train(e, iters, nlist).localCheckpoint()
+    val cb = train(e, iters, nlist)
     // repartition by the partition column before the partitioned write:
     // the map-only assignCells carries no exchange that would coalesce
     // each cell's rows — an unrepartitioned write would emit one file
@@ -101,7 +102,7 @@ object IvfIndex {
       // recomputes against the winner's state instead of dying (or
       // re-applying a diff routed by a superseded base)
       val cb = VersionedTable.readExtra(spark, snap, root, "codebook",
-        codebookSchema).localCheckpoint()
+        codebookSchema)
       val (ups, dropIds) = IndexMaintenance.keyedDelta(upserts, removedIds,
         "vec_id", Seq("embedding"))
       val old = VersionedTable.read(spark, snap, root, assignmentsSchema)

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.Rounding.roundVal
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Offline product-quantization index artifact (E13; the precompute
@@ -51,30 +50,28 @@ object PqIndex {
     * ([[VectorOps.artifactDir]]): bump the trailing version on ANY
     * change to the layout or training recipe so stale artifacts built
     * by old code are orphaned, not served. v3 = codes partitioned by
-    * the [[VBuckets]] vec_id shard for incremental maintenance. */
-  def formatTag: String = s"m${M}k${K}v3"
+    * the [[VBuckets]] vec_id shard for incremental maintenance; v4 =
+    * null and off-width embeddings neither train nor get codes. */
+  def formatTag: String = s"m${M}k${K}v4"
 
   private def vbucketCol(vecId: org.apache.spark.sql.Column) =
     pmod(xxhash64(vecId), lit(VBuckets.toLong)).cast("int")
 
-  /** Encode `(vec_id, embedding)` rows against a stored DENSE codebook
-    * `(sub, code, centroid)`: per-(vec, sub) argmin, positional codes
-    * array, vec_id shard column. Shared by [[buildVersioned]] and
-    * [[updateFromVersioned]] — the dense ids ARE the argmin cell ids
-    * here, and the dense mapping is order-preserving over the trained
-    * cell ids,
-    * so encoding against the stored codebook reproduces the build's
-    * encode bit-for-bit (lowest-cell tiebreak included). */
-  private def encodeWith(vecs: DataFrame, denseCb: DataFrame): DataFrame = {
-    val dsub = denseCb.select(size(col("centroid"))).limit(1)
-      .collect().head.getInt(0)
-    VectorOps.assignPq(VectorOps.subVectors(vecs, M, dsub),
-        denseCb.select(col("sub"), col("code").as("cell"), col("centroid")))
-      .groupBy(col("vec_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(sub, cell))), " +
-        "x -> x.cell)").as("codes"))
+  /** Encode `(vec_id, embedding)` rows against a DENSE positional
+    * codebook (per sub, centroids by code; [[VectorOps.codebookMap]]):
+    * the m codes are computed in the row ([[VectorOps.pqCodes]]),
+    * map-only, beside the vec_id shard column; a vector without codes
+    * (null or off-width) is left out. Shared by [[buildVersioned]] and
+    * [[updateFromVersioned]] — the dense mapping is order-preserving
+    * over the trained cell ids, so encoding against the stored codebook
+    * reproduces the build's encode bit-for-bit (lowest-cell tiebreak
+    * included). */
+  private def encodeWith(vecs: DataFrame,
+      cb: Map[Int, Array[Array[Float]]]): DataFrame =
+    vecs.select(col("vec_id"), VectorOps.pqCodes(col("embedding"),
+        Seq.tabulate(M)(cb(_)), cb(0)(0).length).as("codes"))
+      .filter(col("codes").isNotNull)
       .select(col("vec_id"), col("codes"), vbucketCol(col("vec_id")).as("vbucket"))
-  }
 
   /** Explicit schemas for versioned reads. */
   val codesSchema: org.apache.spark.sql.types.StructType = {
@@ -106,19 +103,20 @@ object PqIndex {
       iters: Int = 3, properties: Map[String, String] = Map.empty): Long = {
     import spark.implicits._
     val corpus = e.filter(col("vec_id") =!= 0)
-    // the width comes from a non-null row: a null embedding has no size,
-    // and which row `limit(1)` meets first depends on the plan above it
-    val dim = corpus.filter(col("embedding").isNotNull)
-      .select(size(col("embedding"))).limit(1)
-      .collect().headOption.map(_.getInt(0)).getOrElse(0)
+    // the width most rows share: neither a null embedding nor a
+    // malformed row that the scan happens to meet first can set it
+    val dim = VectorOps.modalWidth(corpus).fold(0)(_._1)
     require(dim > 0 && dim % M == 0, s"dim $dim not divisible by m=$M")
-    val cents = VectorOps.pqCodebook(e, M, dim / M, K, iters)
-    val dense = cents.withColumn("code",
-      (row_number().over(Window.partitionBy(col("sub"))
-        .orderBy(col("cell"))) - 1).cast("int"))
-      .select(col("sub"), col("code"), col("centroid"))
+    val cb = VectorOps.codebookMap(VectorOps.pqCodebook(e, M, dim / M, K,
+      iters), "cell")
+    val dense = cb.toSeq.flatMap { case (s, cents) =>
+      cents.zipWithIndex.map { case (c, code) => (s, code, c.toSeq) }
+    }.toDF("sub", "code", "centroid")
+    // repartition by the partition column before the partitioned write:
+    // the map-only encode carries no exchange, and without one every
+    // vbucket dir would get one file per encode task
+    val rows = encodeWith(corpus, cb).repartition(col("vbucket"))
       .localCheckpoint()
-    val rows = encodeWith(corpus, dense).localCheckpoint()
     VersionedTable.publishFull(spark, root, "vbucket", rows,
       Map("codebook" -> dense, "stats" -> Seq(rows.count()).toDF("n")),
       properties)
@@ -145,8 +143,8 @@ object PqIndex {
       // .updateFromVersioned]]'s rationale): the count delta in
       // particular MUST be computed against the base actually being
       // committed over, or a lost race would double-move it
-      val denseCb = VersionedTable.readExtra(spark, snap, root, "codebook",
-        codebookSchema).localCheckpoint()
+      val cb = VectorOps.codebookMap(VersionedTable.readExtra(spark, snap,
+        root, "codebook", codebookSchema), "code")
       val nOld = VersionedTable.readExtra(spark, snap, root, "stats",
         vStatsSchema).collect().head.getLong(0)
       val (ups, dropIds) = IndexMaintenance.keyedDelta(upserts, removedIds,
@@ -157,8 +155,10 @@ object PqIndex {
         wanted = Some(affectedBuckets))
       val kept = before.join(broadcast(dropIds), Seq("vec_id"), "left_anti")
         .select(col("vec_id"), col("codes"), col("vbucket"))
-      val added = encodeWith(ups, denseCb)
-      val replacement = kept.unionByName(added).localCheckpoint()
+      val added = encodeWith(ups, cb)
+      // one file per vbucket dir, as in [[buildVersioned]]
+      val replacement = kept.unionByName(added).repartition(col("vbucket"))
+        .localCheckpoint()
       val nNew = nOld - before.count() + replacement.count()
       VersionedTable.Delta(affectedBuckets, replacement,
         Map("stats" -> Seq(nNew).toDF("n")), properties)

@@ -3,7 +3,7 @@ package graft.operators
 import graft.{GraftSession, Memo, Op, OpCatalog, Tables}
 import graft.functions.VectorExpressions
 import graft.functions.Rounding.roundVal
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Embedding-similarity operators over `embeddings` (SURVEY.md §2.3 E13,
@@ -365,70 +365,68 @@ object VectorOps extends OpCatalog {
       |ORDER BY sums.label""".stripMargin
 
   // ---------------------------------------------------------------- q45
-  /** Assign each vector to its nearest codebook centroid (cosine, with a
-    * deterministic lowest-cell tiebreak). Map-only: the codebook
-    * collapses to a one-row array that broadcasts, and each corpus row
-    * folds over it with `array_max` of a lexicographic (csim, −cell,
-    * cell) struct — no shuffle, no window sort, no join-back. Returns
-    * `(vec_id, cell, embedding)`; an empty codebook assigns nothing. */
-  private[graft] def assignCells(e: DataFrame, cents: DataFrame): DataFrame = {
-    // map-only argmax (round-15, guide §2.4): the codebook collapses to a
-    // ONE-row array that broadcasts, and each corpus row folds over it
-    // in-row — the old crossJoin + groupBy(vec_id) shape shuffled the
-    // whole corpus (embedding payloads included) through an exchange on
-    // EVERY Lloyd iteration, build, update, and q45 serving pass, purely
-    // to re-group the k broadcast-expanded candidate rows it had itself
-    // created. array_max over struct(csim, neg_cell, cell) is the same
-    // lexicographic comparison as the old max(struct) aggregate (highest
-    // csim, then lowest cell via neg_cell; both use the interpreted
-    // struct ordering), so assignments are bit-identical.
-    val cbk = cents.agg(
-      collect_list(struct(col("cell"), col("centroid"))).as("cbk"))
-    e.crossJoin(broadcast(cbk))
-      .select(col("vec_id"), col("embedding"),
-        array_max(transform(col("cbk"), c => struct(
-          VectorExpressions.cosineSimilarity(col("embedding"),
-            c.getField("centroid")).as("csim"),
-          (-c.getField("cell")).as("neg_cell"),
-          c.getField("cell").as("cell")))).getField("cell").as("cell"))
-      // empty codebook → empty array → null cell: match the old
-      // crossJoin's empty-output degrade instead of emitting null rows
-      .filter(col("cell").isNotNull)
-      .select(col("vec_id"), col("cell"), col("embedding"))
-  }
+  /** A ≤k-row codebook `(cell, centroid)` as driver literals, by cell. */
+  private def collectCodebook(cents: DataFrame): Seq[(Int, Array[Float])] =
+    cents.select(col("cell"), col("centroid")).orderBy(col("cell")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).toSeq
+
+  /** `e` with `pos`, the position in `cb` of each vector's nearest
+    * centroid ([[VectorExpressions.NearestCentroid]]), rows without one
+    * left out. Filter before any lookup by `pos`: ANSI `element_at` over
+    * a literal array claims to be non-null, so a later `isNotNull` on
+    * the looked-up value would be optimized away. */
+  private def withNearest(e: DataFrame, cb: Seq[(Int, Array[Float])],
+      metric: VectorExpressions.Metric): DataFrame =
+    e.withColumn("pos", VectorExpressions.nearestCentroid(col("embedding"),
+        cb.map(_._2).toArray, metric))
+      .filter(col("pos").isNotNull)
+
+  /** Assign each vector to its nearest codebook centroid by cosine, the
+    * lowest cell taking a tie ([[VectorExpressions.NearestCentroid]] over
+    * the codebook's driver literals: map-only). Returns
+    * `(vec_id, cell, embedding)`; a vector with no cell (a null or
+    * off-width embedding, or an empty codebook) is left out. */
+  private[graft] def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
+    assignCellsOf(e, collectCodebook(cents))
+
+  private def assignCellsOf(e: DataFrame,
+      cb: Seq[(Int, Array[Float])]): DataFrame =
+    withNearest(e, cb, VectorExpressions.Cosine)
+      .select(col("vec_id"),
+        element_at(typedlit(cb.map(_._1)), col("pos") + 1).as("cell"),
+        col("embedding"))
+
+  /** The embedding width most rows share (the narrower on a tie) and
+    * that width's lowest-`vec_id` row `(vec_id, embedding)`; None when no
+    * row has an embedding. Training takes its width from here, so a few
+    * null or off-width rows can neither set it nor become a seed. */
+  private[graft] def modalWidth(e: DataFrame): Option[(Int, Row)] =
+    e.filter(col("embedding").isNotNull)
+      .groupBy(size(col("embedding")).as("w"))
+      .agg(count(lit(1)).as("n"),
+        min(struct(col("vec_id").cast("long"), col("embedding"))).as("first"))
+      .orderBy(col("n").desc, col("w")).limit(1).collect().headOption
+      .map(r => (r.getInt(0), r.getStruct(2)))
 
   /** Deterministic farthest-point (k-center greedy) seeding for the Lloyd
-    * iterations: seed 0 is the lowest vec_id; each next seed is the vector
-    * with the SMALLEST max-cosine to the seeds chosen so far (lowest-id
-    * tiebreak). RNG-free and spread-out — naive "first k ids" seeding
-    * collapses when those ids happen to share a cluster, and k-means++
-    * needs randomness. Each round is one broadcast-map pass over the corpus
-    * plus a partial-agg max; k is small, so k-1 passes is the offline
-    * training cost IVF always pays. */
-  private def farthestPointSeeds(e: DataFrame, k: Int): DataFrame = {
-    // LAZY per-round checkpoints — [[ivfCodebook]]'s round-15 note: the
-    // next round's seeds-array broadcast is the materializing action
-    var seeds = e.orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("embedding")).localCheckpoint(eager = false)
-    for (_ <- 1 until k) {
-      // map-only closeness (round-15, guide §2.4): the ≤k seeds collapse
-      // to a ONE-row array and each corpus row takes array_max of its
-      // cosines in-row — the old crossJoin + groupBy(vec_id) shuffled the
-      // corpus (with embeddings) once per seed round. array_max skips
-      // null elements exactly as the max() aggregate skipped null inputs,
-      // and the global TakeOrdered(1) on (closeness, vec_id) is
-      // unchanged, so the chosen seeds are identical.
-      val sArr = seeds.agg(collect_list(col("embedding")).as("s_embs"))
-      val next = e
-        .crossJoin(broadcast(sArr))
-        .select(col("vec_id"), col("embedding"),
-          array_max(transform(col("s_embs"), s =>
-            VectorExpressions.cosineSimilarity(col("embedding"), s)))
-            .as("closeness"))
-        .orderBy(col("closeness").asc, col("vec_id").asc)
-        .limit(1)
-        .select(col("vec_id"), col("embedding"))
-      seeds = seeds.union(next).localCheckpoint(eager = false)
+    * iterations: seed 0 is `first` (the lowest vec_id); each next seed is
+    * the vector with the SMALLEST max-cosine to the seeds chosen so far
+    * (lowest-id tiebreak). RNG-free and spread-out — naive "first k ids"
+    * seeding collapses when those ids happen to share a cluster, and
+    * k-means++ needs randomness. Each round is one map-only pass
+    * (`greatest` of the cosines to the seed literals) into a global
+    * top-1: k−1 passes, the offline training cost IVF always pays.
+    * Returns `(vec_id, embedding)` rows. */
+  private def farthestPointSeeds(corpus: DataFrame, k: Int,
+      first: Row): Seq[Row] = {
+    var seeds = Vector(first)
+    while (seeds.size < k) {
+      val cosines = seeds.map(s => VectorExpressions.cosineSimilarity(
+        col("embedding"), typedlit(s.getSeq[Float](1))))
+      val closeness =
+        if (cosines.size == 1) cosines.head else greatest(cosines: _*)
+      seeds :+= corpus.orderBy(closeness.asc, col("vec_id").asc)
+        .select(col("vec_id").cast("long"), col("embedding")).head()
     }
     seeds
   }
@@ -441,54 +439,60 @@ object VectorOps extends OpCatalog {
     * fixture, k=10⁴+ at real corpora), so beyond a small k the standard
     * compromise is a spread pseudo-random sample refined by the Lloyd
     * iterations — the same reasoning as k-means|| oversampling, minus
-    * the RNG (the hash is the fixed "randomness"). */
-  private def hashSeeds(e: DataFrame, k: Int): DataFrame =
+    * the RNG (the hash is the fixed "randomness"). Returns
+    * `(vec_id, embedding)` rows. */
+  private def hashSeeds(e: DataFrame, k: Int): Seq[Row] =
     e.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
-      .select(col("vec_id"), col("embedding"))
+      .select(col("vec_id").cast("long"), col("embedding")).collect().toSeq
 
-  /** Trained IVF coarse codebook: deterministic seeding then `iters` Lloyd
-    * iterations, all expressed as DataFrame aggregations — deterministic
-    * (no RNG anywhere; ties in assignment break to the lowest cell) and
-    * independent of any label column. Seeding is farthest-point for small
-    * k (k−1 broadcast passes, spread-optimal) and the one-pass
-    * [[hashSeeds]] sample above it. Each iteration is one assignment pass
-    * (broadcast centroids, partial-agg argmax) and one centroid update
-    * (posexplode to (cell, pos) — map-side combined, so the update shuffle
-    * carries ~k·dim partial sums, not the corpus). `localCheckpoint`
-    * truncates lineage between iterations (k rows — without it iteration i
-    * replays every prior pass each time its plan is referenced). A Lloyd
-    * round can empty a cell (no vector assigns to it); empty cells drop,
-    * so the returned codebook has ≤ k rows — callers probe whatever cells
-    * exist. */
+  /** Seeds numbered as cells: ordered by vec_id, cell = position. */
+  private def seedCells(seeds: Seq[Row]): Seq[(Int, Array[Float])] =
+    seeds.sortBy(_.getLong(0)).zipWithIndex
+      .map { case (r, cell) => (cell, r.getSeq[Float](1).toArray) }
+
+  /** One Lloyd update: the per-position mean of the assigned rows
+    * `(keys…, pos, v)`, collected as `(keys…, centroid)` per non-empty
+    * group. The sums combine map-side, so the exchange carries ~k·dim
+    * partial sums, not the corpus. */
+  private def lloydMeans(assigned: DataFrame, keys: String*): Array[Row] =
+    assigned.groupBy((keys :+ "pos").map(col): _*)
+      .agg(avg(col("v")).as("c"))
+      .groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(struct(col("pos"), col("c"))))
+        .getField("c").cast("array<float>").as("centroid"))
+      .collect()
+
+  /** Trained IVF coarse codebook `(cell, centroid)`: deterministic
+    * seeding then `iters` Lloyd iterations — no RNG anywhere, ties in
+    * assignment break to the lowest cell, independent of any label
+    * column. Null and off-width embeddings ([[modalWidth]]) are left out
+    * before seeding. Seeding is farthest-point for small k (k−1 passes,
+    * spread-optimal) and the one-pass [[hashSeeds]] sample above it. The
+    * codebook stays on the driver between rounds: each round is one
+    * map-only assignment pass and one [[lloydMeans]] update. A round can
+    * empty a cell (no vector assigns to it); empty cells drop, so the
+    * result has ≤ k rows and callers probe whatever cells exist. */
   private[graft] def ivfCodebook(e: DataFrame, k: Int, iters: Int): DataFrame = {
-    // spread before the broadcast-assignment passes (guide §2.5): each
-    // Lloyd round computes n×k cosines, and the single-row-group fixture
-    // scan would hand every round's whole pass to ONE task
-    val corpus = graft.GraftSession.spread(
-      e.filter(col("vec_id") =!= 0), col("vec_id"))
-    // LAZY per-iteration checkpoints (round-15, guide §2.4): the plan
-    // still truncates to a LogicalRDD immediately, but the materializing
-    // job moves INTO the next iteration's codebook broadcast instead of
-    // running as its own eager job — one job per Lloyd round, not two.
-    // The ≤k-row superseded iterations are left to ContextCleaner.
-    var cents = (if (k <= 16) farthestPointSeeds(corpus, k)
-                 else hashSeeds(corpus, k))
-      .withColumn("cell", (row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))) - 1)
-        .cast("int"))
-      .select(col("cell"), col("embedding").as("centroid"))
-      .localCheckpoint(eager = false)
-    for (_ <- 0 until iters) {
-      cents = assignCells(corpus, cents)
-        .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(avg(col("v")).as("c"))
-        .groupBy(col("cell"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, c))), " +
-          "x -> CAST(x.c AS FLOAT))").as("centroid"))
-        .localCheckpoint(eager = false)
-    }
-    cents
+    val base = e.filter(col("vec_id") =!= 0)
+    val modal = modalWidth(base)
+    // spread before the assignment passes (guide §2.5): each Lloyd round
+    // computes n×k cosines, and the single-row-group fixture scan would
+    // hand every round's whole pass to ONE task
+    val corpus = GraftSession.spread(
+      base.filter(size(col("embedding")) === modal.fold(0)(_._1)),
+      col("vec_id"))
+    var cb = seedCells(modal.fold(Seq.empty[Row]) { case (_, first) =>
+      if (k <= 16) farthestPointSeeds(corpus, k, first)
+      else hashSeeds(corpus, k)
+    })
+    for (_ <- 0 until iters if cb.nonEmpty)
+      cb = lloydMeans(assignCellsOf(corpus, cb)
+          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v"))),
+          "cell")
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
+        .toSeq
+    import e.sparkSession.implicits._
+    cb.map { case (c, v) => (c, v.toSeq) }.toDF("cell", "centroid")
   }
 
   /** ANN via IVF coarse quantization (E13 alternate scale path): a TRAINED
@@ -530,9 +534,9 @@ object VectorOps extends OpCatalog {
 
   /** Pure IVF probe against an already-trained codebook: the `nProbe`
     * nearest centroids to the query (≤k rows, in-plan top-n), then exact
-    * cosine top-10 within those cells only. Shared by the declared q45
-    * (codebook memoized in-session) and [[IvfIndex]]'s artifact path
-    * (codebook loaded from parquet) — training never rides in THIS plan. */
+    * cosine top-10 within those cells only — the declared q45's serving
+    * plan over its session-memoized codebook; training never rides in
+    * THIS plan. ([[IvfIndex]] serves through its own batch plan.) */
   private[graft] def ivfProbe(corpus: DataFrame, q: DataFrame,
       cents: DataFrame, nProbe: Int = 1): DataFrame = {
     val bestCells = cents.crossJoin(broadcast(q))
@@ -1031,76 +1035,56 @@ object VectorOps extends OpCatalog {
         }),
         lit(0.0), (acc, v) => acc + v))
 
-  /** One row per (vec_id, sub): the dsub-wide contiguous slice of the
-    * embedding — the sub-vector frame PQ trains on. */
-  private[graft] def subVectors(e: DataFrame, m: Int, dsub: Int): DataFrame =
-    e.select(col("vec_id"), explode(expr(
-      s"transform(sequence(0, ${m - 1}), s -> " +
-        s"struct(s AS sub, slice(embedding, s * $dsub + 1, $dsub) AS svec))"))
-      .as("x"))
-      .select(col("vec_id"), col("x.sub").as("sub"), col("x.svec").as("svec"))
-
-  /** Sub-space assignment: argmin squared-L2 per (vec_id, sub) against a
-    * broadcast codebook, lowest-cell tiebreak via lexicographic struct
-    * min (cell is unique per sub, so svec never drives the comparison). */
-  private[graft] def assignPq(subs: DataFrame, cents: DataFrame): DataFrame = {
-    // map-only argmin per (vec, sub) — assignCells' round-15 fold shape:
-    // the per-sub codebook collapses to an array column (m rows total,
-    // broadcast), and each sub-vector row takes array_min of
-    // struct(d, cell) in-row. Same lexicographic comparison as the old
-    // min(struct) aggregate (lowest d, then lowest cell), so assignments
-    // are bit-identical; the corpus-sized groupBy(vec_id, sub) exchange
-    // (svec payloads included) that every Lloyd round paid is gone.
-    val cbk = cents.groupBy(col("sub"))
-      .agg(collect_list(struct(col("cell"), col("centroid"))).as("cbk"))
-    subs.join(broadcast(cbk), "sub")
-      .select(col("vec_id"), col("sub"),
-        array_min(transform(col("cbk"), c => struct(
-          sqDist(col("svec"), c.getField("centroid")).as("d"),
-          c.getField("cell").as("cell")))).getField("cell").as("cell"),
-        col("svec"))
-  }
+  /** The m positional PQ codes of a vector: per dsub-wide sub-space,
+    * the squared-L2 [[VectorExpressions.NearestCentroid]] position in
+    * that sub-space's codebook (`cbs(s)`, ordered by cell). Null unless
+    * the vector is exactly m·dsub wide. */
+  private[graft] def pqCodes(v: Column, cbs: Seq[Array[Array[Float]]],
+      dsub: Int): Column =
+    when(size(v) === cbs.size * dsub, array(cbs.indices.map(s =>
+      VectorExpressions.nearestCentroid(slice(v, s * dsub + 1, dsub), cbs(s),
+        VectorExpressions.SquaredL2)): _*))
 
   /** Product-quantization codebook (Jégou, Douze, Schmid, "Product
     * Quantization for Nearest Neighbor Search", IEEE TPAMI 2011): m
     * independent k-means codebooks, one per dsub-wide sub-space, trained
-    * JOINTLY — every Lloyd round is ONE assignment pass and ONE update
-    * pass over the (vec_id, sub) frame for all m sub-spaces at once, not
-    * m sequential trainings. Seeding is the one-pass [[hashSeeds]] rule
-    * (k lowest xxhash64 ids, shared across sub-spaces — each sub-space
-    * still gets its own slice of those vectors, and the Lloyd rounds
-    * specialize them independently). Deterministic end to end; empty
-    * cells drop, so a sub-space may return < k centroids. Output:
-    * (sub, cell, centroid). */
+    * JOINTLY — every Lloyd round is ONE map-only encode of each vector's
+    * m codes ([[pqCodes]] over the driver-held codebooks) and ONE update
+    * pass ([[lloydMeans]]) for all m sub-spaces at once, not m sequential
+    * trainings. Only rows exactly m·dsub wide train. Seeding is the
+    * one-pass [[hashSeeds]] rule (k lowest xxhash64 ids, shared across
+    * sub-spaces and numbered by vec_id — each sub-space still gets its
+    * own slice of those vectors, and the Lloyd rounds specialize them
+    * independently). Deterministic end to end; empty cells drop, so a
+    * sub-space may return < k centroids. Output: (sub, cell, centroid). */
   private[graft] def pqCodebook(e: DataFrame, m: Int, dsub: Int, k: Int,
       iters: Int): DataFrame = {
-    // spread before the per-(vec, sub) assignment passes — same
-    // single-task-scan rationale as [[ivfCodebook]] (guide §2.5)
-    val corpus = graft.GraftSession.spread(
-      e.filter(col("vec_id") =!= 0), col("vec_id"))
-    val seedIds = corpus.orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(k).select(col("vec_id"), col("embedding"))
-      .withColumn("cell", (row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))) - 1)
-        .cast("int"))
-      .select(col("vec_id"), col("cell"))
-    // LAZY per-iteration checkpoints — [[ivfCodebook]]'s round-15 note
-    var cents = subVectors(corpus, m, dsub)
-      .join(broadcast(seedIds), "vec_id")
-      .select(col("sub"), col("cell"), col("svec").as("centroid"))
-      .localCheckpoint(eager = false)
-    for (_ <- 0 until iters) {
-      cents = assignPq(subVectors(corpus, m, dsub), cents)
-        .select(col("sub"), col("cell"),
-          posexplode(col("svec")).as(Seq("pos", "v")))
-        .groupBy(col("sub"), col("cell"), col("pos"))
-        .agg(avg(col("v")).as("c"))
-        .groupBy(col("sub"), col("cell"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, c))), " +
-          "x -> CAST(x.c AS FLOAT))").as("centroid"))
-        .localCheckpoint(eager = false)
+    // spread before the encode passes — same single-task-scan rationale
+    // as [[ivfCodebook]] (guide §2.5)
+    val corpus = GraftSession.spread(e.filter(col("vec_id") =!= 0 &&
+      size(col("embedding")) === m * dsub), col("vec_id"))
+    // per sub-space: (cell, centroid) ordered by cell
+    var cb: Seq[Seq[(Int, Array[Float])]] = {
+      val seeds = seedCells(hashSeeds(corpus, k))
+      Seq.tabulate(m)(s => seeds.map { case (cell, v) =>
+        (cell, v.slice(s * dsub, (s + 1) * dsub)) })
     }
-    cents
+    for (_ <- 0 until iters if cb.head.nonEmpty) {
+      val sub = floor(col("i") / dsub).cast("int")
+      // grouped by code (the cell's position), mapped back to its cell id
+      val means = lloydMeans(corpus
+          .select(pqCodes(col("embedding"), cb.map(_.map(_._2).toArray), dsub)
+            .as("codes"), posexplode(col("embedding")).as(Seq("i", "v")))
+          .select(sub.as("sub"), element_at(col("codes"), sub + 1).as("code"),
+            (col("i") % dsub).as("pos"), col("v")),
+        "sub", "code")
+      cb = Seq.tabulate(m)(s => means.filter(_.getInt(0) == s).toSeq
+        .map(r => (cb(s)(r.getInt(1))._1, r.getSeq[Float](2).toArray))
+        .sortBy(_._1))
+    }
+    import e.sparkSession.implicits._
+    (for (s <- 0 until m; (cell, c) <- cb(s)) yield (s, cell, c.toSeq))
+      .toDF("sub", "cell", "centroid")
   }
 
   /** ONE codebook→driver-literal loader for every PQ consumer (in-query
@@ -1228,7 +1212,6 @@ object VectorOps extends OpCatalog {
     Some(shortlist
       .select(col("vec_id"), col("adc"),
         l2Score(col("embedding"), typedlit(qv)).as("l2"))
-      .filter(col("l2").isNotNull) // over-length rows pass the adc guard
       .orderBy(col("l2").asc, col("vec_id"))
       .limit(10))
   }
@@ -1239,21 +1222,12 @@ object VectorOps extends OpCatalog {
     * RESIDUAL embedding (x − c_cell) that PQ trains on per §V of the PQ
     * paper. Training-side only; serving re-derives the cell in-row. */
   private def assignCellsL2Residual(e: DataFrame, cents: DataFrame): DataFrame = {
-    // map-only argmin — assignCells' round-15 fold shape for the L2 +
-    // residual variant: same struct comparison as the old min(struct)
-    // aggregate (lowest d, then lowest cell; embedding never drove the
-    // comparison — cell is unique), zero corpus exchange.
-    val cbk = cents.agg(
-      collect_list(struct(col("cell"), col("centroid"))).as("cbk"))
-    e.crossJoin(broadcast(cbk))
-      .select(col("vec_id"), col("embedding"),
-        array_min(transform(col("cbk"), c => struct(
-          sqDist(col("embedding"), c.getField("centroid")).as("d"),
-          c.getField("cell").as("cell"),
-          c.getField("centroid").as("centroid")))).as("best"))
-      .filter(col("best").isNotNull) // empty codebook → old empty output
-      .select(col("vec_id"), col("best.cell").as("cell"),
-        zip_with(col("embedding"), col("best.centroid"),
+    val cb = collectCodebook(cents)
+    withNearest(e, cb, VectorExpressions.SquaredL2)
+      .select(col("vec_id"),
+        element_at(typedlit(cb.map(_._1)), col("pos") + 1).as("cell"),
+        zip_with(col("embedding"),
+          element_at(typedlit(cb.map(_._2.toSeq)), col("pos") + 1),
           (x, c) => (x.cast("double") - c.cast("double")).cast("float"))
           .as("embedding"))
   }
@@ -1344,20 +1318,19 @@ object VectorOps extends OpCatalog {
       case None => ivfCodebook(e, kc, iters = 3)
     }
     val pqc = memo("ivfadc_pq") {
-      // materialize the residual frame once: pqCodebook references its
-      // training corpus ~2× per Lloyd round, and each reference would
-      // replay the n×kc assignment join (measured: dominates training)
-      // spread before the n×kc residual assignment (guide §2.5 single-
-      // task-scan fix); the checkpointed residual frame then stays
-      // multi-partition for pqCodebook's passes
+      // materialize the residual frame once: pqCodebook reads its
+      // training corpus once per Lloyd round and once to seed, and each
+      // read would replay the n×kc residual assignment; spread before
+      // that assignment (guide §2.5 single-task-scan fix) so the
+      // checkpointed frame stays multi-partition for pqCodebook's passes
       pqCodebook(assignCellsL2Residual(
         graft.GraftSession.spread(e.filter(col("vec_id") =!= 0),
           col("vec_id")),
         coarse).localCheckpoint(), m, dsub, k, iters = 3)
     }
     // both codebooks -> driver literals (bounded: ≤ kc + m·k tiny rows)
-    val coarseArr: Array[Array[Float]] = coarse.orderBy(col("cell"))
-      .collect().map(_.getSeq[Float](1).toArray)
+    val coarseArr: Array[Array[Float]] =
+      collectCodebook(coarse).map(_._2).toArray
     val cb = codebookMap(pqc, "cell")
     if (coarseArr.isEmpty || cb.size < m) return None // nothing to train on
     val qv: Array[Float] = qOpt.get
@@ -1369,11 +1342,9 @@ object VectorOps extends OpCatalog {
     val np = nProbe.getOrElse(AnnParams.ivfProbeCells(coarseArr.length))
     val probed: Seq[Int] = coarseArr.indices
       .sortBy(j => (l2(qv, coarseArr(j)), j)).take(np)
-    // in-row cell assignment: the fused codegen'd nearest-centroid
-    // expression (first-minimum = lowest-cell tiebreak, the same rule
-    // the training-side assignment uses)
+    // in-row cell assignment: the training-side kernel and law
     val cellCol = VectorExpressions.nearestCentroid(col("embedding"),
-      coarseArr)
+      coarseArr, VectorExpressions.SquaredL2)
     // per probed cell: residual codes + that cell's ADC distance table,
     // each one fused PqAdcScore expression (codebook/table/centroid ride
     // as reference objects). ONE scan: the probed-cell predicate and a

@@ -321,6 +321,87 @@ class PlanRobustnessSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
   }
 
+  test("IVF and PQ builds: no nested-loop join or higher-order function; the PQ encode's one exchange is the vbucket repartition") {
+    // Every assignment in a build (Lloyd rounds, the IVF assignment, the
+    // PQ encode) is one compiled nearest-centroid expression over
+    // driver-literal codebooks: no broadcast codebook array folded by
+    // transform/array_max, no nested-loop join to attach it.
+    import graft.functions.VectorExpressions.NearestCentroid
+    import graft.operators.{IvfIndex, PqIndex}
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, HigherOrderFunction}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    // every plan a build runs; the listener bus is FIFO, so once a
+    // marker action's event arrives every earlier one has too
+    def plansOf(build: => Unit): Seq[SparkPlan] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+        (QueryExecution, SparkPlan)]()
+      val l = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          seen.add(qe -> qe.executedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        build
+        val marker = spark.range(1)
+        marker.collect()
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        def all = seen.toArray.toSeq
+          .map(_.asInstanceOf[(QueryExecution, SparkPlan)])
+        while (!all.exists(_._1 eq marker.queryExecution) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+        all.filterNot(_._1 eq marker.queryExecution).map(_._2)
+      } finally spark.listenerManager.unregister(l)
+    }
+    def assigns(p: SparkPlan) = nodes(p).exists(
+      _.expressions.exists(_.exists(_.isInstanceOf[NearestCentroid])))
+    def noFold(what: String, plans: Seq[SparkPlan]): Unit = {
+      assert(plans.count(assigns) >= 2,
+        s"$what: assignments not through the kernel:\n${plans.mkString("\n")}")
+      plans.foreach { p =>
+        val ns = nodes(p)
+        assert(!ns.exists(n => n.nodeName.contains("NestedLoopJoin") ||
+          n.nodeName.contains("CartesianProduct")),
+          s"$what plans a nested-loop join:\n$p")
+        assert(!ns.exists(_.expressions.exists(
+          _.exists(_.isInstanceOf[HigherOrderFunction]))),
+          s"$what plans a higher-order function:\n$p")
+      }
+    }
+    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val corpus = e.filter(col("vec_id") =!= 0)
+      .select(col("vec_id"), col("embedding"))
+    noFold("IVF build", plansOf(IvfIndex.buildVersioned(spark, corpus,
+      tempDir("graft_plan_ivf").toString)))
+    val pq = plansOf(PqIndex.buildVersioned(spark, e,
+      tempDir("graft_plan_pq").toString))
+    noFold("PQ build", pq)
+    // the encode: the kernel's plan with no Lloyd aggregate in it
+    val encodes = pq.filter(p => assigns(p) &&
+      !nodes(p).exists(_.isInstanceOf[BaseAggregateExec]))
+    assert(encodes.nonEmpty, s"no PQ encode plan:\n${pq.mkString("\n")}")
+    encodes.foreach { p =>
+      val parts = nodes(p).collect { case x: ShuffleExchangeExec =>
+        x.outputPartitioning }
+      assert(parts.nonEmpty && parts.forall {
+        case HashPartitioning(Seq(a: AttributeReference), _) =>
+          a.name == "vbucket"
+        case _ => false
+      }, s"PQ encode exchanges other than the vbucket repartition:\n$p")
+    }
+  }
+
   test("query catalog has no duplicate names (driver map would drop them)") {
     assert(SparkEntry.ops.map(_.name).distinct.size == SparkEntry.ops.size)
     // every oracle entry corresponds to a declared query

@@ -31,6 +31,14 @@ class PqIndexSpec extends SparkSpec {
     val bad = codes.filter(size(col("codes")) =!= PqIndex.M ||
       exists(col("codes"), c => c < 0 || c >= PqIndex.K)).count()
     assert(bad == 0, s"$bad malformed code rows")
+    // the build repartitions by vbucket before its partitioned write: one
+    // file per vbucket dir, not one per encode task
+    val filesPerBucket = codes.inputFiles.toSeq
+      .groupBy(_.replaceAll(".*/(vbucket=\\d+)/.*", "$1"))
+    assert(filesPerBucket.keys.forall(_.startsWith("vbucket=")) &&
+      filesPerBucket.values.forall(_.size == 1),
+      s"codes files per vbucket dir: ${filesPerBucket.map { case (b, fs) =>
+        b -> fs.size }}")
 
     // identical serving answer: training is deterministic, encode argmin
     // and the in-row argmin share the lowest-cell tiebreak
@@ -61,10 +69,11 @@ class PqIndexSpec extends SparkSpec {
       .orderBy(col("vec_id"))
     PqIndex.buildVersioned(spark, withNull, root)
     val codes = VersionedTable.readCurrent(spark, root, PqIndex.codesSchema)
-    val want = e.filter(col("vec_id") =!= 0).select(col("vec_id"))
-      .collect().map(_.getLong(0)).toSet
+    // the null row gets no codes; every other vector is encoded
+    val want = e.filter(col("vec_id") =!= 0 && col("vec_id") =!= firstId)
+      .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     assert(codes.select(col("vec_id")).collect().map(_.getLong(0)).toSet ==
-      want, "every corpus vector must be encoded")
+      want, "every well-formed corpus vector, and only those, must be encoded")
   }
 
   test("probeBatch: batched ADC serving == per-query probe, one codes scan (q137)") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{VectorExpressions, VectorSumAggregator}
 import graft.operators.VectorOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Specs for vector similarity: fused cosine expression vs reference math,
@@ -196,6 +197,120 @@ class VectorOpsSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     val recall = brute.intersect(probed).size / 10.0
     assert(recall >= 0.9, s"IVF probe recall $recall < 0.9 on planted clusters")
+  }
+
+  // The interpreted folds every IVF/PQ assignment ran before the compiled
+  // kernel, kept as its reference: the codebook collapsed to one broadcast
+  // array, each row taking array_max/array_min of (score, cell) structs
+  // in Spark's struct order. Defined on well-formed rows only (they let a
+  // null score beat every real one).
+  private def foldCells(e: DataFrame, cents: DataFrame,
+      cosine: Boolean): DataFrame = {
+    val cbk = cents.agg(
+      collect_list(struct(col("cell"), col("centroid"))).as("cbk"))
+    val best =
+      if (cosine) array_max(transform(col("cbk"), c => struct(
+        VectorExpressions.cosineSimilarity(col("embedding"),
+          c.getField("centroid")).as("csim"),
+        (-c.getField("cell")).as("neg_cell"),
+        c.getField("cell").as("cell"))))
+      else array_min(transform(col("cbk"), c => struct(
+        VectorOps.sqDist(col("embedding"), c.getField("centroid")).as("d"),
+        c.getField("cell").as("cell"))))
+    e.crossJoin(broadcast(cbk))
+      .select(col("vec_id"), best.getField("cell").as("fold"))
+  }
+
+  test("nearest-centroid kernel == the interpreted folds: ties, sparse cells, one and no centroid, NaN") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // small integers make exact score ties common; NaN and -0.0 exercise
+    // Spark's double order (NaN greatest, -0.0 = 0.0)
+    val component: Gen[Float] = Gen.frequency(
+      8 -> Gen.choose(-2, 2).map(_.toFloat), 3 -> Gen.choose(-1f, 1f),
+      1 -> Gen.const(Float.NaN), 1 -> Gen.const(-0.0f))
+    val cases = for {
+      dim <- Gen.choose(1, 5)
+      k <- Gen.frequency(1 -> Gen.const(0), 2 -> Gen.const(1),
+        6 -> Gen.choose(2, 6))
+      drawn <- Gen.listOfN(k, Gen.listOfN(dim, component))
+      // planted exact ties: some centroids duplicate their predecessor
+      dup <- Gen.listOfN(k, Gen.choose(0, 3))
+      // sparse cell ids, as Lloyd leaves them after emptying cells
+      cells <- Gen.pick(k, 0 until 40).map(_.toSeq.sorted)
+      vecs <- Gen.choose(1, 10).flatMap(n =>
+        Gen.listOfN(n, Gen.listOfN(dim, component)))
+    } yield {
+      val cents = drawn.indices.map(j =>
+        if (j > 0 && dup(j) == 0) drawn(j - 1) else drawn(j))
+      (cells.zip(cents), vecs ++ cents.take(2))
+    }
+    val law = Prop.forAllNoShrink(cases) { case (cb, vecs) =>
+      import spark.implicits._
+      val e = spark.createDataFrame(spark.sparkContext.parallelize(
+          vecs.zipWithIndex.map { case (v, i) => Row(i.toLong, v) }, 2),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "vec_id BIGINT, embedding ARRAY<FLOAT>"))
+      val cents = cb.toDF("cell", "centroid")
+      val arr = cb.map(_._2.toArray).toArray
+      def cellAt(pos: Any): Option[Int] =
+        Option(pos).map(p => cb(p.asInstanceOf[Int])._1)
+      Seq(VectorExpressions.Cosine, VectorExpressions.SquaredL2).forall { m =>
+        val cosine = m == VectorExpressions.Cosine
+        val got = foldCells(e, cents, cosine)
+          .join(e.select(col("vec_id"), VectorExpressions.nearestCentroid(
+            col("embedding"), arr, m).as("pos")), "vec_id")
+          .orderBy("vec_id").collect()
+        // codegen (the frame above) == interpreted eval == the fold
+        val interpreted = vecs.map(v => VectorExpressions.NearestCentroid(
+          Literal.create(v.toArray, ArrayType(FloatType, false)), arr, m).eval())
+        val fold = got.map(r => Option(r.get(1)).map(_.asInstanceOf[Int])).toSeq
+        val kernel = got.map(r => cellAt(r.get(2))).toSeq
+        val agree = fold == kernel && kernel == interpreted.map(cellAt)
+        // assignCells is the cosine kernel end to end
+        val viaAssign = !cosine || VectorOps.assignCells(e, cents)
+          .select(col("vec_id"), col("cell")).collect()
+          .map(r => r.getLong(0) -> r.getInt(1)).toMap ==
+          got.flatMap(r => Option(r.get(1)).map(c =>
+            r.getLong(0) -> c.asInstanceOf[Int])).toMap
+        agree && viaAssign
+      }
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(60), law)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("null and off-width rows neither train nor get a cell: codebooks equal training without them") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(29)
+    val centers = Array.fill(8)(Array.fill(64)(rnd.nextGaussian().toFloat * 5f))
+    val clean = (for (c <- 0 until 8; j <- 0 until 40) yield {
+      ((c * 40 + j + 1).toLong,
+        centers(c).map(x => x + rnd.nextGaussian().toFloat * 0.3f).toSeq)
+    }).toDF("vec_id", "embedding")
+    // the lowest id is a null row (farthest-point seeding used to take it
+    // as seed 0); the others are shorter, longer and empty
+    val planted = clean.unionByName(Seq[(Long, Seq[Float])](
+        (-1L, null), (5000L, Seq(1f, 2f, 3f)),
+        (5001L, Seq.fill(65)(0.5f)), (5002L, Seq.empty))
+      .toDF("vec_id", "embedding"))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val ivf = VectorOps.ivfCodebook(clean, k = 8, iters = 2)
+    assert(rows(VectorOps.ivfCodebook(planted, k = 8, iters = 2)) == rows(ivf),
+      "farthest-point IVF training moved under planted malformed rows")
+    assert(rows(VectorOps.ivfCodebook(planted, k = 20, iters = 2)) ==
+      rows(VectorOps.ivfCodebook(clean, k = 20, iters = 2)),
+      "hash-seeded IVF training moved under planted malformed rows")
+    assert(rows(VectorOps.pqCodebook(planted, m = 8, dsub = 8, k = 16,
+      iters = 2)) == rows(VectorOps.pqCodebook(clean, m = 8, dsub = 8,
+      k = 16, iters = 2)),
+      "PQ training moved under planted malformed rows")
+    val assigned = VectorOps.assignCells(planted, ivf).select(col("vec_id"))
+      .collect().map(_.getLong(0)).toSet
+    assert(assigned == (1L to 320L).toSet, "malformed rows must get no cell")
   }
 
   test("blocked embedding near-dup: sound vs exact, high recall on planted dups") {
